@@ -407,152 +407,216 @@ object StreamingPipelines {
     * deflate length (the archive payload), duplicates only the digest
     * reference — encoder.c's compressed-data-or-fingerprint framing.
     * `emit_seq` is a globally contiguous sequence in (doc_id,
-    * chunk_idx) order: the dedup shuffle destroys arrival order, the
-    * per-batch sort restores it, and — exactly like the reference's
-    * single Reorder thread — the final sequencing is inherently
-    * serial, bounded by trigger volume rather than stream length.
+    * chunk_idx) order: the dedup shuffle destroys arrival order, and
+    * Reorder restores it as a range sort plus per-partition counts —
+    * each range partition is sorted and checkpointed, one job brings
+    * #partitions row counts to the driver, and `emit_seq` is the
+    * frontier + the partition's offset + the row's index inside the
+    * partition, a projection (no window, and no piece leaves its
+    * partition). Like the reference's single Reorder thread the
+    * sequence is a counter; unlike it, the payload bytes are never
+    * funneled through one task.
     *
-    * The digest store + emit frontier survive restarts (parquet), and
+    * Store layout under `storeDir`:
+    *  - `digests/txn=k/` — parquet, schema (chunk_sha STRING, txn
+    *    BIGINT): the first occurrences written by transaction k, one
+    *    file per trigger;
+    *  - `frontier.rec` — one text line `next_seq=… base=… epoch=…
+    *    fp=… txn=…`, read on the driver through the Hadoop FileContext
+    *    API (no Spark job) and replaced atomically: the new record is written
+    *    to a temporary file and renamed over the old one, so a crash
+    *    leaves either the old record or the new one, never neither.
+    *
+    * Each trigger writes its digests before its frontier record, and
     * both advances are keyed by (epoch, batch fingerprint) so an
     * at-least-once redelivery of the same epoch is idempotent: each
     * attempt's digests live in their own txn partition (a redelivery
     * overwrites the failed attempt's partial write and the probe
     * excludes exactly that partition, so firsts re-classify
-    * identically), and the frontier row records (base, epoch, fp) so
+    * identically), and the frontier record keeps (base, epoch, fp) so
     * a redelivery re-bases emit_seq at the SAME sequence range
     * instead of skipping one — the dense-sequence invariant holds
     * across retries (FiveStageSpec redelivers an epoch to prove it).
-    * A NEW query over the same store (epoch numbering restarting at
-    * 0) is distinguished by the fingerprint and gets a fresh txn.
-    * Exactly-once emission to the outside world additionally needs
-    * the sink's transaction + query checkpoint, same as every
-    * foreachBatch sink. */
-  /** Last batch's checkpointed chunk-table RDD per store — freed at
-    * the NEXT call (the caller has consumed the previous batch's
-    * output by then; foreachBatch calls are sequential per query), so
-    * a long-running stream holds at most ONE batch's blocks instead
-    * of accumulating one per trigger. */
+    * A crash between the two writes leaves the previous record, and
+    * the redelivery then re-runs as new work under the same txn and
+    * base — the same output again. A NEW query over the same store
+    * (epoch numbering restarting at 0) is distinguished by the
+    * fingerprint and gets a fresh txn. A store whose record is gone
+    * while digests of a txn > 0 exist fails loudly instead of
+    * restarting at txn 0 over committed digests. Exactly-once emission
+    * to the outside world additionally needs the sink's transaction +
+    * query checkpoint, same as every foreachBatch sink. */
+  /** Last batch's checkpointed RDDs per store — freed at the NEXT call
+    * (the caller has consumed the previous batch's output by then;
+    * foreachBatch calls are sequential per query), so a long-running
+    * stream holds at most ONE batch's blocks instead of accumulating
+    * one per trigger. */
   private val fiveStagePrevCkpt =
     scala.collection.concurrent.TrieMap.empty[String, Seq[Int]]
+
+  /** A five-stage store's emit frontier: the next sequence number, the
+    * base the last trigger emitted from, and that trigger's (epoch,
+    * fingerprint, txn) — the replay key. */
+  private final case class FiveStageFrontier(nextSeq: Long, base: Long, epoch: Long,
+                                             fp: Long, txn: Long) {
+    def record: String = s"next_seq=$nextSeq base=$base epoch=$epoch fp=$fp txn=$txn\n"
+  }
+
+  private[graft] def fiveStageFrontierPath(storeDir: String): String =
+    s"$storeDir/frontier.rec"
+
+  private def readFiveStageFrontier(fc: org.apache.hadoop.fs.FileContext,
+                                    path: org.apache.hadoop.fs.Path): Option[FiveStageFrontier] =
+    if (!fc.util.exists(path)) None
+    else {
+      // the rename is the commit point; on a checksummed filesystem a
+      // crash right after it can leave the previous record's checksum
+      // sidecar behind, which must not make the committed record unreadable
+      fc.setVerifyChecksum(false, path)
+      val in = fc.open(path)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val kv = text.trim.split("\\s+").map(_.split("=", 2)).collect {
+        case Array(k, v) if v.matches("-?\\d+") => k -> v.toLong
+      }.toMap
+      require(kv.keySet == Set("next_seq", "base", "epoch", "fp", "txn"),
+        s"five-stage frontier record $path is unreadable: '${text.trim}'")
+      Some(FiveStageFrontier(kv("next_seq"), kv("base"), kv("epoch"), kv("fp"), kv("txn")))
+    }
+
+  private def writeFiveStageFrontier(fc: org.apache.hadoop.fs.FileContext,
+                                     path: org.apache.hadoop.fs.Path,
+                                     f: FiveStageFrontier): Unit = {
+    import org.apache.hadoop.fs.{CreateFlag, Options, Path}
+    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
+    val out = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+      Options.CreateOpts.createParent())
+    try out.write(f.record.getBytes("UTF-8")) finally out.close()
+    fc.rename(tmp, path, Options.Rename.OVERWRITE)
+  }
 
   def fiveStageBatch(s: SparkSession, storeDir: String)(
       batch: DataFrame, epoch: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val digestPath = s"$storeDir/digests"
-    val frontierPath = s"$storeDir/frontier"
+    import org.apache.hadoop.fs.{FileContext, Path}
+    val digestPath = new Path(s"$storeDir/digests")
+    val frontierPath = new Path(fiveStageFrontierPath(storeDir))
+    val fc = FileContext.getFileContext(digestPath.toUri, s.sparkContext.hadoopConfiguration)
+    // the frontier moved from a parquet directory to one atomically
+    // replaced record: a store written by the old code must fail HERE
+    // with a clear message, not silently restart its sequence
+    require(!fc.util.exists(new Path(s"$storeDir/frontier")),
+      s"five-stage store at $storeDir has a legacy parquet frontier directory " +
+        "(frontier/) — it predates the atomic frontier record; start a fresh " +
+        s"storeDir, or write its one row to $frontierPath as the line " +
+        "'next_seq=N base=B epoch=E fp=F txn=T' and remove frontier/")
+    val stored = readFiveStageFrontier(fc, frontierPath)
+    val txns =
+      if (!fc.util.exists(digestPath)) Seq.empty[Long]
+      else fc.util.listStatus(digestPath).toSeq.map(_.getPath.getName).collect {
+        case name if name.startsWith("txn=") => name.stripPrefix("txn=").toLong
+      }
+    // only a crash inside the very first trigger leaves digests
+    // without a record; anything later means the record was lost, and
+    // restarting at txn 0 would overwrite committed digests and
+    // re-issue sequence numbers
+    if (stored.isEmpty && txns.exists(_ > 0))
+      throw new IllegalStateException(s"five-stage store at $storeDir has committed " +
+        s"digests (txn ${txns.max}) but no frontier record $frontierPath — the emit " +
+        "frontier was lost; restore the record or start a fresh storeDir")
     // free the previous trigger's checkpoints (their output frame was
     // fully consumed before this trigger started)
     fiveStagePrevCkpt.remove(storeDir).foreach(_.foreach { id =>
       s.sparkContext.getPersistentRDDs.get(id)
         .foreach(_.unpersist(blocking = false))
     })
-    val t5s0 = System.nanoTime()
     // Fragment + Refine: chunk boundaries + identities + bytes. Eager
     // checkpoint: the CDC+SHA pass is the dominant map stage, and both
-    // the batch fingerprint and the tagged table read it.
+    // the digest write and the ordered output read it. The batch
+    // fingerprint rides along as an observed metric of that same job.
+    val fpObs = org.apache.spark.sql.Observation()
     val chunks = batch
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"),
         graft.functions.NativeChunk.chunks(col("text")))
       .withColumn("piece", expr("substring(payload, offset + 1, length)"))
       .drop("payload")
+      .observe(fpObs,
+        bit_xor(xxhash64(col("doc_id"), col("chunk_idx"), col("chunk_sha"))).as("fp"),
+        count(lit(1)).as("n"))
       .localCheckpoint(true)
-    val t5s1 = phase("5stage chunks-ckpt", t5s0)
+    val fpRow = fpObs.get
+    val fp = Option(fpRow("fp")).fold(0L)(_.asInstanceOf[Long])
+    val n = fpRow("n").asInstanceOf[Long]
     // Replay detection for the at-least-once contract: foreachBatch
     // may redeliver an epoch after a crash that already advanced the
     // store/frontier, and a NEW query over the same store restarts
     // epoch numbering at 0 — epoch id alone distinguishes neither.
-    // The frontier row therefore records (epoch, fingerprint): a
+    // The frontier record therefore keeps (epoch, fingerprint): a
     // matching pair marks a true redelivery (same batch, same data),
     // which must re-emit the SAME sequence range against the SAME
     // store view; anything else is new work. Each attempt writes its
     // digests into its own txn partition, so a redelivery OVERWRITES
     // the failed attempt's partial write (never double-appends) and
     // the probe can exclude exactly that partition.
-    val fpRow = chunks.agg(
-      bit_xor(xxhash64(col("doc_id"), col("chunk_idx"), col("chunk_sha"))).as("fp"),
-      count(lit(1)).as("n")).collect().head
-    val (fp, n) = (if (fpRow.isNullAt(0)) 0L else fpRow.getLong(0), fpRow.getLong(1))
-    val t5s2 = phase("5stage fp-agg", t5s1)
-    val stored =
-      if (parquetNonEmpty(s, frontierPath)) {
-        val f = s.read.parquet(frontierPath)
-        // the frontier/digest layout changed when txn-keyed idempotent
-        // replay landed (single next_seq column + flat digest files →
-        // (next_seq, base, epoch, fp, txn) + txn= partitions): a store
-        // written by the old code must fail HERE with a clear message,
-        // not on a getAs[Long]("epoch") cast deep in the batch
-        require(f.columns.toSet == Set("next_seq", "base", "epoch", "fp", "txn"),
-          s"five-stage store at $storeDir has an incompatible frontier format " +
-            s"(columns: ${f.columns.sorted.mkString(", ")}) — it predates the " +
-            "txn-keyed replay contract; start a fresh storeDir or migrate the " +
-            "frontier to (next_seq, base, epoch, fp, txn) with txn=0")
-        Some(f.collect().head)
-      } else None
-    val isReplay = stored.exists(r =>
-      r.getAs[Long]("epoch") == epoch && r.getAs[Long]("fp") == fp)
-    val txn = stored.map(r =>
-      if (isReplay) r.getAs[Long]("txn") else r.getAs[Long]("txn") + 1).getOrElse(0L)
-    val frontier = stored.map(r =>
-      if (isReplay) r.getAs[Long]("base") else r.getAs[Long]("next_seq")).getOrElse(0L)
-    // Deduplicate: store probe (anti-join side) + batch-local first
-    // occurrence; the probe excludes THIS txn's partition — on a
-    // redelivery the failed attempt's own digests are already on
-    // disk, and without the exclusion the whole batch would
-    // re-classify as all-duplicate (firsts lost forever)
-    val known =
-      if (parquetNonEmpty(s, digestPath))
-        s.read.parquet(digestPath)
+    val isReplay = stored.exists(f => f.epoch == epoch && f.fp == fp)
+    val txn = stored.fold(0L)(f => if (isReplay) f.txn else f.txn + 1)
+    val frontier = stored.fold(0L)(f => if (isReplay) f.base else f.nextSeq)
+    // Deduplicate: one exchange on chunk_sha over the batch rows plus
+    // the store's digests. Store rows sort first in their digest's
+    // group, so row 1 is a batch row only when the store lacks the
+    // digest — then it is the batch-local first occurrence. The probe
+    // excludes THIS txn's partition: on a redelivery the failed
+    // attempt's own digests are already on disk, and without the
+    // exclusion the whole batch would re-classify as all-duplicate
+    // (firsts lost forever)
+    val rows = chunks.withColumn("__store", lit(false))
+    val probed =
+      if (!txns.exists(_ != txn)) rows
+      else rows.unionByName(
+        s.read.schema("chunk_sha STRING, txn BIGINT").parquet(digestPath.toString)
           .filter(col("txn") =!= txn)
-          .select(col("chunk_sha"))
-          .withColumn("in_store", lit(true))
-      else chunks.select("chunk_sha").limit(0).withColumn("in_store", lit(true))
-    val t5s3 = phase("5stage frontier-read", t5s2)
-    val firstW = Window.partitionBy("chunk_sha").orderBy("doc_id", "chunk_idx")
-    val tagged = chunks.join(known, Seq("chunk_sha"), "left")
-      .withColumn("rn", row_number().over(firstW))
-      .withColumn("is_first", col("in_store").isNull && col("rn") === 1)
-      .drop("in_store", "rn")
-      .localCheckpoint(true) // consumed 3× (append, count, caller)
-    val t5s4 = phase("5stage tagged-ckpt", t5s3)
+          .select(col("chunk_sha"), lit(true).as("__store")),
+        allowMissingColumns = true)
+    val firstW = Window.partitionBy("chunk_sha")
+      .orderBy(col("__store").desc, col("doc_id"), col("chunk_idx"))
+    val tagged = probed
+      .withColumn("is_first", row_number().over(firstW) === 1 && !col("__store"))
+      .filter(!col("__store"))
+      .drop("__store")
+      .localCheckpoint(true) // consumed twice (digest write, Reorder)
     // one file per batch (the store is digests-only, tiny per batch;
     // un-coalesced appends would accumulate #partitions small files
     // per batch), in the batch attempt's own txn partition
     tagged.filter(col("is_first")).select("chunk_sha")
       .coalesce(1).write.mode("overwrite").parquet(s"$digestPath/txn=$txn")
-    val t5s5 = phase("5stage digest-write", t5s4)
-    import s.implicits._
-    Seq((frontier + n, frontier, epoch, fp, txn))
-      .toDF("next_seq", "base", "epoch", "fp", "txn")
-      .write.mode("overwrite").parquet(frontierPath)
-    val t5s6 = phase("5stage frontier-write", t5s5)
-    // Compress (firsts only) + Reorder: emit_seq is the DISTRIBUTED
-    // prefix sum (unit weights) over (doc_id, chunk_idx) — identical
-    // contiguous ranks to a global row_number, but only #partitions
-    // counts reach the driver and the compressed `piece` payloads
-    // never leave their range partitions. (The reference's Reorder is
-    // a single serial thread, encoder.c:1345 — but funneling every
-    // micro-batch's payload bytes through ONE task to assign a
-    // sequence number is a scale-killer Spark doesn't need to pay:
-    // the repo's own bar, SURVEY §2.A q_histogram_eqdepth.)
-    val ordered = graft.operators.PrefixSum.runningSum(
-        tagged
-          .withColumn("comp_len", when(col("is_first"),
-            graft.functions.NativeChunk.compressedLen(col("piece"), "deflate")))
-          .withColumn("piece", when(col("is_first"), col("piece")))
-          .withColumn("__one", lit(1L)),
-        Seq(col("doc_id"), col("chunk_idx")), "__one", "emit_seq")
-      .withColumn("emit_seq", col("emit_seq") + lit(frontier - 1))
-      .drop("__one")
-    // the returned frame reads the prefix sum's internal checkpoint
-    // (which truncated `tagged`'s lineage), but `tagged` and `chunks`
-    // hold their own checkpoint blocks too; record every LogicalRDD id
-    // so the NEXT trigger frees them all once this batch's output has
-    // been consumed
-    val ckptIds = Seq(ordered, tagged, chunks).flatMap(_.queryExecution.logical.collect {
+    writeFiveStageFrontier(fc, frontierPath,
+      FiveStageFrontier(frontier + n, frontier, epoch, fp, txn))
+    // Compress (firsts only) + Reorder: range-sort on (doc_id,
+    // chunk_idx) and checkpoint with each row's partition-local index
+    // (the low 33 bits of monotonically_increasing_id; the high bits
+    // are the partition id)
+    val sorted = tagged
+      .withColumn("comp_len", when(col("is_first"),
+        graft.functions.NativeChunk.compressedLen(col("piece"), "deflate")))
+      .withColumn("piece", when(col("is_first"), col("piece")))
+      .repartitionByRange(col("doc_id"), col("chunk_idx"))
+      .sortWithinPartitions("doc_id", "chunk_idx")
+      .withColumn("__mid", monotonically_increasing_id())
+      .localCheckpoint(true)
+    val sizes = sorted.queryExecution.toRdd
+      .mapPartitionsWithIndex((pid, it) => Iterator(pid -> it.size.toLong))
+      .collect().sortBy(_._1).map(_._2)
+    val offsets = sizes.scanLeft(frontier)(_ + _).init
+    val ordered = sorted
+      .withColumn("emit_seq", element_at(typedLit(offsets), shiftright(col("__mid"), 33).cast("int") + 1) +
+        col("__mid").bitwiseAND(lit((1L << 33) - 1)))
+      .select("chunk_sha", "doc_id", "chunk_idx", "offset", "length", "piece",
+        "is_first", "comp_len", "emit_seq")
+    // record every checkpoint's LogicalRDD id so the NEXT trigger
+    // frees them all once this batch's output has been consumed
+    val ckptIds = Seq(sorted, tagged, chunks).flatMap(_.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }).distinct
     fiveStagePrevCkpt.put(storeDir, ckptIds): Unit
-    phase("5stage prefix-sum", t5s6): Unit
     ordered
   }
 

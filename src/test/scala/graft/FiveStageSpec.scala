@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 import graft.streaming.StreamingPipelines
@@ -161,6 +165,174 @@ class FiveStageSpec extends SparkSpec {
       assert(streamed == batchChunks)
     } finally {
       StreamingPipelines.deleteRecursively(new java.io.File(storeDir))
+    }
+  }
+
+  private def withStore[T](tag: String)(body: String => T): T = {
+    val storeDir =
+      s"${System.getProperty("java.io.tmpdir")}/graft_5stage_${tag}_${System.nanoTime()}"
+    try body(storeDir)
+    finally StreamingPipelines.deleteRecursively(new java.io.File(storeDir))
+  }
+
+  private def docs(): Array[(Long, String)] = {
+    import spark.implicits._
+    Tables.documents(spark, sfDir).select("doc_id", "text")
+      .orderBy("doc_id").as[(Long, String)].collect()
+  }
+
+  private def frame(batch: Seq[(Long, String)]): DataFrame =
+    spark.createDataFrame(batch).toDF("doc_id", "text")
+
+  /** One trigger, collected at once: the next call frees this call's
+    * checkpoint blocks. */
+  private def trigger(storeDir: String, batch: Seq[(Long, String)], epoch: Long): Array[Row] =
+    StreamingPipelines.fiveStageBatch(spark, storeDir)(frame(batch), epoch).collect()
+
+  private def nextSeq(storeDir: String): Long = {
+    val rec = new String(Files.readAllBytes(
+      Paths.get(StreamingPipelines.fiveStageFrontierPath(storeDir))), "UTF-8")
+    "next_seq=(\\d+)".r.findFirstMatchIn(rec).get.group(1).toLong
+  }
+
+  private def distinctDigests(storeDir: String): Long =
+    spark.read.parquet(s"$storeDir/digests").select("chunk_sha").distinct().count()
+
+  /** A row with its payload as a value, so rows compare by content. */
+  private def canon(r: Row): Seq[Any] = r.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  }
+
+  test("five-stage pipeline: a crash between the digest and frontier writes replays identically") {
+    withStore("crash") { storeDir =>
+      val all = docs()
+      val (b0, rest) = all.splitAt(150)
+      val (b1, b2) = rest.splitAt(150)
+      trigger(storeDir, b0.toSeq, 0L)
+      trigger(storeDir, b1.toSeq, 1L)
+      val recPath = Paths.get(StreamingPipelines.fiveStageFrontierPath(storeDir))
+      val saved = Files.readAllBytes(recPath)
+      val first = trigger(storeDir, b2.toSeq, 2L)
+      val digestsAfter = distinctDigests(storeDir)
+      // the digests of epoch 2 landed, its frontier record did not
+      Files.write(recPath, saved)
+      val again = trigger(storeDir, b2.toSeq, 2L)
+      assert(again.map(canon).toSet == first.map(canon).toSet,
+        "redelivery after a lost frontier write did not reproduce the first delivery")
+      assert(again.count(_.getAs[Boolean]("is_first")) ==
+        first.count(_.getAs[Boolean]("is_first")))
+      val seqs = again.map(_.getAs[Long]("emit_seq")).sorted.toSeq
+      assert(seqs == first.map(_.getAs[Long]("emit_seq")).sorted.toSeq)
+      assert(seqs.head == nextSeq(storeDir) - again.length && seqs == (seqs.head until
+        seqs.head + again.length).toSeq, "redelivery moved the emit_seq range")
+      assert(distinctDigests(storeDir) == digestsAfter, "redelivery grew the digest store")
+    }
+  }
+
+  test("five-stage pipeline: a lost frontier or a legacy frontier directory fails loudly") {
+    val all = docs()
+    withStore("lost") { storeDir =>
+      val recPath = Paths.get(StreamingPipelines.fiveStageFrontierPath(storeDir))
+      // a crash inside the very first trigger (txn 0, no record) restarts cleanly
+      trigger(storeDir, all.take(20).toSeq, 0L)
+      Files.delete(recPath)
+      val restarted = trigger(storeDir, all.take(20).toSeq, 0L)
+      assert(restarted.map(_.getAs[Long]("emit_seq")).sorted.toSeq ==
+        (0L until restarted.length.toLong))
+      // committed digests of txn 1 with no record: refuse, do not restart at txn 0
+      trigger(storeDir, all.slice(20, 40).toSeq, 1L)
+      Files.delete(recPath)
+      val e = intercept[IllegalStateException](trigger(storeDir, all.slice(40, 60).toSeq, 2L))
+      assert(e.getMessage.contains("no frontier record"), e.getMessage)
+    }
+    withStore("legacy") { storeDir =>
+      Files.createDirectories(Paths.get(s"$storeDir/frontier"))
+      val e = intercept[IllegalArgumentException](trigger(storeDir, all.take(5).toSeq, 0L))
+      assert(e.getMessage.contains("legacy parquet frontier"), e.getMessage)
+    }
+  }
+
+  test("five-stage pipeline: an empty trigger emits nothing, the next continues densely") {
+    withStore("edge") { storeDir =>
+      val all = docs()
+      val head = trigger(storeDir, all.take(30).toSeq, 0L)
+      val before = nextSeq(storeDir)
+      assert(before == head.length.toLong)
+      assert(trigger(storeDir, Seq.empty, 1L).isEmpty, "empty trigger emitted rows")
+      assert(nextSeq(storeDir) == before, "empty trigger moved next_seq")
+      val one = trigger(storeDir, all.slice(30, 31).toSeq, 2L)
+      assert(one.nonEmpty)
+      assert(one.sortBy(_.getAs[Int]("chunk_idx")).map(_.getAs[Long]("emit_seq")).toSeq ==
+        (before until before + one.length).toSeq, "1-document trigger broke the dense sequence")
+      assert(nextSeq(storeDir) == before + one.length)
+    }
+  }
+
+  test("five-stage Reorder: emit_seq = frontier + row_number over (doc_id, chunk_idx) - 1") {
+    withStore("reorder") { storeDir =>
+      val shuffled = new scala.util.Random(17).shuffle(docs().toSeq)
+      // uneven triggers whose rows arrive out of doc_id order, spread
+      // over several input partitions
+      val sizes = Seq(1, 7, 60, 2, 180)
+      val batches = sizes.scanLeft(0)(_ + _).zip(sizes :+ 0).init.map { case (at, k) =>
+        shuffled.slice(at, at + k) } :+ shuffled.drop(sizes.sum)
+      var frontier = 0L
+      batches.zipWithIndex.foreach { case (b, epoch) =>
+        val out = StreamingPipelines.fiveStageBatch(spark, storeDir)(
+          frame(b).repartition(3), epoch.toLong).collect()
+        val expected = out.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("chunk_idx")))
+          .sorted.zipWithIndex.map { case (k, i) => k -> (frontier + i) }.toMap
+        out.foreach { r =>
+          val k = (r.getAs[Long]("doc_id"), r.getAs[Int]("chunk_idx"))
+          assert(r.getAs[Long]("emit_seq") == expected(k), s"epoch $epoch, chunk $k")
+        }
+        frontier += out.length
+      }
+      assert(nextSeq(storeDir) == frontier)
+    }
+  }
+
+  /** Spark jobs started under a job group while `body` runs. Listener
+    * events arrive asynchronously, so a sentinel job in another group
+    * marks the point by which every earlier job has been seen. */
+  private def jobsIn[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(g) if g == group => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group-sentinel" => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("five-stage pipeline: a steady-state trigger runs at most 9 Spark jobs") {
+    withStore("jobs") { storeDir =>
+      val all = docs()
+      trigger(storeDir, all.take(100).toSeq, 0L)
+      trigger(storeDir, all.slice(100, 200).toSeq, 1L)
+      val (_, jobs) = jobsIn(s"five-stage-${System.nanoTime()}") {
+        val out = StreamingPipelines.fiveStageBatch(spark, storeDir)(
+          frame(all.slice(200, 300).toSeq), 2L)
+        out.write.format("noop").mode("overwrite").save()
+      }
+      // fingerprint observed on the chunk checkpoint, schema-free store
+      // read, driver-side frontier record, count-based Reorder: the
+      // call plus one materialization of its output
+      assert(jobs <= 9, s"$jobs Spark jobs for one trigger")
     }
   }
 }
