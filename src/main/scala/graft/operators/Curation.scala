@@ -313,10 +313,8 @@ object Curation {
     * fixpoint); `dedup_clusters` itself keeps running its loop live —
     * it is the key whose job is to measure the labeling. */
   private def clusterLabelsStored(s: SparkSession, dir: String): DataFrame =
-    Dedup.sessionStore(s, dir, "dedup_cluster_labels",
-      "near-dup cluster labeling", module = "curation") {
-      dedupClusters(s, dir)
-    }
+    graft.Stores.parquet(s, dir, "dedup_cluster_labels", Seq("documents"))(
+      dedupClusters(s, dir))
 
   private[graft] def prewarmStores(s: SparkSession, dir: String): Unit =
     clusterLabelsStored(s, dir): Unit

@@ -49,14 +49,14 @@ object Dedup {
     * table per pipeline run and paying the shuffle once at ingest.
     * Output is bit-identical to [[dedupExact]] and shares its oracle. */
   def dedupExactBucketed(s: SparkSession, dir: String): DataFrame = {
-    // table name + path are SESSION-scoped: a fixed global name let
-    // two concurrent sessions clobber each other's store mid-read.
-    // Within a session the name is stable, so repeated calls overwrite
-    // (the ingest-once contract). Production points this at a managed
-    // warehouse location instead of tmpdir.
-    val tbl =
-      s"graft_bucketed_store_${s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "").takeRight(12)}"
-    val path = s"${System.getProperty("java.io.tmpdir")}/$tbl"
+    // the location is a session- and dataset-scoped store path (a
+    // fixed global name let two concurrent sessions clobber each
+    // other's store mid-read); within a session it is stable, so
+    // repeated calls overwrite — the write is part of what this key
+    // measures. Production points this at a managed warehouse
+    // location instead.
+    val path = graft.Stores.path(s, dir, "bucketed_store", Seq("documents"))
+    val tbl = new java.io.File(path).getName
     docs(s, dir)
       .select(col("doc_id"), sha2(col("text").cast("binary"), 256).as("content_sha"))
       .write.mode("overwrite")
@@ -443,73 +443,6 @@ object Dedup {
   private def hashSets(s: SparkSession, dir: String): DataFrame =
     hashSetsOf(docs(s, dir), s.sparkContext.defaultParallelism)
 
-  // ---- shared signature store (session-scoped) -------------------------
-  /** The minhash family's shared materialization: (doc_id, hset, sig)
-    * of the unique-content representatives, written to parquet ONCE
-    * per (session, dataset) and re-read by every family member
-    * (dedup_minhash / _bands / _sweep probe sig + hset; dedup_simhash
-    * reads hset) — a production pipeline computes signatures once and
-    * amortizes them across every near-dup query, and the bench now
-    * measures exactly that (the StorageLayout ingestOnce pattern;
-    * judge item r10#7). Parquet, NOT an in-memory checkpoint: the
-    * bench unpersists every persistent RDD between queries, which
-    * would destroy (unrecoverable — truncated lineage) a shared
-    * localCheckpoint. Keyed by a content fingerprint of the source
-    * files (the annIvfIndexed pattern) so a regenerated dataset moves
-    * the key and forces a rebuild. Columnar re-read gives each
-    * consumer only the columns it probes, with real size stats for
-    * the verify joins' broadcast gating. */
-  private val storeIngested = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** tmpdir path for a session-scoped materialization keyed by a
-    * content fingerprint of the source documents table (the
-    * annIvfIndexed pattern): a regenerated dataset moves the key and
-    * forces a rebuild; distinct tags keep independent stores apart. */
-  private[operators] def storePath(s: SparkSession, dir: String, tag: String,
-                                   srcTable: String = "documents.parquet"): String = {
-    val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "").takeRight(12)
-    val abs = new java.io.File(dir).getAbsolutePath
-    val root = new java.io.File(s"$abs/$srcTable")
-    val files = if (root.isDirectory)
-      Option(root.listFiles).getOrElse(Array.empty).sortBy(_.getName).toSeq
-    else Seq(root)
-    val desc = abs + "|" +
-      files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
-    val dh = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(desc.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${app}_$dh"
-  }
-
-  /** Materialize `build` to parquet once per (session, dataset) and
-    * re-read it — the production one-ingest-many-queries shape the
-    * bench measures. Parquet, NOT an in-memory checkpoint: the bench
-    * unpersists every persistent RDD between queries, which would
-    * destroy (unrecoverable — truncated lineage) a shared
-    * localCheckpoint. */
-  private val storeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private[operators] def sessionStore(s: SparkSession, dir: String, tag: String,
-                           what: String, module: String = "dedup",
-                           srcTable: String = "documents.parquet")
-                          (build: => DataFrame): DataFrame = {
-    val path = storePath(s, dir, tag, srcTable)
-    // per-path lock: concurrent FIRST builds of unrelated stores
-    // (different modules, different datasets) must not serialize
-    // behind one global monitor for multi-second parquet writes
-    val lock = storeLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!storeIngested.contains(path)) {
-        val t0 = System.nanoTime()
-        build.write.mode("overwrite").parquet(path)
-        System.err.println(
-          f"[$module%s] one-time $what store: ${(System.nanoTime() - t0) / 1e9}%.2f s (amortized across the family)")
-        storeIngested.add(path): Unit
-      }
-    }
-    s.read.parquet(path)
-  }
-
   /** Build every session-scoped one-time store this module owns
     * WITHOUT timing anything — the bench calls it before its measured
     * loop so no family member's first pass carries the one-time
@@ -520,12 +453,19 @@ object Dedup {
     sigStore(s, dir)
     dedupNgramJaccard(s, dir)
     dedupMinhash(s, dir)
-    sessionStore(s, dir, "minhash_sweep_cells", "banding sweep cell grid")(
-      dedupMinhashSweep(s, dir)): Unit
+    sweepCells(s, dir): Unit
   }
 
+  /** The minhash family's shared materialization: (doc_id, hset, sig)
+    * of the unique-content representatives, a [[graft.Stores]] store
+    * re-read by every family member (dedup_minhash / _bands / _sweep
+    * probe sig + hset; dedup_simhash reads hset) — a production
+    * pipeline computes signatures once and amortizes them across every
+    * near-dup query, and the bench measures exactly that. Columnar
+    * re-read gives each consumer only the columns it probes, with real
+    * size stats for the verify joins' broadcast gating. */
   private def sigStore(s: SparkSession, dir: String): DataFrame = {
-    val raw = sessionStore(s, dir, "minhash_sig", "minhash signature") {
+    val raw = graft.Stores.parquet(s, dir, "minhash_sig", Seq("documents")) {
       hashSets(s, dir).withColumn("sig", minhashSig(col("hset")))
     }
     // parquet loosens array-element nullability on read; the verify
@@ -812,6 +752,11 @@ object Dedup {
         1.0 - math.pow(1.0 - math.pow(sim, r.toDouble), b.toDouble))
       .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** The sweep's 3-row validation grid, stored once per session. */
+  private def sweepCells(s: SparkSession, dir: String): DataFrame =
+    graft.Stores.parquet(s, dir, "minhash_sweep_cells", Seq("documents"))(
+      dedupMinhashSweep(s, dir))
+
   def dedupBandingPick(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // the measured validation cells come from a one-time session
@@ -819,8 +764,7 @@ object Dedup {
     // self-join + verify per pick invocation would make a
     // driver-side-arithmetic key cost a full sweep every bench pass
     // (review r14); dedup_minhash_sweep itself stays live-measured.
-    val measured = sessionStore(s, dir, "minhash_sweep_cells",
-        "banding sweep cell grid")(dedupMinhashSweep(s, dir)).collect()
+    val measured = sweepCells(s, dir).collect()
       .map(row => (row.getInt(0), row.getInt(1)) -> (row.getLong(2), row.getLong(3)))
       .toMap
     val rows = PickTargets.flatMap { case (tau, target) =>
@@ -876,7 +820,7 @@ object Dedup {
     * the 100 TB posture exactly: the edge list is the product a
     * curation run materializes before everything downstream. */
   def dedupMinhash(s: SparkSession, dir: String): DataFrame =
-    sessionStore(s, dir, "minhash_edges", "minhash near-dup edge") {
+    graft.Stores.parquet(s, dir, "minhash_edges", Seq("documents")) {
       // sig and hset both come from the shared store: the banding join
       // scans only (doc_id, sig), the verify attach only (doc_id, hset)
       // — the store's parquet stats drive the broadcast gating
@@ -1081,7 +1025,7 @@ object Dedup {
     * every graph diagnostic (same mechanism as the minhash signature
     * store; a differential spec pins store == fresh). */
   def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
-    sessionStore(s, dir, "ngram_edges", "n-gram Jaccard edge") {
+    graft.Stores.parquet(s, dir, "ngram_edges", Seq("documents")) {
       dedupNgramJaccardFresh(s, dir)
     }
 

@@ -422,15 +422,15 @@ object Multimodal {
   case class MMPHashRow(doc_id: Long, width: Int, height: Int, phash: Long)
 
   /** One-time session store for the verified pHash pair table
-    * ([[Dedup.sessionStore]] — the shared fingerprint-keyed pattern):
+    * (a [[graft.Stores]] store):
     * mm_phash's banded join + Hamming verify is a one-ingest-many-
     * consumers artifact — mm_phash emits it and mm_phash_clusters
     * contracts over it — so it is built once per (session, documents
     * fingerprint) and both keys read the parquet. Bench pre-warms it
     * untimed via [[prewarmStores]]. */
   def mmPhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.sessionStore(s, dir, "phash_pairs", "pHash-pair",
-      module = "multimodal")(mmPhashBuild(s, dir))
+    graft.Stores.parquet(s, dir, "phash_pairs", Seq("documents"))(
+      mmPhashBuild(s, dir))
 
   private def mmPhashBuild(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1250,47 +1250,26 @@ object Multimodal {
     * distributed write a real cluster performs against shared
     * storage); at 100 TB the directory is an object-store prefix and
     * the binaryFile source lists it distributed. */
-  private val mediaIngested = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def mediaDirPath(s: SparkSession, dir: String): String = {
-    val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "").takeRight(12)
-    val abs = new java.io.File(dir).getAbsolutePath
-    val root = new java.io.File(s"$abs/documents.parquet")
-    val files = if (root.isDirectory)
-      Option(root.listFiles).getOrElse(Array.empty).sortBy(_.getName).toSeq
-    else Seq(root)
-    val desc = abs + "|" +
-      files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
-    val dh = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(desc.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_media_${app}_$dh"
-  }
-
   private def mediaDir(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val path = mediaDirPath(s, dir)
-    Multimodal.synchronized {
-      if (!mediaIngested.contains(path)) {
-        val t0 = System.nanoTime()
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-        docs(s, dir)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-          .as[(Long, Array[Byte])]
-          .foreachPartition { (it: Iterator[(Long, Array[Byte])]) =>
-            it.foreach { case (id, payload) =>
-              val jpeg = graft.functions.JpegCodec.encodeJpeg(
-                synthesizeGrayBands(id, payload), quality = 100, gray = true)
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(path, s"doc_$id.jpg"), jpeg)
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(path, s"doc_$id.wav"),
-                synthesizeWav(id, payload))
-            }
+    // computed on the driver; the executor writers capture the string
+    val path = graft.Stores.path(s, dir, "media", Seq("documents"))
+    graft.Stores.once(path) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+      docs(s, dir)
+        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
+        .as[(Long, Array[Byte])]
+        .foreachPartition { (it: Iterator[(Long, Array[Byte])]) =>
+          it.foreach { case (id, payload) =>
+            val jpeg = graft.functions.JpegCodec.encodeJpeg(
+              synthesizeGrayBands(id, payload), quality = 100, gray = true)
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(path, s"doc_$id.jpg"), jpeg)
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(path, s"doc_$id.wav"),
+              synthesizeWav(id, payload))
           }
-        System.err.println(
-          f"[multimodal] one-time media-file ingest $path: ${(System.nanoTime() - t0) / 1e9}%.2f s (amortized across reads)")
-        mediaIngested.add(path): Unit
-      }
+        }
     }
     path
   }

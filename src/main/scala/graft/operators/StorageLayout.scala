@@ -12,10 +12,10 @@ import graft.Tables
   * write time) and hive-partitioning facts on their time column (pay a
   * directory listing instead of a full scan per time-sliced query).
   *
-  * Both operators perform the ingest themselves (session-scoped
-  * locations, same hygiene as Dedup.dedupExactBucketed) so each is an
-  * honest standalone measurement of write-layout + layout-aware read;
-  * a production deployment writes once and amortizes across every
+  * Both operators perform the ingest themselves, once per (session,
+  * dataset) as [[graft.Stores]] stores: the first pass of a layout key
+  * carries write+read, later passes are read-only — the amortized
+  * number a production deployment, which writes once, sees on every
   * downstream run. Both are DuckDB-oracled: the layout changes the
   * PLAN, never the answer.
   */
@@ -26,68 +26,12 @@ object StorageLayout {
   private val oneR: Column = lit(1).cast(DecimalType(8, 4))
   private def dbl(c: Column): Column = c.cast(DoubleType)
 
-  /** Session- AND dataset-scoped suffix: the session part keeps
-    * concurrent processes apart (dedupExactBucketed's hygiene), the
-    * dataset hash keeps different SF dirs apart WITHIN a session —
-    * the bench's sf0.001 warm-up must never overwrite the sf0.1
-    * tables a concurrently-analyzing caller is reading. The dataset
-    * component is a SHA-256 prefix of the absolute path (the
-    * annIvfIndexed dirKey pattern), not String.hashCode — a 32-bit
-    * hash collision between two dataset dirs would alias their tables
-    * and re-create exactly the cross-dataset clobbering this suffix
-    * exists to prevent. */
-  private def sessionSuffix(s: SparkSession, dir: String): String = {
-    val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "").takeRight(12)
-    val abs = new java.io.File(dir).getAbsolutePath
-    val dh = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(abs.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"${app}_$dh"
-  }
-
-  /** Ingests completed by THIS JVM (keyed by table/path name, which is
-    * already session- and dataset-scoped): a layout write is a
-    * ONE-TIME cost that production amortizes across every downstream
-    * read, so repeat calls within a session skip straight to the
-    * layout-aware read instead of rewriting identical bytes. The
-    * bench's pass spread then self-documents the split: the first
-    * measured pass carries write+read (max), later passes are
-    * read-only (min/med) — the amortized number the layout exists to
-    * claim. The one-time write cost is printed to stderr. */
-  private val ingested = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Content fingerprint of a source table's files (name, size,
-    * mtime — the annIvfIndexed pattern): folded into every ingest key
-    * so a dataset regenerated mid-session moves the key and forces a
-    * re-ingest, instead of silently serving the stale layout. */
-  private def contentFingerprint(dir: String, tables: Seq[String]): String = {
-    val desc = tables.map { t =>
-      val root = new java.io.File(s"$dir/$t.parquet")
-      val files = if (root.isDirectory)
-        Option(root.listFiles).getOrElse(Array.empty).sortBy(_.getName).toSeq
-      else Seq(root)
-      files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
-    }.mkString("||")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(desc.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-  }
-
   /** Bench pre-warm: constructing every registered query triggers its
-    * ingestOnce layout writes (bucketed tables, z-order files, sketch
+    * one-time layout writes (bucketed tables, z-order files, sketch
     * stores) — run untimed before the measured loop so no first pass
     * carries a one-time ingest. */
   private[graft] def prewarmStores(s: SparkSession, dir: String): Unit =
     queries.values.foreach { fn => fn(s, dir); (): Unit }
-
-  private def ingestOnce(key: String)(write: => Unit): Unit =
-    StorageLayout.synchronized {
-      if (!ingested.contains(key)) {
-        val t0 = System.nanoTime()
-        write
-        System.err.println(
-          f"[storage-layout] one-time ingest $key: ${(System.nanoTime() - t0) / 1e9}%.2f s (amortized across reads)")
-        ingested.add(key): Unit
-      }
-    }
 
   // ---- q_colocated_join: bucketed fact-fact join, no join-side shuffle -
   /** The fact-fact join answer to the repeated-shuffle tax: bucket
@@ -107,16 +51,13 @@ object StorageLayout {
     * statistics choose anyway, and AQE has no shuffle stage left to
     * re-plan. */
   def qColocatedJoin(s: SparkSession, dir: String): DataFrame = {
-    val suffix =
-      s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("orders", "lineitem"))}"
-    val tmp = System.getProperty("java.io.tmpdir")
-    val oTbl = s"graft_orders_bkt_$suffix"
-    val lTbl = s"graft_lineitem_bkt_$suffix"
+    val facts = Seq("orders", "lineitem")
+    val oPath = graft.Stores.path(s, dir, "orders_bkt", facts)
+    val lPath = graft.Stores.path(s, dir, "lineitem_bkt", facts)
+    val oTbl = new java.io.File(oPath).getName
+    val lTbl = new java.io.File(lPath).getName
     val buckets = 16
-    // the ingest is serialized JVM-wide: concurrent same-session
-    // callers (parallel test suites) would otherwise overwrite the
-    // tables mid-write
-    ingestOnce(oTbl) {
+    graft.Stores.once(oPath) {
       // repartition on the bucket key before the bucketed write: each
       // writer task then holds exactly the rows of its bucket (Spark's
       // repartition hash == its bucket hash), so the layout is one file
@@ -124,13 +65,13 @@ object StorageLayout {
       Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate")
         .repartition(buckets, col("o_orderkey"))
-        .write.mode("overwrite").option("path", s"$tmp/$oTbl")
+        .write.mode("overwrite").option("path", oPath)
         .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
         .format("parquet").saveAsTable(oTbl)
       Tables.lineitem(s, dir)
         .select("l_orderkey", "l_extendedprice", "l_discount")
         .repartition(buckets, col("l_orderkey"))
-        .write.mode("overwrite").option("path", s"$tmp/$lTbl")
+        .write.mode("overwrite").option("path", lPath)
         .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
         .format("parquet").saveAsTable(lTbl)
     }
@@ -164,10 +105,8 @@ object StorageLayout {
     * query assumes; the data files themselves never carry the
     * partition column, so the layout also stores less. */
   def qPartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val suffix = s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("events"))}"
-    val tmp = System.getProperty("java.io.tmpdir")
-    val path = s"$tmp/graft_events_bydate_$suffix"
-    ingestOnce(path) {
+    val path = graft.Stores.path(s, dir, "events_bydate", Seq("events"))
+    graft.Stores.once(path) {
       Tables.events(s, dir)
         .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
         .write.mode("overwrite").partitionBy("event_date").parquet(path)
@@ -235,23 +174,14 @@ object StorageLayout {
       shiftleft(spreadBits(clamp16(
         floor((unix_micros(ts) - ZAnchorUs) / 60000000L).cast("long"))), 1))
 
-  private[graft] def zorderPath(s: SparkSession, dir: String): String = {
-    val suffix = s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("events"))}"
-    val tmp = System.getProperty("java.io.tmpdir")
-    val path = s"$tmp/graft_events_zorder_$suffix"
-    ingestOnce(path) {
+  def qZorderSkip(s: SparkSession, dir: String): DataFrame =
+    graft.Stores.parquet(s, dir, "events_zorder", Seq("events")) {
       Tables.events(s, dir)
         .withColumn("zk", zkey(col("user_id"), col("ts")))
         .repartitionByRange(16, col("zk"))
         .sortWithinPartitions("zk")
         .drop("zk")
-        .write.mode("overwrite").parquet(path)
     }
-    path
-  }
-
-  def qZorderSkip(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(zorderPath(s, dir))
       .filter(col("user_id").between(10L, 19L) &&
         col("ts") >= lit("2024-01-15").cast("timestamp") &&
         col("ts") < lit("2024-01-16").cast("timestamp"))
@@ -300,15 +230,9 @@ object StorageLayout {
         max(col("value")).as("max_value"))
 
   def qIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    val suffix = s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("events"))}"
-    val tmp = System.getProperty("java.io.tmpdir")
-    val path = s"$tmp/graft_events_aggstore_$suffix"
     val cutoff = lit(IncCutoff).cast("timestamp")
-    ingestOnce(path) {
-      incPartials(Tables.events(s, dir).filter(col("ts") < cutoff))
-        .write.mode("overwrite").parquet(path)
-    }
-    val store = s.read.parquet(path)
+    val store = graft.Stores.parquet(s, dir, "events_aggstore", Seq("events"))(
+      incPartials(Tables.events(s, dir).filter(col("ts") < cutoff)))
     val batch = incPartials(Tables.events(s, dir).filter(col("ts") >= cutoff))
     val zeroDec = lit(0).cast(DecimalType(22, 4))
     store.select(col("event_date"), col("event_type"),
@@ -387,15 +311,11 @@ object StorageLayout {
           .otherwise("keep").as("action"))
 
   def qDeltaUpsert(s: SparkSession, dir: String): DataFrame = {
-    val suffix = s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("events"))}"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_events_dimstore_$suffix"
     val cutoff = lit(UpsertStoreCutoff).cast("timestamp")
     val batchEnd = lit(UpsertBatchEnd).cast("timestamp")
-    ingestOnce(path) {
-      latestPerKey(Tables.events(s, dir).filter(col("ts") < cutoff))
-        .write.mode("overwrite").parquet(path)
-    }
-    mergeWithBatch(s.read.parquet(path),
+    mergeWithBatch(
+      graft.Stores.parquet(s, dir, "events_dimstore", Seq("events"))(
+        latestPerKey(Tables.events(s, dir).filter(col("ts") < cutoff))),
       latestPerKey(Tables.events(s, dir)
         .filter(col("ts") >= cutoff && col("ts") < batchEnd)))
   }
@@ -446,7 +366,7 @@ object StorageLayout {
     val (segPath, compactPath) = compactPaths(s, dir)
     val cutoff = lit(UpsertStoreCutoff).cast("timestamp")
     val batchEnd = lit(UpsertBatchEnd).cast("timestamp")
-    ingestOnce(segPath) {
+    graft.Stores.once(segPath) {
       // three immutable epoch segments appended in order; the FIRST
       // slice is unbounded below so the segment union covers exactly
       // ts < cutoff, the same range qDeltaUpsert's store and the
@@ -465,7 +385,7 @@ object StorageLayout {
         case _ => ()
       }
     }
-    ingestOnce(compactPath) {
+    graft.Stores.once(compactPath) {
       latestPerKey(s.read.parquet(segPath))
         .coalesce(1)
         .write.mode("overwrite").parquet(compactPath)
@@ -477,12 +397,9 @@ object StorageLayout {
 
   /** Exposed for the spec: the two store locations of the current
     * session/dataset, to count files and compare serve views. */
-  private[graft] def compactPaths(s: SparkSession, dir: String): (String, String) = {
-    val suffix = s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("events"))}"
-    val tmp = System.getProperty("java.io.tmpdir")
-    (s"$tmp/graft_events_segstore_$suffix",
-      s"$tmp/graft_events_segstore_compacted_$suffix")
-  }
+  private[graft] def compactPaths(s: SparkSession, dir: String): (String, String) =
+    (graft.Stores.path(s, dir, "events_segstore", Seq("events")),
+      graft.Stores.path(s, dir, "events_segstore_compacted", Seq("events")))
 
   // ---- q_hll_store: mergeable distinct-count sketch store --------------
   /** The COUNT(DISTINCT) maintenance answer q_incremental_agg
@@ -503,16 +420,12 @@ object StorageLayout {
     * dumped estimate — a forged estimate, exact, or gate breaks the
     * hash. */
   def qHllStore(s: SparkSession, dir: String): DataFrame = {
-    val suffix = s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("events"))}"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_events_hllstore_$suffix"
-    ingestOnce(path) {
-      Tables.events(s, dir)
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("event_date"))
-        .agg(hll_sketch_agg(col("user_id")).as("sk"))
-        .write.mode("overwrite").parquet(path)
-    }
     val weekOf = (d: Column) => date_format(date_trunc("week", d), "yyyy-MM-dd")
-    val est = s.read.parquet(path)
+    val est = graft.Stores.parquet(s, dir, "events_hllstore", Seq("events")) {
+        Tables.events(s, dir)
+          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("event_date"))
+          .agg(hll_sketch_agg(col("user_id")).as("sk"))
+      }
       .groupBy(weekOf(to_date(col("event_date"))).as("week"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
     val exact = Tables.events(s, dir)
@@ -554,15 +467,11 @@ object StorageLayout {
   def qThetaStore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.ThetaFns
-    val suffix = s"${sessionSuffix(s, dir)}_${contentFingerprint(dir, Seq("events"))}"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_events_thetastore_$suffix"
-    ingestOnce(path) {
-      Tables.events(s, dir)
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("event_date"))
-        .agg(ThetaFns.thetaSketchAgg(col("user_id")).as("sk"))
-        .write.mode("overwrite").parquet(path)
-    }
-    val days = s.read.parquet(path)
+    val days = graft.Stores.parquet(s, dir, "events_thetastore", Seq("events")) {
+        Tables.events(s, dir)
+          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("event_date"))
+          .agg(ThetaFns.thetaSketchAgg(col("user_id")).as("sk"))
+      }
       .as[(String, Array[Byte])].collect().sortBy(_._1)
     val pairs = days.sliding(2).collect { case Array((d0, s0), (d1, s1)) =>
       (d0, d1, ThetaFns.estimate(s0), ThetaFns.estimate(s1),

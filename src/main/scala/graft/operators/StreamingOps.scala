@@ -74,8 +74,7 @@ object StreamingOps {
     val idx = Similarity.ferretIndex(e)
     val feed = scala.concurrent.Await.result(feedF,
       scala.concurrent.duration.Duration.Inf)
-    val outDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_sferret_${System.nanoTime()}"
+    val outDir = graft.Stores.scratch(s, "sferret")
     try {
       StreamingPipelines.withScopedConf(s,
         ferretInnerConf(s, nCorpus, math.max(1L, (nCorpus / 10 + 4) / 5))) {
@@ -135,8 +134,7 @@ object StreamingOps {
         Await.result(f3, Duration.Inf))
     }
     StreamingPipelines.phase("rate-bench feeds", tp0): Unit
-    val storeDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_5stage_${System.nanoTime()}"
+    val storeDir = graft.Stores.scratch(s, "5stage")
     try {
       // the five legs are INDEPENDENT streaming queries (three over
       // the event feed, one over the doc feed, one over the query
@@ -444,16 +442,6 @@ object StreamingOps {
     * cross-engine-proven. countDistinct is not available to a
     * streaming aggregation, so the mirror carries count + decimal sum
     * (the windowAgg shape). */
-  /** Bounded parquet sink for the oracled streaming drains (r15
-    * verdict #3): the memory sink collects every output row onto the
-    * driver — stream_sessions at sf1 was a first-order contributor to
-    * the 48 g driver heap the full-scale suite needed. An
-    * append-mode parquet sink keeps results in executor-written
-    * files; the returned frame READS them lazily, so nothing
-    * result-sized ever resides on the driver. The sink dir lives
-    * under java.io.tmpdir for the JVM's lifetime (the caller — Verify
-    * or Bench — consumes the frame before exit) and is removed by a
-    * shutdown hook. */
   /** Sink choice scaled to the corpus (r16 verdict #3): the parquet
     * drain is the ONLY safe shape at certification scale, but at
     * small SFs its fixed price (per-trigger file commits + metadata
@@ -474,14 +462,20 @@ object StreamingOps {
     s.table(sinkName)
   }
 
+  /** Bounded parquet sink for the oracled streaming drains: the
+    * memory sink collects every output row onto the driver —
+    * stream_sessions at sf1 was a first-order contributor to the 48 g
+    * driver heap the full-scale suite needed. An append-mode parquet
+    * sink keeps results in executor-written files; the returned frame
+    * READS them lazily, so nothing result-sized ever resides on the
+    * driver. The sink dir is a
+    * [[graft.Stores]] scratch dir, so it lives as long as the session
+    * that consumes the frame and goes with it at `stop()`. */
   private def drainToParquet(s: SparkSession, name: String,
                              schema: org.apache.spark.sql.types.StructType)
       (start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${System.nanoTime()}"
+    val base = graft.Stores.scratch(s, name)
     val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
-    sys.addShutdownHook {
-      StreamingPipelines.deleteRecursively(new java.io.File(base))
-    }
     val q = start(outDir, ckpt)
     q.awaitTermination()
     // a drain that committed no output files leaves a parquet dir

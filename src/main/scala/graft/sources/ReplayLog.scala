@@ -150,32 +150,12 @@ object ReplayLog {
   }
 
   // ---- session-scoped ingest (the one-log-many-consumers shape) --------
-  private val ingested = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Ingest the sf-dir's events table once per (session, dataset) and
     * return the log dir — the topic exists once, every consumer reads
-    * it by offset (the Dedup.sessionStore pattern). */
+    * it by offset (a [[graft.Stores]] store). */
   def ingestOnce(s: SparkSession, sfDir: String, nParts: Int): String = {
-    val app = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "").takeRight(12)
-    val abs = new File(sfDir).getAbsolutePath
-    val root = new File(s"$abs/events.parquet")
-    val files = if (root.isDirectory)
-      Option(root.listFiles).getOrElse(Array.empty).sortBy(_.getName).toSeq
-    else Seq(root)
-    val desc = abs + "|" + nParts + "|" +
-      files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
-    val dh = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(desc.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_replaylog_${app}_$dh"
-    ReplayLog.synchronized {
-      if (!ingested.contains(dir)) {
-        val t0 = System.nanoTime()
-        ingest(s, graft.Tables.events(s, sfDir), nParts, dir)
-        System.err.println(
-          f"[replay] one-time event-log ingest: ${(System.nanoTime() - t0) / 1e9}%.2f s (amortized across consumers)")
-        ingested.add(dir): Unit
-      }
-    }
+    val dir = graft.Stores.path(s, sfDir, s"replaylog_p$nParts", Seq("events"))
+    graft.Stores.once(dir)(ingest(s, graft.Tables.events(s, sfDir), nParts, dir))
     dir
   }
 }

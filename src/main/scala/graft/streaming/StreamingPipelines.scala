@@ -784,7 +784,7 @@ object StreamingPipelines {
     * query-vector stream) bring their own replay key. */
   def prepareFeedBy(s: SparkSession, df: DataFrame, nSlices: Int,
                     sortCols: Seq[org.apache.spark.sql.Column]): Feed = {
-    val feedDir = s"${System.getProperty("java.io.tmpdir")}/graft_feed_${System.nanoTime()}"
+    val feedDir = graft.Stores.scratch(s, "feed")
     df.repartitionByRange(nSlices, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .write.mode("overwrite").parquet(feedDir)
@@ -802,12 +802,6 @@ object StreamingPipelines {
     Feed(feedDir, written.count(), parts.length, written.schema)
   }
 
-  /** Drive a pipeline from a DISTRIBUTED file source and measure
-    * end-to-end throughput — the reference's items/s metric
-    * (bin/parsec_stream logs) with no driver-side event collection:
-    * the stream replays the feed one slice per micro-batch
-    * (maxFilesPerTrigger=1) in mtime order. This is the scale path —
-    * the events never pass through the driver. */
   /** Serializes the shuffle-partition override window around each
     * measured query's start: StreamExecution clones the session in
     * its constructor, so a started stream keeps its override — but
@@ -819,14 +813,23 @@ object StreamingPipelines {
     * to startup (the fileThroughputBench pattern, shared): the stream
     * clones the session in its constructor, so the started query keeps
     * `parts` for its state layout while the shared session is restored
-    * immediately. Serialized on [[startLock]] against concurrent legs. */
-  def startWithStateParts[T](s: SparkSession, parts: Int)(start: => T): T =
+    * immediately. Serialized on [[startLock]] against concurrent legs.
+    * `parts` is evaluated INSIDE the lock: a count derived from
+    * numShufflePartitions read outside it could observe another leg's
+    * transient override. */
+  def startWithStateParts[T](s: SparkSession, parts: => Int)(start: => T): T =
     startLock.synchronized {
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try { s.conf.set("spark.sql.shuffle.partitions", parts.toString); start }
       finally s.conf.set("spark.sql.shuffle.partitions", prev)
     }
 
+  /** Drive a pipeline from a DISTRIBUTED file source and measure
+    * end-to-end throughput — the reference's items/s metric
+    * (bin/parsec_stream logs) with no driver-side event collection:
+    * the stream replays the feed one slice per micro-batch
+    * (maxFilesPerTrigger=1) in mtime order. This is the scale path —
+    * the events never pass through the driver. */
   def fileThroughputBench(s: SparkSession, feed: Feed,
                           name: String, pipeline: DataFrame => DataFrame,
                           mode: OutputMode = OutputMode.Update()): BenchResult = {
@@ -844,22 +847,12 @@ object StreamingPipelines {
     // executors and reports the per-batch count through
     // SinkProgress.numOutputRows, so rows_out keeps its meaning
     // (cumulative emitted rows) with nothing held on the driver.
-    val q = startLock.synchronized {
-      // stateParts is derived from numShufflePartitions INSIDE the
-      // lock: concurrent legs (streamRateBench) mutate that conf in
-      // their own override windows, and a read outside the lock could
-      // observe another leg's transient value (r16 review)
-      val stateParts = math.max(4, math.min(
-        s.sessionState.conf.numShufflePartitions,
-        (feed.rows / math.max(1, feed.slices) / 2000L).toInt))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-        pipeline(s.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1).parquet(feed.path))
-          .writeStream.format("noop")
-          .outputMode(mode).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val q = startWithStateParts(s,
+        statePartsFor(s, (feed.rows / math.max(1, feed.slices)).toInt)) {
+      pipeline(s.readStream.schema(feed.schema)
+          .option("maxFilesPerTrigger", 1).parquet(feed.path))
+        .writeStream.format("noop")
+        .outputMode(mode).start()
     }
     try {
       // clock starts AFTER query startup, matching throughputBench —
@@ -947,6 +940,17 @@ object StreamingPipelines {
       late_median_ms_per_row: Double, mid_median_blocks: Long,
       late_median_blocks: Long, flat_ok: Boolean)
 
+  /** Run `body` with session-conf entries set, restoring the previous
+    * values after — for a harness that owns the session while it runs
+    * (a single-key drain; NOT safe under concurrent legs sharing the
+    * session). Used to scope volume-derived inner-batch settings
+    * (shuffle partitions, the tiny-batch AQE gate) to one key. */
+  def withScopedConf[T](s: SparkSession, kv: Map[String, String])(body: => T): T = {
+    val prev = kv.keys.map(k => k -> s.conf.get(k)).toMap
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
+  }
+
   /** Sustained-rate soak for a STATELESS foreachBatch pipeline — the
     * ferret stream's continuous posture (the reference's 6-stage
     * pipeline runs unbounded; bin/parsec_stream drives it at rate).
@@ -965,17 +969,6 @@ object StreamingPipelines {
     * so the n ≥ 12 sample floor clears in ~8 s of plateau (the r16
     * verdict #7 cadence rule: derive samples from the trigger rate,
     * not longer wall); the flatness CLAIM is cadence-independent. */
-  /** Run `body` with session-conf entries set, restoring the previous
-    * values after — for a harness that owns the session while it runs
-    * (a single-key drain; NOT safe under concurrent legs sharing the
-    * session). Used to scope volume-derived inner-batch settings
-    * (shuffle partitions, the tiny-batch AQE gate) to one key. */
-  def withScopedConf[T](s: SparkSession, kv: Map[String, String])(body: => T): T = {
-    val prev = kv.keys.map(k => k -> s.conf.get(k)).toMap
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
-  }
-
   def ferretRateSoak(s: SparkSession, soakSecs: Int, queriesPerSec: Int,
                      attach: DataFrame => DataFrame,
                      search: DataFrame => DataFrame,
@@ -1018,26 +1011,21 @@ object StreamingPipelines {
       search(attach(warmDf)).write.format("noop").mode("overwrite").save()
     } catch { case scala.util.control.NonFatal(_) => () }
     val tf1 = phase("ferret-soak plan-warm", tf0)
-    val q = startLock.synchronized {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        stateParts.foreach(p => s.conf.set("spark.sql.shuffle.partitions", p.toString))
-        src.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // cache the trigger batch: the two-phase search references
-            // the query batch in THREE plan branches (bucket probe,
-            // sketch attach, exact-cosine attach), and an uncached
-            // foreachBatch frame re-reads the source once per branch —
-            // tripling both the work and the reported numInputRows
-            val batch = b.toDF().cache()
-            try search(attach(batch)).write.format("noop").mode("overwrite").save()
-            finally { batch.unpersist(blocking = false): Unit }
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger
-            .ProcessingTime(s"$triggerMillis milliseconds"))
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    def start = src.writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        // cache the trigger batch: the two-phase search references
+        // the query batch in THREE plan branches (bucket probe,
+        // sketch attach, exact-cosine attach), and an uncached
+        // foreachBatch frame re-reads the source once per branch —
+        // tripling both the work and the reported numInputRows
+        val batch = b.toDF().cache()
+        try search(attach(batch)).write.format("noop").mode("overwrite").save()
+        finally { batch.unpersist(blocking = false): Unit }
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger
+        .ProcessingTime(s"$triggerMillis milliseconds"))
+      .start()
+    val q = stateParts.fold(start)(p => startWithStateParts(s, p)(start))
     val tf2 = phase("ferret-soak start()", tf1)
     val samples = scala.collection.mutable.LinkedHashMap
       .empty[Long, (Double, Long, Double, Double, Int, Long)]
@@ -1156,24 +1144,20 @@ object StreamingPipelines {
         .write.format("noop").mode("overwrite").save()
     } catch { case scala.util.control.NonFatal(_) => () }
     val tp0 = phase("dedup-soak plan-warm", tw0)
-    val q = startLock.synchronized {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        // default state sizing follows the SAME trigger-volume rule as
-        // the throughput harnesses (statePartsFor: ~2k rows/partition
-        // per trigger, floor 4 — r16): a 250 ms trigger at 20k rows/s
-        // carries ~5k rows, so 32 session-default partitions meant 32
-        // near-empty store commits per trigger — the commit machinery
-        // dominated the trigger and halved the soak's sample rate.
-        // GRAFT_SOAK_STATE_PARTS still overrides for cluster-shaped
-        // certification runs, exactly as before.
-        val parts = stateParts.getOrElse(statePartsFor(s, rowsPerSec / 4))
-        s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        agg.writeStream.format("noop")
-          .outputMode(OutputMode.Update())
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // default state sizing follows the SAME trigger-volume rule as
+    // the throughput harnesses (statePartsFor: ~2k rows/partition
+    // per trigger, floor 4): a 250 ms trigger at 20k rows/s
+    // carries ~5k rows, so 32 session-default partitions meant 32
+    // near-empty store commits per trigger — the commit machinery
+    // dominated the trigger and halved the soak's sample rate.
+    // GRAFT_SOAK_STATE_PARTS still overrides for cluster-shaped
+    // certification runs, exactly as before.
+    val q = startWithStateParts(s,
+        stateParts.getOrElse(statePartsFor(s, rowsPerSec / 4))) {
+      agg.writeStream.format("noop")
+        .outputMode(OutputMode.Update())
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
+        .start()
     }
     val tp1 = phase("dedup-soak start()", tp0)
     val samples = scala.collection.mutable.LinkedHashMap
@@ -1234,18 +1218,18 @@ object StreamingPipelines {
     }
   }
 
-  /** Drive a pipeline with MemoryStream micro-batches of `batchSize`
-    * events and measure end-to-end throughput — the reference's
-    * items/s metric (bin/parsec_stream logs). MemoryStream feeds from
-    * the driver by construction; [[fileThroughputBench]] is the
-    * distributed-feed variant, this one exists for exact batch-size
-    * control in the knob sweep. */
   /** Trigger-volume-proportional state-partition count (both
     * harnesses' default sizing; see the comments at the use sites). */
   def statePartsFor(s: SparkSession, batchSize: Int): Int =
     math.max(4, math.min(
       s.sessionState.conf.numShufflePartitions, batchSize / 2000))
 
+  /** Drive a pipeline with MemoryStream micro-batches of `batchSize`
+    * events and measure end-to-end throughput — the reference's
+    * items/s metric (bin/parsec_stream logs). MemoryStream feeds from
+    * the driver by construction; [[fileThroughputBench]] is the
+    * distributed-feed variant, this one exists for exact batch-size
+    * control in the knob sweep. */
   def throughputBench(s: SparkSession, events: Seq[Ev], batchSize: Int,
                       name: String, pipeline: DataFrame => DataFrame,
                       mode: OutputMode = OutputMode.Update(),
@@ -1263,16 +1247,11 @@ object StreamingPipelines {
     // (this feed is driver-bounded by construction — the sweep caps
     // events — but the two harnesses should report rows_out from the
     // same mechanism so their numbers stay comparable)
-    val q = startLock.synchronized {
-      // inside the lock, as in fileThroughputBench (conf-read race)
-      val stateParts = statePartsOverride.getOrElse(statePartsFor(s, batchSize))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-        pipeline(source.toDF())
-          .writeStream.format("noop")
-          .outputMode(mode).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val q = startWithStateParts(s,
+        statePartsOverride.getOrElse(statePartsFor(s, batchSize))) {
+      pipeline(source.toDF())
+        .writeStream.format("noop")
+        .outputMode(mode).start()
     }
     val t0 = System.nanoTime()
     var batches = 0L

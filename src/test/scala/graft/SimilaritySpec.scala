@@ -301,7 +301,7 @@ class SimilaritySpec extends SparkSpec {
     // the append landed as an immutable DELTA segment: base files
     // untouched by a re-run (mtimes stable), both segments present,
     // and together they hold the whole corpus exactly once
-    val root = new java.io.File(Similarity.ivfAppendRoot(sfDir))
+    val root = new java.io.File(Similarity.ivfAppendRoot(spark, sfDir))
     def files(seg: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).toSeq.flatMap(walk)
@@ -329,7 +329,7 @@ class SimilaritySpec extends SparkSpec {
     // the maintenance loop really ran as MULTIPLE micro-batch epochs,
     // each its own immutable delta segment, together holding every
     // late arrival exactly once
-    val root = new java.io.File(Similarity.streamIndexRoot(sfDir))
+    val root = new java.io.File(Similarity.streamIndexRoot(spark, sfDir))
     val deltas = Option(root.listFiles).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("delta_"))
     assert(deltas.length >= 2, s"expected multi-epoch ingest, got ${deltas.length}")
@@ -349,7 +349,7 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "vec_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val gen0 = rows(Similarity.annStreamAppend(spark, sfDir))
-    val root = new java.io.File(Similarity.streamIndexRoot(sfDir))
+    val root = new java.io.File(Similarity.streamIndexRoot(spark, sfDir))
     def gen0Files(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).toSeq.flatMap(walk)
@@ -380,9 +380,9 @@ class SimilaritySpec extends SparkSpec {
     // not evict dataset B's live index (the bench alternates its
     // warm-up SF and measured SF on every invocation)
     def indexDirs(): Set[String] = {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      Option(tmp.listFiles).getOrElse(Array.empty)
-        .map(_.getName).filter(_.startsWith("graft_ivf_idx_")).toSet
+      val root = new java.io.File(Stores.root(spark))
+      Option(root.listFiles).getOrElse(Array.empty)
+        .map(_.getName).filter(_.startsWith("ivf_idx_")).toSet
     }
     Similarity.annIvfIndexed(spark, sfDir).count()
     val afterA = indexDirs()
@@ -394,10 +394,10 @@ class SimilaritySpec extends SparkSpec {
     // re-probing A reuses the cached index (marker untouched)
     val marker = afterA.find(!_.endsWith(".centroids")).get
     val mtime = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/$marker/_SUCCESS").lastModified
+      s"${Stores.root(spark)}/$marker/_SUCCESS").lastModified
     Similarity.annIvfIndexed(spark, sfDir).count()
     val mtime2 = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/$marker/_SUCCESS").lastModified
+      s"${Stores.root(spark)}/$marker/_SUCCESS").lastModified
     assert(mtime == mtime2, "cached index was rebuilt on re-probe")
   }
 
