@@ -218,12 +218,18 @@ object Sampling {
   }
 
   // ---- shard_tar: WebDataset-style tar shard sink -----------------------
+  /** Shard directory, a [[graft.Stores]] path keyed by the documents'
+    * content: one dir per session and dataset, deleted with the
+    * session, so no run ever sees another run's shards. */
+  private[graft] def tarShardDir(s: SparkSession, dir: String): String =
+    graft.Stores.path(s, dir, "tar_shards", Seq("documents"))
+
   /** Materialize the shard_pack assignment as REAL training shards —
     * one POSIX-ustar tar per shard with a `{doc_id}.txt` member per
     * document in pack order, the WebDataset layout every large-scale
     * training loader consumes. One shuffle on shard_id, one writer
     * task per shard (exactly how WebDataset shards are produced at
-    * any scale; the local tmp sink swaps for object storage without
+    * any scale; the local store dir swaps for object storage without
     * touching the grouping). Emits the per-shard accounting the
     * loader's manifest needs: member count, payload bytes, and the
     * EXACT archive size.
@@ -235,25 +241,11 @@ object Sampling {
     * relationally. Byte-level fidelity (payload round-trip against
     * the table, header checksums, member order) is pinned by
     * SamplingSpec's read-back through [[graft.sinks.TarShards]]. */
-  /** Per-dataset shard directory — shard counts differ across SFs, so
-    * a shared dir would leave stale higher-numbered shards behind for
-    * shard_untar to read. Stale shards from older, differently-sized
-    * runs are reaped by the READER (shardUntar), which also loads
-    * only the current pack's exact shard set — plan construction
-    * never touches the filesystem. */
-  private[graft] def tarShardDir(dir: String): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_tar_shards_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-
   def shardTar(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // NO driver-side filesystem effects at plan-construction time:
-    // merely building this DataFrame (a plan sweep, an .explain) must
-    // not touch shards a previous run produced for a later reader —
-    // directories are created idempotently inside the tasks, and
-    // stale-shard reconciliation lives with the reader (shardUntar
-    // loads exactly the shard set THIS pack produced)
-    val outPath = tarShardDir(dir).getAbsolutePath
+    // directories are created idempotently inside the tasks
+    val outPath = tarShardDir(s, dir)
     shardPack(s, dir).select("doc_id", "cum_tokens", "shard_id")
       .join(docs(s, dir).select("doc_id", "text"), "doc_id")
       .select(col("shard_id"), col("cum_tokens"), col("doc_id"), col("text"))
@@ -304,9 +296,9 @@ object Sampling {
     * Builds the shards first (cheap, deterministic overwrite), so
     * the key is self-contained. NOTE the write/read contract: the
     * shard directory must be a filesystem every task AND the
-    * driver's binaryFile listing can see — java.io.tmpdir only works
-    * single-node (this sandbox); on a cluster the same two operators
-    * run against a shared object-store/NFS path, nothing else
+    * driver's binaryFile listing can see — the driver-local store
+    * root only works single-node (local mode); on a cluster the same
+    * two operators run against a shared object-store/NFS path, nothing else
     * changes. Writes are atomic (write-aside + rename), so a reader
     * never sees a torn shard.
     *
@@ -317,27 +309,16 @@ object Sampling {
     import s.implicits._
     // materialize the shards and collect THIS pack's shard ids (a
     // shard-cardinality collect) — the reader then loads exactly
-    // those files, so shards a previous, differently-sized run left
-    // behind can never leak into the result; leftovers are reaped
-    // here, in the action path, never at plan construction
+    // those files, never an orphaned attempt tmp
     val shardIds = shardTar(s, dir).select("shard_id")
       .as[Long].collect().sorted
+    val outDir = tarShardDir(s, dir)
     // a zero-shard manifest would otherwise surface as an opaque
     // empty-path AnalysisException from the binaryFile load (ADVICE r12)
     require(shardIds.nonEmpty,
-      s"shard_untar: shardTar produced no shards under ${tarShardDir(dir)}")
-    val outDir = tarShardDir(dir)
-    val expect = shardIds.map(id => f"shard-$id%05d.tar").toSet
-    Option(outDir.listFiles).foreach(_.filter(f =>
-        (f.getName.endsWith(".tar") && !expect.contains(f.getName)) ||
-          f.getName.endsWith(".tmp")) // orphaned attempt tmp files: a
-      // task killed between write and ATOMIC_MOVE leaves its
-      // attempt-unique tmp behind forever — the reaper is the only
-      // place that can safely collect them (no attempt is live here)
-      .foreach(_.delete()))
+      s"shard_untar: shardTar produced no shards under $outDir")
     s.read.format("binaryFile")
-      .load(shardIds.map(id =>
-        new java.io.File(outDir, f"shard-$id%05d.tar").getAbsolutePath): _*)
+      .load(shardIds.map(id => f"$outDir/shard-$id%05d.tar"): _*)
       .select("content").as[Array[Byte]]
       .flatMap(bytes => graft.sinks.TarShards.parse(bytes).map {
         case (name, data) =>

@@ -564,7 +564,7 @@ object StreamingOps {
     * replay log and proven equal to the batch session_window TVF: the
     * rate-limited drain (multiple micro-batches, so sessions really
     * span triggers and the state-store merge path really runs) feeds
-    * a watermarked session_window aggregation; the per-partition
+    * [[StreamingPipelines.sessionTvfAgg]]; the per-partition
     * flush sentinels push the watermark past every real session's end
     * (sentinel ts is 3 h past max event time, delay 1 h, gap 30 min),
     * so append mode emits exactly the batch result. The sentinel's
@@ -584,16 +584,10 @@ object StreamingOps {
     val nEvents = Tables.events(s, dir).count()
     val rowsPerTrigger = math.max(25000L, (nEvents + 15) / 16)
     val logDir = graft.sources.ReplayLog.ingestOnce(s, dir, nParts = 8)
-    val sdf = s.readStream.format("graft.sources.ReplayLogProvider")
-      .option("path", logDir)
-      .option("maxRowsPerTrigger", rowsPerTrigger.toString).load()
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_micros(col("w.start")).as("start_us"),
-        unix_micros(col("w.end")).as("end_us"),
-        col("n_events"))
+    val sdf = StreamingPipelines.sessionTvfAgg(
+      s.readStream.format("graft.sources.ReplayLogProvider")
+        .option("path", logDir)
+        .option("maxRowsPerTrigger", rowsPerTrigger.toString).load())
     // state partitions sized to the trigger volume — same rationale
     // and rule as stream_replay above (session-window state merges
     // live per partition; near-empty store commits dominate a small

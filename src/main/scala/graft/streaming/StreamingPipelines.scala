@@ -53,13 +53,12 @@ object StreamingPipelines {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
 
-  /** Sessionization on the THIRD stateful surface — the session_window
-    * TVF (the other two: flatMapGroupsWithState in [[sessionize]],
-    * transformWithState in SessionProcessor). Merging-session state
-    * under the watermark; StreamingSpec proves it matches the batch
-    * mirror `q_session_tvf` cell-for-cell once the stream drains. */
+  /** Sessionization on Spark's native session_window TVF, the twin of
+    * [[sessionize]] without `sess_id`. Merging-session state under the
+    * watermark; StreamingSpec proves it matches the batch mirror
+    * `q_session_tvf` cell-for-cell once the stream drains. */
   def sessionTvfAgg(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "2 hours")
+    events.withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
@@ -68,13 +67,38 @@ object StreamingPipelines {
         col("n_events"))
 
   // ---- stateful sessionization (flatMapGroupsWithState) ----------------
-  case class SessState(sessId: Long, startUs: Long, endUs: Long, nEvents: Long)
+  /** A session the watermark has not closed yet. */
+  case class OpenSession(startUs: Long, endUs: Long, nEvents: Long)
+  /** Per-user state: how many sessions were emitted, plus the open
+    * ones in start order, each more than the gap apart. */
+  case class SessState(emitted: Long, open: Seq[OpenSession])
 
   private def tsUs(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
 
+  /** The ms event-time timer of an open session: once the watermark is
+    * past it, every on-time event lies more than the gap after the
+    * session's last event, so none can reach it. */
+  private def horizonMs(o: OpenSession): Long = (o.endUs + SessionGapUs) / 1000L
+
   /** Event-time sessionization with a 30-min gap — the streaming twin
-    * of Relational.qSessionize. Sessions close when the watermark
-    * passes their gap horizon (EventTimeTimeout). */
+    * of Relational.qSessionize.
+    *
+    * State per user is the emitted-session counter plus the sessions
+    * the watermark has not closed. Each event merges into, or bridges,
+    * the open sessions within the gap of it, lowering their start and
+    * raising their end, so arrival order does not matter. A session
+    * closes only when the watermark passes its [[horizonMs]], and is
+    * then emitted numbered counter + 1, in start order. That happens
+    * on the event-time timer, set at the earliest open session's
+    * horizon, or in a data call for a key whose timer is due in the
+    * same trigger (Spark runs the data calls before the timers).
+    *
+    * Late rows: under EventTimeTimeout Spark drops every row at or
+    * behind the previous trigger's watermark before it reaches the
+    * state. A late row never opens, extends or reopens a session and
+    * is absent from the output; every row Spark keeps lies past the
+    * horizon of each emitted session. The output equals `q_sessionize`
+    * over the kept rows. */
   def sessionize(events: Dataset[Ev]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     events.withWatermark("ts", "30 minutes")
@@ -82,49 +106,22 @@ object StreamingPipelines {
       .flatMapGroupsWithState[SessState, SessionOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout()) {
         (userId: Long, it: Iterator[Ev], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            // Close the session but RETAIN the counter as an nEvents=0
-            // tombstone (no new timer): a later event for this user
-            // must continue the numbering at sessId+1, not restart at
-            // 1, or the stream diverges from the batch mirror's
-            // cumulative sess_id. Cost: ~32 bytes of per-key state.
-            state.update(SessState(s.sessId, s.endUs, s.endUs, 0L))
-            Iterator.single(SessionOut(userId, s.sessId, s.nEvents, s.startUs, s.endUs))
-          } else {
-            val evs = it.toVector.sortBy(e => (tsUs(e.ts), e.event_id))
-            var cur = state.getOption
-            val out = Vector.newBuilder[SessionOut]
-            evs.foreach { e =>
-              val us = tsUs(e.ts)
-              cur match {
-                case Some(s) if s.nEvents == 0 => // tombstone: closed session
-                  cur = Some(SessState(s.sessId + 1, us, us, 1))
-                case Some(s) if us - s.endUs <= SessionGapUs =>
-                  cur = Some(s.copy(endUs = math.max(s.endUs, us), nEvents = s.nEvents + 1))
-                case Some(s) =>
-                  out += SessionOut(userId, s.sessId, s.nEvents, s.startUs, s.endUs)
-                  cur = Some(SessState(s.sessId + 1, us, us, 1))
-                case None =>
-                  cur = Some(SessState(1L, us, us, 1))
-              }
+          val s0 = state.getOption.getOrElse(SessState(0L, Nil))
+          val open = it.foldLeft(s0.open) { (open, e) =>
+            val us = tsUs(e.ts)
+            val (near, far) = open.partition(o =>
+              us >= o.startUs - SessionGapUs && us <= o.endUs + SessionGapUs)
+            val merged = near.foldLeft(OpenSession(us, us, 1L)) { (m, o) =>
+              OpenSession(math.min(m.startUs, o.startUs),
+                math.max(m.endUs, o.endUs), m.nEvents + o.nEvents)
             }
-            cur.foreach { s =>
-              state.update(s)
-              // a tombstone is pure counter state — it never times out.
-              // The timeout is clamped above the current watermark:
-              // flatMapGroupsWithState hands LATE batches to the user
-              // function rather than filtering them, and a timeout at
-              // or below the watermark is an error — the clamp closes
-              // such a session at the next watermark advance instead
-              // of crashing the query.
-              if (s.nEvents > 0) {
-                val want = s.endUs / 1000L + SessionGapUs / 1000L
-                state.setTimeoutTimestamp(
-                  math.max(want, state.getCurrentWatermarkMs() + 1L))
-              }
-            }
-            out.result().iterator
+            (far :+ merged).sortBy(_.startUs)
+          }
+          val (done, rest) = open.span(horizonMs(_) < state.getCurrentWatermarkMs())
+          state.update(SessState(s0.emitted + done.size, rest))
+          rest.headOption.foreach(o => state.setTimeoutTimestamp(horizonMs(o)))
+          done.iterator.zipWithIndex.map { case (o, i) =>
+            SessionOut(userId, s0.emitted + i + 1, o.nEvents, o.startUs, o.endUs)
           }
       }
   }

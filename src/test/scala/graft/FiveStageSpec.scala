@@ -22,8 +22,7 @@ class FiveStageSpec extends SparkSpec {
   test("five-stage pipeline: chunk parity, restore parity, ordered emit, store convergence") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storeDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_5stage_spec_${System.nanoTime()}"
+    val storeDir = tempDir("5stage_spec")
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .orderBy("doc_id").as[(Long, String)].collect()
     val out = scala.collection.mutable.ArrayBuffer[Row]()
@@ -123,8 +122,7 @@ class FiveStageSpec extends SparkSpec {
   test("five-stage pipeline: restart resumes the store and the emit frontier") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storeDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_5stage_restart_${System.nanoTime()}"
+    val storeDir = tempDir("5stage_restart")
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .orderBy("doc_id").as[(Long, String)].collect()
     val (half1, half2) = docs.splitAt(docs.length / 2)
@@ -169,8 +167,7 @@ class FiveStageSpec extends SparkSpec {
   }
 
   private def withStore[T](tag: String)(body: String => T): T = {
-    val storeDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_5stage_${tag}_${System.nanoTime()}"
+    val storeDir = tempDir(s"5stage_$tag")
     try body(storeDir)
     finally StreamingPipelines.deleteRecursively(new java.io.File(storeDir))
   }

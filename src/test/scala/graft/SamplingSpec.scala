@@ -491,7 +491,7 @@ class SamplingSpec extends SparkSpec {
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
     assert(rows.map(_.getAs[Long]("n_docs")).sum == texts.size,
       "every document must land in exactly one shard")
-    val outDir = Sampling.tarShardDir(sfDir)
+    val outDir = Sampling.tarShardDir(spark, sfDir)
     val seen = scala.collection.mutable.Set[Long]()
     rows.foreach { r =>
       val shard = r.getAs[Long]("shard_id")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -11,7 +9,7 @@ import graft.streaming.StreamingPipelines.Ev
 class SinksSpec extends SparkSpec {
 
   test("partitioned write: layout prunes by key, data round-trips") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("part")
     val events = Tables.events(spark, sfDir)
     Sinks.writePartitioned(events, dir, Seq("event_type"))
     val back = spark.read.parquet(dir)
@@ -27,8 +25,8 @@ class SinksSpec extends SparkSpec {
   test("streaming parquet sink: exactly-once landing with checkpoint") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val out = Files.createTempDirectory("graft_land").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val out = tempDir("land")
+    val ckpt = tempDir("ckpt")
     val evs = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Ev].collect().take(400).toSeq
@@ -40,7 +38,6 @@ class SinksSpec extends SparkSpec {
   }
 
   test("storage formats: orc/json/csv round-trip the lineitem sample exactly") {
-    import java.nio.file.Files
     val src = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag",
         "l_linestatus")
@@ -48,13 +45,13 @@ class SinksSpec extends SparkSpec {
       assert(back.count() == src.count())
       assert(back.except(src).isEmpty && src.except(back).isEmpty)
     }
-    val orc = Files.createTempDirectory("graft_orc").toString
+    val orc = tempDir("orc")
     src.write.mode("overwrite").orc(orc)
     assertSame(spark.read.orc(orc))
-    val json = Files.createTempDirectory("graft_json").toString
+    val json = tempDir("json")
     src.write.mode("overwrite").json(json)
     assertSame(spark.read.schema(src.schema).json(json))
-    val csv = Files.createTempDirectory("graft_csv").toString
+    val csv = tempDir("csv")
     src.write.mode("overwrite").option("header", "true").csv(csv)
     assertSame(spark.read.schema(src.schema).option("header", "true").csv(csv))
   }

@@ -1,13 +1,35 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.StreamingPipelines
 
 /** Shared local SparkSession for all specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private var suiteTmp: Option[File] = None
+
+  /** A fresh directory under this suite's temp dir, which `afterAll`
+    * deletes with everything in it. */
+  def tempDir(tag: String): String = synchronized {
+    val root = suiteTmp.getOrElse {
+      val d = Files.createTempDirectory(s"graft_${getClass.getSimpleName}_").toFile
+      suiteTmp = Some(d)
+      d
+    }
+    Files.createTempDirectory(root.toPath, s"${tag}_").toString
+  }
+
+  override def afterAll(): Unit =
+    try suiteTmp.foreach(StreamingPipelines.deleteRecursively)
+    finally super.afterAll()
 }
 
 object SparkSpec {

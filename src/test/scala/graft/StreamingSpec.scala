@@ -111,31 +111,49 @@ class StreamingSpec extends SparkSpec {
     assert(sinkKeys == batchKeys)
   }
 
-  test("streaming sessionize matches batch qSessionize") {
+  private val SessCols = Seq("user_id", "sess_id", "n_events", "start_us", "end_us")
+
+  /** Runs `sessionize` over `triggers`, one micro-batch each, then over
+    * a sentinel a day past the last event, whose watermark closes
+    * every session; returns the sessions without the sentinel's. */
+  private def sessionizeTriggers(sink: String, triggers: Seq[Seq[Ev]]): Seq[String] = {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val evs = loadEvents()
-    // sentinel far in the future pushes the watermark past every
-    // session's gap horizon so all real sessions close
-    val lastTs = evs.last.ts.getTime
-    val sentinel = Ev(-1L, new Timestamp(lastTs + 86400000L), -999L, "sentinel", 0.0)
     val source = MemoryStream[Ev]
     val q = StreamingPipelines.sessionize(source.toDS())
-      .writeStream.format("memory").queryName("sess_sink")
+      .writeStream.format("memory").queryName(sink)
       .outputMode(OutputMode.Append()).start()
-    evs.grouped(300).foreach(source.addData(_))
-    source.addData(Seq(sentinel))
-    q.processAllAvailable()
-    val streamed = spark.table("sess_sink")
-      .filter(col("user_id") =!= -999L)
-      .select("user_id", "sess_id", "n_events", "start_us", "end_us")
-    val batch = Relational.qSessionize(spark, sfDir)
-      .select("user_id", "sess_id", "n_events", "start_us", "end_us")
-    val onlyStream = streamed.exceptAll(batch).count()
-    val onlyBatch = batch.exceptAll(streamed).count()
-    q.stop()
-    assert(onlyStream == 0 && onlyBatch == 0,
-      s"session mismatch: $onlyStream stream-only, $onlyBatch batch-only")
+    try {
+      val lastMs = triggers.flatten.map(_.ts.getTime).max
+      val sentinel = Ev(-1L, new Timestamp(lastMs + 86400000L), -999L, "sentinel", 0.0)
+      (triggers :+ Seq(sentinel)).foreach { t => source.addData(t); q.processAllAvailable() }
+      spark.table(sink).filter(col("user_id") =!= -999L).select(SessCols.map(col): _*)
+        .collect().map(_.toString).sorted.toSeq
+    } finally q.stop()
+  }
+
+  private def qSessionizeRows(dir: String): Seq[String] =
+    Relational.qSessionize(spark, dir).select(SessCols.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+
+  /** `q_sessionize` over `evs`, written as a one-table dataset. */
+  private def qSessionizeOver(evs: Seq[Ev]): Seq[String] = {
+    import spark.implicits._
+    val dir = tempDir("sess_events")
+    evs.toDF().write.parquet(s"$dir/events.parquet")
+    qSessionizeRows(dir)
+  }
+
+  private def assertSameSessions(got: Seq[String], want: Seq[String]): Unit = {
+    val (onlyStream, onlyBatch) = (got.diff(want), want.diff(got))
+    assert(onlyStream.isEmpty && onlyBatch.isEmpty,
+      s"${onlyStream.size} sessions only in the stream, ${onlyBatch.size} only in " +
+        s"q_sessionize, e.g. ${onlyStream.take(2)} vs ${onlyBatch.take(2)}")
+  }
+
+  test("streaming sessionize matches batch qSessionize") {
+    assertSameSessions(sessionizeTriggers("sess_sink", loadEvents().grouped(300).toSeq),
+      qSessionizeRows(sfDir))
   }
 
   test("sessionize: sess_id numbering survives a mid-stream timeout") {
@@ -171,6 +189,37 @@ class StreamingSpec extends SparkSpec {
     assert(sess7001.map(_.getAs[Long]("sess_id")).toSeq == Seq(1L, 2L),
       s"expected sessions 1,2 for user 7001, got ${sess7001.mkString(", ")}")
     assert(sess7001.forall(_.getAs[Long]("n_events") == 1L))
+  }
+
+  test("sessionize: an out-of-order event bridges two open sessions into one") {
+    val t0 = 1700000000000L // ms
+    def ev(id: Long, offsetMin: Long): Ev =
+      Ev(id, new Timestamp(t0 + offsetMin * 60000L), 7001L, "view", 1.0)
+    // 35 min after 0 is past the gap, but the watermark (35 - 30 = 5
+    // min) cannot close [0] before the event at 30 arrives on time
+    val evs = Seq(ev(1, 0), ev(2, 35), ev(3, 30))
+    val got = sessionizeTriggers("sess_bridge_sink", evs.map(Seq(_)))
+    assert(got == Seq(s"[7001,1,3,${t0 * 1000L},${(t0 + 35 * 60000L) * 1000L}]"))
+    assert(got == qSessionizeOver(evs))
+  }
+
+  test("sessionize equals q_sessionize under bounded disorder; rows behind the watermark are dropped") {
+    // perfbench's session_stream shape: events 20 s apart, 10% of them
+    // stamped up to 10 min early, so they can arrive after later
+    // events of their own user, but never behind the 30-min watermark
+    val r = new scala.util.Random(811)
+    val t0 = 1767225600000L // ms
+    val evs = (0 until 3000).map { i =>
+      val earlyMs = if (r.nextDouble() < 0.1) (r.nextDouble() * 600000).toLong else 0L
+      Ev(i.toLong, new Timestamp(t0 + i * 20000L - earlyMs), 1L + r.nextInt(40), "view", 1.0)
+    }
+    // one row far behind the watermark, for a user with closed
+    // sessions: it must be dropped, so the batch mirror omits it
+    val late = Ev(-2L, evs.head.ts, evs.head.user_id, "view", 1.0)
+    val got = sessionizeTriggers("sess_disorder_sink", evs.grouped(100).toSeq :+ Seq(late))
+    val want = qSessionizeOver(evs)
+    assert(want.size > 100, s"too few sessions to exercise the gap: ${want.size}")
+    assertSameSessions(got, want)
   }
 
   test("throughput harness returns sane metrics with a per-stage breakdown") {
