@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.StreamingOps
+
 /** Benchmark main — one JSON line on stdout (driver contract).
   * Forces full materialization of every query through the noop sink
   * (a bare count() would let Catalyst prune the computed columns and
@@ -81,18 +83,6 @@ object Bench {
     def measured(thunk: => Either[String, Double]): (Either[String, Double], PassEnv) =
       EnvTelemetry.measured(thunk)
 
-    // Self-measuring streaming HARNESSES report their own items/s and
-    // latency percentiles internally; their wall-clock is dominated by
-    // fixed micro-batch machinery, so repeating them buys no precision
-    // — one measured pass each keeps the bench wall-time on the
-    // analytic queries where the medians matter. stream_soak_ferret
-    // joined the set in r18: it is wall-clock-pinned exactly like
-    // stream_soak (a fixed-duration soak whose wall does not shrink
-    // with SF), so its previous warm-pass + 3 measured passes spent
-    // ~35 s of bench wall to report a 9 s constant.
-    val singlePass = Set("stream_rate_bench", "stream_param_sweep",
-      "stream_soak", "stream_soak_ferret")
-
     // optional key filter for local iteration (comma-separated names);
     // unset → the full driver-contract bench
     val only = sys.env.get("GRAFT_BENCH_ONLY")
@@ -167,7 +157,10 @@ object Bench {
       // soaks warm their own batch plans pre-start instead
       if (name != "stream_soak" && name != "stream_soak_ferret")
         once(fn, warmDir) // codegen/classloading warm-up, never measured
-      val nPasses = if (singlePass(name)) 1 else passes
+      // self-measuring harnesses report their own items/s and latency
+      // percentiles, and their wall is fixed micro-batch machinery:
+      // repeating them buys no precision, so one measured pass each
+      val nPasses = if (StreamingOps.harnessKeys(name)) 1 else passes
       // free leaked blocks between PASSES too: a query that
       // checkpoints leaks its blocks into its own later passes (med
       // consistently above min on the checkpoint-heavy queries);
@@ -194,7 +187,7 @@ object Bench {
     // stays the sweep number for round-over-round comparability; the
     // isolated time + its env ride in pass_stats for the adjudication.
     val suspectKeys = results.collect {
-      case (n, Some(t), _, pairs) if !singlePass(n) && suspect(pairs, t) => n
+      case (n, Some(t), _, pairs) if !StreamingOps.harnessKeys(n) && suspect(pairs, t) => n
     }
     // rerun budget: the r15 gate flags on spread alone, so a FULLY
     // loaded sweep window could mark dozens of keys — re-running all

@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 
+import graft.operators.StreamingOps
+
 /** Post-execution plan-property audit under AQE (r16 verdict #6).
   *
   * PlanHygieneSpec checks every driver-contract query's plan at
@@ -26,12 +28,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   */
 object PlanAudit {
 
-  /** Fixed-duration self-measuring harness keys — no single query
-    * plan to audit (shared with PlanHygieneSpec's skip list). */
-  val harnessKeys: Set[String] = Set(
-    "stream_rate_bench", "stream_param_sweep", "stream_soak",
-    "stream_soak_ferret")
-
+  /** Every node of the FINAL plan, through adaptive query stages and
+    * scalar/IN subqueries (neither may hide an offending shape). */
   def nodes(p: SparkPlan): Seq[SparkPlan] = ((p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
     case q: QueryStageExec => nodes(q.plan)
@@ -58,7 +56,7 @@ object PlanAudit {
     var nAudited = 0
     var nFailed = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!harnessKeys(name) && only.forall(_.contains(name))) {
+      if (!StreamingOps.harnessKeys(name) && only.forall(_.contains(name))) {
         val t0 = System.nanoTime()
         try {
           val df = fn(spark, sfDir)

@@ -649,8 +649,6 @@ object RefFerret {
                   passes: Int, outDir: String): Unit = {
     val spark = Sessions.contractLocal("graft-refferret")
     spark.sparkContext.setLogLevel("ERROR")
-    if (sys.env.contains("GRAFT_FERRET_NOAQE"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
     val nQ = graft.sources.BinaryFiles.readDirDirect(spark, queryDir, "*.jpg").count()
 
     // ---- untimed database build (the binary's mkdb + table load) ----

@@ -36,6 +36,27 @@ object Similarity {
     e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
 
+  /** The one exact top-K re-rank (ferret's t_rank, :646): `scored`
+    * already carries `cos` — each key keeps its own cosine expression
+    * — and every row is ranked by (cos DESC, vec_id) within its query,
+    * and within its grid value when a sweep names one, keeping ranks
+    * 1..k. */
+  private def topKByCos(scored: DataFrame, k: Int = TopK,
+                        grid: Option[String] = None): DataFrame = {
+    val w = Window.partitionBy((grid.toSeq :+ "query_id").map(col): _*)
+      .orderBy(col("cos").desc, col("vec_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** Candidate pairs (query_id, vec_id) of `e`'s query batch scored
+    * exactly: both vectors attached, `cosine` evaluated over `qv` and
+    * `v`. */
+  private def exactCos(cand: DataFrame, e: DataFrame,
+                       cosine: Column = VectorFns.cosine(col("qv"), col("v"))): DataFrame =
+    cand.join(e, "vec_id")
+      .join(broadcast(queriesDf(e)), "query_id")
+      .select(col("query_id"), col("vec_id"), cosine.as("cos"))
+
   // ---- ann_bruteforce: exact top-k baseline ----------------------------
   /** Exact scan: every (query, corpus) pair scored by codegen cosine
     * off ONE corpus pass against the broadcast query batch — the
@@ -48,11 +69,7 @@ object Similarity {
 
   def annBruteforce(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    exactScoredPairs(e, queriesDf(e))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    topKByCos(exactScoredPairs(e, queriesDf(e)))
   }
 
   // ---- ann_range: R-near-neighbor (threshold) search --------------------
@@ -134,12 +151,7 @@ object Similarity {
   private[graft] def rangeLshAt(s: SparkSession, dir: String,
                                 nProbes: Int): DataFrame = {
     val e = emb(s, dir)
-    val q = queriesDf(e)
-    lshCandidates(e, q, MpTables, MpBits, nProbes)
-      .join(e, "vec_id")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
+    exactCos(lshCandidates(e, queriesDf(e), MpTables, MpBits, nProbes), e)
       .filter(col("cos") >= RangeTau)
   }
 
@@ -175,14 +187,10 @@ object Similarity {
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
         col("v").as("qv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    e.join(broadcast(q),
+    topKByCos(e.join(broadcast(q),
         col("label") === col("qlabel") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qlabel"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+        VectorFns.cosine(col("qv"), col("v")).as("cos")))
   }
 
   val annFilteredSql: String =
@@ -305,15 +313,7 @@ object Similarity {
     val cand = corpus.join(broadcast(qB), Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    cand
-      .join(e.select(col("vec_id"), col("v")), "vec_id")
-      .join(broadcast(q.select(col("query_id"), col("qv"))), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.NativeVector.cosine(col("v"), col("qv")).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
+    topKByCos(exactCos(cand, e, graft.functions.NativeVector.cosine(col("v"), col("qv"))))
   }
 
   // ---- ann_lsh_multiprobe: fewer+finer tables, boundary-probe expansion
@@ -384,14 +384,9 @@ object Similarity {
                                overFetch: Int = OverFetch,
                                tables: Int = LshTables, bits: Int = LshBits,
                                qProbes: Int = 0,
-                               pre: Option[FerretIndex] = None): DataFrame = {
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    lshScored(e0, qdf, broadcastQueries, overFetch, tables, bits, qProbes, pre)
-      .select("query_id", "vec_id", "cos")
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
-  }
+                               pre: Option[FerretIndex] = None): DataFrame =
+    topKByCos(lshScored(e0, qdf, broadcastQueries, overFetch, tables, bits, qProbes, pre)
+      .select("query_id", "vec_id", "cos"))
 
   /** Resident corpus-side index for the promoted search — the
     * reference's mkdb posture (ferret-pthreads builds its db tables
@@ -511,12 +506,6 @@ object Similarity {
   private def asCentroidColumn(cs: IndexedSeq[(Long, IndexedSeq[Double])]): Column =
     typedLit(cs.map { case (cell, cv) => Centroid(cell, cv) })
 
-  private def centroidArray(e: DataFrame): Column =
-    asCentroidColumn(centroidSeq(e))
-
-  private[operators] def probeCentroidSeq(e: DataFrame): IndexedSeq[(Long, IndexedSeq[Double])] = centroidSeq(e)
-  private[operators] def probePqCodebook(e: DataFrame): Array[Double] = pqCodebook(e)
-
   private def centroidSeq(e: DataFrame): IndexedSeq[(Long, IndexedSeq[Double])] = {
     // seed = the IvfCells LOWEST-ID vectors of e. Fast path: the
     // pushed-filter scan `vec_id < IvfCells` (no sort, no full pass) —
@@ -532,11 +521,8 @@ object Similarity {
       rows.map(r => (r.getLong(0),
         r.getSeq[Float](1).map(_.toDouble).toIndexedSeq)).toIndexedSeq
     }
-    def asColumn(cs: IndexedSeq[(Long, IndexedSeq[Double])]): Column =
-      asCentroidColumn(cs)
     for (_ <- 0 until KMeansIters) {
-      val assigned = e.withColumn("cell",
-        nearestCells(col("v"), asColumn(centroids), 1).getItem(0))
+      val assigned = assignCells(e, asCentroidColumn(centroids))
         .select(col("cell"), col("v"))
       val nCells = IvfCells
       val partials = assigned.rdd.mapPartitionsWithIndex { (pid, it) =>
@@ -698,7 +684,7 @@ object Similarity {
   private[operators] def cellAssignments(s: SparkSession, dir: String,
                                          e: DataFrame): DataFrame = {
     val c = centroidArrayStored(s, dir)
-    e.withColumn("cell", nearestCells(col("v"), c, 1).getItem(0))
+    assignCells(e, c)
       .withColumn("cc", array_max(transform(c,
         x => VectorFns.cosine(col("v"), x.getField("cv")))))
   }
@@ -711,25 +697,46 @@ object Similarity {
           c.getField("cell").as("cell")))),
       sc => sc.getField("cell")), lit(1), lit(n))
 
+  /** `df` (…, v) plus `cell`, its nearest centroid under `cc`: a
+    * map-side argmax over the literal centroid array — no shuffle; the
+    * cell id becomes the partition key of every IVF layout. */
+  private def assignCells(df: DataFrame, cc: Column): DataFrame =
+    df.withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0))
+
+  /** The one IVF probe (ferret's t_vec over k-means cells): each query
+    * of `e`'s batch probes its `nProbe` nearest cells under `cc`,
+    * `probe_rank` 0 being the nearest, against `index` (vec_id, v,
+    * cell). Every candidate except the query itself carries its probe
+    * rank and exact cosine. `pruneCells` first filters the index to
+    * the probed cells (at most NQueries × nProbe ids, collected), which
+    * a cell-partitioned layout turns into partition pruning. */
+  private def ivfScored(e: DataFrame, index: DataFrame, cc: Column,
+                        nProbe: Int = NProbe, pruneCells: Boolean = false): DataFrame = {
+    val probes = queriesDf(e)
+      .select(col("query_id"), col("qv"), posexplode(nearestCells(col("qv"), cc, nProbe)))
+      .toDF("query_id", "qv", "probe_rank", "cell")
+    val pruned =
+      if (pruneCells) {
+        val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
+        index.filter(col("cell").isin(cells.toIndexedSeq: _*))
+      } else index
+    pruned.join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), col("probe_rank"),
+        VectorFns.cosine(col("qv"), col("v")).as("cos"))
+  }
+
+  /** Top-K through the one probe at the serving nprobe — every IVF
+    * key's search, whatever layout `index` is. */
+  private def ivfProbe(e: DataFrame, index: DataFrame, cc: Column,
+                       pruneCells: Boolean): DataFrame =
+    topKByCos(ivfScored(e, index, cc, pruneCells = pruneCells)
+      .select("query_id", "vec_id", "cos"))
+
   def annIvf(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val centroids = centroidArrayStored(s, dir)
-    // assignment: map-side argmin over the literal centroid array — no
-    // shuffle; the cell id becomes the partition key of the index
-    val assigned = e.withColumn("cell",
-      nearestCells(col("v"), centroids, 1).getItem(0))
-    val q = queriesDf(e)
-      .withColumn("probe_cells", nearestCells(col("qv"), centroids, NProbe))
-    val probes = q.select(col("query_id"), col("qv"),
-      explode(col("probe_cells")).as("cell"))
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
+    ivfProbe(e, assignCells(e, centroids), centroids, pruneCells = false)
   }
 
   // ---- ferret_pipeline: the reference pipeline end-to-end --------------
@@ -784,32 +791,13 @@ object Similarity {
   private def ivfIndex(s: SparkSession, dir: String): String = {
     val idxPath = graft.Stores.path(s, dir, "ivf_idx", Seq("embeddings"))
     graft.Stores.once(idxPath)(graft.sinks.Sinks.writePartitioned(
-      emb(s, dir).withColumn("cell",
-        nearestCells(col("v"), centroidArrayStored(s, dir), 1).getItem(0)),
-      idxPath, Seq("cell")))
+      assignCells(emb(s, dir), centroidArrayStored(s, dir)), idxPath, Seq("cell")))
     idxPath
   }
 
-  def annIvfIndexed(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    val idxPath = ivfIndex(s, dir)
-    val centroids = centroidArrayStored(s, dir)
-    val q = queriesDf(e)
-      .withColumn("probe_cells", nearestCells(col("qv"), centroids, NProbe))
-    val probes = q.select(col("query_id"), col("qv"),
-      explode(col("probe_cells")).as("cell"))
-    val probeCells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val index = s.read.parquet(idxPath)
-      .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    index.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
-  }
+  def annIvfIndexed(s: SparkSession, dir: String): DataFrame =
+    ivfProbe(emb(s, dir), s.read.parquet(ivfIndex(s, dir)),
+      centroidArrayStored(s, dir), pruneCells = true)
 
   // ---- ann_ivf_append: incremental index maintenance (delta segment) ---
   /** Deterministic segment root for this dataset's append index —
@@ -825,9 +813,7 @@ object Similarity {
     val cc = centroidArrayBase(s, dir)
     val root = ivfAppendRoot(s, dir)
     def segment(name: String, df: DataFrame): Unit =
-      graft.sinks.Sinks.writePartitioned(
-        df.withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0)),
-        s"$root/$name", Seq("cell"))
+      graft.sinks.Sinks.writePartitioned(assignCells(df, cc), s"$root/$name", Seq("cell"))
     graft.Stores.once(root) {
       segment("base", e.filter(col("vec_id") % 7 =!= 3))
       // the append: a new immutable segment only
@@ -835,27 +821,6 @@ object Similarity {
     }
     (s.read.parquet(s"$root/base").unionByName(s.read.parquet(s"$root/delta")),
       cc)
-  }
-
-  private def ivfProbe(e: DataFrame, index: DataFrame, cc: Column,
-                       pruneCells: Boolean): DataFrame = {
-    val q = queriesDf(e)
-      .withColumn("probe_cells", nearestCells(col("qv"), cc, NProbe))
-    val probes = q.select(col("query_id"), col("qv"),
-      explode(col("probe_cells")).as("cell"))
-    val pruned =
-      if (pruneCells) {
-        val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-        index.filter(col("cell").isin(cells.toIndexedSeq: _*))
-      } else index
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    pruned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
   }
 
   /** The serving-index APPEND path: new vectors arrive after the index
@@ -920,9 +885,7 @@ object Similarity {
     val root = streamIndexRoot(s, dir)
     graft.Stores.once(root) {
       graft.sinks.Sinks.writePartitioned(
-        e.filter(col("vec_id") % 7 =!= 3)
-          .withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0)),
-        s"$root/base", Seq("cell"))
+        assignCells(e.filter(col("vec_id") % 7 =!= 3), cc), s"$root/base", Seq("cell"))
       // the arrival feed: staged as a multi-file parquet folder so
       // maxFilesPerTrigger=1 yields genuine successive micro-batches
       // (4 epochs) — no driver-side row collection anywhere
@@ -934,8 +897,7 @@ object Similarity {
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           graft.sinks.Sinks.writePartitioned(
-            batch.withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0)),
-            f"$root/delta_$batchId%03d", Seq("cell"))
+            assignCells(batch, cc), f"$root/delta_$batchId%03d", Seq("cell"))
         }
         .option("checkpointLocation", s"$root/_ckpt")
         .trigger(Trigger.AvailableNow()).start()
@@ -996,9 +958,7 @@ object Similarity {
   private[graft] def ivfAppendReference(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val cc = centroidArrayBase(s, dir)
-    val assigned = e.withColumn("cell",
-      nearestCells(col("v"), cc, 1).getItem(0))
-    ivfProbe(e, assigned, cc, pruneCells = false)
+    ivfProbe(e, assignCells(e, cc), cc, pruneCells = false)
   }
 
   // ---- ann_pq: IVF-PQ — product-quantized candidate scoring ------------
@@ -1069,56 +1029,60 @@ object Similarity {
     cb
   }
 
+  /** The one approximate over-fetch + exact re-rank (ferret's 2·top_K
+    * over-fetch, :590, then t_rank): every `cand` row (query_id,
+    * vec_id and whatever `approxCos` reads — codes, norms) is scored
+    * with `approxCos`, the `depth` best per query under (approx_cos
+    * DESC, vec_id) are kept, and only those ids touch the raw vectors
+    * `e` and its query batch for the exact cosine top-K. Every
+    * quantized key shares this tail, so they stay apples-to-apples BY
+    * CONSTRUCTION (same tie-breaks); they differ only in the candidate
+    * frame, the approx_cos expression and the depth. */
+  private def overFetchRerank(e: DataFrame, cand: DataFrame,
+                              approxCos: Column, depth: Int): DataFrame = {
+    val wAdc = Window.partitionBy("query_id")
+      .orderBy(col("approx_cos").desc, col("vec_id"))
+    val kept = cand
+      .withColumn("approx_cos", approxCos)
+      .withColumn("r", row_number().over(wAdc))
+      .filter(col("r") <= depth)
+      .select("query_id", "vec_id")
+    topKByCos(exactCos(kept, e))
+  }
+
   /** IVF-PQ search: probes read only their nprobe cells, phase-1
     * scoring runs over 8-BYTE codes (+1 float norm) via the ADC
     * kernel — the candidate scan reads 32× less memory than raw
     * vectors, the binding constraint at 100 TB — and only the
-    * over-fetched ids touch full vectors for the exact re-rank. */
-  /** Shared IVF-PQ phase-1 + exact re-rank: score every (candidate,
-    * probe) row with `approxCos` (resolved against the joined coded ×
-    * probes columns), keep the PqOverFetch deepest per query, then
-    * the exact cosine re-rank — so annPq and annPqResidual stay
-    * apples-to-apples BY CONSTRUCTION (same over-fetch, same
-    * tie-breaks); their only deltas are the coded/probes columns and
-    * the approx_cos expression. */
-  private def pqSearch(e: DataFrame, q: DataFrame, probes: DataFrame,
-                       coded: DataFrame, approxCos: Column): DataFrame = {
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("approx_cos").desc, col("vec_id"))
-    val cand = coded.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("approx_cos", approxCos)
-      .withColumn("r", row_number().over(wAdc))
-      .filter(col("r") <= PqOverFetch)
-      .select("query_id", "vec_id")
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    cand.join(e, "vec_id")
-      .join(broadcast(q.select("query_id", "qv")), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
-  }
+    * PqOverFetch ids touch full vectors for the exact re-rank. The PQ
+    * keys differ only in the coded/probes columns and `approxCos`. */
+  private def pqSearch(e: DataFrame, probes: DataFrame,
+                       coded: DataFrame, approxCos: Column): DataFrame =
+    overFetchRerank(e, coded.join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id")), approxCos, PqOverFetch)
 
-  private def pqQueries(e: DataFrame, cc: Column): DataFrame =
+  /** One row per (query of `e`'s batch, probed cell) with the query
+    * norm the ADC score divides by. */
+  private def pqProbes(e: DataFrame, cc: Column): DataFrame =
     queriesDf(e)
       .withColumn("qnorm", VectorFns.norm(col("qv")))
       .withColumn("probe_cells", nearestCells(col("qv"), cc, NProbe))
+      .select(col("query_id"), col("qv"), col("qnorm"),
+        explode(col("probe_cells")).as("cell"))
+
+  /** (vec_id, cell, codes, vnorm): `assigned`'s `src` vectors PQ-coded
+    * under codebook `cb`, with the raw-vector norm. */
+  private def pqCoded(assigned: DataFrame, src: String, cb: Array[Double]): DataFrame =
+    assigned
+      .withColumn("codes", graft.functions.NativePq.encode(col(src), cb, PqM, PqK))
+      .withColumn("vnorm", VectorFns.norm(col("v")))
+      .select("vec_id", "cell", "codes", "vnorm")
 
   def annPq(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val cc = centroidArrayStored(s, dir)
     val cb = pqCodebookStored(s, dir)
-    val coded = e
-      .withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0))
-      .withColumn("codes", graft.functions.NativePq.encode(col("v"), cb, PqM, PqK))
-      .withColumn("vnorm", VectorFns.norm(col("v")))
-      .select("vec_id", "cell", "codes", "vnorm")
-    val q = pqQueries(e, cc)
-    val probes = q.select(col("query_id"), col("qv"), col("qnorm"),
-      explode(col("probe_cells")).as("cell"))
-    pqSearch(e, q, probes, coded,
+    pqSearch(e, pqProbes(e, cc), pqCoded(assignCells(e, cc), "v", cb),
       graft.functions.NativePq.adcDot(col("codes"), col("qv"), cb, PqK) /
         (col("qnorm") * col("vnorm")))
   }
@@ -1138,7 +1102,7 @@ object Similarity {
     * re-rank as ann_pq — apples-to-apples; SimilaritySpec pins the
     * recall relation. */
   private def residualFrame(e: DataFrame, cc: Column): DataFrame =
-    e.withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0))
+    assignCells(e, cc)
       .withColumn("cent",
         element_at(filter(cc, c => c.getField("cell") === col("cell")), 1)
           .getField("cv"))
@@ -1148,21 +1112,14 @@ object Similarity {
   def annPqResidual(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val cc = centroidArrayStored(s, dir)
-    val withRes = residualFrame(e, cc)
     // shared trainer over the residual cloud (same layout, same
     // serving-encoder assignment), session-stored like the centroids
     val cb = pqCodebookResStored(s, dir)
-    val coded = withRes
-      .withColumn("codes", graft.functions.NativePq.encode(col("res"), cb, PqM, PqK))
-      .withColumn("vnorm", VectorFns.norm(col("v")))
-      .select("vec_id", "cell", "codes", "vnorm")
-    val q = pqQueries(e, cc)
-    val probes = q.select(col("query_id"), col("qv"), col("qnorm"),
-        explode(col("probe_cells")).as("cell"))
+    val probes = pqProbes(e, cc)
       .withColumn("qcent_dot", VectorFns.dot(col("qv"),
         element_at(filter(cc, c => c.getField("cell") === col("cell")), 1)
           .getField("cv")))
-    pqSearch(e, q, probes, coded,
+    pqSearch(e, probes, pqCoded(residualFrame(e, cc), "res", cb),
       (col("qcent_dot") +
         graft.functions.NativePq.adcDot(col("codes"), col("qv"), cb, PqK)) /
         (col("qnorm") * col("vnorm")))
@@ -1241,16 +1198,9 @@ object Similarity {
     // (basis, centroids, codebook) comes from the session store
     val eRot = rotateFrame(s, eRaw, basis).localCheckpoint(true)
     val cc = asCentroidColumn(cs)
-    val coded = eRot
-      .withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0))
-      .withColumn("codes", graft.functions.NativePq.encode(col("v"), cb, PqM, PqK))
-      .withColumn("vnorm", VectorFns.norm(col("v")))
-      .select("vec_id", "cell", "codes", "vnorm")
-    val qRot = pqQueries(eRot, cc)
-    val probes = qRot.select(col("query_id"), col("qv"), col("qnorm"),
-      explode(col("probe_cells")).as("cell"))
-    // exact re-rank over RAW vectors: same emitted semantics as ann_pq
-    pqSearch(eRaw, queriesDf(eRaw), probes, coded,
+    // rotated probes and codes; the exact re-rank runs over RAW
+    // vectors: same emitted semantics as ann_pq
+    pqSearch(eRaw, pqProbes(eRot, cc), pqCoded(assignCells(eRot, cc), "v", cb),
       graft.functions.NativePq.adcDot(col("codes"), col("qv"), cb, PqK) /
         (col("qnorm") * col("vnorm")))
   }
@@ -1308,23 +1258,9 @@ object Similarity {
       .select(col("vec_id"), sqDequant(sqEncode(col("v"), mn, step), mn, step).as("deq"))
       .withColumn("dnorm", VectorFns.norm(col("deq")))
     val q = queriesDf(e).withColumn("qnorm", VectorFns.norm(col("qv")))
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("approx_cos").desc, col("vec_id"))
-    val cand = coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("approx_cos",
-        VectorFns.dot(col("deq"), VectorFns.asDouble(col("qv"))) /
-          (col("dnorm") * col("qnorm")))
-      .withColumn("r", row_number().over(wAdc))
-      .filter(col("r") <= SqOverFetch)
-      .select("query_id", "vec_id")
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    cand.join(e, "vec_id")
-      .join(broadcast(q.select("query_id", "qv")), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
+    overFetchRerank(e, coded.join(broadcast(q), col("vec_id") =!= col("query_id")),
+      VectorFns.dot(col("deq"), VectorFns.asDouble(col("qv"))) /
+        (col("dnorm") * col("qnorm")), SqOverFetch)
   }
 
   // ---- ann_knn_graph: embedding kNN-graph construction -----------------
@@ -1407,9 +1343,7 @@ object Similarity {
         e.select(col("vec_id"), col("v").as("cv")), "vec_id")
       .select(col("query_id"), col("vec_id"),
         VectorFns.cosine(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
-    val top = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= KnnK)
+    val top = topKByCos(scored, KnnK)
       .localCheckpoint(true) // consumed twice: emit + reversed-edge probe
     top.as("x").join(
         top.select(col("query_id").as("vec_id"), col("vec_id").as("query_id"))
@@ -1725,38 +1659,44 @@ object Similarity {
     * variant (cos recomputed from raw vectors, rank re-derived), and
     * its dump is what lets ann_depth_sweep's recall arithmetic be
     * recomputed cross-engine against the ann_bruteforce dump. */
-  private def depthPicks(s: SparkSession, dir: String): DataFrame = {
+  def annDepthPicks(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val q = queriesDf(e)
     // the sweep runs on the REGISTERED index family (multiprobe since
     // r15, r14 verdict #2) — depth is the only axis that varies here
-    val perDepth = lshScored(e, q, overFetch = SweepDepths.max,
-        tables = MpTables, bits = MpBits, qProbes = MpProbes)
-      .withColumn("over_fetch", explode(typedLit(SweepDepths)))
-      .filter(col("phase1_rank") <= col("over_fetch"))
-    val wCos = Window.partitionBy("over_fetch", "query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    perDepth
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
-      .select("over_fetch", "query_id", "vec_id", "cos", "rank")
+    gridTopK(lshScored(e, q, overFetch = SweepDepths.max,
+        tables = MpTables, bits = MpBits, qProbes = MpProbes),
+      "over_fetch", SweepDepths, col("phase1_rank") <= col("over_fetch"))
   }
 
-  def annDepthPicks(s: SparkSession, dir: String): DataFrame =
-    depthPicks(s, dir)
+  /** One search at the deepest grid value, every shallower one derived
+    * from it: each scored candidate is repeated per `grid` value it
+    * belongs to (`within`, over the candidate's phase-1 or probe rank)
+    * and re-ranked to top-K inside (grid, query). */
+  private def gridTopK(scored: DataFrame, grid: String, values: Seq[Int],
+                       within: Column): DataFrame =
+    topKByCos(scored.withColumn(grid, explode(typedLit(values))).filter(within),
+        grid = Some(grid))
+      .select(grid, "query_id", "vec_id", "cos", "rank")
 
-  def annDepthSweep(s: SparkSession, dir: String): DataFrame = {
+  /** recall@k per grid value of a pick table against the exact
+    * baseline — the depth and nprobe sweeps. */
+  private def recallCurve(s: SparkSession, dir: String, picks: DataFrame,
+                          grid: String): DataFrame = {
     val nq = queriesDf(emb(s, dir)).count()
-    val approx = depthPicks(s, dir).select("over_fetch", "query_id", "vec_id")
     val exact = annBruteforce(s, dir)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
-    approx.join(exact, Seq("query_id", "vec_id"), "left")
-      .groupBy("over_fetch")
+    picks.select(grid, "query_id", "vec_id")
+      .join(exact, Seq("query_id", "vec_id"), "left")
+      .groupBy(grid)
       .agg((sum(coalesce(col("hit"), lit(0L))).cast("double") /
         lit((nq * TopK).toDouble)).as("mean_recall"))
-      .select(col("over_fetch"), lit(nq).as("n_queries"), col("mean_recall"))
-      .orderBy("over_fetch")
+      .select(col(grid), lit(nq).as("n_queries"), col("mean_recall"))
+      .orderBy(grid)
   }
+
+  def annDepthSweep(s: SparkSession, dir: String): DataFrame =
+    recallCurve(s, dir, annDepthPicks(s, dir), "over_fetch")
 
   // ---- ann_nprobe_picks / ann_nprobe_sweep: the IVF nprobe knob --------
   /** nprobe grid for the IVF recall frontier. The top value equals
@@ -1777,47 +1717,19 @@ object Similarity {
     * closest cells (superset property), at ~1/|grid| the join work.
     * Cosine is computed ONCE per (query, candidate), before the grid
     * explode. */
-  private def nprobePicks(s: SparkSession, dir: String): DataFrame = {
+  def annNprobePicks(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val centroids = centroidArrayStored(s, dir)
-    val assigned = e.withColumn("cell",
-      nearestCells(col("v"), centroids, 1).getItem(0))
-    val q = queriesDf(e)
-      .select(col("query_id"), col("qv"),
-        posexplode(nearestCells(col("qv"), centroids, SweepNprobes.max)))
-      .toDF("query_id", "qv", "probe_rank", "cell")
-    val wCos = Window.partitionBy("nprobe", "query_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("probe_rank"),
-        VectorFns.cosine(col("qv"), col("v")).as("cos"))
-      .withColumn("nprobe", explode(typedLit(SweepNprobes)))
-      .filter(col("probe_rank") < col("nprobe"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
-      .select("nprobe", "query_id", "vec_id", "cos", "rank")
+    gridTopK(ivfScored(e, assignCells(e, centroids), centroids, SweepNprobes.max),
+      "nprobe", SweepNprobes, col("probe_rank") < col("nprobe"))
   }
-
-  def annNprobePicks(s: SparkSession, dir: String): DataFrame =
-    nprobePicks(s, dir)
 
   /** recall@k vs nprobe — the IVF accuracy/cost frontier. The spec
     * proves the curve monotone in nprobe and exactly 1.0 at
     * nprobe = IvfCells; the (nprobe = NProbe) cell is differentially
     * pinned to ann_ivf. */
-  def annNprobeSweep(s: SparkSession, dir: String): DataFrame = {
-    val nq = queriesDf(emb(s, dir)).count()
-    val approx = nprobePicks(s, dir).select("nprobe", "query_id", "vec_id")
-    val exact = annBruteforce(s, dir)
-      .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
-    approx.join(exact, Seq("query_id", "vec_id"), "left")
-      .groupBy("nprobe")
-      .agg((sum(coalesce(col("hit"), lit(0L))).cast("double") /
-        lit((nq * TopK).toDouble)).as("mean_recall"))
-      .select(col("nprobe"), lit(nq).as("n_queries"), col("mean_recall"))
-      .orderBy("nprobe")
-  }
+  def annNprobeSweep(s: SparkSession, dir: String): DataFrame =
+    recallCurve(s, dir, annNprobePicks(s, dir), "nprobe")
 
   // ---- ann_recall: quality gate of the approximate paths ---------------
   def annRecall(s: SparkSession, dir: String): DataFrame = {
@@ -2453,78 +2365,46 @@ object Similarity {
       |    ORDER BY emd, cand_img) AS INT) AS rank
       |FROM p""".stripMargin
 
+  /** Value oracle for a per-grid pick table (`key`'s dump, grid
+    * column `grid`): cos recomputed from raw vectors, rank re-derived
+    * within (grid, query_id) — the annValueSql contract extended by
+    * the grid key. */
+  private def gridPicksSql(key: String, grid: String): String =
+    s"""WITH p AS (SELECT $grid, query_id, vec_id
+       |  FROM read_parquet('{VERIFY_OUT}/$key/*.parquet')),
+       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |scored AS (
+       |  SELECT p.$grid, p.query_id, p.vec_id,
+       |    list_cosine_similarity(q.v, c.v) AS cos
+       |  FROM p JOIN e q ON p.query_id = q.vec_id JOIN e c ON p.vec_id = c.vec_id)
+       |SELECT $grid, query_id, vec_id, cos,
+       |  CAST(row_number() OVER (PARTITION BY $grid, query_id
+       |    ORDER BY cos DESC, vec_id) AS INT) AS rank
+       |FROM scored""".stripMargin
+
+  /** A sweep's recall curve recomputed by DuckDB from the two
+    * value-oracled dumps (the `picks` table vs the exact baseline) —
+    * hit counting and the recall arithmetic cross-engine, same
+    * contract as annRecallSql. */
+  private def gridSweepSql(picks: String, grid: String): String =
+    s"""WITH ex AS (SELECT query_id, vec_id
+       |  FROM read_parquet('{VERIFY_OUT}/ann_bruteforce/*.parquet')),
+       |p AS (SELECT $grid, query_id, vec_id
+       |  FROM read_parquet('{VERIFY_OUT}/$picks/*.parquet')),
+       |nq AS (SELECT COUNT(DISTINCT query_id) AS n FROM ex)
+       |SELECT p.$grid, nq.n AS n_queries,
+       |  CAST(SUM(CASE WHEN ex.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+       |    / CAST(nq.n * $TopK AS DOUBLE) AS mean_recall
+       |FROM p
+       |LEFT JOIN ex ON p.query_id = ex.query_id AND p.vec_id = ex.vec_id
+       |CROSS JOIN nq
+       |GROUP BY p.$grid, nq.n
+       |ORDER BY p.$grid""".stripMargin
+
   /** Value oracle for the recall gate: exact and approximate top-k
     * sets are all in the verify dump (each value-oracled in its own
     * right), so the hit counting and recall arithmetic are recomputed
     * cross-engine. */
-  /** Value oracle for the per-depth pick table: cos recomputed from
-    * raw vectors, rank re-derived within (over_fetch, query_id) —
-    * the annValueSql contract extended by the depth key. */
-  val annDepthPicksSql: String =
-    """WITH p AS (SELECT over_fetch, query_id, vec_id
-      |  FROM read_parquet('{VERIFY_OUT}/ann_depth_picks/*.parquet')),
-      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |scored AS (
-      |  SELECT p.over_fetch, p.query_id, p.vec_id,
-      |    list_cosine_similarity(q.v, c.v) AS cos
-      |  FROM p JOIN e q ON p.query_id = q.vec_id JOIN e c ON p.vec_id = c.vec_id)
-      |SELECT over_fetch, query_id, vec_id, cos,
-      |  CAST(row_number() OVER (PARTITION BY over_fetch, query_id
-      |    ORDER BY cos DESC, vec_id) AS INT) AS rank
-      |FROM scored""".stripMargin
-
-  /** The depth-sweep recall curve recomputed by DuckDB from the two
-    * value-oracled dumps (per-depth picks vs the exact baseline) —
-    * hit counting and the recall arithmetic cross-engine, same
-    * contract as annRecallSql. */
-  val annDepthSweepSql: String =
-    s"""WITH ex AS (SELECT query_id, vec_id
-       |  FROM read_parquet('{VERIFY_OUT}/ann_bruteforce/*.parquet')),
-       |p AS (SELECT over_fetch, query_id, vec_id
-       |  FROM read_parquet('{VERIFY_OUT}/ann_depth_picks/*.parquet')),
-       |nq AS (SELECT COUNT(DISTINCT query_id) AS n FROM ex)
-       |SELECT p.over_fetch, nq.n AS n_queries,
-       |  CAST(SUM(CASE WHEN ex.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / CAST(nq.n * $TopK AS DOUBLE) AS mean_recall
-       |FROM p
-       |LEFT JOIN ex ON p.query_id = ex.query_id AND p.vec_id = ex.vec_id
-       |CROSS JOIN nq
-       |GROUP BY p.over_fetch, nq.n
-       |ORDER BY p.over_fetch""".stripMargin
-
-  /** Value oracle for the per-nprobe pick table — annDepthPicksSql's
-    * contract with nprobe as the grid key: cos recomputed from raw
-    * vectors, rank re-derived within (nprobe, query_id). */
-  val annNprobePicksSql: String =
-    """WITH p AS (SELECT nprobe, query_id, vec_id
-      |  FROM read_parquet('{VERIFY_OUT}/ann_nprobe_picks/*.parquet')),
-      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |scored AS (
-      |  SELECT p.nprobe, p.query_id, p.vec_id,
-      |    list_cosine_similarity(q.v, c.v) AS cos
-      |  FROM p JOIN e q ON p.query_id = q.vec_id JOIN e c ON p.vec_id = c.vec_id)
-      |SELECT nprobe, query_id, vec_id, cos,
-      |  CAST(row_number() OVER (PARTITION BY nprobe, query_id
-      |    ORDER BY cos DESC, vec_id) AS INT) AS rank
-      |FROM scored""".stripMargin
-
-  /** The nprobe recall curve recomputed by DuckDB from the two
-    * value-oracled dumps — annDepthSweepSql on the nprobe axis. */
-  val annNprobeSweepSql: String =
-    s"""WITH ex AS (SELECT query_id, vec_id
-       |  FROM read_parquet('{VERIFY_OUT}/ann_bruteforce/*.parquet')),
-       |p AS (SELECT nprobe, query_id, vec_id
-       |  FROM read_parquet('{VERIFY_OUT}/ann_nprobe_picks/*.parquet')),
-       |nq AS (SELECT COUNT(DISTINCT query_id) AS n FROM ex)
-       |SELECT p.nprobe, nq.n AS n_queries,
-       |  CAST(SUM(CASE WHEN ex.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / CAST(nq.n * $TopK AS DOUBLE) AS mean_recall
-       |FROM p
-       |LEFT JOIN ex ON p.query_id = ex.query_id AND p.vec_id = ex.vec_id
-       |CROSS JOIN nq
-       |GROUP BY p.nprobe, nq.n
-       |ORDER BY p.nprobe""".stripMargin
-
   val annRecallSql: String =
     s"""WITH ex AS (SELECT query_id, vec_id
        |  FROM read_parquet('{VERIFY_OUT}/ann_bruteforce/*.parquet')),
@@ -2554,10 +2434,10 @@ object Similarity {
     "vec_pca_basis" -> vecPcaBasisSql,
     "vec_pca_project" -> vecPcaProjectSql,
     "ann_filtered" -> annFilteredSql,
-    "ann_depth_picks" -> annDepthPicksSql,
-    "ann_depth_sweep" -> annDepthSweepSql,
-    "ann_nprobe_picks" -> annNprobePicksSql,
-    "ann_nprobe_sweep" -> annNprobeSweepSql,
+    "ann_depth_picks" -> gridPicksSql("ann_depth_picks", "over_fetch"),
+    "ann_depth_sweep" -> gridSweepSql("ann_depth_picks", "over_fetch"),
+    "ann_nprobe_picks" -> gridPicksSql("ann_nprobe_picks", "nprobe"),
+    "ann_nprobe_sweep" -> gridSweepSql("ann_nprobe_picks", "nprobe"),
     "ann_lsh_multiprobe" -> annValueSql("ann_lsh_multiprobe"),
     "ann_ivf" -> annValueSql("ann_ivf"),
     "ann_ivf_indexed" -> annValueSql("ann_ivf_indexed"),

@@ -407,7 +407,7 @@ object StreamingOps {
     *   - AQE: off below [[InnerAqeMinCandidates]] candidate rows.
     *     AQE re-plans at every exchange via a blocking stage
     *     materialization; on a sub-second batch those barriers cost
-    *     ~130 ms/trigger (SoakProbe: 480 → 350 ms exec at 4
+    *     ~130 ms/trigger (OPTIMIZATION_r17.md: 480 → 350 ms exec at 4
     *     partitions) and there is nothing to adapt — partitioning is
     *     already volume-derived. Large batches keep AQE: skew/coalesce
     *     decisions matter exactly when the per-trigger volume is big.
@@ -621,6 +621,14 @@ object StreamingOps {
     "stream_soak" -> (streamSoak _),
     "stream_soak_ferret" -> (streamSoakFerret _),
     "stream_replay" -> (streamReplay _))
+
+  /** The self-measuring harness keys: each runs a fixed-duration or
+    * multi-leg measurement while its DataFrame is built, so there is
+    * no single query plan to audit and repeating it buys no
+    * precision. Bench measures them once, and PlanAudit,
+    * PlanHygieneSpec and ContractSpec skip them. */
+  val harnessKeys: Set[String] = Set(
+    "stream_rate_bench", "stream_param_sweep", "stream_soak", "stream_soak_ferret")
 
   /** Derived-metric oracles for the self-measuring harness keys (r15
     * verdict #8, upgrading the r14 gate-echo class): the SQL re-reads

@@ -3,9 +3,9 @@ package graft
 /** Driver-contract wiring net: every oracle key must resolve to a
   * query, and every query must at least ANALYZE against the test
   * tables (catches renamed columns, broken imports, bad expression
-  * types for every entry in the map without paying full execution — the two
-  * self-measuring streaming harnesses construct eagerly and are
-  * covered by their own specs).
+  * types for every entry in the map without paying full execution — the
+  * self-measuring streaming harnesses, StreamingOps.harnessKeys,
+  * construct eagerly and are covered by their own specs).
   */
 class ContractSpec extends SparkSpec {
 
@@ -49,9 +49,8 @@ class ContractSpec extends SparkSpec {
   }
 
   test("every query analyzes against the sf0.001 tables") {
-    val eager = Set("stream_rate_bench", "stream_param_sweep", "stream_soak")
     val broken = SparkEntry.queries.toSeq
-      .filterNot { case (n, _) => eager(n) }
+      .filterNot { case (n, _) => graft.operators.StreamingOps.harnessKeys(n) }
       .flatMap { case (name, fn) =>
         try {
           val schema = fn(spark, sfDir).schema

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import graft.operators.StreamingOps
 
 /** Suite-wide physical-plan hygiene: every driver-contract query is
   * built at sf0.001 and its plan swept for the two scale-killers the
@@ -28,20 +27,14 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   */
 class PlanHygieneSpec extends SparkSpec {
 
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = ((p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => nodes(q.plan)
-    case other => other.children.flatMap(nodes)
-  }) ++ p.subqueries.flatMap(nodes)) :+ p // scalar/IN subqueries can't hide either shape
-
   private def sweep(aqe: Boolean): Seq[String] = {
     val offenders = scala.collection.mutable.ListBuffer[String]()
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        if (!PlanAudit.harnessKeys(name)) {
-          val all = nodes(fn(spark, sfDir).queryExecution.executedPlan)
+        if (!StreamingOps.harnessKeys(name)) {
+          val all = PlanAudit.nodes(fn(spark, sfDir).queryExecution.executedPlan)
           offenders ++= PlanAudit.offendersIn(name, all)
         }
       }

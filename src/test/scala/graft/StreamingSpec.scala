@@ -473,4 +473,18 @@ class StreamingSpec extends SparkSpec {
     assert(rows.last.state_rows <= peak,
       "state still growing at soak end")
   }
+
+  test("stream_soak_ferret: the registered ferret soak samples dense, non-empty triggers") {
+    // the registered key end to end at its default wall; flat_ok is
+    // not asserted — the flatness gate depends on host load and is the
+    // DuckDB oracle's check at bench SF
+    val rows = SparkEntry.queries("stream_soak_ferret")(spark, sfDir)
+      .orderBy("trigger_idx").collect()
+    assert(rows.nonEmpty, "no trigger sampled")
+    val idx = rows.map(_.getAs[Int]("trigger_idx")).toSeq
+    assert(idx == rows.indices, s"trigger_idx not dense: $idx")
+    assert(rows.forall(_.getAs[Long]("n_triggers") == rows.length.toLong),
+      s"n_triggers != ${rows.length} sampled rows")
+    assert(rows.forall(_.getAs[Long]("input_rows") > 0), "a sampled trigger had no input")
+  }
 }
