@@ -15,6 +15,22 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** The local filesystem, for both Hadoop APIs: [[NioLocalFileSystem]]
+    * (`FileSystem`, used by parquet reads and writes) and [[NioLocalFs]]
+    * (`FileContext`, used by Structured Streaming's offset and commit
+    * logs and the five-stage `frontier.rec`). Without `libhadoop` the
+    * stock classes fork a shell for every permission they set (`chmod`
+    * on each create and mkdir) and `readlink` eight times per
+    * `FileContext.rename`: a traced five-stage Dedup trigger forked 47
+    * times (1,327 forks in a 20 s run, about 4 ms each), spread over the
+    * offset WAL, the commit log, `frontier.rec` and the parquet commits.
+    * The replacements do the same through java.nio; every byte on disk,
+    * `.crc` sidecars included, stays the same. One map, so the test
+    * session runs on the same filesystem as every main. */
+  val localFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
   /** Contract config, identical across mains:
     *   - graft.GraftExtensions: the injected optimizer rules
     *     (plans/LevenshteinBound et al.) that shipped plans rely on;
@@ -26,7 +42,8 @@ object Sessions {
     *     references; an idle large heap may never GC on its own, so
     *     executor-side blocks otherwise accumulate across hundreds of
     *     passes (default periodicGC is 30 min — longer than a bench);
-    *   - UTC session timezone (oracle parity), UI off.
+    *   - UTC session timezone (oracle parity), UI off;
+    *   - the fork-free local filesystem ([[localFs]]).
     */
   def contract(master: String, cpus: String, appName: String,
                overrides: Map[String, String] = Map.empty): SparkSession = {
@@ -51,6 +68,7 @@ object Sessions {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(localFs)
     // documented per-harness deltas (RefCompare) — conf mutation
     // stays HERE so no main ever calls conf.set (r9 advice item 7)
     val spark = overrides.foldLeft(builder) {

@@ -101,6 +101,12 @@ private object PqExprCheck {
     case other => TypeCheckResult.TypeCheckFailure(
       s"$name expects array<float>, got ${other.sql}")
   }
+
+  /** The codebook as plan text prints it: its length and a content
+    * hash, the same on every run (an array would print its JVM
+    * identity). */
+  def codebookArg(codebook: Array[Double]): String =
+    f"codebook(len=${codebook.length}, hash=${java.util.Arrays.hashCode(codebook)}%08x)"
 }
 
 /** vec → M sub-space codes (binary). The codebook is an expression
@@ -110,6 +116,8 @@ case class PqEncode(child: Expression, codebook: Array[Double], m: Int, k: Int)
   extends UnaryExpression {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "graft_pq_encode"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, PqExprCheck.codebookArg(codebook), m, k)
   override def checkInputDataTypes(): TypeCheckResult =
     PqExprCheck.requireFloatArray(prettyName, child.dataType)
 
@@ -133,6 +141,8 @@ case class PqAdcDot(codes: Expression, query: Expression,
   override def right: Expression = query
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_pq_adc_dot"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(codes, query, PqExprCheck.codebookArg(codebook), k)
   override def checkInputDataTypes(): TypeCheckResult = codes.dataType match {
     case BinaryType => PqExprCheck.requireFloatArray(prettyName, query.dataType)
     case other => TypeCheckResult.TypeCheckFailure(

@@ -404,15 +404,18 @@ object StreamingPipelines {
     * deflate length (the archive payload), duplicates only the digest
     * reference — encoder.c's compressed-data-or-fingerprint framing.
     * `emit_seq` is a globally contiguous sequence in (doc_id,
-    * chunk_idx) order: the dedup shuffle destroys arrival order, and
-    * Reorder restores it as a range sort plus per-partition counts —
-    * each range partition is sorted and checkpointed, one job brings
-    * #partitions row counts to the driver, and `emit_seq` is the
-    * frontier + the partition's offset + the row's index inside the
-    * partition, a projection (no window, and no piece leaves its
-    * partition). Like the reference's single Reorder thread the
-    * sequence is a counter; unlike it, the payload bytes are never
-    * funneled through one task.
+    * chunk_idx) order. Reorder is a projection, not a sort: the job
+    * that checkpoints the chunks also observes each document's chunk
+    * count, the driver turns the counts into each document's first
+    * sequence number (the frontier plus the chunks of every smaller
+    * doc_id in the batch, one map entry per document), and a row's
+    * `emit_seq` is that number plus its `chunk_idx`. The output rows
+    * are therefore not physically sorted (they keep the dedup
+    * shuffle's partitioning); order by `emit_seq` to read them in
+    * sequence. Like the reference's single Reorder thread the sequence
+    * is a counter; unlike it, no row moves to compute it. A doc_id that
+    * is null or repeats within one trigger fails the trigger, since
+    * the sequence would no longer follow from (doc_id, chunk_idx).
     *
     * Store layout under `storeDir`:
     *  - `digests/txn=k/` — parquet, schema (chunk_sha STRING, txn
@@ -527,22 +530,43 @@ object StreamingPipelines {
         .foreach(_.unpersist(blocking = false))
     })
     // Fragment + Refine: chunk boundaries + identities + bytes. Eager
-    // checkpoint: the CDC+SHA pass is the dominant map stage, and both
-    // the digest write and the ordered output read it. The batch
-    // fingerprint rides along as an observed metric of that same job.
+    // checkpoint: the CDC+SHA pass is the dominant map stage, and two
+    // facts observed in that same job decide the rest of the trigger:
+    // the batch fingerprint (replay detection, before the probe is
+    // planned) and each document's chunk count, taken from its last
+    // chunk (the one that ends where the payload ends) — all Reorder
+    // needs
     val fpObs = org.apache.spark.sql.Observation()
     val chunks = batch
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"),
         graft.functions.NativeChunk.chunks(col("text")))
-      .withColumn("piece", expr("substring(payload, offset + 1, length)"))
-      .drop("payload")
       .observe(fpObs,
         bit_xor(xxhash64(col("doc_id"), col("chunk_idx"), col("chunk_sha"))).as("fp"),
-        count(lit(1)).as("n"))
+        count(lit(1)).as("n"),
+        collect_list(when(col("offset") + col("length") === octet_length(col("payload")),
+          struct(col("doc_id"), col("chunk_idx") + 1))).as("docs"))
+      .withColumn("piece", expr("substring(payload, offset + 1, length)"))
+      .drop("payload")
       .localCheckpoint(true)
+    // the next trigger frees this trigger's checkpoints (also when this
+    // one fails below)
+    def freeNext(frames: DataFrame*): Unit =
+      fiveStagePrevCkpt.put(storeDir, frames.flatMap(_.queryExecution.logical.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }).distinct): Unit
+    freeNext(chunks)
     val fpRow = fpObs.get
     val fp = Option(fpRow("fp")).fold(0L)(_.asInstanceOf[Long])
     val n = fpRow("n").asInstanceOf[Long]
+    val docChunks = fpRow("docs").asInstanceOf[Seq[org.apache.spark.sql.Row]].map { r =>
+      require(!r.isNullAt(0), s"five-stage trigger $epoch has a document with a null doc_id")
+      r.getLong(0) -> r.getInt(1).toLong
+    }.sortBy(_._1)
+    val repeated = docChunks.groupBy(_._1).collect { case (id, xs) if xs.size > 1 => id }
+    require(repeated.isEmpty, s"five-stage trigger $epoch repeats doc_id " +
+      s"${repeated.toSeq.sorted.mkString(", ")}: emit_seq numbers each document once")
+    require(docChunks.map(_._2).sum == n, s"five-stage trigger $epoch: per-document " +
+      s"chunk counts sum to ${docChunks.map(_._2).sum}, not to its $n chunks")
     // Replay detection for the at-least-once contract: foreachBatch
     // may redeliver an epoch after a crash that already advanced the
     // store/frontier, and a NEW query over the same store restarts
@@ -575,11 +599,17 @@ object StreamingPipelines {
         allowMissingColumns = true)
     val firstW = Window.partitionBy("chunk_sha")
       .orderBy(col("__store").desc, col("doc_id"), col("chunk_idx"))
+    // Compress (firsts only) in the same pass: duplicates keep only
+    // the digest reference
     val tagged = probed
       .withColumn("is_first", row_number().over(firstW) === 1 && !col("__store"))
       .filter(!col("__store"))
+      .withColumn("comp_len", when(col("is_first"),
+        graft.functions.NativeChunk.compressedLen(col("piece"), "deflate")))
+      .withColumn("piece", when(col("is_first"), col("piece")))
       .drop("__store")
       .localCheckpoint(true) // consumed twice (digest write, Reorder)
+    freeNext(tagged, chunks)
     // one file per batch (the store is digests-only, tiny per batch;
     // un-coalesced appends would accumulate #partitions small files
     // per batch), in the batch attempt's own txn partition
@@ -587,34 +617,14 @@ object StreamingPipelines {
       .coalesce(1).write.mode("overwrite").parquet(s"$digestPath/txn=$txn")
     writeFiveStageFrontier(fc, frontierPath,
       FiveStageFrontier(frontier + n, frontier, epoch, fp, txn))
-    // Compress (firsts only) + Reorder: range-sort on (doc_id,
-    // chunk_idx) and checkpoint with each row's partition-local index
-    // (the low 33 bits of monotonically_increasing_id; the high bits
-    // are the partition id)
-    val sorted = tagged
-      .withColumn("comp_len", when(col("is_first"),
-        graft.functions.NativeChunk.compressedLen(col("piece"), "deflate")))
-      .withColumn("piece", when(col("is_first"), col("piece")))
-      .repartitionByRange(col("doc_id"), col("chunk_idx"))
-      .sortWithinPartitions("doc_id", "chunk_idx")
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(true)
-    val sizes = sorted.queryExecution.toRdd
-      .mapPartitionsWithIndex((pid, it) => Iterator(pid -> it.size.toLong))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = sizes.scanLeft(frontier)(_ + _).init
-    val ordered = sorted
-      .withColumn("emit_seq", element_at(typedLit(offsets), shiftright(col("__mid"), 33).cast("int") + 1) +
-        col("__mid").bitwiseAND(lit((1L << 33) - 1)))
+    // Reorder: a document's chunks take the sequence numbers after
+    // those of every earlier doc_id in the batch
+    val firstSeq = docChunks.map(_._1).zip(docChunks.scanLeft(frontier)(_ + _._2)).toMap
+    val firstSeqOf = udf((docId: Long) => firstSeq(docId))
+    tagged
+      .withColumn("emit_seq", firstSeqOf(col("doc_id")) + col("chunk_idx"))
       .select("chunk_sha", "doc_id", "chunk_idx", "offset", "length", "piece",
         "is_first", "comp_len", "emit_seq")
-    // record every checkpoint's LogicalRDD id so the NEXT trigger
-    // frees them all once this batch's output has been consumed
-    val ckptIds = Seq(sorted, tagged, chunks).flatMap(_.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }).distinct
-    fiveStagePrevCkpt.put(storeDir, ckptIds): Unit
-    ordered
   }
 
   /** fileThroughputBench's foreachBatch twin: drives a per-batch

@@ -72,6 +72,17 @@ class ExprTypeCheckSpec extends SparkSpec {
     assert(e.getMessage.contains("graft_pq_encode"))
   }
 
+  test("graft_pq plan text shows the codebook's length and content hash, not its identity") {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import graft.functions.{PqAdcDot, PqEncode}
+    def cb = Array.tabulate(8 * 16 * 8)(_ * 0.5)
+    val texts = Seq.fill(2)(Seq(PqEncode(UnresolvedAttribute("v"), cb, 8, 16),
+      PqAdcDot(UnresolvedAttribute("c"), UnresolvedAttribute("q"), cb, 16)).map(_.toString))
+    assert(texts.distinct.size == 1, texts)
+    assert(texts.head.forall(t => t.contains("codebook(len=1024, hash=") && !t.contains("[D@")),
+      texts.head)
+  }
+
   test("graft_pq kernels reject null vector elements loudly at runtime") {
     import graft.functions.NativePq
     val cb = new Array[Double](2 * 2 * 2)

@@ -290,6 +290,38 @@ class FiveStageSpec extends SparkSpec {
     }
   }
 
+  test("five-stage Reorder: a doc_id repeated or null within one trigger fails, naming it") {
+    withStore("repeat") { storeDir =>
+      val all = docs()
+      val (id, _) = all(2)
+      val e = intercept[IllegalArgumentException](
+        trigger(storeDir, all.take(5).toSeq :+ (id -> all(7)._2), 0L))
+      assert(e.getMessage.contains(s"repeats doc_id $id"), e.getMessage)
+      val withNull = frame(all.take(3).toSeq).withColumn("doc_id",
+        org.apache.spark.sql.functions.expr(s"if(doc_id = $id, null, doc_id)"))
+      val n = intercept[IllegalArgumentException](
+        StreamingPipelines.fiveStageBatch(spark, storeDir)(withNull, 0L).collect())
+      assert(n.getMessage.contains("null doc_id"), n.getMessage)
+    }
+  }
+
+  test("five-stage Reorder: an empty-text document takes no sequence numbers") {
+    withStore("empty_text") { storeDir =>
+      val all = docs()
+      val head = trigger(storeDir, all.take(10).toSeq, 0L)
+      val (emptyId, _) = all(12)
+      val out = trigger(storeDir, Seq(all(10), all(11), emptyId -> "", all(13)), 1L)
+      assert(!out.exists(_.getAs[Long]("doc_id") == emptyId), "an empty document emitted chunks")
+      val from = head.length.toLong
+      val inSeq = out.sortBy(_.getAs[Long]("emit_seq"))
+      assert(inSeq.map(_.getAs[Long]("emit_seq")).toSeq == (from until from + out.length),
+        "emit_seq not dense around an empty document")
+      val keys = inSeq.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("chunk_idx"))).toSeq
+      assert(keys == keys.sorted, "emit order != (doc_id, chunk_idx) order")
+      assert(nextSeq(storeDir) == from + out.length)
+    }
+  }
+
   /** Spark jobs started under a job group while `body` runs. Listener
     * events arrive asynchronously, so a sentinel job in another group
     * marks the point by which every earlier job has been seen. */
@@ -316,7 +348,7 @@ class FiveStageSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("five-stage pipeline: a steady-state trigger runs at most 9 Spark jobs") {
+  test("five-stage pipeline: a steady-state trigger runs at most 5 Spark jobs") {
     withStore("jobs") { storeDir =>
       val all = docs()
       trigger(storeDir, all.take(100).toSeq, 0L)
@@ -326,10 +358,12 @@ class FiveStageSpec extends SparkSpec {
           frame(all.slice(200, 300).toSeq), 2L)
         out.write.format("noop").mode("overwrite").save()
       }
-      // fingerprint observed on the chunk checkpoint, schema-free store
-      // read, driver-side frontier record, count-based Reorder: the
-      // call plus one materialization of its output
-      assert(jobs <= 9, s"$jobs Spark jobs for one trigger")
+      // fingerprint and per-document chunk counts observed on the chunk
+      // checkpoint, schema-free store read, driver-side frontier record,
+      // Reorder as a projection: the chunk checkpoint, the dedup
+      // exchange and its checkpoint, the digest write, plus one
+      // materialization of the output
+      assert(jobs <= 5, s"$jobs Spark jobs for one trigger")
     }
   }
 }

@@ -46,6 +46,8 @@ object SparkSpec {
       // min/max stats row-group skipping needs (INT96 does not)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      // the same local filesystem as Sessions.contract
+      .config(Sessions.localFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
