@@ -389,8 +389,8 @@ object StreamingPipelines {
   // ---- the 5-stage dedup pipeline, composed end to end -----------------
   /** The reference's flagship artifact as ONE streaming pipeline:
     * Fragment→Refine (content-defined chunking, encoder.c:999),
-    * Deduplicate (digest probe against a PERSISTENT store — the
-    * hashtable that lives across the stream's lifetime),
+    * Deduplicate (digest lookup in a hashtable that lives across the
+    * stream's lifetime, `dedupdef.h`),
     * Compress (per-unique-chunk deflate accounting, encoder.c:587),
     * Reorder (ordered emission, encoder.c:1345 /
     * encoder_spar_ord.cpp). foreachBatch is the composition point —
@@ -404,48 +404,67 @@ object StreamingPipelines {
     * deflate length (the archive payload), duplicates only the digest
     * reference — encoder.c's compressed-data-or-fingerprint framing.
     * `emit_seq` is a globally contiguous sequence in (doc_id,
-    * chunk_idx) order. Reorder is a projection, not a sort: the job
-    * that checkpoints the chunks also observes each document's chunk
-    * count, the driver turns the counts into each document's first
-    * sequence number (the frontier plus the chunks of every smaller
-    * doc_id in the batch, one map entry per document), and a row's
-    * `emit_seq` is that number plus its `chunk_idx`. The output rows
-    * are therefore not physically sorted (they keep the dedup
-    * shuffle's partitioning); order by `emit_seq` to read them in
-    * sequence. Like the reference's single Reorder thread the sequence
-    * is a counter; unlike it, no row moves to compute it. A doc_id that
-    * is null or repeats within one trigger fails the trigger, since
-    * the sequence would no longer follow from (doc_id, chunk_idx).
+    * chunk_idx) order. A trigger runs one Spark job: it checkpoints
+    * the chunks and observes each chunk's (doc_id, chunk_idx, digest)
+    * and the batch fingerprint. Everything else is decided on the
+    * driver, and the output is a projection over that checkpoint:
+    *  - Deduplicate walks the batch's digests in (doc_id, chunk_idx)
+    *    order; a chunk is a first when its digest is neither in the
+    *    store's [[DigestIndex]] nor met earlier in the batch;
+    *  - Reorder gives each document the sequence numbers after the
+    *    frontier and the chunks of every smaller doc_id in the batch,
+    *    and a row's `emit_seq` is its document's first number plus its
+    *    `chunk_idx`. Like the reference's single Reorder thread the
+    *    sequence is a counter; no row moves to compute it, so the
+    *    output rows are not physically sorted — order by `emit_seq`
+    *    to read them in sequence.
+    * A doc_id that is null or repeats within one trigger fails the
+    * trigger, since the sequence would no longer follow from (doc_id,
+    * chunk_idx).
     *
-    * Store layout under `storeDir`:
-    *  - `digests/txn=k/` — parquet, schema (chunk_sha STRING, txn
-    *    BIGINT): the first occurrences written by transaction k, one
-    *    file per trigger;
+    * Store layout under `storeDir`, all read and written on the driver
+    * through the Hadoop FileContext API (no Spark job), each file
+    * replaced atomically (written to a temporary file and renamed over
+    * the old one, so a crash leaves the old content or the new, never
+    * neither):
+    *  - `digests/txn=k.bin` — the raw 32-byte SHA-256 digests of the
+    *    first occurrences written by transaction k, in emit order;
     *  - `frontier.rec` — one text line `next_seq=… base=… epoch=…
-    *    fp=… txn=…`, read on the driver through the Hadoop FileContext
-    *    API (no Spark job) and replaced atomically: the new record is written
-    *    to a temporary file and renamed over the old one, so a crash
-    *    leaves either the old record or the new one, never neither.
+    *    fp=… txn=…`.
+    *
+    * The digest index: the driver keeps one [[DigestIndex]] resident,
+    * for the store written last, tagged with the last txn it reflects.
+    * A trigger of txn k uses it only when that tag is k − 1 and the
+    * trigger is not a redelivery. Otherwise — the first trigger on a
+    * store in this JVM, a redelivery, a frontier record older than the
+    * index, or an index evicted by another store's trigger — it
+    * rebuilds the index from every `txn=j.bin` with j ≠ k. The index is
+    * updated only after the frontier record is written, so it is never
+    * ahead of the commit point. Driver memory: one index, at most 64
+    * bytes per distinct digest (raw digests in an open-addressed
+    * table), plus the running trigger's chunk keys and digests. A
+    * store has one writer at a time: a resident index does not see
+    * digests another process appends.
     *
     * Each trigger writes its digests before its frontier record, and
     * both advances are keyed by (epoch, batch fingerprint) so an
     * at-least-once redelivery of the same epoch is idempotent: each
-    * attempt's digests live in their own txn partition (a redelivery
-    * overwrites the failed attempt's partial write and the probe
-    * excludes exactly that partition, so firsts re-classify
-    * identically), and the frontier record keeps (base, epoch, fp) so
-    * a redelivery re-bases emit_seq at the SAME sequence range
-    * instead of skipping one — the dense-sequence invariant holds
-    * across retries (FiveStageSpec redelivers an epoch to prove it).
-    * A crash between the two writes leaves the previous record, and
-    * the redelivery then re-runs as new work under the same txn and
-    * base — the same output again. A NEW query over the same store
-    * (epoch numbering restarting at 0) is distinguished by the
-    * fingerprint and gets a fresh txn. A store whose record is gone
-    * while digests of a txn > 0 exist fails loudly instead of
-    * restarting at txn 0 over committed digests. Exactly-once emission
-    * to the outside world additionally needs the sink's transaction +
-    * query checkpoint, same as every foreachBatch sink. */
+    * attempt's digests live in their own txn file (a redelivery
+    * replaces the failed attempt's file and the lookup excludes exactly
+    * that txn, so firsts re-classify identically), and the frontier
+    * record keeps (base, epoch, fp) so a redelivery re-bases emit_seq
+    * at the SAME sequence range instead of skipping one — the
+    * dense-sequence invariant holds across retries (FiveStageSpec
+    * redelivers an epoch to prove it). A crash between the two writes
+    * leaves the previous record, and the redelivery then re-runs as
+    * new work under the same txn and base — the same output again. A
+    * NEW query over the same store (epoch numbering restarting at 0)
+    * is distinguished by the fingerprint and gets a fresh txn. A store
+    * whose record is gone while digests of a txn > 0 exist fails
+    * loudly instead of restarting at txn 0 over committed digests, and
+    * so does a store in an older layout. Exactly-once emission to the
+    * outside world additionally needs the sink's transaction + query
+    * checkpoint, same as every foreachBatch sink. */
   /** Last batch's checkpointed RDDs per store — freed at the NEXT call
     * (the caller has consumed the previous batch's output by then;
     * foreachBatch calls are sequential per query), so a long-running
@@ -465,16 +484,33 @@ object StreamingPipelines {
   private[graft] def fiveStageFrontierPath(storeDir: String): String =
     s"$storeDir/frontier.rec"
 
+  /** A committed file's bytes. The rename is the commit point; on a
+    * checksummed filesystem a crash right after it can leave the
+    * previous file's checksum sidecar behind, which must not make the
+    * committed file unreadable. */
+  private def readCommitted(fc: org.apache.hadoop.fs.FileContext,
+                            path: org.apache.hadoop.fs.Path): Array[Byte] = {
+    fc.setVerifyChecksum(false, path)
+    val in = fc.open(path)
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** Replaces `path` with `bytes` through a temporary file and a rename. */
+  private def writeCommitted(fc: org.apache.hadoop.fs.FileContext,
+                             path: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
+    import org.apache.hadoop.fs.{CreateFlag, Options, Path}
+    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
+    val out = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+      Options.CreateOpts.createParent())
+    try out.write(bytes) finally out.close()
+    fc.rename(tmp, path, Options.Rename.OVERWRITE)
+  }
+
   private def readFiveStageFrontier(fc: org.apache.hadoop.fs.FileContext,
                                     path: org.apache.hadoop.fs.Path): Option[FiveStageFrontier] =
     if (!fc.util.exists(path)) None
     else {
-      // the rename is the commit point; on a checksummed filesystem a
-      // crash right after it can leave the previous record's checksum
-      // sidecar behind, which must not make the committed record unreadable
-      fc.setVerifyChecksum(false, path)
-      val in = fc.open(path)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val text = new String(readCommitted(fc, path), "UTF-8")
       val kv = text.trim.split("\\s+").map(_.split("=", 2)).collect {
         case Array(k, v) if v.matches("-?\\d+") => k -> v.toLong
       }.toMap
@@ -483,24 +519,53 @@ object StreamingPipelines {
       Some(FiveStageFrontier(kv("next_seq"), kv("base"), kv("epoch"), kv("fp"), kv("txn")))
     }
 
-  private def writeFiveStageFrontier(fc: org.apache.hadoop.fs.FileContext,
-                                     path: org.apache.hadoop.fs.Path,
-                                     f: FiveStageFrontier): Unit = {
-    import org.apache.hadoop.fs.{CreateFlag, Options, Path}
-    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
-    val out = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      Options.CreateOpts.createParent())
-    try out.write(f.record.getBytes("UTF-8")) finally out.close()
-    fc.rename(tmp, path, Options.Rename.OVERWRITE)
+  private val digestFile = "txn=(\\d+)\\.bin".r
+
+  /** The digest log's files by txn. A `txn=k/` directory is the parquet
+    * digest store of older code: fail with the migration path. */
+  private def fiveStageDigestLog(fc: org.apache.hadoop.fs.FileContext,
+                                 storeDir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
+    val dir = new org.apache.hadoop.fs.Path(s"$storeDir/digests")
+    if (!fc.util.exists(dir)) Seq.empty
+    else {
+      val entries = fc.util.listStatus(dir).toSeq
+      val legacy = entries.filter(e => e.isDirectory && e.getPath.getName.startsWith("txn="))
+      require(legacy.isEmpty,
+        s"five-stage store at $storeDir has legacy parquet digest directories (" +
+          legacy.map(_.getPath.getName).sorted.take(3).mkString(", ") + ", …) — they " +
+          "predate the digest log of raw records; start a fresh storeDir, or write each " +
+          "directory's chunk_sha values, unhexed to 32 bytes each, to digests/txn=k.bin " +
+          "and remove the txn=k/ directories")
+      entries.map(_.getPath).collect {
+        case p if digestFile.pattern.matcher(p.getName).matches =>
+          p.getName.stripPrefix("txn=").stripSuffix(".bin").toLong -> p
+      }.sortBy(_._1)
+    }
+  }
+
+  private def readDigestFile(fc: org.apache.hadoop.fs.FileContext,
+                             path: org.apache.hadoop.fs.Path): Iterator[Array[Byte]] = {
+    val bytes = readCommitted(fc, path)
+    require(bytes.length % DigestIndex.DigestBytes == 0,
+      s"five-stage digest file $path holds ${bytes.length} bytes, not whole " +
+        s"${DigestIndex.DigestBytes}-byte digests")
+    bytes.grouped(DigestIndex.DigestBytes)
+  }
+
+  /** Every digest in a five-stage store's log, by txn, as hex. */
+  private[graft] def fiveStageDigests(s: SparkSession, storeDir: String): Seq[(Long, String)] = {
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      new org.apache.hadoop.fs.Path(storeDir).toUri, s.sparkContext.hadoopConfiguration)
+    fiveStageDigestLog(fc, storeDir).flatMap { case (txn, p) =>
+      readDigestFile(fc, p).map(d => txn -> d.map("%02x".format(_)).mkString)
+    }
   }
 
   def fiveStageBatch(s: SparkSession, storeDir: String)(
       batch: DataFrame, epoch: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.hadoop.fs.{FileContext, Path}
-    val digestPath = new Path(s"$storeDir/digests")
     val frontierPath = new Path(fiveStageFrontierPath(storeDir))
-    val fc = FileContext.getFileContext(digestPath.toUri, s.sparkContext.hadoopConfiguration)
+    val fc = FileContext.getFileContext(frontierPath.toUri, s.sparkContext.hadoopConfiguration)
     // the frontier moved from a parquet directory to one atomically
     // replaced record: a store written by the old code must fail HERE
     // with a clear message, not silently restart its sequence
@@ -510,19 +575,16 @@ object StreamingPipelines {
         s"storeDir, or write its one row to $frontierPath as the line " +
         "'next_seq=N base=B epoch=E fp=F txn=T' and remove frontier/")
     val stored = readFiveStageFrontier(fc, frontierPath)
-    val txns =
-      if (!fc.util.exists(digestPath)) Seq.empty[Long]
-      else fc.util.listStatus(digestPath).toSeq.map(_.getPath.getName).collect {
-        case name if name.startsWith("txn=") => name.stripPrefix("txn=").toLong
-      }
+    // listed only without a record or when the index is rebuilt
+    lazy val logged = fiveStageDigestLog(fc, storeDir)
     // only a crash inside the very first trigger leaves digests
     // without a record; anything later means the record was lost, and
     // restarting at txn 0 would overwrite committed digests and
     // re-issue sequence numbers
-    if (stored.isEmpty && txns.exists(_ > 0))
+    if (stored.isEmpty && logged.exists(_._1 > 0))
       throw new IllegalStateException(s"five-stage store at $storeDir has committed " +
-        s"digests (txn ${txns.max}) but no frontier record $frontierPath — the emit " +
-        "frontier was lost; restore the record or start a fresh storeDir")
+        s"digests (txn ${logged.map(_._1).max}) but no frontier record $frontierPath — the " +
+        "emit frontier was lost; restore the record or start a fresh storeDir")
     // free the previous trigger's checkpoints (their output frame was
     // fully consumed before this trigger started)
     fiveStagePrevCkpt.remove(storeDir).foreach(_.foreach { id =>
@@ -530,43 +592,40 @@ object StreamingPipelines {
         .foreach(_.unpersist(blocking = false))
     })
     // Fragment + Refine: chunk boundaries + identities + bytes. Eager
-    // checkpoint: the CDC+SHA pass is the dominant map stage, and two
-    // facts observed in that same job decide the rest of the trigger:
-    // the batch fingerprint (replay detection, before the probe is
-    // planned) and each document's chunk count, taken from its last
-    // chunk (the one that ends where the payload ends) — all Reorder
-    // needs
-    val fpObs = org.apache.spark.sql.Observation()
+    // checkpoint: the CDC+SHA pass is the dominant map stage, and the
+    // same job observes the batch fingerprint (replay detection) and
+    // every chunk's key and raw digest, all the driver needs for
+    // Deduplicate and Reorder
+    val obs = org.apache.spark.sql.Observation()
     val chunks = batch
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"),
         graft.functions.NativeChunk.chunks(col("text")))
-      .observe(fpObs,
+      .observe(obs,
         bit_xor(xxhash64(col("doc_id"), col("chunk_idx"), col("chunk_sha"))).as("fp"),
-        count(lit(1)).as("n"),
-        collect_list(when(col("offset") + col("length") === octet_length(col("payload")),
-          struct(col("doc_id"), col("chunk_idx") + 1))).as("docs"))
+        collect_list(struct(col("doc_id"), col("chunk_idx"), unhex(col("chunk_sha"))))
+          .as("chunks"))
       .withColumn("piece", expr("substring(payload, offset + 1, length)"))
       .drop("payload")
       .localCheckpoint(true)
-    // the next trigger frees this trigger's checkpoints (also when this
+    // the next trigger frees this trigger's checkpoint (also when this
     // one fails below)
-    def freeNext(frames: DataFrame*): Unit =
-      fiveStagePrevCkpt.put(storeDir, frames.flatMap(_.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }).distinct): Unit
-    freeNext(chunks)
-    val fpRow = fpObs.get
-    val fp = Option(fpRow("fp")).fold(0L)(_.asInstanceOf[Long])
-    val n = fpRow("n").asInstanceOf[Long]
-    val docChunks = fpRow("docs").asInstanceOf[Seq[org.apache.spark.sql.Row]].map { r =>
+    fiveStagePrevCkpt.put(storeDir, chunks.queryExecution.logical.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.distinct)
+    val obsRow = obs.get
+    val fp = Option(obsRow("fp")).fold(0L)(_.asInstanceOf[Long])
+    val keys = obsRow("chunks").asInstanceOf[Seq[org.apache.spark.sql.Row]].map { r =>
       require(!r.isNullAt(0), s"five-stage trigger $epoch has a document with a null doc_id")
-      r.getLong(0) -> r.getInt(1).toLong
-    }.sortBy(_._1)
-    val repeated = docChunks.groupBy(_._1).collect { case (id, xs) if xs.size > 1 => id }
+      (r.getLong(0), r.getInt(1), r.getAs[Array[Byte]](2))
+    }.sortBy(k => (k._1, k._2))
+    // a document numbers its chunks 0, 1, …: a (doc_id, chunk_idx)
+    // pair seen twice is a doc_id that came twice
+    val repeated = keys.iterator.sliding(2).collect {
+      case Seq(a, b) if a._1 == b._1 && a._2 == b._2 => a._1
+    }.toSeq.distinct
     require(repeated.isEmpty, s"five-stage trigger $epoch repeats doc_id " +
-      s"${repeated.toSeq.sorted.mkString(", ")}: emit_seq numbers each document once")
-    require(docChunks.map(_._2).sum == n, s"five-stage trigger $epoch: per-document " +
-      s"chunk counts sum to ${docChunks.map(_._2).sum}, not to its $n chunks")
+      s"${repeated.sorted.mkString(", ")}: emit_seq numbers each document once")
+    val n = keys.length.toLong
     // Replay detection for the at-least-once contract: foreachBatch
     // may redeliver an epoch after a crash that already advanced the
     // store/frontier, and a NEW query over the same store restarts
@@ -575,53 +634,45 @@ object StreamingPipelines {
     // matching pair marks a true redelivery (same batch, same data),
     // which must re-emit the SAME sequence range against the SAME
     // store view; anything else is new work. Each attempt writes its
-    // digests into its own txn partition, so a redelivery OVERWRITES
-    // the failed attempt's partial write (never double-appends) and
-    // the probe can exclude exactly that partition.
+    // digests into its own txn file, so a redelivery REPLACES the
+    // failed attempt's write (never double-appends) and the lookup can
+    // exclude exactly that txn.
     val isReplay = stored.exists(f => f.epoch == epoch && f.fp == fp)
     val txn = stored.fold(0L)(f => if (isReplay) f.txn else f.txn + 1)
     val frontier = stored.fold(0L)(f => if (isReplay) f.base else f.nextSeq)
-    // Deduplicate: one exchange on chunk_sha over the batch rows plus
-    // the store's digests. Store rows sort first in their digest's
-    // group, so row 1 is a batch row only when the store lacks the
-    // digest — then it is the batch-local first occurrence. The probe
-    // excludes THIS txn's partition: on a redelivery the failed
-    // attempt's own digests are already on disk, and without the
-    // exclusion the whole batch would re-classify as all-duplicate
-    // (firsts lost forever)
-    val rows = chunks.withColumn("__store", lit(false))
-    val probed =
-      if (!txns.exists(_ != txn)) rows
-      else rows.unionByName(
-        s.read.schema("chunk_sha STRING, txn BIGINT").parquet(digestPath.toString)
-          .filter(col("txn") =!= txn)
-          .select(col("chunk_sha"), lit(true).as("__store")),
-        allowMissingColumns = true)
-    val firstW = Window.partitionBy("chunk_sha")
-      .orderBy(col("__store").desc, col("doc_id"), col("chunk_idx"))
-    // Compress (firsts only) in the same pass: duplicates keep only
-    // the digest reference
-    val tagged = probed
-      .withColumn("is_first", row_number().over(firstW) === 1 && !col("__store"))
-      .filter(!col("__store"))
+    // Deduplicate against every txn but THIS one: on a redelivery the
+    // failed attempt's own digests are already on disk, and counting
+    // them would re-classify the whole batch as all-duplicate (firsts
+    // lost forever)
+    val index = DigestIndex.resident(storeDir, txn - 1).filter(_ => !isReplay).getOrElse {
+      val rebuilt = DigestIndex.empty()
+      logged.filter(_._1 != txn).foreach { case (_, p) =>
+        readDigestFile(fc, p).foreach(rebuilt.add)
+      }
+      rebuilt
+    }
+    val batchSeen = DigestIndex.empty()
+    val firsts = keys.filter { case (_, _, d) => !index.contains(d) && batchSeen.add(d) }
+    writeCommitted(fc, new Path(s"$storeDir/digests/txn=$txn.bin"),
+      firsts.iterator.flatMap(_._3).toArray)
+    writeCommitted(fc, frontierPath,
+      FiveStageFrontier(frontier + n, frontier, epoch, fp, txn).record.getBytes("UTF-8"))
+    DigestIndex.commit(storeDir, txn, index, firsts.map(_._3))
+    // Compress the firsts; duplicates keep only the digest reference
+    val firstIdx = firsts.groupBy(_._1).map { case (doc, ks) =>
+      doc -> scala.collection.immutable.BitSet(ks.map(_._2): _*) }
+    val isFirstOf = udf((docId: Long, idx: Int) => firstIdx.get(docId).exists(_(idx)))
+    // Reorder: a document's chunks take the sequence numbers after
+    // those of every earlier doc_id in the batch
+    val docChunks = keys.groupBy(_._1).map { case (doc, ks) => doc -> ks.length.toLong }
+      .toSeq.sortBy(_._1)
+    val firstSeq = docChunks.map(_._1).zip(docChunks.scanLeft(frontier)(_ + _._2)).toMap
+    val firstSeqOf = udf((docId: Long) => firstSeq(docId))
+    chunks
+      .withColumn("is_first", isFirstOf(col("doc_id"), col("chunk_idx")))
       .withColumn("comp_len", when(col("is_first"),
         graft.functions.NativeChunk.compressedLen(col("piece"), "deflate")))
       .withColumn("piece", when(col("is_first"), col("piece")))
-      .drop("__store")
-      .localCheckpoint(true) // consumed twice (digest write, Reorder)
-    freeNext(tagged, chunks)
-    // one file per batch (the store is digests-only, tiny per batch;
-    // un-coalesced appends would accumulate #partitions small files
-    // per batch), in the batch attempt's own txn partition
-    tagged.filter(col("is_first")).select("chunk_sha")
-      .coalesce(1).write.mode("overwrite").parquet(s"$digestPath/txn=$txn")
-    writeFiveStageFrontier(fc, frontierPath,
-      FiveStageFrontier(frontier + n, frontier, epoch, fp, txn))
-    // Reorder: a document's chunks take the sequence numbers after
-    // those of every earlier doc_id in the batch
-    val firstSeq = docChunks.map(_._1).zip(docChunks.scanLeft(frontier)(_ + _._2)).toMap
-    val firstSeqOf = udf((docId: Long) => firstSeq(docId))
-    tagged
       .withColumn("emit_seq", firstSeqOf(col("doc_id")) + col("chunk_idx"))
       .select("chunk_sha", "doc_id", "chunk_idx", "offset", "length", "piece",
         "is_first", "comp_len", "emit_seq")

@@ -105,15 +105,14 @@ class FiveStageSpec extends SparkSpec {
       // reclassify the batch all-duplicate) and the SAME emit_seq
       // range (no hole in the dense sequence) — and the digest store
       // must not grow
-      val digests = spark.read.parquet(s"$storeDir/digests")
-        .select("chunk_sha").distinct().count()
+      def distinctDigests: Int =
+        StreamingPipelines.fiveStageDigests(spark, storeDir).map(_._2).distinct.size
+      val digests = distinctDigests
       val redelivered = stage(
         spark.createDataFrame(docs.toSeq).toDF("doc_id", "text"), 99L).collect()
       assert(redelivered.map(_.toSeq).toSet == replay.map(_.toSeq).toSet,
         "redelivered epoch did not reproduce the original delivery")
-      assert(spark.read.parquet(s"$storeDir/digests")
-        .select("chunk_sha").distinct().count() == digests,
-        "redelivery grew the digest store")
+      assert(distinctDigests == digests, "redelivery grew the digest store")
     } finally {
       StreamingPipelines.deleteRecursively(new java.io.File(storeDir))
     }
@@ -192,8 +191,8 @@ class FiveStageSpec extends SparkSpec {
     "next_seq=(\\d+)".r.findFirstMatchIn(rec).get.group(1).toLong
   }
 
-  private def distinctDigests(storeDir: String): Long =
-    spark.read.parquet(s"$storeDir/digests").select("chunk_sha").distinct().count()
+  private def distinctDigests(storeDir: String): Int =
+    StreamingPipelines.fiveStageDigests(spark, storeDir).map(_._2).distinct.size
 
   /** A row with its payload as a value, so rows compare by content. */
   private def canon(r: Row): Seq[Any] = r.toSeq.map {
@@ -348,7 +347,7 @@ class FiveStageSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("five-stage pipeline: a steady-state trigger runs at most 5 Spark jobs") {
+  test("five-stage pipeline: a steady-state trigger runs at most 2 Spark jobs") {
     withStore("jobs") { storeDir =>
       val all = docs()
       trigger(storeDir, all.take(100).toSeq, 0L)
@@ -358,12 +357,65 @@ class FiveStageSpec extends SparkSpec {
           frame(all.slice(200, 300).toSeq), 2L)
         out.write.format("noop").mode("overwrite").save()
       }
-      // fingerprint and per-document chunk counts observed on the chunk
-      // checkpoint, schema-free store read, driver-side frontier record,
-      // Reorder as a projection: the chunk checkpoint, the dedup
-      // exchange and its checkpoint, the digest write, plus one
-      // materialization of the output
-      assert(jobs <= 5, s"$jobs Spark jobs for one trigger")
+      // fingerprint, chunk keys and digests observed on the chunk
+      // checkpoint; Deduplicate against the resident index, the digest
+      // log and the frontier record on the driver; Reorder as a
+      // projection: the chunk checkpoint plus one materialization of
+      // the output
+      assert(jobs <= 2, s"$jobs Spark jobs for one trigger")
+    }
+  }
+
+  test("five-stage pipeline: a trigger's job count does not grow with the store's age") {
+    withStore("age") { storeDir =>
+      val all = docs()
+      // past the 32 paths from which Spark lists a store in a job of its own
+      val jobs = (0 until 40).map { i =>
+        val (_, n) = jobsIn(s"five-stage-age-$i-${System.nanoTime()}") {
+          StreamingPipelines.fiveStageBatch(spark, storeDir)(
+            frame(all.slice(2 * i, 2 * i + 2).toSeq), i.toLong)
+            .write.format("noop").mode("overwrite").save()
+        }
+        n
+      }
+      assert(jobs(39) == jobs(2), s"jobs per trigger: ${jobs.mkString(" ")}")
+    }
+  }
+
+  test("five-stage index: a trigger on another store evicts it, the output is unchanged") {
+    val all = docs()
+    def reId(batch: Seq[(Long, String)], by: Long) = batch.map { case (id, t) => (id + by, t) }
+    // later triggers repeat earlier content under new doc_ids: all
+    // their chunks are duplicates only if the index still holds the
+    // earlier triggers' digests
+    val batches = Seq(all.slice(0, 40).toSeq, all.slice(40, 80).toSeq,
+      all.slice(80, 120).toSeq, reId(all.slice(0, 40).toSeq, 1000000L),
+      all.slice(120, 140).toSeq ++ reId(all.slice(40, 60).toSeq, 2000000L))
+    def run(storeDir: String, epochs: Range): Seq[Set[Seq[Any]]] =
+      epochs.map(e => trigger(storeDir, batches(e), e.toLong).map(canon).toSet)
+    withStore("evict_a") { a =>
+      withStore("evict_b") { b =>
+        withStore("evict_c") { c =>
+          val interrupted = run(a, 0 until 3) ++ {
+            trigger(b, all.slice(200, 220).toSeq, 0L)
+            run(a, 3 until 5)
+          }
+          val straight = run(c, 0 until 5)
+          interrupted.zip(straight).zipWithIndex.foreach { case ((x, y), e) =>
+            assert(x == y, s"epoch $e differs after the index was evicted")
+          }
+          assert(straight(3).forall(r => r(6) == false), "repeated content classified as first")
+        }
+      }
+    }
+  }
+
+  test("five-stage pipeline: a legacy parquet digest directory fails loudly") {
+    withStore("legacy_digests") { storeDir =>
+      Files.createDirectories(Paths.get(s"$storeDir/digests/txn=0"))
+      val e = intercept[IllegalArgumentException](trigger(storeDir, docs().take(5).toSeq, 0L))
+      assert(e.getMessage.contains("legacy parquet digest"), e.getMessage)
+      assert(e.getMessage.contains("txn=k.bin"), e.getMessage)
     }
   }
 }

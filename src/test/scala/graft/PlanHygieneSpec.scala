@@ -53,4 +53,16 @@ class PlanHygieneSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"plan hygiene violations without AQE:\n${offenders.mkString("\n")}")
   }
+
+  test("PlanDump renders the same plan byte-identically within a session") {
+    // a plain-SQL key and a store-backed ANN key (its second build
+    // reuses the session's stores)
+    Seq("q1_agg", "ann_pq_rotated").foreach { name =>
+      val first = PlanDump.render(spark, sfDir, name)
+      val second = PlanDump.render(spark, sfDir, name)
+      assert(first == second, s"$name: two renderings differ")
+      assert(!first.contains(Stores.root(spark)), s"$name: the store root is not masked")
+      assert("#\\d".r.findFirstIn(first).isEmpty, s"$name: an expression id is not masked")
+    }
+  }
 }
