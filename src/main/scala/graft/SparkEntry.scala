@@ -7,7 +7,8 @@ import graft.sources.BinaryFiles
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+    * Test seam: ContractSpec checks that it analyzes. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Agg(spark, "/root/testdata/sf0.001")
 

@@ -73,7 +73,8 @@ object Stores {
       }
     }
 
-  /** Paths built so far by [[once]]. */
+  /** Paths built so far by [[once]].
+    * Test seam: StoresSpec checks that every store lies under the root. */
   private[graft] def builtPaths: Set[String] = {
     import scala.jdk.CollectionConverters._
     built.asScala.toSet

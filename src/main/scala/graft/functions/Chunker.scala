@@ -123,8 +123,9 @@ object Chunker {
     h
   }
 
-  /** Iterated fingerprint of a whole array from a fresh state —
-    * exposed for the GF(2) long-division oracle in the spec. */
+  /** Iterated fingerprint of a whole array from a fresh state.
+    * Test seam: ChunkerPropertySpec checks it against a GF(2) long
+    * division. */
   private[graft] def rabinFp(bytes: Array[Byte]): Int = {
     var h = 0
     var i = 0
@@ -218,6 +219,7 @@ object Chunker {
     out.result()
   }
 
+  /** Test seam: DedupSpec checks the chunker's CDC properties on text. */
   def chunkText(text: String): Seq[Chunk] =
     chunk(text.getBytes(StandardCharsets.UTF_8))
 

@@ -108,25 +108,6 @@ object HashKernels {
     common.toDouble / union.toDouble
   }
 
-  /** |A ∩ B| of two ASCENDING-sorted long arrays via two-pointer
-    * merge — zero allocation (no hash set, no result array), the
-    * inner loop of degree-ordered triangle counting where only the
-    * intersection SIZE matters. Callers sort ONCE at adjacency-build
-    * time (sort_array in the aggregate); passing unsorted input
-    * silently undercounts, so the sortedness contract is pinned by
-    * HashKernelPropertySpec. */
-  def intersectCountLong(a: ArrayData, b: ArrayData): Long = {
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var common = 0L
-    while (i < na && j < nb) {
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x == y) { common += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    common
-  }
-
   /** All three corner credits of one degree-oriented edge from ONE
     * two-pointer merge (r16): for edge (u,v), |adj⁺(u) ∩ adj⁺(v)| = k
     * pays u and v, and each intersection element w pays 1 — emitted
@@ -215,28 +196,6 @@ case class LongSetJaccard(left: Expression, right: Expression) extends BinaryExp
     copy(left = l, right = r)
 }
 
-/** Intersection cardinality of two ascending-sorted long-array sets
-  * ([[HashKernels.intersectCountLong]]) — codegen'd to one static
-  * call, so it rides inside whole-stage codegen directly over the
-  * join output's array views with no per-row copy. */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_sorted_intersect_count"
-  override def checkInputDataTypes(): TypeCheckResult =
-    HashExprCheck.requireLongArray(prettyName, left.dataType, right.dataType)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.intersectCountLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.HashKernels.intersectCountLong($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** Per-edge triangle corner credits ([[HashKernels.triCredits]]):
   * array<struct<id bigint, c bigint>> — (u, k), (v, k), then one
   * (w, 1) per intersection element. Explode feeds a partial
@@ -279,8 +238,6 @@ object NativeHash {
     ColumnBridge.column(SimHash64(ColumnBridge.expression(hs)))
   def jaccard(a: Column, b: Column): Column =
     ColumnBridge.column(LongSetJaccard(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    ColumnBridge.column(SortedIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   def triCredits(a: Column, b: Column, u: Column, v: Column): Column =
     ColumnBridge.column(TriCredits(ColumnBridge.expression(a), ColumnBridge.expression(b),
       ColumnBridge.expression(u), ColumnBridge.expression(v)))

@@ -328,7 +328,8 @@ object JpegCodec {
     * 4:4:4 encode→decode (forward transform, lossless DCT round trip
     * on the integer samples, inverse transform). Plain double
     * arithmetic + round — a second engine replicates it exactly, which
-    * is what the mm_jpeg_color / mm_segment value oracles do. */
+    * is what the mm_jpeg_color / mm_segment value oracles do.
+    * Differential anchor: JpegCodecSpec checks the decoder against it. */
   def yccRoundtrip(r: Int, g: Int, b: Int): (Int, Int, Int) = {
     val (y, cb, cr) = rgbToYcc(r, g, b)
     yccToRgb(y, cb, cr)

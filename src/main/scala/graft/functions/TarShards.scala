@@ -1,4 +1,4 @@
-package graft.sinks
+package graft.functions
 
 /** Minimal deterministic POSIX-ustar writer/reader for WebDataset-
   * style training shards (one `{doc_id}.txt` member per document,
@@ -20,7 +20,7 @@ object TarShards {
     ("0" * (len - 1 - s.length) + s + " ").getBytes("US-ASCII")
   }
 
-  private[sinks] def header(name: String, size: Long): Array[Byte] = {
+  private def header(name: String, size: Long): Array[Byte] = {
     val h = new Array[Byte](512)
     val nb = name.getBytes("US-ASCII")
     require(nb.length <= 100, s"tar member name too long: $name")

@@ -22,7 +22,8 @@ object VectorFns {
   /** Native codegen cosine; 0.0 when either vector has zero norm. */
   def cosine(a: Column, b: Column): Column = NativeVector.cosine(a, b)
 
-  /** Reference HOF formulation (kept for differential tests). */
+  /** Reference HOF formulation of [[dot]].
+    * Differential anchor: VectorExprSpec checks the native dot against it. */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
@@ -41,7 +42,9 @@ object VectorFns {
 
   /** Random-hyperplane LSH bucket id: `bits` sign-bits packed into a
     * long. Vectors with high cosine similarity collide with
-    * probability (1 - θ/π)^bits per table. */
+    * probability (1 - θ/π)^bits per table.
+    * Differential anchor: VectorExprSpec checks the fused lshBuckets
+    * kernel against it. */
   def lshBucket(v: Column, planes: Seq[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
       planeBit(v, p) * (1L << i)

@@ -499,52 +499,27 @@ object Dedup {
   private def minhashSig(hset: Column): Column =
     NativeHash.minhashSig(hset, MinhashPerms)
 
-  /** Production-banding band table of a (doc_id, hset) rep frame:
-    * (doc_id, band, bh) under the default 16×8 split, hot buckets
-    * capped. Shared by the incremental probe paths (batch and
-    * streaming twin) — a band table persisted from this is what the
-    * near-dup store IS. */
   /** The ONE banding expression: (doc_id, band, bh) rows of a
     * (doc_id, sig) signature table under a (bands × rowsPerBand)
     * split. Uncapped — degenerate-bucket policy belongs to the
-    * CONSUMER (self-joins and probes cap; a persisted band store must
-    * NOT, or over-cap bands vanish from the store forever). */
+    * CONSUMER (self-joins and probes cap). */
   private def bandRowsOfSig(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sig.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
       .toDF("doc_id", "band", "bh")
 
-  /** Production-default band rows of a (doc_id, hset) rep table —
-    * UNCAPPED: what the streaming twin persists as the band store. */
-  private[graft] def bandRowsOf(r: DataFrame): DataFrame =
-    bandRowsOfSig(r.select(col("doc_id"), minhashSig(col("hset")).as("sig")),
-      Bands, RowsPerBand)
-
-  /** [[bandRowsOf]] with the hot-bucket cap applied — for probe joins.
+  /** Production-banding band table of a (doc_id, hset) rep frame:
+    * (doc_id, band, bh) under the default 16×8 split, hot buckets
+    * capped — the incremental near-dup probe's two sides.
     * capBuckets' using-columns anti-join moves the key columns FIRST
     * ((band, bh, doc_id)) — restore the declared order, because
     * consumers rename this table with a positional toDF and a
     * scrambled order silently turns the band probe into a zero-recall
-    * join (caught by the streaming twin's spec; the echo oracle
-    * cannot see absent candidates). */
-  private[graft] def bandTableOf(r: DataFrame): DataFrame =
-    capBuckets(bandRowsOf(r), Seq("band", "bh"))
-      .select("doc_id", "band", "bh")
-
-  /** Same cap + order restore over an already-materialized band-row
-    * table (the streaming twin's persisted store, read back).
-    *
-    * The store is appended under at-least-once semantics: an epoch
-    * that crashes between its bands append and its reps append is
-    * retried, re-admitting the doc and appending its band rows a
-    * second time. Candidate pairs downstream are rescued by
-    * .distinct(), but duplicate rows would double-count toward the
-    * MaxBucket cap (premature bucket drop = silent recall loss) —
-    * so dedupe rows BEFORE the bucket-size count. One exchange on
-    * the full row; the probe join re-shuffles on (band, bh) anyway. */
-  private[graft] def capBandRows(rows: DataFrame): DataFrame =
-    capBuckets(rows.select("doc_id", "band", "bh").distinct(), Seq("band", "bh"))
+    * join (the echo oracle cannot see absent candidates). */
+  private def bandTableOf(r: DataFrame): DataFrame =
+    capBuckets(bandRowsOfSig(r.select(col("doc_id"), minhashSig(col("hset")).as("sig")),
+        Bands, RowsPerBand), Seq("band", "bh"))
       .select("doc_id", "band", "bh")
 
   /** Byte cap for broadcasting a verify-side attribute table. Per-doc
@@ -595,6 +570,10 @@ object Dedup {
       .distinct()
   }
 
+  /** Near-dup pairs of a (doc_id, hset) rep table computed from
+    * scratch: sign, band, verify.
+    * Differential anchor: DedupSpec compares dedup_minhash's
+    * signature-store path with it. */
   private[graft] def minhashPairs(hs: DataFrame): DataFrame = {
     val sig = hs.select(col("doc_id"), minhashSig(col("hset")).as("sig"))
     val cand = bandPairs(sig, Bands, RowsPerBand)

@@ -274,9 +274,9 @@ object GraphOps {
       when(aFirst, col("deg_b")).otherwise(col("deg_a")).as("deg_v"))
   }
 
-  /** The retired wedge-join formulation, kept executable as the
-    * differential anchor for [[trianglesFromPairs]] (GraphOpsSpec
-    * proves the two produce identical per-node counts). */
+  /** The retired wedge-join formulation, kept executable.
+    * Differential anchor: GraphOpsSpec proves that it and
+    * [[trianglesFromPairs]] produce identical per-node counts. */
   private[graft] def trianglesFromPairsWedge(pairs: DataFrame): DataFrame = {
     CheckpointScope.scoped(pairs.sparkSession) { ck =>
       val p = ck(pairs)

@@ -289,11 +289,11 @@ object OlapExtras {
       |FROM customer JOIN na USING (c_nationkey)
       |WHERE c_acctbal > nat_avg""".stripMargin
 
-  // ---- q_stream_join: batch mirror of the stream-stream join -----------
+  // ---- q_stream_join: view→purchase interval join -----------------------
   /** View→purchase attribution within 30 minutes per user — the batch
-    * mirror of the watermarked stream-stream interval join exercised
-    * in StreamingSpec. Equi key (user) keeps it a hash join with a
-    * range residual. */
+    * form of a stream-stream interval join (StreamJoinSpec recomputes
+    * the pairs in plain Scala). Equi key (user) keeps it a hash join
+    * with a range residual. */
   def qStreamJoin(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),

@@ -260,8 +260,8 @@ object Relational {
   /** The overlapping-window aggregation tumbling can't express: a
     * 60-minute window hopping every 15 minutes, each event counted
     * in the 4 windows covering it — Spark's
-    * `window(ts, "60 minutes", "15 minutes")` TVF, the same operator
-    * the streaming pipelines use for sliding metrics. The engine
+    * `window(ts, "60 minutes", "15 minutes")` TVF, the sliding form
+    * of the tumbling window the streaming pipelines use. The engine
     * plans ONE Expand (4 tagged copies per row, map-side) feeding
     * the grouped aggregate — the q_unpivot trade again: scan count
     * stays 1 at any scale, the fan-out is the window overlap factor.

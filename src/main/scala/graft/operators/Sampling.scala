@@ -240,7 +240,7 @@ object Sampling {
     * assignment and UTF-8 byte lengths — the on-disk FORMAT verified
     * relationally. Byte-level fidelity (payload round-trip against
     * the table, header checksums, member order) is pinned by
-    * SamplingSpec's read-back through [[graft.sinks.TarShards]]. */
+    * SamplingSpec's read-back through [[graft.functions.TarShards]]. */
   def shardTar(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // NO driver-side filesystem effects at plan-construction time:
@@ -254,7 +254,7 @@ object Sampling {
       .mapGroups { (shard, it) =>
         val members = it.toArray.sortBy(t => (t._2, t._3))
         val entries = members.map(t => (s"${t._3}.txt", t._4.getBytes("UTF-8")))
-        val tar = graft.sinks.TarShards.archive(entries.toIndexedSeq)
+        val tar = graft.functions.TarShards.archive(entries.toIndexedSeq)
         // atomic publish: a task killed mid-write must never leave a
         // torn .tar for a later reader — write aside, rename into
         // place; the tmp name carries the task ATTEMPT id so a
@@ -292,7 +292,7 @@ object Sampling {
     * distributively — Spark's binaryFile source (one task per shard
     * file, embarrassingly parallel at any shard count), each task
     * parsing its archive with the checksum-validating
-    * [[graft.sinks.TarShards.parse]] and re-emitting (doc_id, text).
+    * [[graft.functions.TarShards.parse]] and re-emitting (doc_id, text).
     * Builds the shards first (cheap, deterministic overwrite), so
     * the key is self-contained. NOTE the write/read contract: the
     * shard directory must be a filesystem every task AND the
@@ -320,7 +320,7 @@ object Sampling {
     s.read.format("binaryFile")
       .load(shardIds.map(id => f"$outDir/shard-$id%05d.tar"): _*)
       .select("content").as[Array[Byte]]
-      .flatMap(bytes => graft.sinks.TarShards.parse(bytes).map {
+      .flatMap(bytes => graft.functions.TarShards.parse(bytes).map {
         case (name, data) =>
           (name.stripSuffix(".txt").toLong, new String(data, "UTF-8"))
       })

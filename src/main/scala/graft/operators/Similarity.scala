@@ -255,7 +255,9 @@ object Similarity {
     * This method remains as the CONTRAST BASELINE the multiprobe
     * specs measure against — "T=[[MpProbes]] at a quarter of the
     * index entries meets the 16-table recall" stays a checkable
-    * claim precisely because this formulation stays executable. */
+    * claim precisely because this formulation stays executable.
+    * Differential anchor: SimilaritySpec measures the multiprobe
+    * family against it. */
   private[graft] def annLsh(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     lshSearch(e, queriesDf(e))
@@ -279,6 +281,8 @@ object Similarity {
   private[graft] val E2W = 4.0708
   private[graft] val E2H = 19697
 
+  /** Differential anchor: SimilaritySpec measures the registered
+    * family's recall against it. */
   private[graft] def annE2lsh(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val q = queriesDf(e)
@@ -703,6 +707,11 @@ object Similarity {
   private def assignCells(df: DataFrame, cc: Column): DataFrame =
     df.withColumn("cell", nearestCells(col("v"), cc, 1).getItem(0))
 
+  /** Writes `df` as an IVF cell layout: each row goes to the directory
+    * of its nearest centroid in `cc`, so a probe reads only its cells. */
+  private def writeCells(df: DataFrame, cc: Column, path: String): Unit =
+    assignCells(df, cc).write.partitionBy("cell").mode("overwrite").parquet(path)
+
   /** The one IVF probe (ferret's t_vec over k-means cells): each query
     * of `e`'s batch probes its `nProbe` nearest cells under `cc`,
     * `probe_rank` 0 being the nearest, against `index` (vec_id, v,
@@ -790,8 +799,8 @@ object Similarity {
     * catches a stale layout. */
   private def ivfIndex(s: SparkSession, dir: String): String = {
     val idxPath = graft.Stores.path(s, dir, "ivf_idx", Seq("embeddings"))
-    graft.Stores.once(idxPath)(graft.sinks.Sinks.writePartitioned(
-      assignCells(emb(s, dir), centroidArrayStored(s, dir)), idxPath, Seq("cell")))
+    graft.Stores.once(idxPath)(
+      writeCells(emb(s, dir), centroidArrayStored(s, dir), idxPath))
     idxPath
   }
 
@@ -813,7 +822,7 @@ object Similarity {
     val cc = centroidArrayBase(s, dir)
     val root = ivfAppendRoot(s, dir)
     def segment(name: String, df: DataFrame): Unit =
-      graft.sinks.Sinks.writePartitioned(assignCells(df, cc), s"$root/$name", Seq("cell"))
+      writeCells(df, cc, s"$root/$name")
     graft.Stores.once(root) {
       segment("base", e.filter(col("vec_id") % 7 =!= 3))
       // the append: a new immutable segment only
@@ -884,8 +893,7 @@ object Similarity {
     val cc = centroidArrayBase(s, dir)
     val root = streamIndexRoot(s, dir)
     graft.Stores.once(root) {
-      graft.sinks.Sinks.writePartitioned(
-        assignCells(e.filter(col("vec_id") % 7 =!= 3), cc), s"$root/base", Seq("cell"))
+      writeCells(e.filter(col("vec_id") % 7 =!= 3), cc, s"$root/base")
       // the arrival feed: staged as a multi-file parquet folder so
       // maxFilesPerTrigger=1 yields genuine successive micro-batches
       // (4 epochs) — no driver-side row collection anywhere
@@ -896,8 +904,7 @@ object Similarity {
         .option("maxFilesPerTrigger", "1").parquet(staging)
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.sinks.Sinks.writePartitioned(
-            assignCells(batch, cc), f"$root/delta_$batchId%03d", Seq("cell"))
+          writeCells(batch, cc, f"$root/delta_$batchId%03d")
         }
         .option("checkpointLocation", s"$root/_ckpt")
         .trigger(Trigger.AvailableNow()).start()
@@ -952,9 +959,11 @@ object Similarity {
     (gen1, cc)
   }
 
-  /** Spec reference: the same probe over an IN-MEMORY assignment of
-    * the full corpus to the base-frozen centroids — what the segmented
-    * layout must reproduce exactly. */
+  /** The same probe over an IN-MEMORY assignment of the full corpus
+    * to the base-frozen centroids — what the segmented layout must
+    * reproduce exactly.
+    * Differential anchor: SimilaritySpec compares the segmented
+    * layouts with it. */
   private[graft] def ivfAppendReference(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val cc = centroidArrayBase(s, dir)

@@ -350,8 +350,8 @@ object StorageLayout {
   // ---- q_store_compact: LSM segment compaction -------------------------
   /** The third maintenance verb, closing the store trilogy (upsert,
     * incremental aggregate, COMPACTION): the latest-event dimension
-    * accumulates as immutable per-epoch segments (the streaming
-    * twin's LSM contract — three slice appends here), and compaction
+    * accumulates as immutable per-epoch segments (an LSM store's
+    * contract — three slice appends here), and compaction
     * folds them into ONE segment by the same per-key (ts, event_id)
     * max. Associativity of the max fold is the entire correctness
     * argument: latest-of-segment-latests IS the global latest, so

@@ -1306,9 +1306,9 @@ object TextAnalysis {
         .map(r => (r.getAs[String]("merge_a"), r.getAs[String]("merge_b")))
         .toSeq)
 
-  /** Self-contained train+encode over an arbitrary docs frame (the
-    * hand-trace spec path; the driver-contract query goes through the
-    * merge cache above). */
+  /** Self-contained train+encode over an arbitrary docs frame; the
+    * registered query goes through the merge cache above.
+    * Test seam: TextMultimodalSpec runs it on hand-traced corpora. */
   private[graft] def bpeEncodeFromDocs(s: SparkSession, d: DataFrame): DataFrame =
     bpeEncodeWithMerges(d,
       bpeTrainFromDocs(s, d).orderBy("round").collect()

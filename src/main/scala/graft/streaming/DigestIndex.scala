@@ -24,7 +24,8 @@ final class DigestIndex private (initialSlots: Int) {
 
   def size: Int = used + (if (hasZero) 1 else 0)
 
-  /** Bytes of the backing table. */
+  /** Bytes of the backing table.
+    * Test seam: DigestIndexSpec checks the memory budget with it. */
   private[graft] def backingBytes: Long = words.length.toLong * 8L
 
   def contains(digest: Array[Byte]): Boolean = {

@@ -15,9 +15,17 @@ import org.apache.spark.sql.types.DecimalType
   * exercised through micro-batch pipelines whose parallelism comes
   * from partitioning rather than explicit stage replicas.
   *
-  * Each pipeline is a pure DataFrame→DataFrame transform so it runs
-  * identically over a batch frame (oracle-checkable) and a streaming
-  * frame (MemoryStream in specs, any source in production).
+  * Every pipeline here is run by a registered `stream_*` key, a bench
+  * leg or a perfbench workload: the keyed operators ([[dedupStream]],
+  * [[windowAgg]], [[sessionize]], [[sessionTvfAgg]]), the composed
+  * Dedup pipeline [[fiveStageBatch]] — whose Reorder is a sequence
+  * counter, BenSP's ordered mode (encoder_spar_ord.cpp) — and the
+  * Ferret search [[ferretStream]], plus the harnesses that drive them.
+  * Each is a pure transform over a batch or a streaming frame, so the
+  * same code is checked against its batch mirror. Batch keys without
+  * a streaming pipeline (`q_hop_window`, `q_stream_join`,
+  * `dedup_incremental*`, `q_incremental_agg`, `q_delta_upsert`) keep
+  * their own oracles.
   */
 object StreamingPipelines {
 
@@ -39,17 +47,6 @@ object StreamingPipelines {
   def windowAgg(events: DataFrame): DataFrame =
     events.withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-
-  /** Sliding-window twin of [[windowAgg]] — the streaming side of
-    * `q_hop_window`: 60-minute windows hopping every 15 minutes, each
-    * event feeding the 4 windows covering it. The same watermark
-    * bounds state; the overlap factor multiplies state rows, not
-    * scans (one Expand per micro-batch, map-side). */
-  def slidingAgg(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "60 minutes", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
 
@@ -125,266 +122,6 @@ object StreamingPipelines {
           }
       }
   }
-
-  // ---- ordered emission (the reference Reorder stage, streaming) -------
-  case class Item(key: Long, seq: Long, payload: String)
-  case class ReorderState(next: Long, buf: Map[Long, String], updates: Long)
-  case class OrderedOut(key: Long, seq: Long, payload: String, batch_emitted: Long)
-
-  /** BenSP's ordered output mode (encoder_spar_ord.cpp; Reorder,
-    * encoder.c:1345): items carry a sequence number, parallel stages
-    * may complete them out of order, and the output stage buffers
-    * until it can emit the contiguous prefix in sequence order.
-    *
-    * Spark-first form: ordered emission PER KEY (the reference's
-    * single global sequence is the key=constant special case — and,
-    * exactly like the reference's single Reorder thread, inherently
-    * serial; real pipelines shard the order guarantee by key the way
-    * a partitioned log does). State per key is the next expected seq
-    * plus the out-of-order buffer; the buffer holds only the items
-    * ahead of the contiguous frontier, so its size is bounded by the
-    * pipeline's reordering window, not the stream length.
-    * `batch_emitted` counts state updates per key, letting tests
-    * assert HOW items were released, not just their final order. */
-  def orderedEmit(items: Dataset[Item]): Dataset[OrderedOut] = {
-    import items.sparkSession.implicits._
-    items.groupByKey(_.key)
-      .flatMapGroupsWithState[ReorderState, OrderedOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout()) {
-        (key: Long, it: Iterator[Item], state: GroupState[ReorderState]) =>
-          val s0 = state.getOption.getOrElse(ReorderState(0L, Map.empty, 0L))
-          // an at-least-once upstream can redeliver an already-emitted
-          // seq — below-frontier items must be DROPPED, not buffered,
-          // or they sit in state forever (nothing ever drains them)
-          var buf = s0.buf ++ it.filter(_.seq >= s0.next).map(i => i.seq -> i.payload)
-          var next = s0.next
-          val out = Vector.newBuilder[OrderedOut]
-          while (buf.contains(next)) {
-            out += OrderedOut(key, next, buf(next), s0.updates)
-            buf -= next
-            next += 1
-          }
-          state.update(ReorderState(next, buf, s0.updates + 1))
-          out.result().iterator
-      }
-  }
-
-  // ---- stream-stream interval join -------------------------------------
-  /** Watermarked stream-stream join: view→purchase attribution within
-    * 30 minutes per user. Both sides carry watermarks so the join
-    * state is bounded; the equi key keeps it a hash join with a
-    * time-range residual. Batch mirror: OlapExtras.qStreamJoin. */
-  def streamStreamJoin(views: DataFrame, purchases: DataFrame): DataFrame =
-    views.withWatermark("view_ts", "1 hour")
-      .join(purchases.withWatermark("purchase_ts", "1 hour"),
-        expr("""v_user_id = p_user_id
-               |AND purchase_ts >= view_ts
-               |AND purchase_ts <= view_ts + interval 30 minutes""".stripMargin))
-
-  /** True iff `path` holds a readable non-empty parquet store. Goes
-    * through the Hadoop FileSystem API so HDFS/S3 URIs resolve (a
-    * java.io.File check silently reports remote stores absent, which
-    * would skip the dedup probe and let duplicates into the store),
-    * and treats an existing-but-empty directory (crashed first batch)
-    * as absent so parquet schema inference never sees a partial dir. */
-  private[graft] def parquetNonEmpty(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def hasPart(d: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(d).exists { st =>
-        // one level of hive-partition subdirs (the epoch-keyed digest
-        // store) or flat part- files (every other store)
-        (st.isDirectory && st.getPath.getName.contains("=") && hasPart(st.getPath)) ||
-          (st.getPath.getName.startsWith("part-") && st.getLen > 0)
-      }
-    fs.exists(p) && hasPart(p)
-  }
-
-  // ---- incremental ingest dedup (foreachBatch vs a digest store) -------
-  /** The streaming twin of `Dedup.dedupIncremental`: each micro-batch
-    * of documents is deduplicated against a PERSISTENT digest store.
-    * Batch-local first occurrences (min doc_id per digest) that are
-    * absent from the store append (doc_id, content_sha); everything
-    * else drops as a duplicate — so the store converges to exactly one
-    * row per distinct content ever streamed, keyed by its earliest
-    * arrival. foreachBatch is the production pattern: the store probe
-    * is a batch left-anti join on 32-byte digests (the bucketed
-    * digest layout of dedup_exact_bucketed at ingest scale, so the
-    * store side arrives pre-partitioned), and raw text never outlives
-    * the per-batch digest projection. */
-  def incrementalIngest(s: SparkSession, storePath: String)(
-      batch: DataFrame, epoch: Long): Unit = {
-    val firsts = batch
-      .select(col("doc_id"), sha2(col("text").cast("binary"), 256).as("content_sha"))
-      .groupBy("content_sha").agg(min("doc_id").as("doc_id"))
-    val fresh =
-      if (parquetNonEmpty(s, storePath))
-        firsts.join(s.read.parquet(storePath).select("content_sha"),
-          Seq("content_sha"), "left_anti")
-      else firsts
-    fresh.select("doc_id", "content_sha")
-      .write.mode("append").parquet(storePath)
-  }
-
-  // ---- near-dup incremental ingest (foreachBatch vs a band store) ------
-  /** The streaming twin of `Dedup.dedupIncrementalNd`: the persistent
-    * store holds, per admitted unique content, its representative row
-    * (`reps/`: doc_id, content_sha, hset) and its minhash band table
-    * (`bands/`: doc_id, band, bh). Each micro-batch reduces to
-    * content reps, probes the STORE's bands with its own (the store
-    * is never re-banded), exact-verifies the candidates, and ADMITS a
-    * rep iff it is neither an exact store copy (sha probe) nor a
-    * near-dup (best jaccard ≥ 0.7); admitted reps append their row
-    * and bands, and every rep's decision is logged to `decisions/`
-    * with the epoch — the auditable ingest trail. Within-batch
-    * near-dups (two novel near-identical docs in ONE batch) both
-    * admit by design: the store stays append-only per batch and the
-    * second one is rejected from the NEXT batch on, exactly like a
-    * log-structured ingest; within-batch EXACT dups collapse in the
-    * rep selection. */
-  def incrementalIngestNd(s: SparkSession, storeDir: String)(
-      batch: DataFrame, epoch: Long): Unit =
-   // every eager checkpoint below is fully consumed by the synchronous
-   // writes inside the scope — freed on exit, so a long-running stream
-   // never accumulates per-trigger blocks (the CheckpointScope rule)
-   graft.operators.CheckpointScope.scoped(s) { ck =>
-    import graft.functions.NativeHash
-    val repsPath = s"$storeDir/reps"
-    val bandsPath = s"$storeDir/bands"
-    val decPath = s"$storeDir/decisions"
-    // the shared tokenize-then-group rep selection (digest retained)
-    val reps = ck(graft.operators.Dedup.hashSetsOf(
-      batch, s.sparkContext.defaultParallelism, keepSha = true))
-    val decided =
-      if (!parquetNonEmpty(s, repsPath))
-        reps.select(col("doc_id").as("batch_doc"), col("content_sha"), col("hset"),
-          lit(null).cast("long").as("best_store_doc"),
-          lit(null).cast("double").as("best_jaccard"),
-          lit(false).as("exact_dup"), lit(false).as("near_dup"))
-      else {
-        // parquet makes array elements nullable on read; the verify
-        // kernel's type check requires non-null elements — restore the
-        // tighter type (hset elements are never null by construction)
-        val storeReps = s.read.parquet(repsPath)
-          .withColumn("hset", expr("transform(hset, x -> coalesce(x, 0L))"))
-        // the store's bands are persisted UNCAPPED; the hot-bucket cap
-        // applies HERE, at probe time over the whole accumulated store
-        // (capping per-increment at write time would both drop
-        // over-cap bands from the store forever and never cap a
-        // bucket that only grows hot across epochs)
-        val cand = graft.operators.Dedup.bandTableOf(reps)
-          .toDF("batch_doc", "band", "bh")
-          .join(graft.operators.Dedup.capBandRows(s.read.parquet(bandsPath))
-            .toDF("store_doc", "band", "bh"), Seq("band", "bh"))
-          .select("batch_doc", "store_doc").distinct()
-        val verified = cand
-          .join(reps.select(col("doc_id").as("batch_doc"), col("hset").as("ha")),
-            "batch_doc")
-          .join(storeReps.select(col("doc_id").as("store_doc"), col("hset").as("hb")),
-            "store_doc")
-          .select(col("batch_doc"), col("store_doc"),
-            NativeHash.jaccard(col("ha"), col("hb")).as("j"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("batch_doc").orderBy(col("j").desc, col("store_doc"))
-        val best = verified.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("batch_doc"), col("store_doc").as("best_store_doc"),
-            col("j").as("best_jaccard"))
-        reps.select(col("doc_id").as("batch_doc"), col("content_sha"), col("hset"))
-          .join(storeReps.select(col("content_sha")).distinct()
-            .withColumn("x", lit(true)), Seq("content_sha"), "left")
-          .join(best, Seq("batch_doc"), "left")
-          .select(col("batch_doc"), col("content_sha"), col("hset"),
-            col("best_store_doc"), col("best_jaccard"),
-            coalesce(col("x"), lit(false)).as("exact_dup"),
-            coalesce(col("best_jaccard") >= 0.7, lit(false)).as("near_dup"))
-      }
-    val decidedCk = ck(decided) // decisions + admit appends read it
-    val admitted = decidedCk
-      .filter(!col("exact_dup") && !col("near_dup"))
-      .select(col("batch_doc").as("doc_id"), col("content_sha"), col("hset"))
-    // WRITE ORDER is the crash-retry contract (foreachBatch is
-    // at-least-once): bands BEFORE reps, so a retried epoch can never
-    // leave an admitted rep without its bands (the sha probe would
-    // classify it exact_dup on retry and its bands would never land —
-    // permanent silent recall loss). The inverse orphan — band rows
-    // whose rep append didn't land — is harmless: candidates joined
-    // against the reps table drop them, and the retry re-admits.
-    // Decisions go last; on a retry after a completed admit they
-    // record exact_dup, honestly reflecting the store at retry time.
-    graft.operators.Dedup.bandRowsOf(admitted)
-      .write.mode("append").parquet(bandsPath)
-    admitted.write.mode("append").parquet(repsPath)
-    decidedCk.select(lit(epoch).as("epoch"), col("batch_doc"),
-        col("exact_dup"), col("near_dup"),
-        col("best_store_doc"), col("best_jaccard"),
-        (!col("exact_dup") && !col("near_dup")).as("admitted"))
-      .write.mode("append").parquet(decPath)
-   }
-
-  // ---- incremental aggregate maintenance (foreachBatch twin) -----------
-  /** The streaming twin of `StorageLayout.qIncrementalAgg`: each
-    * micro-batch APPENDS its mergeable partial aggregates (count,
-    * DECIMAL sum, min, max — commutative monoids) as an immutable
-    * segment, and the serving view folds all segments with the same
-    * monoid merge. No segment is ever rewritten, so at-least-once
-    * redelivery semantics reduce to idempotent-append concerns (the
-    * five-stage pipeline's txn-partition pattern where that matters)
-    * and compaction — qIncrementalAgg's full-outer merge — is purely
-    * an offline cost optimization: correctness never depends on it. */
-  def aggMaintenance(s: SparkSession, storePath: String)(
-      batch: DataFrame, epoch: Long): Unit =
-    batch
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("event_date"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(12,4)")).as("sum_value_dec"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .write.mode("append").parquet(storePath)
-
-  /** The serving view over the appended segments: fold the partials
-    * with the same monoid operations. */
-  def aggServe(s: SparkSession, storePath: String): DataFrame =
-    s.read.parquet(storePath)
-      .groupBy("event_date", "event_type")
-      .agg(sum("n_events").as("n_events"),
-        sum("sum_value_dec").cast("double").as("sum_value"),
-        min("min_value").as("min_value"),
-        max("max_value").as("max_value"))
-
-  // ---- latest-wins upsert maintenance (foreachBatch twin) --------------
-  /** The streaming twin of `StorageLayout.qDeltaUpsert`: each
-    * micro-batch reduces to its per-(user_id, event_type) latest row
-    * and APPENDS it as an immutable segment (the LSM memtable-flush
-    * contract — no stored file is ever rewritten); the serving view
-    * merges segments by taking the per-key (ts, event_id)-max row.
-    * Batch-wins-on-collision is therefore not a special merge rule
-    * but a consequence of event-time order, late/redelivered rows are
-    * absorbed because the fold is an idempotent max over a set, and
-    * compaction — qDeltaUpsert's full-outer merge — stays an offline
-    * cost optimization that correctness never depends on. */
-  /** Per-key latest under the (ts, event_id) total order — the ONE
-    * definition both the flush and the serve fold use (a tie-break
-    * change in only one of them would silently diverge the serve
-    * view from the store contract). */
-  private def upsertLatest(df: DataFrame): DataFrame =
-    df.withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id"), col("event_type"))
-          .orderBy(col("ts").desc, col("event_id").desc)))
-      .filter(col("rn") === 1).drop("rn")
-
-  def upsertMaintenance(s: SparkSession, storePath: String)(
-      batch: DataFrame, epoch: Long): Unit =
-    upsertLatest(batch.select(col("user_id"), col("event_type"), col("ts"),
-        col("event_id"), col("value")))
-      .write.mode("append").parquet(storePath)
-
-  /** Serving view over the upsert segments: per-key latest under the
-    * same (ts, event_id) total order. */
-  def upsertServe(s: SparkSession, storePath: String): DataFrame =
-    upsertLatest(s.read.parquet(storePath))
 
   // ---- the 5-stage dedup pipeline, composed end to end -----------------
   /** The reference's flagship artifact as ONE streaming pipeline:
@@ -552,7 +289,8 @@ object StreamingPipelines {
     bytes.grouped(DigestIndex.DigestBytes)
   }
 
-  /** Every digest in a five-stage store's log, by txn, as hex. */
+  /** Every digest in a five-stage store's log, by txn, as hex.
+    * Test seam: FiveStageSpec reads the store through it. */
   private[graft] def fiveStageDigests(s: SparkSession, storeDir: String): Seq[(Long, String)] = {
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       new org.apache.hadoop.fs.Path(storeDir).toUri, s.sparkContext.hadoopConfiguration)
@@ -706,19 +444,6 @@ object StreamingPipelines {
         elapsed, progress)
     } finally q.stop()
   }
-
-  // ---- stream-static enrichment ----------------------------------------
-  /** Enrich an event stream with the static customer dimension — the
-    * standard stream-static broadcast join (no state, no watermark
-    * needed on the static side). The hint assumes a BOUNDED dimension
-    * (a curated enrichment table); for a dimension that scales with
-    * the corpus, drop the hint and let statistics choose — the
-    * stream-static join works shuffled too. */
-  def enrichStream(events: DataFrame, customers: DataFrame): DataFrame =
-    events.join(
-      org.apache.spark.sql.functions.broadcast(
-        customers.select(col("c_custkey"), col("c_name"), col("c_mktsegment"))),
-      events("user_id") === col("c_custkey"), "left")
 
   /** Streaming ferret: each micro-batch of query vectors probes the
     * static LSH index through the same two-phase batch DAG

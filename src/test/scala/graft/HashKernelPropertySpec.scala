@@ -27,21 +27,6 @@ class HashKernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("intersectCountLong matches Set intersection size on sorted inputs") {
-    // the kernel's contract is ASCENDING-sorted inputs (the triangle
-    // plan sorts once at adjacency-build time); overlap is forced by
-    // drawing both sides from a small shared pool
-    for (_ <- 0 until 300) {
-      val pool = Array.fill(60)(rng.nextLong(1000)).distinct
-      def draw() = pool.filter(_ => rng.nextBoolean()).sorted
-      val a = draw(); val b = draw()
-      val expected = a.toSet.intersect(b.toSet).size.toLong
-      val got = HashKernels.intersectCountLong(
-        new GenericArrayData(a), new GenericArrayData(b))
-      assert(got == expected, s"${a.toSeq} ∩ ${b.toSeq}")
-    }
-  }
-
   test("triCredits emits (u,k),(v,k) then one (w,1) per intersection element") {
     for (_ <- 0 until 300) {
       val pool = Array.fill(60)(rng.nextLong(1000)).distinct

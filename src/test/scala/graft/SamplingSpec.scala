@@ -501,7 +501,7 @@ class SamplingSpec extends SparkSpec {
       assert(bytes.length.toLong == r.getAs[Long]("tar_bytes"),
         s"on-disk size differs from emitted tar_bytes for shard $shard")
       // parse validates every header checksum
-      val members = graft.sinks.TarShards.parse(bytes)
+      val members = graft.functions.TarShards.parse(bytes)
       assert(members.length.toLong == r.getAs[Long]("n_docs"))
       assert(members.map(_._2.length.toLong).sum == r.getAs[Long]("payload_bytes"))
       // member order IS pack order (cum_tokens ascending)

@@ -1,48 +1,32 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
+import java.sql.Timestamp
 
 import graft.operators.OlapExtras
-import graft.streaming.StreamingPipelines
-import graft.streaming.StreamingPipelines.Ev
 
 class StreamJoinSpec extends SparkSpec {
 
-  test("stream-stream interval join matches the batch mirror") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+  test("q_stream_join equals the view-to-purchase pairs computed in plain Scala") {
+    def us(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     val evs = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Ev].collect().sortBy(e => (e.ts.getTime, e.event_id)).toSeq
+      .select("event_id", "user_id", "event_type", "ts").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), us(r.getTimestamp(3))))
+    val views = evs.filter(_._3 == "view")
+    val purchases = evs.filter(_._3 == "purchase")
+    val expected = (for {
+      (viewId, viewUser, _, viewUs) <- views
+      (purchaseId, purchaseUser, _, purchaseUs) <- purchases
+      if viewUser == purchaseUser
+      gap = purchaseUs - viewUs
+      if gap >= 0 && gap <= 1800L * 1000000L
+    } yield (viewId, purchaseId)).toSet
 
-    val viewSrc = MemoryStream[Ev]
-    val purchSrc = MemoryStream[Ev]
-    val views = viewSrc.toDF().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-    val purchases = purchSrc.toDF().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    val q = StreamingPipelines.streamStreamJoin(views, purchases)
-      .select("view_id", "purchase_id")
-      .writeStream.format("memory").queryName("ssj_sink")
-      .outputMode("append").start()
-    evs.grouped(300).foreach { b =>
-      viewSrc.addData(b)
-      purchSrc.addData(b)
-    }
-    q.processAllAvailable()
-    val streamed = spark.table("ssj_sink").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    q.stop()
-
-    val batch = OlapExtras.qStreamJoin(spark, sfDir)
+    val got = OlapExtras.qStreamJoin(spark, sfDir)
       .select("view_id", "purchase_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batch,
-      s"stream=${streamed.size} batch=${batch.size} " +
-        s"onlyStream=${(streamed -- batch).size} onlyBatch=${(batch -- streamed).size}")
-    assert(batch.nonEmpty)
+    assert(got == expected,
+      s"key=${got.size} scala=${expected.size} " +
+        s"onlyKey=${(got -- expected).size} onlyScala=${(expected -- got).size}")
+    assert(expected.nonEmpty)
   }
 }

@@ -9,25 +9,6 @@ import graft.streaming.StreamingPipelines
 
 class StreamingFerretSpec extends SparkSpec {
 
-  test("stream-static enrichment joins every event with its customer") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val customers = Tables.customer(spark, sfDir)
-    val evs = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[StreamingPipelines.Ev].collect().take(500).toSeq
-    val source = MemoryStream[StreamingPipelines.Ev]
-    val q = StreamingPipelines.enrichStream(source.toDF(), customers)
-      .writeStream.format("memory").queryName("enrich_sink")
-      .outputMode("append").start()
-    evs.grouped(100).foreach(source.addData(_))
-    q.processAllAvailable()
-    val sink = spark.table("enrich_sink")
-    val n = sink.count()
-    q.stop()
-    assert(n == evs.size.toLong)
-  }
-
   test("streaming ferret matches the batch two-phase search batch-by-batch") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -70,29 +70,6 @@ class StreamingSpec extends SparkSpec {
     assert(sink.count() == batchGroups)
   }
 
-  test("streaming slidingAgg matches batch q_hop_window cell-for-cell") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val evs = loadEvents()
-    val source = MemoryStream[Ev]
-    val q = StreamingPipelines.slidingAgg(source.toDF())
-      .writeStream.format("memory").queryName("sa_sink")
-      .outputMode(OutputMode.Update()).start()
-    evs.grouped(300).foreach(source.addData(_))
-    q.processAllAvailable()
-    val sink = spark.table("sa_sink")
-      .groupBy("window", "event_type")
-      .agg(last("n_events").as("n_events"), last("sum_value").as("sum_value"))
-      .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-    val stream = sink.collect().map(_.toString).sorted.toSeq
-    q.stop()
-    val batch = operators.Relational.qHopWindow(spark, sfDir)
-      .drop("n_users") // countDistinct is not allowed in streaming agg
-      .collect().map(_.toString).sorted.toSeq
-    assert(stream == batch, "streaming sliding agg diverged from batch mirror")
-  }
-
   test("streaming dedup emits one row per (user_id, event_type) key") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -262,193 +239,6 @@ class StreamingSpec extends SparkSpec {
     val par = res.filter(r => r.getAs[String]("pipeline") == "sessionize" &&
       r.getAs[Int]("batch_size") == 2000)
     assert(par.map(_.getAs[Int]("state_partitions")).toSet.size >= 2)
-  }
-
-  test("agg maintenance: appended partials serve the exact running aggregate") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_agg_store").toFile
-    val storePath = new java.io.File(dir, "store").getAbsolutePath
-    val source = MemoryStream[(String, String, Double)]
-    val q = source.toDF().toDF("ts_s", "event_type", "value")
-      .select(col("ts_s").cast("timestamp").as("ts"),
-        col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch(StreamingPipelines.aggMaintenance(spark, storePath) _)
-      .outputMode(OutputMode.Append()).start()
-    // three batches: same (day, type) groups recur across batches, so
-    // the serve view must genuinely MERGE partials, not just union rows
-    val batches = Seq(
-      Seq(("2024-01-01 10:00:00", "view", 1.5), ("2024-01-01 11:00:00", "view", 2.5),
-        ("2024-01-02 09:00:00", "buy", 10.0)),
-      Seq(("2024-01-01 12:00:00", "view", 4.0), ("2024-01-02 10:00:00", "buy", 0.5)),
-      Seq(("2024-01-03 08:00:00", "view", 7.25), ("2024-01-01 13:00:00", "view", 0.25)))
-    var fed = Seq.empty[(String, String, Double)]
-    batches.foreach { b =>
-      source.addData(b)
-      q.processAllAvailable()
-      fed = fed ++ b
-      // batch mirror over everything fed so far
-      val mirror = fed.toDF("ts_s", "event_type", "value")
-        .select(col("ts_s").cast("timestamp").as("ts"),
-          col("event_type"), col("value"))
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("event_date"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(12,4)")).cast("double").as("sum_value"),
-          min(col("value")).as("min_value"),
-          max(col("value")).as("max_value"))
-        .collect().map(_.toString).sorted.toSeq
-      val served = StreamingPipelines.aggServe(spark, storePath)
-        .collect().map(_.toString).sorted.toSeq
-      assert(served == mirror, s"serve view diverged after ${fed.size} rows")
-    }
-    q.stop()
-    // segments are immutable partials: one-or-more files per epoch,
-    // and the store row count exceeds the group count (merge is real)
-    val segRows = spark.read.parquet(storePath).count()
-    val groups = StreamingPipelines.aggServe(spark, storePath).count()
-    assert(segRows > groups, "no recurring group ever merged — spec is vacuous")
-    StreamingPipelines.deleteRecursively(dir)
-  }
-
-  test("upsert maintenance: serve view is latest-per-key, late rows absorbed") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_store").toFile
-    val storePath = new java.io.File(dir, "store").getAbsolutePath
-    val source = MemoryStream[(Long, String, Long, String, Double)]
-    val q = source.toDF().toDF("event_id", "ts_s", "user_id", "event_type", "value")
-      .select(col("event_id"), col("ts_s").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch(StreamingPipelines.upsertMaintenance(spark, storePath) _)
-      .outputMode(OutputMode.Append()).start()
-    // batch 2 updates a key from batch 1; batch 3 redelivers an OLDER
-    // row for that key (late data) which must NOT displace the newer
-    // stored row, plus a same-ts tie broken by event_id
-    val batches = Seq(
-      Seq((1L, "2024-01-01 10:00:00", 7L, "view", 1.0),
-        (2L, "2024-01-01 11:00:00", 7L, "click", 2.0),
-        (3L, "2024-01-01 12:00:00", 8L, "view", 3.0)),
-      Seq((4L, "2024-01-02 09:00:00", 7L, "view", 4.0),
-        (5L, "2024-01-02 10:00:00", 9L, "buy", 5.0)),
-      Seq((6L, "2024-01-01 08:00:00", 7L, "view", 6.0),
-        (7L, "2024-01-02 10:00:00", 9L, "buy", 7.0)))
-    var fed = Seq.empty[(Long, String, Long, String, Double)]
-    batches.foreach { b =>
-      source.addData(b)
-      q.processAllAvailable()
-      fed = fed ++ b
-      val mirror = fed.toDF("event_id", "ts_s", "user_id", "event_type", "value")
-        .select(col("event_id"), col("ts_s").cast("timestamp").as("ts"),
-          col("user_id"), col("event_type"), col("value"))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"), col("event_type"))
-            .orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("rn") === 1).drop("rn")
-        .collect().map(_.toString).sorted.toSeq
-      val served = StreamingPipelines.upsertServe(spark, storePath)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .collect().map(_.toString).sorted.toSeq
-      assert(served == mirror, s"serve view diverged after ${fed.size} rows")
-    }
-    q.stop()
-    // the late row (event 6) lost to the stored newer row (event 4),
-    // and the same-ts tie (7 vs 5) resolved to the higher event_id
-    val kept = StreamingPipelines.upsertServe(spark, storePath)
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[String]("event_type"))
-        -> r.getAs[Long]("event_id")).toMap
-    assert(kept((7L, "view")) == 4L, s"late row displaced the newer one: $kept")
-    assert(kept((9L, "buy")) == 7L, s"same-ts tie not broken by event_id: $kept")
-    // segments are immutable: more stored rows than live keys
-    assert(spark.read.parquet(storePath).count() >
-      StreamingPipelines.upsertServe(spark, storePath).count())
-    StreamingPipelines.deleteRecursively(dir)
-  }
-
-  test("incremental ingest: digest store converges to earliest-arrival uniques") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_store").toFile
-    val storePath = new java.io.File(dir, "store").getAbsolutePath
-    val source = MemoryStream[(Long, String)]
-    val q = source.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch(StreamingPipelines.incrementalIngest(spark, storePath) _)
-      .outputMode(OutputMode.Append()).start()
-    // one processAllAvailable per addData → real micro-batch boundaries
-    // batch 1: duplicate content WITHIN the batch → min doc_id wins
-    source.addData(Seq((10L, "alpha"), (11L, "alpha"), (12L, "beta")))
-    q.processAllAvailable()
-    // batch 2: duplicate of the store ("beta") → dropped; new "gamma"
-    source.addData(Seq((20L, "beta"), (21L, "gamma")))
-    q.processAllAvailable()
-    // batch 3: everything already stored → appends nothing
-    source.addData(Seq((30L, "alpha"), (31L, "gamma")))
-    q.processAllAvailable()
-    q.stop()
-    val store = spark.read.parquet(storePath)
-      .collect().map(r => r.getAs[Long]("doc_id")).toSet
-    assert(store == Set(10L, 12L, 21L),
-      s"store must hold earliest arrival per distinct content, got $store")
-    StreamingPipelines.deleteRecursively(dir)
-  }
-
-  test("near-dup incremental ingest: band store admits novel, rejects exact and near") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_store").toFile
-    val storeDir = new java.io.File(dir, "ndstore").getAbsolutePath
-    // 40 distinct tokens: a one-token edit gives jaccard 39/41 ≈ 0.95,
-    // far above the 0.7 gate and (deterministically) band-colliding
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    val near = ((1 to 39).map(i => s"w$i") :+ "w99").mkString(" ")
-    val other = (101 to 140).map(i => s"v$i").mkString(" ")
-    val novel = (201 to 240).map(i => s"u$i").mkString(" ")
-    val source = MemoryStream[(Long, String)]
-    val q = source.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch(StreamingPipelines.incrementalIngestNd(spark, storeDir) _)
-      .outputMode(OutputMode.Append()).start()
-    // batch 1 (empty store): exact pair collapses to its rep, both contents admit
-    source.addData(Seq((10L, base), (11L, base), (12L, other)))
-    q.processAllAvailable()
-    // batch 2: near-dup of 10 rejected, exact copy of base rejected, novel admits
-    source.addData(Seq((20L, near), (21L, base), (22L, novel)))
-    q.processAllAvailable()
-    // batch 3: replays of stored contents reject; near-dup of novel rejects
-    source.addData(Seq((30L, other),
-      (31L, ((201 to 239).map(i => s"u$i") :+ "u999").mkString(" "))))
-    q.processAllAvailable()
-    q.stop()
-    val reps = spark.read.parquet(s"$storeDir/reps")
-      .collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(reps == Set(10L, 12L, 22L), s"store reps wrong: $reps")
-    val dec = spark.read.parquet(s"$storeDir/decisions").collect()
-      .map(r => r.getAs[Long]("batch_doc") ->
-        (r.getAs[Boolean]("exact_dup"), r.getAs[Boolean]("near_dup"),
-          r.getAs[Boolean]("admitted"),
-          Option(r.getAs[java.lang.Long]("best_store_doc")).map(_.toLong)))
-      .toMap
-    assert(dec(10L) == ((false, false, true, None)), s"10: ${dec(10L)}")
-    assert(dec(12L) == ((false, false, true, None)), s"12: ${dec(12L)}")
-    assert(dec(20L)._2 && !dec(20L)._3 && dec(20L)._4.contains(10L),
-      s"near-dup 20 must reject against store doc 10: ${dec(20L)}")
-    assert(dec(21L)._1 && !dec(21L)._3, s"exact copy 21 must reject: ${dec(21L)}")
-    assert(dec(22L) == ((false, false, true, None)), s"22: ${dec(22L)}")
-    assert(dec(30L)._1 && !dec(30L)._3, s"replayed 30 must reject: ${dec(30L)}")
-    assert(dec(31L)._2 && !dec(31L)._3 && dec(31L)._4.contains(22L),
-      s"near-dup 31 must reject against store doc 22: ${dec(31L)}")
-    // exact copy of a stored doc ALSO band-collides at jaccard 1.0 —
-    // the sha probe wins the classification, the probe proves recall
-    assert(dec(21L)._4.contains(10L) || dec(21L)._4.isEmpty)
-    // band store only holds admitted reps
-    val bandDocs = spark.read.parquet(s"$storeDir/bands")
-      .collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(bandDocs == Set(10L, 12L, 22L), s"band store wrong: $bandDocs")
-    StreamingPipelines.deleteRecursively(dir)
   }
 
   test("stream_soak: rate-source soak samples per-trigger state, plateau forms") {
