@@ -116,8 +116,8 @@ object StreamingOps {
     // the three replay feeds are INDEPENDENT Spark write jobs — prepare
     // them concurrently (guide §2.6: overlap independent jobs) so the
     // untimed-by-no-one setup costs the slowest feed, not the sum.
-    // 5 doc slices → ingest-sized triggers: the pipeline runs ~7 Spark
-    // jobs per batch (probe, store append, frontier, emit), so slice
+    // 5 doc slices → ingest-sized triggers: the pipeline runs one Spark
+    // job per batch plus the harness's write of its output, so slice
     // count prices the per-trigger machinery, not the pipeline; the
     // qv feed is the 10%-of-corpus query batch the registered
     // ferret_pipeline/stream_ferret serve.

@@ -3,9 +3,15 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Hex, XXH64}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Chunker
 
 /** Structured Streaming pipelines (SURVEY.md §2.F) — the BenSP
   * stream-parallelism benchmarks re-expressed on Spark's streaming
@@ -141,10 +147,19 @@ object StreamingPipelines {
     * deflate length (the archive payload), duplicates only the digest
     * reference — encoder.c's compressed-data-or-fingerprint framing.
     * `emit_seq` is a globally contiguous sequence in (doc_id,
-    * chunk_idx) order. A trigger runs one Spark job: it checkpoints
-    * the chunks and observes each chunk's (doc_id, chunk_idx, digest)
-    * and the batch fingerprint. Everything else is decided on the
-    * driver, and the output is a projection over that checkpoint:
+    * chunk_idx) order. A trigger plans one scan of the batch and no
+    * other query: the stages run as two narrow passes over RDDs of
+    * Catalyst rows.
+    *  - Fragment + Refine maps the batch's rows to chunk rows and is
+    *    checkpointed; the trigger's one Spark job fills the checkpoint
+    *    and collects each chunk's (doc_id, chunk_idx, digest) and its
+    *    term of the batch fingerprint, `bit_xor(xxhash64(doc_id,
+    *    chunk_idx, chunk_sha))`.
+    *  - Compress + Reorder maps the checkpoint to the output rows, with
+    *    the trigger's firsts and sequence starts in its closure; the
+    *    frame returned is that RDD as one `LogicalRDD` leaf, so a
+    *    consumer's action runs the pass (and re-runs its deflate).
+    * Everything in between is decided on the driver:
     *  - Deduplicate walks the batch's digests in (doc_id, chunk_idx)
     *    order; a chunk is a first when its digest is neither in the
     *    store's [[DigestIndex]] nor met earlier in the batch;
@@ -202,13 +217,13 @@ object StreamingPipelines {
     * so does a store in an older layout. Exactly-once emission to the
     * outside world additionally needs the sink's transaction + query
     * checkpoint, same as every foreachBatch sink. */
-  /** Last batch's checkpointed RDDs per store — freed at the NEXT call
+  /** Last batch's chunk checkpoint per store — freed at the NEXT call
     * (the caller has consumed the previous batch's output by then;
     * foreachBatch calls are sequential per query), so a long-running
     * stream holds at most ONE batch's blocks instead of accumulating
     * one per trigger. */
   private val fiveStagePrevCkpt =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Int]]
+    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.rdd.RDD[_]]
 
   /** A five-stage store's emit frontier: the next sequence number, the
     * base the last trigger emitted from, and that trigger's (epoch,
@@ -323,38 +338,42 @@ object StreamingPipelines {
       throw new IllegalStateException(s"five-stage store at $storeDir has committed " +
         s"digests (txn ${logged.map(_._1).max}) but no frontier record $frontierPath — the " +
         "emit frontier was lost; restore the record or start a fresh storeDir")
-    // free the previous trigger's checkpoints (their output frame was
+    // free the previous trigger's checkpoint (its output frame was
     // fully consumed before this trigger started)
-    fiveStagePrevCkpt.remove(storeDir).foreach(_.foreach { id =>
-      s.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false))
-    })
-    // Fragment + Refine: chunk boundaries + identities + bytes. Eager
-    // checkpoint: the CDC+SHA pass is the dominant map stage, and the
-    // same job observes the batch fingerprint (replay detection) and
-    // every chunk's key and raw digest, all the driver needs for
-    // Deduplicate and Reorder
-    val obs = org.apache.spark.sql.Observation()
-    val chunks = batch
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"),
-        graft.functions.NativeChunk.chunks(col("text")))
-      .observe(obs,
-        bit_xor(xxhash64(col("doc_id"), col("chunk_idx"), col("chunk_sha"))).as("fp"),
-        collect_list(struct(col("doc_id"), col("chunk_idx"), unhex(col("chunk_sha"))))
-          .as("chunks"))
-      .withColumn("piece", expr("substring(payload, offset + 1, length)"))
-      .drop("payload")
-      .localCheckpoint(true)
+    fiveStagePrevCkpt.remove(storeDir).foreach(_.unpersist(blocking = false))
+    // Fragment + Refine: one pass over the batch's rows cuts each
+    // document with NativeChunk.chunks' defaults (32/256/6, buzhash)
+    // into rows (chunk_sha, doc_id, chunk_idx, offset, length, piece).
+    // The pass is checkpointed; the job that fills the checkpoint
+    // collects all the driver needs for Deduplicate and Reorder: each
+    // chunk's key, raw digest and term of the batch fingerprint
+    val docOrd = batch.schema.fieldIndex("doc_id")
+    val textOrd = batch.schema.fieldIndex("text")
+    val chunks = batch.queryExecution.toRdd.mapPartitions[InternalRow](_.flatMap { r =>
+      if (r.isNullAt(textOrd)) Iterator.empty
+      else {
+        val doc: Any = if (r.isNullAt(docOrd)) null else r.getLong(docOrd)
+        val bytes = r.getUTF8String(textOrd).getBytes
+        Chunker.chunk(bytes).iterator.map(c => new GenericInternalRow(Array[Any](
+          UTF8String.fromString(c.chunk_sha), doc, c.chunk_idx, c.offset, c.length,
+          java.util.Arrays.copyOfRange(bytes, c.offset, c.offset + c.length))))
+      }
+    }).localCheckpoint()
     // the next trigger frees this trigger's checkpoint (also when this
     // one fails below)
-    fiveStagePrevCkpt.put(storeDir, chunks.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.distinct)
-    val obsRow = obs.get
-    val fp = Option(obsRow("fp")).fold(0L)(_.asInstanceOf[Long])
-    val keys = obsRow("chunks").asInstanceOf[Seq[org.apache.spark.sql.Row]].map { r =>
-      require(!r.isNullAt(0), s"five-stage trigger $epoch has a document with a null doc_id")
-      (r.getLong(0), r.getInt(1), r.getAs[Array[Byte]](2))
+    fiveStagePrevCkpt.put(storeDir, chunks)
+    val collected = chunks.map { r =>
+      val doc = if (r.isNullAt(1)) None else Some(r.getLong(1))
+      // xxhash64(doc_id, chunk_idx, chunk_sha) as Spark SQL computes
+      // it: seed 42, arguments folded left to right, a null skipped
+      val term = XXH64.hashUTF8String(r.getUTF8String(0),
+        XXH64.hashInt(r.getInt(2), doc.fold(42L)(XXH64.hashLong(_, 42L))))
+      (doc, r.getInt(2), Hex.unhex(r.getUTF8String(0).getBytes), term)
+    }.collect()
+    val fp = collected.foldLeft(0L)(_ ^ _._4)
+    val keys = collected.toVector.map { case (doc, idx, digest, _) =>
+      require(doc.isDefined, s"five-stage trigger $epoch has a document with a null doc_id")
+      (doc.get, idx, digest)
     }.sortBy(k => (k._1, k._2))
     // a document numbers its chunks 0, 1, …: a (doc_id, chunk_idx)
     // pair seen twice is a doc_id that came twice
@@ -399,22 +418,40 @@ object StreamingPipelines {
     // Compress the firsts; duplicates keep only the digest reference
     val firstIdx = firsts.groupBy(_._1).map { case (doc, ks) =>
       doc -> scala.collection.immutable.BitSet(ks.map(_._2): _*) }
-    val isFirstOf = udf((docId: Long, idx: Int) => firstIdx.get(docId).exists(_(idx)))
     // Reorder: a document's chunks take the sequence numbers after
     // those of every earlier doc_id in the batch
     val docChunks = keys.groupBy(_._1).map { case (doc, ks) => doc -> ks.length.toLong }
       .toSeq.sortBy(_._1)
     val firstSeq = docChunks.map(_._1).zip(docChunks.scanLeft(frontier)(_ + _._2)).toMap
-    val firstSeqOf = udf((docId: Long) => firstSeq(docId))
-    chunks
-      .withColumn("is_first", isFirstOf(col("doc_id"), col("chunk_idx")))
-      .withColumn("comp_len", when(col("is_first"),
-        graft.functions.NativeChunk.compressedLen(col("piece"), "deflate")))
-      .withColumn("piece", when(col("is_first"), col("piece")))
-      .withColumn("emit_seq", firstSeqOf(col("doc_id")) + col("chunk_idx"))
-      .select("chunk_sha", "doc_id", "chunk_idx", "offset", "length", "piece",
-        "is_first", "comp_len", "emit_seq")
+    // Compress + Reorder: one pass over the checkpoint, returned as the
+    // frame's only plan node
+    val out = chunks.mapPartitions[InternalRow](_.map { r =>
+      val doc = r.getLong(1)
+      val idx = r.getInt(2)
+      val piece = r.getBinary(5)
+      val first = firstIdx.get(doc).exists(_(idx))
+      new GenericInternalRow(Array[Any](r.getUTF8String(0), doc, idx, r.getInt(3), r.getInt(4),
+        if (first) piece else null, first,
+        if (first) Chunker.compressedLen(piece, 0, piece.length, "deflate") else null,
+        firstSeq(doc) + idx))
+    })
+    ColumnBridge.dataFrame(s, out, fiveStageSchema(batch.schema(docOrd).nullable))
   }
+
+  /** [[fiveStageBatch]]'s output columns. doc_id keeps the nullability
+    * of the batch's doc_id, and is_first and emit_seq, which are
+    * derived from it, share it; no emitted row holds a null there,
+    * since a null doc_id with chunks fails the trigger. */
+  private def fiveStageSchema(docNullable: Boolean): StructType = StructType(Seq(
+    StructField("chunk_sha", StringType, nullable = false),
+    StructField("doc_id", LongType, docNullable),
+    StructField("chunk_idx", IntegerType, nullable = false),
+    StructField("offset", IntegerType, nullable = false),
+    StructField("length", IntegerType, nullable = false),
+    StructField("piece", BinaryType, nullable = true),
+    StructField("is_first", BooleanType, docNullable),
+    StructField("comp_len", IntegerType, nullable = true),
+    StructField("emit_seq", LongType, docNullable)))
 
   /** fileThroughputBench's foreachBatch twin: drives a per-batch
     * DataFrame transform (e.g. [[fiveStageBatch]]) from the same
@@ -427,12 +464,14 @@ object StreamingPipelines {
       .option("maxFilesPerTrigger", 1).parquet(feed.path)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val out = stage(b.toDF(), id)
-        // noop write forces FULL materialization (a bare count would
-        // let Catalyst prune the compress/emit projections); the count
-        // afterwards is column-pruned and cheap
-        out.write.format("noop").mode("overwrite").save()
-        rowsOut.addAndGet(out.count()): Unit
+        // the noop write materializes every column of the output and
+        // counts its rows in the same pass: a count() afterwards would
+        // run the transform again (over an RDD-backed output such as
+        // fiveStageBatch's, its whole Compress pass)
+        val obs = org.apache.spark.sql.Observation()
+        stage(b.toDF(), id).observe(obs, count(lit(1)).as("rows"))
+          .write.format("noop").mode("overwrite").save()
+        rowsOut.addAndGet(obs.get("rows").asInstanceOf[Long]): Unit
       }
       .start()
     try {

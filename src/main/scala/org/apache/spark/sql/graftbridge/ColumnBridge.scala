@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionColumnNode}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge between the public Column API and Catalyst expressions.
   *
@@ -11,7 +14,8 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
   * package-located shim re-exposes exactly the two conversions a
   * library needs to ship custom codegen expressions without a
   * SparkSessionExtensions install (the driver owns session creation
-  * here, so extension registration isn't available).
+  * here, so extension registration isn't available), plus the
+  * frame-over-Catalyst-rows constructor that is just as gated.
   */
 object ColumnBridge {
   /** Wrap a Catalyst expression as a public Column. */
@@ -29,4 +33,12 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** A frame over an RDD of Catalyst rows that match `schema`: its
+    * logical plan is one `LogicalRDD` leaf, so it plans as a bare scan
+    * with no projection or serialization in between. */
+  def dataFrame(spark: org.apache.spark.sql.SparkSession, rows: RDD[InternalRow],
+                schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

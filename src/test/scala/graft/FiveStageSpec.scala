@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.functions.{bit_xor, col, expr, xxhash64}
+import org.apache.spark.sql.types._
 
 import graft.operators.Dedup
 import graft.streaming.StreamingPipelines
@@ -357,11 +359,11 @@ class FiveStageSpec extends SparkSpec {
           frame(all.slice(200, 300).toSeq), 2L)
         out.write.format("noop").mode("overwrite").save()
       }
-      // fingerprint, chunk keys and digests observed on the chunk
-      // checkpoint; Deduplicate against the resident index, the digest
-      // log and the frontier record on the driver; Reorder as a
-      // projection: the chunk checkpoint plus one materialization of
-      // the output
+      // fingerprint terms, chunk keys and digests collected by the job
+      // that fills the chunk checkpoint; Deduplicate against the
+      // resident index, the digest log and the frontier record on the
+      // driver; Compress + Reorder as one pass over the checkpoint: the
+      // chunk checkpoint plus one materialization of the output
       assert(jobs <= 2, s"$jobs Spark jobs for one trigger")
     }
   }
@@ -416,6 +418,59 @@ class FiveStageSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](trigger(storeDir, docs().take(5).toSeq, 0L))
       assert(e.getMessage.contains("legacy parquet digest"), e.getMessage)
       assert(e.getMessage.contains("txn=k.bin"), e.getMessage)
+    }
+  }
+
+  test("five-stage output: the schema's names, types, nullability and order are fixed") {
+    def fields(nullableDoc: Boolean) = StructType(Seq(
+      StructField("chunk_sha", StringType, nullable = false),
+      StructField("doc_id", LongType, nullable = nullableDoc),
+      StructField("chunk_idx", IntegerType, nullable = false),
+      StructField("offset", IntegerType, nullable = false),
+      StructField("length", IntegerType, nullable = false),
+      StructField("piece", BinaryType, nullable = true),
+      StructField("is_first", BooleanType, nullable = nullableDoc),
+      StructField("comp_len", IntegerType, nullable = true),
+      StructField("emit_seq", LongType, nullable = nullableDoc)))
+    val all = docs()
+    withStore("schema") { storeDir =>
+      val out = StreamingPipelines.fiveStageBatch(spark, storeDir)(frame(all.take(5).toSeq), 0L)
+      assert(out.schema == fields(nullableDoc = false), out.schema.treeString)
+      assert(out.collect().nonEmpty)
+    }
+    withStore("schema_nullable") { storeDir =>
+      val nullable = frame(all.take(5).toSeq)
+        .withColumn("doc_id", expr("if(doc_id < 0, null, doc_id)"))
+      assert(nullable.schema("doc_id").nullable)
+      val out = StreamingPipelines.fiveStageBatch(spark, storeDir)(nullable, 0L)
+      assert(out.schema == fields(nullableDoc = true), out.schema.treeString)
+      assert(out.collect().nonEmpty)
+    }
+  }
+
+  test("five-stage pipeline: the frontier fingerprint is bit_xor(xxhash64(doc_id, chunk_idx, chunk_sha))") {
+    withStore("fingerprint") { storeDir =>
+      val batch = new scala.util.Random(41).shuffle(docs().toSeq).take(60)
+      trigger(storeDir, batch, 0L)
+      val rec = new String(Files.readAllBytes(
+        Paths.get(StreamingPipelines.fiveStageFrontierPath(storeDir))), "UTF-8")
+      val fp = "fp=(-?\\d+)".r.findFirstMatchIn(rec).get.group(1).toLong
+      val expected = frame(batch)
+        .select(col("doc_id"), graft.functions.NativeChunk.chunks(col("text")))
+        .agg(bit_xor(xxhash64(col("doc_id"), col("chunk_idx"), col("chunk_sha"))))
+        .head().getLong(0)
+      assert(expected != 0L)
+      assert(fp == expected, rec)
+    }
+  }
+
+  test("five-stage output: the returned frame's logical plan is one LogicalRDD leaf") {
+    withStore("plan") { storeDir =>
+      val out = StreamingPipelines.fiveStageBatch(spark, storeDir)(frame(docs().take(20).toSeq), 0L)
+      val plan = out.queryExecution.logical
+      assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] &&
+        plan.children.isEmpty, plan.treeString)
+      assert(out.collect().nonEmpty)
     }
   }
 }
