@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -30,10 +30,10 @@ import org.apache.spark.sql.expressions.Window
   * is materialized untimed; each timed pass then runs the full
   * query-side pipeline — read query files, decode, segment, extract
   * (t_seg/t_extract = Srm.segmentAndDescribe, srm.c:251 +
-  * extract.c:261), per-region LSH bucket probe (t_vec,
-  * LSH_query.c), per-(query,candidate) collision-count merge
-  * (cass_result_merge_lists, ferret-pthreads.c:646), exact
-  * weighted-EMD re-rank of the 2K over-fetch (t_rank, emd.c:104)
+  * extract.c:261), per-region LSH multiprobe and 2K over-fetch by
+  * exact L2 (t_vec, LSH_query.c), the per-query merge of the region
+  * lists (cass_result_merge_lists, ferret-pthreads.c:646), exact
+  * weighted-EMD re-rank of the merged list (t_rank, emd.c:104)
   * — and reports per-pass wall seconds. Pass 1 is cold (codegen +
   * classloading); the median of the warm passes is the headline,
   * mirroring REFBENCH.md's dedup protocol.
@@ -42,37 +42,8 @@ import org.apache.spark.sql.expressions.Window
   * rank) so the binary's output.txt can be compared for top-K
   * overlap, not just throughput.
   */
-/** Probe against the RESIDENT LSH index: holds a Broadcast of the
-  * bucket→postings map built ONCE at db-build time — the binary's
-  * QUERY TIME also starts with its LSH tables already resident, while
-  * a per-pass broadcast hash-relation rebuild measured ~0.3-0.4 s of
-  * every 1k-query pass. On a cluster the broadcast HANDLE serializes
-  * with the expression and resolves executor-side; the postings are
-  * pre-encoded InternalRows, shared read-only across evals. */
-case class FerretIndexProbe(left: org.apache.spark.sql.catalyst.expressions.Expression,
-    right: org.apache.spark.sql.catalyst.expressions.Expression,
-    index: org.apache.spark.broadcast.Broadcast[Map[Long, Array[org.apache.spark.sql.catalyst.InternalRow]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.types._
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cand_img", StringType, nullable = false),
-    StructField("cridx", IntegerType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_ferret_probe"
-  private val empty = Array.empty[org.apache.spark.sql.catalyst.InternalRow]
-  override protected def nullSafeEval(tbl: Any, bucket: Any): Any = {
-    val key = (tbl.asInstanceOf[Int].toLong << 32) | bucket.asInstanceOf[Long]
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      index.value.getOrElse(key, empty).asInstanceOf[Array[Any]])
-  }
-  override protected def withNewChildrenInternal(
-      l: org.apache.spark.sql.catalyst.expressions.Expression,
-      r: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.catalyst.expressions.Expression =
-    copy(left = l, right = r)
-}
-
-/** The resident db REGION table behind [[FerretProbeRank]]: one entry
-  * per db region, globally id'd in (img, ridx) order, plus the LSH
+/** The resident db REGION table behind [[FerretProbeRankSet]]: one
+  * entry per db region, globally id'd in (img, ridx) order, plus the LSH
   * postings keyed (tbl<<32 | bucket) pointing at region ids. Region
   * vectors are stored ONCE (6-7 MB at 57k regions) and postings
   * reference them by int id, so table count never multiplies the
@@ -99,8 +70,11 @@ case class FerretRegionIndex(
   * joins + a rank window per pass; this collapses all of it into the
   * segmentation stage's map tasks, which is what makes the
   * truth-adjudicated (T=20, dist-ranked) family cheap enough to BE
-  * the default. GRAFT_FERRET_RANKBY=dist_plan keeps the declarative
-  * twin alive as the differential reference. */
+  * the default.
+  *
+  * Differential anchor: RefFerretKernelSpec — no main runs it; it is
+  * the per-region reference that [[FerretProbeRankSet]] is folded
+  * against. */
 case class FerretProbeRank(child: org.apache.spark.sql.catalyst.expressions.Expression,
     index: org.apache.spark.broadcast.Broadcast[FerretRegionIndex],
     mu: Array[Double], sd: Array[Double], seed: Long, nTables: Int,
@@ -135,16 +109,16 @@ case class FerretProbeRank(child: org.apache.spark.sql.catalyst.expressions.Expr
 /** The per-region probe+rank core shared by [[FerretProbeRank]] (one
   * region per eval, the r14 kernel) and [[FerretProbeRankSet]] (whole
   * vecset per eval, r16) — extracted verbatim so the two cannot
-  * drift; the differential spec pins both against the declarative
-  * dist_plan twin. */
+  * drift; RefFerretKernelSpec pins both against an independent
+  * reimplementation and a declarative twin. */
 private[graft] object FerretProbeCore {
   def rankRegion(v: org.apache.spark.sql.catalyst.util.ArrayData,
                  idx: FerretRegionIndex,
                  mu: Array[Double], sd: Array[Double], seed: Long,
                  nTables: Int, bits: Int, dim: Int, nProbes: Int, depth: Int,
                  stamps: Array[Int], genHolder: Array[Int]): Array[Any] = {
-    // the declarative dist_plan twin fail-fasts on a non-dim
-    // descriptor (raise_error) — identical behavior here
+    // fail fast on a non-dim descriptor instead of ranking a
+    // truncated or null-padded vector
     require(v.numElements() == dim,
       s"graft_ferret_probe_rank: descriptor length ${v.numElements()} != dim $dim")
     val n = dim
@@ -258,12 +232,16 @@ case class FerretProbeRankSet(child: org.apache.spark.sql.catalyst.expressions.E
     copy(child = c)
 }
 
-/** EMD against the RESIDENT vecset table: same model as
-  * [[FerretIndexProbe]] for the re-rank attach — the db vecsets are
-  * loaded once (the binary's raw table), PRE-CONVERTED to plain
-  * double arrays at build time (r16 — the per-candidate ArrayData
-  * decode used to repeat per EMD call), so the EMD stage needs no
-  * per-pass broadcast join and no per-call db-side conversion. */
+/** EMD of one (query, candidate) pair against the RESIDENT vecset
+  * table — the db vecsets are loaded once (the binary's raw table),
+  * PRE-CONVERTED to plain double arrays at build time (r16 — the
+  * per-candidate ArrayData decode used to repeat per EMD call), so
+  * the EMD needs no per-pass broadcast join and no per-call db-side
+  * conversion.
+  *
+  * Differential anchor: RefFerretKernelSpec — no main runs it; it is
+  * the per-candidate reference that [[FerretDbEmdTopK]] is checked
+  * against. */
 case class FerretDbEmd(first: org.apache.spark.sql.catalyst.expressions.Expression,
     second: org.apache.spark.sql.catalyst.expressions.Expression,
     third: org.apache.spark.sql.catalyst.expressions.Expression,
@@ -368,27 +346,11 @@ case class FerretDbEmdTopK(first: org.apache.spark.sql.catalyst.expressions.Expr
 
 object RefFerret {
   private val Dim = graft.functions.Srm.Dim
-  // mirror the binary's index by default: mkdb -L 12. GRAFT_FERRET_TABLES
-  // overrides for the multiprobe cells (fewer tables, probes instead).
-  private def LshTables: Int =
-    sys.env.get("GRAFT_FERRET_TABLES").map(_.toInt).getOrElse(12)
-  // query-side multi-probe count — DEFAULT 20, the binary's own T
-  // (LSH_query.c:59) and the r13 matched-memory curve's frontier;
-  // 0 = base-bucket-only probing (the r12 cells)
-  private def LshProbes: Int =
-    sys.env.get("GRAFT_FERRET_PROBES").map(_.toInt).getOrElse(20)
-  // over-fetch ordering: "dist" (DEFAULT — the r16 single-stage
-  // FerretProbeRankSet pass, the binary's t_vec semantics),
-  // "dist_region" (the r14-r15 per-region kernel + groupBy merge —
-  // the set kernel's differential reference), "dist_plan" (the same
-  // semantics as the declarative r13 plan — the kernels' declarative
-  // differential reference), or "count" (collision-count merge, the
-  // r12 speed cells)
-  private def RankBy: String = sys.env.getOrElse("GRAFT_FERRET_RANKBY", "dist")
-  // GRAFT_FERRET_BITS overrides for the matched-memory recall sweep
-  // (bits set bucket RESOLUTION; index entries/vector stay 1/table).
-  private def LshBitsKnob: Int =
-    sys.env.get("GRAFT_FERRET_BITS").map(_.toInt).getOrElse(LshBits)
+  // the binary's index: mkdb -L 12 tables
+  private val LshTables = 12
+  // query-side multi-probe count: the binary's own T (LSH_query.c:59)
+  // and the r13 matched-memory curve's frontier
+  private val LshProbes = 20
   // 14 sign bits/table = 16384 buckets (measured up from 4→10→14:
   // at 4 bits the z-scored SRM descriptors pile into 16 buckets and
   // hit-count ties drown exact twins out of the over-fetch; at 10
@@ -413,7 +375,10 @@ object RefFerret {
       val topK = if (args.length > 3) args(3).toInt else 50
       val passes = if (args.length > 4) args(4).toInt else 5
       val outDir = if (args.length > 5) args(5) else "/tmp/refbench/ferret/graft_out"
-      run(dbDir, queryDir, topK, passes, outDir)
+      val spark = Sessions.contractLocal("graft-refferret")
+      spark.sparkContext.setLogLevel("ERROR")
+      try run(spark, dbDir, queryDir, topK, passes, outDir)
+      finally spark.stop()
     case Some("truth") =>
       val dbDir = if (args.length > 1) args(1) else "/tmp/refbench/ferret/db"
       val queryDir = if (args.length > 2) args(2) else "/tmp/refbench/ferret/queries"
@@ -534,26 +499,18 @@ object RefFerret {
     (mu.toSeq, sd.toSeq)
   }
 
-  private def withBuckets(df: DataFrame, mu: Seq[Double], sd: Seq[Double],
-                          probes: Int = 0): DataFrame = {
+  /** The db index's bucket rows: one base bucket per region per
+    * table (the query side probes T more per table inside
+    * [[FerretProbeRankSet]]). */
+  private def withBuckets(df: DataFrame, mu: Seq[Double], sd: Seq[Double]): DataFrame = {
     val muA = array(mu.map(lit): _*)
     val sdA = array(sd.map(lit): _*)
     val z = zip_with(col("v"), sequence(lit(0), lit(Dim - 1)),
       (x, i) => (x - element_at(muA, i + 1)) / element_at(sdA, i + 1))
-    if (probes > 0)
-      // query-side probe expansion (LSH_query_probe semantics): the
-      // db index stays one bucket per region per table
-      df.select(col("img"), col("ridx"),
-          posexplode(graft.functions.NativeVector.lshProbeBuckets(
-            z, BucketSeed, LshTables, LshBitsKnob, Dim, probes)))
-        .select(col("img"), col("ridx"),
-          (col("pos") / (probes + 1)).cast("int").as("tbl"),
-          col("col").as("bucket"))
-    else
-      df.select(col("img"), col("ridx"),
-          posexplode(graft.functions.NativeVector.lshBuckets(
-            z, BucketSeed, LshTables, LshBitsKnob, Dim)))
-        .toDF("img", "ridx", "tbl", "bucket")
+    df.select(col("img"), col("ridx"),
+        posexplode(graft.functions.NativeVector.lshBuckets(
+          z, BucketSeed, LshTables, LshBits, Dim)))
+      .toDF("img", "ridx", "tbl", "bucket")
   }
 
   /** GROUND-TRUTH cell (r13 verdict item): the exact-EMD top-K over
@@ -645,10 +602,9 @@ object RefFerret {
     } finally src.close()
   }
 
-  private def run(dbDir: String, queryDir: String, topK: Int,
-                  passes: Int, outDir: String): Unit = {
-    val spark = Sessions.contractLocal("graft-refferret")
-    spark.sparkContext.setLogLevel("ERROR")
+  private[graft] def run(spark: SparkSession, dbDir: String, queryDir: String,
+                         topK: Int, passes: Int, outDir: String): Unit = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     val nQ = graft.sources.BinaryFiles.readDirDirect(spark, queryDir, "*.jpg").count()
 
     // ---- untimed database build (the binary's mkdb + table load) ----
@@ -667,54 +623,33 @@ object RefFerret {
       .toDF("cand_img", "cridx", "tbl", "bucket")
     val wBucket = Window.partitionBy("tbl", "bucket")
       .orderBy(col("cand_img"), col("cridx"))
-    val dbBuckets = rawDb
+    val bucketRows = rawDb
       .withColumn("rn", row_number().over(wBucket))
       .withColumn("bn", count(lit(1)).over(
         Window.partitionBy("tbl", "bucket")))
       .filter(col("rn") <= MaxBucket && col("bn") <= JunkBucket)
       .drop("rn", "bn")
-      .localCheckpoint(true)
-    // per-region raw descriptors — the distance space t_vec ranks in
-    // (the static extract.c dimension weights are folded into the
-    // descriptor, so raw L2 IS the weighted ground distance EMD uses);
-    // only the GRAFT_FERRET_RANKBY=dist quality cells touch it
-    val dbRegionVecs = dbRegions.toDF("cand_img", "cridx", "cv")
-      .localCheckpoint(true)
+      .collect() // (cand_img, cridx, tbl, bucket)
     // the RESIDENT index (the binary's in-RAM LSH tables + raw
     // vecset table, loaded before its QUERY TIME ticks): one
     // sc.broadcast each, built untimed, consumed by the
-    // FerretIndexProbe / FerretDbEmd expressions every pass — no
-    // per-pass broadcast-build job waves
-    // each mode builds ONLY the resident index it consumes (review
-    // r14: both were built unconditionally — a duplicated postings
-    // groupBy plus a dead multi-MB broadcast per run). lazy: the
-    // RankBy branch in pass() forces exactly one of them; the DEBUG/
-    // STAGETIME diagnostics force probeIndex on demand.
-    lazy val bucketRows = dbBuckets.collect() // (cand_img, cridx, tbl, bucket)
-    // id / posting order must match the declarative twin's d2
-    // tie-break, which compares names as Spark UTF8String (UTF-8
-    // bytes) — Java String sort is UTF-16 order and diverges on
-    // supplementary characters (ADVICE r14), so sort in byte order
-    implicit val utf8NameOrd: Ordering[(String, Int)] =
+    // FerretProbeRankSet / FerretDbEmdTopK expressions every pass —
+    // no per-pass broadcast-build job waves.
+    // Region vectors are stored once in global (img, ridx) id order,
+    // with postings pointing at ids (see [[FerretRegionIndex]]). The
+    // id order is the kernel's d2 tie-break, and it compares names as
+    // Spark UTF8String (UTF-8 bytes) — Java String sort is UTF-16
+    // order and diverges on supplementary characters (ADVICE r14),
+    // so sort in byte order. The raw descriptors are the distance
+    // space t_vec ranks in (the static extract.c dimension weights
+    // are folded into the descriptor, so raw L2 IS the weighted
+    // ground distance EMD uses).
+    val utf8NameOrd: Ordering[(String, Int)] =
       Ordering.by { case (name, ridx) =>
         (org.apache.spark.unsafe.types.UTF8String.fromString(name), ridx)
       }
-    lazy val probeIndex = {
-      spark.sparkContext.broadcast(
-        bucketRows.groupBy(r => (r.getInt(2).toLong << 32) | r.getLong(3))
-          .map { case (k, rs) =>
-            k -> rs.sortBy(r => (r.getString(0), r.getInt(1)))(utf8NameOrd).map { r =>
-              org.apache.spark.sql.catalyst.InternalRow(
-                org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)),
-                r.getInt(1)): org.apache.spark.sql.catalyst.InternalRow
-            }
-          })
-    }
-    // the fused-kernel index: region vectors stored once in global
-    // (img, ridx) id order, postings pointing at ids — see
-    // [[FerretRegionIndex]]
-    lazy val regionIndex = {
-      val regs = dbRegionVecs.collect()
+    val regionIndex = {
+      val regs = dbRegions.collect()
         .sortBy(r => (r.getString(0), r.getInt(1)))(utf8NameOrd)
       val idOf = regs.iterator.zipWithIndex
         .map { case (r, i) => ((r.getString(0), r.getInt(1)), i) }.toMap
@@ -727,10 +662,6 @@ object RefFerret {
             k -> rs.map(r => idOf((r.getString(0), r.getInt(1)))).sorted
           }))
     }
-    // force the mode's own index UNTIMED (inside the db-build window,
-    // like the binary's resident tables)
-    if (RankBy == "dist" || RankBy == "dist_region") { regionIndex; () }
-    else { probeIndex; () }
     // pre-converted plain arrays (r16): every EMD call used to decode
     // the candidate's ArrayData vecset — at 5k queries × ~700
     // candidates that conversion repeated 3.5M times per pass
@@ -743,246 +674,66 @@ object RefFerret {
           ((cset, cw))
       }.toMap)
     val dbBuildSec = (System.nanoTime() - t0) / 1e9
-    // the db-side checkpoints are the index — they must survive every
-    // pass (unpersisting a localCheckpoint is unrecoverable: lineage
-    // is truncated). Everything persisted AFTER this point is
-    // per-pass residue and safe to free between passes.
-    val dbBlockIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
     // ---- timed passes: the binary's query_time window ----
+    // Each pass is ONE fused map stage (r16): decode → SRM/extract →
+    // multiprobe probe+rank → EMD → top-K all evaluated inside the
+    // scan task's row. FerretProbeRankSet over-fetches 2K per region
+    // by exact L2 (t_vec's query.topk = 2*top_K, ferret-pthreads.c:590)
+    // and merges the per-region lists in region order
+    // (cass_result_merge_lists, ferret-pthreads.c:646); FerretDbEmdTopK
+    // re-ranks that list by exact weighted EMD against the resident
+    // vecset table (t_rank, emd.c:104). So a pass needs NO exchange,
+    // NO decode cache and NO second job wave, and persists nothing:
+    // exactly the binary's pipeline model (queries stream through one
+    // thread-pipeline against in-RAM tables).
     def pass(writeOut: Option[String]): Double = {
       val t = System.nanoTime()
-      // ---- the DEFAULT (dist) pass: ONE fused map stage (r16) ----
-      // decode → SRM/extract → multiprobe probe+rank → EMD → top-K
-      // all evaluated inside the scan task's row: FerretProbeRankSet
-      // merges the per-region candidate lists in region order
-      // (bit-identical to the r15 explode + groupBy merge, proven by
-      // the dist_plan differential), and the EMD re-rank rides a
-      // transform() over that list against the resident vecset
-      // table — so the pass needs NO exchange, NO decode cache, NO
-      // second job wave: exactly the binary's pipeline model (queries
-      // stream through one thread-pipeline against in-RAM tables).
-      // The r15 shape paid a decode-materialization job plus a
-      // per-query groupBy per pass — ~0.3 s of fixed scheduling at
-      // 1k queries, the whole remaining head-to-head gap.
-      if (RankBy == "dist") {
-        import org.apache.spark.sql.graftbridge.ColumnBridge
-        // default one-wave slicing: measured against 4 slices/core,
-        // over-slicing bought no wall-clock (the per-image variance
-        // amortizes at 31 imgs/task) and cost ~10% extra CPU in task
-        // machinery
-        val qRaw = graft.sources.BinaryFiles.readDirDirect(spark, queryDir, "*.jpg")
-          .toDF("img", "bytes")
-          .select(col("img"), explode(array(
-            graft.functions.NativeVector.srmVecset(col("bytes")))).as("s"))
-          .select(col("img"), col("s.vset").as("vset"), col("s.wset").as("wset"))
-        val cands = ColumnBridge.column(FerretProbeRankSet(
-          ColumnBridge.expression(col("vset")),
-          regionIndex, mu.toArray, sd.toArray, BucketSeed, LshTables,
-          LshBitsKnob, Dim, LshProbes, 2 * topK))
-        val ranked = qRaw
-          .select(col("img").as("query_img"),
-            ColumnBridge.column(FerretDbEmdTopK(
-              ColumnBridge.expression(col("vset")),
-              ColumnBridge.expression(col("wset")),
-              ColumnBridge.expression(cands), emdIndex, topK)).as("top"))
-          .select(col("query_img"), posexplode(col("top")))
-          .select(col("query_img"),
-            col("col").getField("cand_img").as("cand_img"),
-            col("col").getField("emd").as("emd"),
-            (col("pos") + 1).as("rank"))
-        if (sys.env.contains("GRAFT_FERRET_STAGETIME")) {
-          // diagnosis only: prefixes re-materialize, read as deltas
-          val t1 = System.nanoTime()
-          qRaw.write.format("noop").mode("overwrite").save()
-          val t2 = System.nanoTime()
-          qRaw.select(col("img"), cands.as("cands"))
-            .write.format("noop").mode("overwrite").save()
-          val t3 = System.nanoTime()
-          System.err.println(f"[refferret]   STAGETIME decode ${(t2 - t1) / 1e9}%.2f s | +probe ${(t3 - t2) / 1e9}%.2f s")
-        }
-        writeOut match {
-          case Some(p) => ranked.repartition(1) // exchange, not coalesce
-            .write.mode("overwrite").parquet(p)
-          case None => ranked.write.format("noop").mode("overwrite").save()
-        }
-        val tAll = (System.nanoTime() - t) / 1e9
-        System.err.println(f"[refferret]   fused one-stage pass $tAll%.2f s")
-        return tAll
-      }
-      // The pass's ONLY exchange moves the RAW query files (one tiny
-      // row per image) so everything after it is already clustered by
-      // query_img. Decode+SRM+extract runs as a Catalyst EXPRESSION
-      // (SrmVecset) behind an explode(array(.)) once-eval barrier, so
-      // attribute lineage — and with it the partitioning — survives
-      // through the whole tail: the probe join (db index BROADCAST),
-      // collision merge, over-fetch slice, EMD re-rank and final
-      // top-K all satisfy their clustering from the one up-front
-      // exchange. The r12 shape streamed the DB side and broadcast
-      // the queries, paying a full-width collision shuffle plus
-      // per-pass broadcast-build waves; this is the binary's pipeline
-      // model re-expressed — queries flow through one fused stage
-      // against in-RAM db tables.
-      val qS = graft.sources.BinaryFiles.readDirDirect(spark, queryDir, "*.jpg")
+      // default one-wave slicing: measured against 4 slices/core,
+      // over-slicing bought no wall-clock (the per-image variance
+      // amortizes at 31 imgs/task) and cost ~10% extra CPU in task
+      // machinery
+      val qRaw = graft.sources.BinaryFiles.readDirDirect(spark, queryDir, "*.jpg")
         .toDF("img", "bytes")
         .select(col("img"), explode(array(
           graft.functions.NativeVector.srmVecset(col("bytes")))).as("s"))
         .select(col("img"), col("s.vset").as("vset"), col("s.wset").as("wset"))
-        .repartition(col("img")) // decode FIRST (in the scan slices),
-        // then exchange the ~5 MB vecsets, not the raw JPEG bytes
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize the cache — the decode job. Dataset cache (unlike
-      // localCheckpoint's ExistingRDD) PRESERVES the cached plan's
-      // output partitioning; that is what keeps the tail exchange-free.
-      qS.count()
-      val tSeg = (System.nanoTime() - t) / 1e9
-      val qBuckets = withBuckets(regionsOf(qS), mu, sd, LshProbes)
-        .toDF("query_img", "qridx", "tbl", "bucket")
-      // per-region probes merged per (query, candidate) by collision
-      // count — cass_result_merge_lists; 2K over-fetch — t_vec's
-      // query.topk = 2*top_K (ferret-pthreads.c:590). The probe is a
-      // Generate over the resident-index expression: no join operator,
-      // no per-pass broadcast build.
-      // lazy: only the count/dist_plan modes (and the DEBUG
-      // diagnostics) consume the probe-index expression — the dist
-      // default must not force the probeIndex broadcast inside a
-      // timed pass
-      lazy val joined = qBuckets
-        .select(col("query_img"), col("qridx"), explode(
-          org.apache.spark.sql.graftbridge.ColumnBridge.column(FerretIndexProbe(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("tbl")),
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("bucket")),
-            probeIndex))).as("p"))
-        .select(col("query_img"), col("qridx"),
-          col("p.cand_img").as("cand_img"), col("p.cridx").as("cridx"))
-      lazy val cand = joined
-        .groupBy("query_img", "cand_img").agg(count(lit(1)).as("hits"))
-      if (sys.env.contains("GRAFT_FERRET_DEBUG")) {
-        System.err.println(s"[refferret]   DEBUG joined=${joined.count()} pairs=${cand.count()}")
-      }
-      // over-fetch: 2K per query by default; GRAFT_FERRET_OVERFETCH=regions
-      // scales it by the query's region count — the binary's actual
-      // semantics (t_vec fetches 2K per REGION and merges,
-      // ferret-pthreads.c:590+646), costing proportionally more EMD
-      // solves. The speed cells use the per-query default; the quality
-      // cell measures both engines at matched candidate-pool depth.
-      val perRegions = sys.env.get("GRAFT_FERRET_OVERFETCH").contains("regions")
-      val qNr = qS.select(col("img").as("query_img"), size(col("vset")).as("nr"))
-      // Over-fetch ordering by ACTUAL region distance is the DEFAULT
-      // (RankBy="dist") — the binary's t_vec semantics (LSH_query
-      // computes real distances on its collision candidates and each
-      // region's 2K list is distance-ordered before
-      // cass_result_merge_lists); the r13 ground-truth cell measured
-      // it retrieving the exact-EMD top-10 ~2× better than collision
-      // count at the same depth. "dist" runs the fused
-      // [[FerretProbeRank]] kernel; "dist_plan" is the declarative
-      // r13 twin kept as its differential reference; "count" is the
-      // r12 collision-count merge.
-      // "dist" never reaches here (the fused single-stage branch above
-      // returned); "dist_region" keeps the r14-r15 per-region-kernel +
-      // groupBy-merge shape executable as the fused-set kernel's OWN
-      // differential reference. RefFerretKernelSpec pins the whole
-      // family in-suite (r16 ADVICE): per-region kernel vs independent
-      // reimpl, FerretProbeRankSet vs region-order fold,
-      // FerretDbEmdTopK vs slice(array_sort(...)), and a three-shape
-      // dist / dist_region / dist_plan top-K equality
-      val over = if (RankBy == "dist_region") {
-        regionsOf(qS).toDF("query_img", "qridx", "qv")
-          .select(col("query_img"),
-            org.apache.spark.sql.graftbridge.ColumnBridge.column(FerretProbeRank(
-              org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("qv")),
-              regionIndex, mu.toArray, sd.toArray, BucketSeed, LshTables,
-              LshBitsKnob, Dim, LshProbes, 2 * topK)).as("cands"))
-          .groupBy("query_img")
-          .agg(array_distinct(flatten(collect_list(col("cands")))).as("cands"))
-          .select(col("query_img"), explode(col("cands")).as("cand_img"))
-      } else if (RankBy == "dist_plan") {
-        // fail-fast on malformed descriptors, IDENTICALLY to the
-        // fused kernel's require (FerretProbeRank): without this,
-        // zip_with null-pads a short qv, aggregate null-propagates,
-        // and the row silently drops — the two "bit-identical" paths
-        // would diverge on malformed input instead of both aborting
-        val qrv = regionsOf(qS).toDF("query_img", "qridx", "qv")
-          .withColumn("qv", when(size(col("qv")) === lit(Dim), col("qv"))
-            .otherwise(raise_error(format_string(
-              s"ferret dist_plan: descriptor length %d != dim $Dim",
-              size(col("qv"))))))
-        val wReg = Window.partitionBy("query_img", "qridx")
-          .orderBy(col("d2"), col("cand_img"), col("cridx"))
-        joined.select("query_img", "qridx", "cand_img", "cridx").distinct()
-          .join(qrv, Seq("query_img", "qridx"))
-          .join(broadcast(dbRegionVecs), Seq("cand_img", "cridx"))
-          .withColumn("d2", aggregate(
-            zip_with(col("qv"), col("cv"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, e) => acc + e))
-          .withColumn("rn", row_number().over(wReg))
-          .filter(col("rn") <= 2 * topK)
-          .select("query_img", "cand_img").distinct()
-      } else {
-        val top = cand
-          .groupBy("query_img")
-          .agg(array_sort(collect_list(
-              struct((-col("hits")).as("nh"), col("cand_img")))).as("top"))
-        val sliced =
-          if (perRegions) top.join(qNr, "query_img")
-            .select(col("query_img"),
-              slice(col("top"), lit(1), lit(2 * topK) * col("nr")).as("top"))
-          else top.select(col("query_img"),
-            slice(col("top"), 1, 2 * topK).as("top"))
-        sliced.select(col("query_img"),
-          explode(transform(col("top"), x => x.getField("cand_img"))).as("cand_img"))
-      }
-      val qVecsets = qS.select(col("img").as("query_img"),
-        col("vset").as("qset"), col("wset").as("qw"))
-      val ranked = over
-        .join(qVecsets, "query_img") // same-partitioned, exchange-free
-        .select(col("query_img"), col("cand_img"),
-          org.apache.spark.sql.graftbridge.ColumnBridge.column(FerretDbEmd(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("qset")),
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("qw")),
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("cand_img")),
-            emdIndex)).as("emd"))
-        .groupBy("query_img")
-        .agg(slice(array_sort(collect_list(
-            struct(col("emd"), col("cand_img")))), 1, topK).as("top"))
+      val cands = ColumnBridge.column(FerretProbeRankSet(
+        ColumnBridge.expression(col("vset")),
+        regionIndex, mu.toArray, sd.toArray, BucketSeed, LshTables,
+        LshBits, Dim, LshProbes, 2 * topK))
+      val ranked = qRaw
+        .select(col("img").as("query_img"),
+          ColumnBridge.column(FerretDbEmdTopK(
+            ColumnBridge.expression(col("vset")),
+            ColumnBridge.expression(col("wset")),
+            ColumnBridge.expression(cands), emdIndex, topK)).as("top"))
         .select(col("query_img"), posexplode(col("top")))
         .select(col("query_img"),
           col("col").getField("cand_img").as("cand_img"),
           col("col").getField("emd").as("emd"),
           (col("pos") + 1).as("rank"))
       if (sys.env.contains("GRAFT_FERRET_STAGETIME")) {
-        // diagnosis only: re-materializes prefixes of the tail so each
-        // extra number includes its upstream — read as deltas
+        // diagnosis only: prefixes re-materialize, read as deltas
         val t1 = System.nanoTime()
-        joined.write.format("noop").mode("overwrite").save()
+        qRaw.write.format("noop").mode("overwrite").save()
         val t2 = System.nanoTime()
-        over.write.format("noop").mode("overwrite").save()
+        qRaw.select(col("img"), cands.as("cands"))
+          .write.format("noop").mode("overwrite").save()
         val t3 = System.nanoTime()
-        System.err.println(f"[refferret]   STAGETIME probe-join ${(t2 - t1) / 1e9}%.2f s | +overfetch ${(t3 - t2) / 1e9}%.2f s")
+        System.err.println(f"[refferret]   STAGETIME decode ${(t2 - t1) / 1e9}%.2f s | +probe ${(t3 - t2) / 1e9}%.2f s")
       }
       writeOut match {
-        case Some(p) => ranked.repartition(1) // exchange, not coalesce:
-          // coalesce(1) would collapse the whole EMD stage into 1 task
+        case Some(p) => ranked.repartition(1) // exchange, not coalesce
           .write.mode("overwrite").parquet(p)
         case None => ranked.write.format("noop").mode("overwrite").save()
       }
       val tAll = (System.nanoTime() - t) / 1e9
-      System.err.println(
-        f"[refferret]   seg+extract $tSeg%.2f s | probe+emd-rank ${tAll - tSeg}%.2f s")
-      // cleanup OUTSIDE the measured window (tAll already taken)
-      qS.unpersist(blocking = true)
+      System.err.println(f"[refferret]   fused one-stage pass $tAll%.2f s")
       tAll
     }
 
     val measured = (1 to passes).map { i =>
-      // free the previous pass's eager-checkpoint blocks OUTSIDE the
-      // timed section (the Bench.freeBlocks discipline) — otherwise
-      // qRegions checkpoints accumulate across passes and later warm
-      // passes run against a pressured BlockManager. The db index
-      // checkpoints are exempt (see dbBlockIds).
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => dbBlockIds.contains(id) }
-        .values.foreach(_.unpersist(blocking = true))
       val (sec, env) = EnvTelemetry.measured(
         pass(if (i == passes) Some(s"$outDir/topk") else None))
       System.err.println(
@@ -1004,6 +755,5 @@ object RefFerret {
       s""""warm_secs":[${times.drop(1).map(t => f"$t%.3f").mkString(",")}],""" +
       s""""warm_median_sec":${f"$median%.3f"},""" +
       s""""images_per_sec":${f"${nQ / median}%.1f"},"env":[${envs.mkString(",")}]}""")
-    spark.stop()
   }
 }

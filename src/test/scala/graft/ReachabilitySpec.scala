@@ -20,6 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * program file counts for every def of that name.
   */
 class ReachabilitySpec extends AnyFunSuite {
+  import ReachabilitySpec.{code, sources}
 
   private val Roots = Seq("src/main/scala", "perfbench/src").map(Paths.get(_))
   private val Marker = """^\s*(?:/\*\*|\*)?\s*(Differential anchor|Test seam):""".r
@@ -27,58 +28,6 @@ class ReachabilitySpec extends AnyFunSuite {
   private val Def =
     """((?:(?:override|private|protected|final|implicit|lazy)(?:\[[\w.]+\])?\s+)*)def\s+([A-Za-z_][A-Za-z0-9_]*)""".r
   private val Annotations = """(?s)\s*(?:@[\w.]+(?:\([^)]*\))?\s*)*""".r
-
-  private def sources(roots: Seq[Path]): Seq[Path] = roots.flatMap { r =>
-    val walk = Files.walk(r)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
-    finally walk.close()
-  }.sorted
-
-  /** `text` with every comment blanked to spaces (newlines kept, so
-    * offsets match), and string literals too when `strings` is false.
-    * References are counted with the strings kept, since codegen
-    * calls program code from inside them; defs are found without. */
-  private def code(text: String, strings: Boolean): String = {
-    val out = new StringBuilder(text)
-    def blank(from: Int, until: Int): Unit =
-      (from until until).foreach(k => if (out(k) != '\n') out(k) = ' ')
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      if (text.startsWith("//", i)) {
-        val end = text.indexOf('\n', i)
-        val j = if (end < 0) n else end
-        blank(i, j); i = j
-      } else if (text.startsWith("/*", i)) {
-        var depth = 1; var j = i + 2
-        while (j < n && depth > 0) {
-          if (text.startsWith("/*", j)) { depth += 1; j += 2 }
-          else if (text.startsWith("*/", j)) { depth -= 1; j += 2 }
-          else j += 1
-        }
-        blank(i, j); i = j
-      } else if (text.startsWith("\"\"\"", i)) {
-        val end = text.indexOf("\"\"\"", i + 3)
-        var j = if (end < 0) n else end + 3
-        while (j < n && text(j) == '"') j += 1
-        if (!strings) blank(i, j)
-        i = j
-      } else if (text(i) == '"') {
-        var j = i + 1
-        while (j < n && text(j) != '"' && text(j) != '\n')
-          j += (if (text(j) == '\\') 2 else 1)
-        j = math.min(n, j + 1)
-        if (!strings) blank(i, j)
-        i = j
-      } else if (text(i) == '\'' && i + 2 < n && text(i + 1) == '\\') {
-        val end = text.indexOf('\'', i + 3)
-        i = if (end < 0) n else end + 1
-      } else if (text(i) == '\'' && i + 2 < n && text(i + 2) == '\'') {
-        i += 3
-      } else i += 1
-    }
-    out.toString
-  }
 
   /** The scaladoc right above `defStart` (annotations and modifiers
     * may sit between), if any. */
@@ -159,5 +108,61 @@ class ReachabilitySpec extends AnyFunSuite {
       val walk = Files.walk(dir)
       try walk.iterator.asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
     }
+  }
+}
+
+/** The source walk and comment blanking shared by the specs that scan
+  * program text. */
+object ReachabilitySpec {
+  def sources(roots: Seq[Path]): Seq[Path] = roots.flatMap { r =>
+    val walk = Files.walk(r)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+    finally walk.close()
+  }.sorted
+
+  /** `text` with every comment blanked to spaces (newlines kept, so
+    * offsets match), and string literals too when `strings` is false.
+    * References are counted with the strings kept, since codegen
+    * calls program code from inside them; defs are found without. */
+  def code(text: String, strings: Boolean): String = {
+    val out = new StringBuilder(text)
+    def blank(from: Int, until: Int): Unit =
+      (from until until).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    val n = text.length
+    var i = 0
+    while (i < n) {
+      if (text.startsWith("//", i)) {
+        val end = text.indexOf('\n', i)
+        val j = if (end < 0) n else end
+        blank(i, j); i = j
+      } else if (text.startsWith("/*", i)) {
+        var depth = 1; var j = i + 2
+        while (j < n && depth > 0) {
+          if (text.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (text.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        blank(i, j); i = j
+      } else if (text.startsWith("\"\"\"", i)) {
+        val end = text.indexOf("\"\"\"", i + 3)
+        var j = if (end < 0) n else end + 3
+        while (j < n && text(j) == '"') j += 1
+        if (!strings) blank(i, j)
+        i = j
+      } else if (text(i) == '"') {
+        var j = i + 1
+        while (j < n && text(j) != '"' && text(j) != '\n')
+          j += (if (text(j) == '\\') 2 else 1)
+        j = math.min(n, j + 1)
+        if (!strings) blank(i, j)
+        i = j
+      } else if (text(i) == '\'' && i + 2 < n && text(i + 1) == '\\') {
+        val end = text.indexOf('\'', i + 3)
+        i = if (end < 0) n else end + 1
+      } else if (text(i) == '\'' && i + 2 < n && text(i + 2) == '\'') {
+        i += 3
+      } else i += 1
+    }
+    out.toString
   }
 }

@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Unit-level differential proof for [[FerretProbeRank]] — the fused
-  * probe+rank kernel behind the RefFerret dist default. The corpus
-  * run proved it bit-identical to the declarative plan once
-  * (REFBENCH r14, 50k rows, 0 diffs); this spec pins the same
+/** Unit-level differential proof for the RefFerret kernels.
+  * [[FerretProbeRankSet]] followed by [[FerretDbEmdTopK]] is the one
+  * pipeline behind `RefFerret.run` (since r16); [[FerretProbeRank]]
+  * is its per-region form, which no main runs and which this spec
+  * keeps as the reference. The corpus run proved the per-region
+  * kernel bit-identical to the declarative plan once (REFBENCH r14,
+  * 50k rows, 0 diffs); this spec pins the same
   * semantics on a synthetic index with an INDEPENDENT in-test
   * reimplementation (plain Scala: z-score → LshProbeKernel probe
   * enumeration → postings walk → cross-table dedup → top-depth by
