@@ -478,27 +478,6 @@ object RefFerret {
     images.select(col("img"), posexplode(col("vset")))
       .toDF("img", "ridx", "v")
 
-  /** Per-dimension z-score parameters learned from the database
-    * regions at index-build time (the analog of the binary's tuned
-    * E2LSH -w quantization width). extract.c's static dimension
-    * weights span 1000× (6.0 → 0.007), so raw sign-projections are
-    * dominated by two or three dimensions and every image lands in a
-    * handful of buckets — standardizing first makes each hyperplane
-    * bit carry real information. */
-  private def zStats(dbRegions: DataFrame): (Seq[Double], Seq[Double]) = {
-    val rows = dbRegions.select(posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("dim").agg(avg("x").as("mu"),
-        coalesce(stddev_pop(col("x")), lit(0.0)).as("sd"))
-      .collect() // 14 rows — the per-dim moment table, never data-sized
-    val mu = new Array[Double](Dim)
-    val sd = new Array[Double](Dim)
-    rows.foreach { r =>
-      mu(r.getInt(0)) = r.getDouble(1)
-      sd(r.getInt(0)) = math.max(r.getDouble(2), 1e-12)
-    }
-    (mu.toSeq, sd.toSeq)
-  }
-
   /** The db index's bucket rows: one base bucket per region per
     * table (the query side probes T more per table inside
     * [[FerretProbeRankSet]]). */
@@ -611,7 +590,15 @@ object RefFerret {
     val t0 = System.nanoTime()
     val dbImages = imagesOf(spark, dbDir).localCheckpoint(true)
     val dbRegions = regionsOf(dbImages)
-    val (mu, sd) = zStats(dbRegions)
+    // per-dimension z-score parameters learned from the database
+    // regions (the analog of the binary's tuned E2LSH -w quantization
+    // width): extract.c's static dimension weights span 1000× (6.0 →
+    // 0.007), so raw sign-projections are dominated by two or three
+    // dimensions and every image lands in a handful of buckets —
+    // standardizing first makes each hyperplane bit carry real
+    // information. DECIMAL moments, so the buckets do not move with
+    // the core count.
+    val (mu, sd) = graft.operators.Similarity.zMoments(dbRegions, Dim)
     // hot-bucket shaping (index build time): buckets past JunkBucket
     // rows are degenerate speck-region pileups carrying no ranking
     // signal — drop them outright (the E2LSH overflow rule); buckets

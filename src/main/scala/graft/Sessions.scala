@@ -2,16 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE contract-session builder shared by every main
-  * (Bench / Verify / PlanDump / TimeQuery).
+/** The one contract-session builder every main calls, and the one
+  * file in `src/main` that writes a session's SQL conf.
   *
-  * Round 7 showed why this must be a single definition: TimeQuery
-  * omitted `spark.sql.extensions`, so "isolated" timings ran
+  * Round 7 showed why the builder must be a single definition: a probe
+  * main omitted `spark.sql.extensions`, so its "isolated" timings ran
   * DIFFERENT plans than shipped bench runs for every query the
   * injected optimizer rules touch (q_fuzzy_join's LevenshteinBound
   * length-gap conjunct), and omitted the periodicGC interval, so it
-  * skewed differently under checkpoint pressure. Any main that
-  * builds its own session will drift again — all four now call here.
+  * skewed differently under checkpoint pressure. Any main that builds
+  * its own session will drift again.
+  *
+  * A harness that needs its own settings runs on [[withSettings]]'s
+  * copy, never on a write to the caller's session.
   */
 object Sessions {
 
@@ -98,5 +101,37 @@ object Sessions {
           val Array(k, v) = kv.split("=", 2); k.trim -> v.trim
         }.toMap).getOrElse(Map.empty)
     contract(s"local[$cpus]", cpus, appName, envConf ++ overrides)
+  }
+
+  /** A copy of `s` with `settings` applied: Spark's own session copy
+    * (the one a stream takes when it starts), so it shares the
+    * SparkContext, cached data and [[Stores]], and has its own SQL
+    * conf. A stream started from the copy takes the copy's settings,
+    * and so does the plan of a frame read through it; nothing done with
+    * it writes `s`'s conf, so concurrent callers cannot see each
+    * other's values.
+    *
+    * Each session that starts a stream registers a listener bus on the
+    * context that stays until the context stops (Spark's
+    * `StreamingQueryManager`), so take one copy per harness call and
+    * setting, never one per trigger or pass. */
+  def withSettings(s: SparkSession, settings: Map[String, String]): SparkSession = {
+    val copy = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(s)
+    settings.foreach { case (k, v) => copy.conf.set(k, v) }
+    copy
+  }
+
+  /** Run `body` with `settings` written to `s`'s conf, restoring the
+    * previous values after. For the iterative loops
+    * (`Curation.clustersFromPairs`, `GraphOps.pagerankFromPairs`) only:
+    * a file scan takes its split sizes from the session its relation
+    * was read on, so a [[withSettings]] copy would not reach a pair
+    * scan the caller built. It is safe because nothing else runs on
+    * the session meanwhile: Bench, Verify and PlanAudit build keys one
+    * at a time, and no loop runs inside a concurrent harness leg. */
+  def withScopedConf[T](s: SparkSession, settings: Map[String, String])(body: => T): T = {
+    val prev = settings.keys.map(k => k -> s.conf.get(k)).toMap
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
   }
 }

@@ -117,7 +117,7 @@ object Curation {
     // cheaper than its checkpoint blocks
     val p0 = pairs.toDF("doc_a", "doc_b")
     val p = if (cheapToRescan(p0)) p0 else ck(p0)
-    graft.streaming.StreamingPipelines.withScopedConf(nodes.sparkSession,
+    graft.Sessions.withScopedConf(nodes.sparkSession,
       loopConf(nodes.sparkSession, p.count())) {
     // ---- contraction pass (min-neighbor hooking) ----
     // Near-dup graphs are clique-heavy (every member of a dup block

@@ -101,7 +101,7 @@ object GraphOps {
       // the NEXT iteration's broadcast build (measured at sf0.1: the
       // per-iteration contrib build scanned 64 × 1.16 MB for a
       // node-sized frame, 0.7-1.0 s per iteration — the key's wall).
-      graft.streaming.StreamingPipelines.withScopedConf(pairs.sparkSession,
+      graft.Sessions.withScopedConf(pairs.sparkSession,
         Curation.loopConf(pairs.sparkSession, p.count())) {
       val deg = ck(p.select(col("doc_a").as("src"))
         .union(p.select(col("doc_b").as("src")))

@@ -357,6 +357,33 @@ object Similarity {
     * would crash the whole ferret_emd/emd_check query instead of
     * degrading gracefully (review r14). SimilaritySpec pins
     * MpProbes < 2^floor. */
+  /** Per-dimension mean and population standard deviation (floored
+    * at 1e-12) of the `dim`-long vectors in `vecs`' column `v`, for
+    * z-scoring before sign projection. The sums are DECIMAL(38, 18),
+    * so the result is bit-identical under any partitioning and
+    * partial-aggregation order; a double `avg`/`stddev_pop` moves in
+    * the last bits with the order, and with it the z-scored buckets.
+    * Squares must fit the decimal: |x| < 1e10. */
+  private[graft] def zMoments(vecs: DataFrame, dim: Int): (IndexedSeq[Double], IndexedSeq[Double]) = {
+    val moments = vecs
+      .select(posexplode(col("v")).as(Seq("dim", "x")))
+      .groupBy("dim").agg(
+        count(col("x")).as("n"),
+        sum(col("x").cast(DecimalType(38, 18))).as("s"),
+        sum((col("x") * col("x")).cast(DecimalType(38, 18))).as("ss"))
+      .collect() // dim rows — the per-dim moment table, never data-sized
+    val mu = new Array[Double](dim)
+    val sd = new Array[Double](dim)
+    moments.foreach { r =>
+      val n = r.getLong(1)
+      val m = r.getDecimal(2).doubleValue() / n
+      val ex2 = r.getDecimal(3).doubleValue() / n
+      mu(r.getInt(0)) = m
+      sd(r.getInt(0)) = math.max(math.sqrt(math.max(0.0, ex2 - m * m)), 1e-12)
+    }
+    (mu.toIndexedSeq, sd.toIndexedSeq)
+  }
+
   private[graft] def regBitsFor(nRegions: Long): Int =
     math.max(5,
       64 - java.lang.Long.numberOfLeadingZeros(
@@ -1479,29 +1506,15 @@ object Similarity {
     // entry per region per table), [[FerretRegTables]] tables, and
     // T=[[MpProbes]] query-side boundary probes (the reference's own
     // default, LSH_query.c:59) instead of table multiplication.
-    // Moments are DECIMAL sums → bit-deterministic across
+    // Moments are DECIMAL sums (zMoments) → bit-deterministic across
     // invocations regardless of partial-aggregation order —
     // ferret_emd and emd_check must derive the SAME candidate pool
     // from separate invocations (EmdCertificateSpec pins it).
     val srmDim = graft.functions.Srm.Dim
-    val nRegions = regions.count()
-    val regBits = regBitsFor(nRegions)
-    val moments = regions
-      .select(posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("dim").agg(
-        sum(col("x").cast(DecimalType(38, 18))).as("s"),
-        sum((col("x") * col("x")).cast(DecimalType(38, 18))).as("ss"))
-      .collect() // srmDim rows — the per-dim moment table, never data-sized
-    val regMu = new Array[Double](srmDim)
-    val regSd = new Array[Double](srmDim)
-    moments.foreach { r =>
-      val mu = r.getDecimal(1).doubleValue() / nRegions
-      val ex2 = r.getDecimal(2).doubleValue() / nRegions
-      regMu(r.getInt(0)) = mu
-      regSd(r.getInt(0)) = math.max(math.sqrt(math.max(0.0, ex2 - mu * mu)), 1e-12)
-    }
-    val muA = array(regMu.toIndexedSeq.map(lit): _*)
-    val sdA = array(regSd.toIndexedSeq.map(lit): _*)
+    val regBits = regBitsFor(regions.count())
+    val (regMu, regSd) = zMoments(regions, srmDim)
+    val muA = array(regMu.map(lit): _*)
+    val sdA = array(regSd.map(lit): _*)
     def zOf(c: Column): Column = zip_with(c, sequence(lit(0), lit(srmDim - 1)),
       (x, i) => (x - element_at(muA, i + 1)) / element_at(sdA, i + 1))
     def regionBuckets(df: DataFrame, imgCol: String, qProbes: Int): DataFrame = {

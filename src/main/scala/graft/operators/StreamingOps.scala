@@ -51,8 +51,7 @@ object StreamingOps {
     * (annValueSql) re-derives every cosine and rank from raw
     * embeddings exactly as for the batch ANN keys. */
   def streamFerret(s: SparkSession, dir: String): DataFrame = {
-    val e = Similarity.emb(s, dir)
-    val queries = Similarity.ferretQueries(e)
+    val queries = Similarity.ferretQueries(Similarity.emb(s, dir))
     // feed write and resident-index build are independent Spark jobs —
     // overlap them (guide §2.6), as the rate-bench feeds already do
     val feedF = {
@@ -63,11 +62,13 @@ object StreamingOps {
         Seq(col("query_id"))))
     }
     // per-trigger batch conf (see ferretInnerConf): one trigger
-    // carries ~1/5 of the query batch; the search plan binds to
-    // THIS session, so the volume-derived shuffle-partition count
-    // and tiny-batch AQE gate are scoped around the whole drain —
-    // this key runs its stream alone, so the scope is race-free
-    val nCorpus = math.max(1L, e.count())
+    // carries ~1/5 of the query batch. The search plan binds to the
+    // session of the corpus frames, so the corpus, its index and the
+    // stream are all built on one copy carrying that conf
+    val nCorpus = math.max(1L, Similarity.emb(s, dir).count())
+    val fs = graft.Sessions.withSettings(s,
+      ferretInnerConf(s, nCorpus, math.max(1L, (nCorpus / 10 + 4) / 5)))
+    val e = Similarity.emb(fs, dir)
     // resident index, built ONCE before the stream (the reference's
     // mkdb posture): each trigger otherwise recomputed the corpus
     // buckets AND 128-plane sketches before touching its batch
@@ -76,16 +77,13 @@ object StreamingOps {
       scala.concurrent.duration.Duration.Inf)
     val outDir = graft.Stores.scratch(s, "sferret")
     try {
-      StreamingPipelines.withScopedConf(s,
-        ferretInnerConf(s, nCorpus, math.max(1L, (nCorpus / 10 + 4) / 5))) {
-        val q = StreamingPipelines.ferretStream(
-          s.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1).parquet(feed.path),
-          batch => Similarity.ferretSearchIndexed(idx, e, batch,
-            broadcastQueries = true),
-          (out, _) => out.write.mode("append").parquet(outDir))
-        try q.processAllAvailable() finally q.stop()
-      }
+      val q = StreamingPipelines.ferretStream(
+        fs.readStream.schema(feed.schema)
+          .option("maxFilesPerTrigger", 1).parquet(feed.path),
+        batch => Similarity.ferretSearchIndexed(idx, e, batch,
+          broadcastQueries = true),
+        (out, _) => out.write.mode("append").parquet(outDir))
+      try q.processAllAvailable() finally q.stop()
       // snapshot the sink before its directory is reclaimed (tiny:
       // TopK rows per query)
       s.read.parquet(outDir).localCheckpoint(true)
@@ -138,23 +136,36 @@ object StreamingOps {
     try {
       // the five legs are INDEPENDENT streaming queries (three over
       // the event feed, one over the doc feed, one over the query
-      // feed), so by default they run CONCURRENTLY (r15 verdict #2):
-      // each leg is trigger-machinery-bound at these feed sizes, not
-      // CPU-bound, so overlapping them cuts the key's wall-clock
-      // ~2.5× while every leg's rate_ok gate (full feed ingested,
-      // rows out, real triggers) is unaffected. Per-leg rows_per_sec
-      // is then measured UNDER the concurrent load — an isolated
-      // per-leg throughput reading is one env knob away
-      // (GRAFT_RATE_SEQUENTIAL=1, the pre-r16 behavior).
+      // feed), so they run CONCURRENTLY (r15 verdict #2): each leg is
+      // trigger-machinery-bound at these feed sizes, not CPU-bound, so
+      // overlapping them cuts the key's wall-clock ~2.5× while every
+      // leg's rate_ok gate (full feed ingested, rows out, real
+      // triggers) is unaffected. Per-leg rows_per_sec is measured
+      // UNDER the concurrent load.
+      //
+      // Each leg that needs its own settings runs on its own session
+      // copy, so no leg writes the shared session's conf: the three
+      // event legs share one copy whose state partitions follow their
+      // trigger volume (statePartsFor), and the ferret leg builds its
+      // corpus, index and stream on a copy carrying ferretInnerConf
+      // (without it every ~200-query trigger shuffled into the session
+      // default's 32 partitions, ~1 s/trigger of pure task overhead).
+      // The five-stage leg's trigger is narrow RDD passes with no
+      // exchange, so it runs on `s` as it is.
+      val evS = StreamingPipelines.withStateParts(s, StreamingPipelines.statePartsFor(s,
+        math.min(Int.MaxValue.toLong, feed.rows / math.max(1, feed.slices)).toInt))
+      val qPerTrigger = math.max(1L, qvFeed.rows / math.max(1, qvFeed.slices))
+      val ferretS = graft.Sessions.withSettings(s,
+        ferretInnerConf(s, math.max(1L, emb.count()), qPerTrigger))
       val legs: Seq[() => StreamingPipelines.BenchResult] = Seq(
-        () => StreamingPipelines.fileThroughputBench(s, feed, "window_agg",
+        () => StreamingPipelines.fileThroughputBench(evS, feed, "window_agg",
           StreamingPipelines.windowAgg),
-        () => StreamingPipelines.fileThroughputBench(s, feed, "dedup",
+        () => StreamingPipelines.fileThroughputBench(evS, feed, "dedup",
           StreamingPipelines.dedupStream,
           org.apache.spark.sql.streaming.OutputMode.Append()),
         // stateful per-key sessionization — the reference's core
         // stream-parallelism characteristic (keyed state + event time)
-        () => StreamingPipelines.fileThroughputBench(s, feed, "sessionize",
+        () => StreamingPipelines.fileThroughputBench(evS, feed, "sessionize",
           df => StreamingPipelines.sessionize(df.as[Ev]).toDF(),
           org.apache.spark.sql.streaming.OutputMode.Append()),
         // the composed Fragment→Refine→Deduplicate→Compress→Reorder
@@ -175,15 +186,16 @@ object StreamingOps {
           // resident index, built ONCE before the leg's stream (the
           // reference's mkdb posture): each trigger otherwise
           // recomputed the corpus buckets and 128-plane sketches
-          val idx = Similarity.ferretIndex(emb)
-          StreamingPipelines.foreachBatchThroughputBench(s, qvFeed, "ferret",
+          val e = Similarity.emb(ferretS, dir)
+          val idx = Similarity.ferretIndex(e)
+          StreamingPipelines.foreachBatchThroughputBench(ferretS, qvFeed, "ferret",
             { (b, _) =>
               prevCkpt.foreach(id => s.sparkContext.getPersistentRDDs
                 .get(id).foreach(_.unpersist(blocking = false)))
               // cache: the search reads the batch in three plan branches
               val q = b.cache()
               val out =
-                try Similarity.ferretSearchIndexed(idx, emb, q,
+                try Similarity.ferretSearchIndexed(idx, e, q,
                     broadcastQueries = true)
                   .localCheckpoint(true) // eager — q fully consumed here
                 finally { q.unpersist(blocking = false): Unit }
@@ -194,65 +206,30 @@ object StreamingOps {
             })
         })
       val tl0 = System.nanoTime()
-      val legTimed = legs.zipWithIndex.map { case (l, i) =>
-        () => {
-          val t0 = System.nanoTime()
-          try l() finally StreamingPipelines.phase(s"rate-bench leg $i", t0)
-        }
-      }
-      val legs2 = legTimed
-      // Volume-derived inner-batch conf for the WHOLE drain (the r17
-      // ferretInnerConf rule, extended from single-key drains to this
-      // key's concurrent legs): the foreachBatch legs' batch plans run
-      // on whatever the session holds when they execute — without this
-      // every ~100-row five-stage trigger and every ~200-query ferret
-      // trigger shuffled into the session default's 32 partitions
-      // (measured: ~1 s/trigger of pure task overhead, the identical
-      // pathology the r17 soak fix measured). Scoping the shared
-      // session is race-free HERE because the conf is ONE value
-      // derived from the LARGEST per-trigger volume any leg carries
-      // (set before any leg starts, restored after every leg has
-      // stopped — legs only ever observe the same scoped value), and
-      // the stateful legs' state sizing already floors at the same
-      // value via statePartsFor. At certification volume the rule
-      // returns the session default and AQE stays on — a no-op.
-      val evPerTrigger = feed.rows / math.max(1, feed.slices)
-      val docPerTrigger = docFeed.rows / math.max(1, docFeed.slices)
-      val qPerTrigger = math.max(1L, qvFeed.rows / math.max(1, qvFeed.slices))
-      val nCorpus = math.max(1L, emb.count())
-      val ferretConf = ferretInnerConf(s, nCorpus, qPerTrigger)
-      val rowParts = StreamingPipelines.statePartsFor(s,
-        math.min(Int.MaxValue.toLong, math.max(evPerTrigger, docPerTrigger)).toInt)
-      val innerParts = math.max(rowParts,
-        ferretConf("spark.sql.shuffle.partitions").toInt)
-      val aqeOff = ferretConf.contains("spark.sql.adaptive.enabled") &&
-        math.max(evPerTrigger, docPerTrigger) < InnerAqeMinCandidates
-      val drainConf =
-        Map("spark.sql.shuffle.partitions" -> innerParts.toString) ++
-          (if (aqeOff) Map("spark.sql.adaptive.enabled" -> "false") else Map.empty)
-      val results = StreamingPipelines.withScopedConf(s, drainConf) {
-        if (sys.env.get("GRAFT_RATE_SEQUENTIAL").contains("1")) legs2.map(_())
-        else {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.util.Try
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.global
-          // each leg wrapped in Try (r16 ADVICE): a bare
-          // Future.sequence fails fast on the first leg error, and the
-          // finally block below would then delete the feed directories
-          // while the other four streaming queries were still running
-          // over them — cascading secondary failures plus leaked live
-          // queries masking the original error. Awaiting ALL legs'
-          // completion (success or failure) first means every query
-          // has stopped (fileThroughputBench stops its query in its
-          // own finally) before any feed dir is reclaimed; the first
-          // failure then surfaces with its real cause.
-          val settled = Await.result(
-            Future.sequence(legs2.map(l => Future(Try(l())))), Duration.Inf)
-          settled.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
-          settled.map(_.get)
-        }
+      val results = {
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.util.Try
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.global
+        // each leg wrapped in Try (r16 ADVICE): a bare
+        // Future.sequence fails fast on the first leg error, and the
+        // finally block below would then delete the feed directories
+        // while the other four streaming queries were still running
+        // over them — cascading secondary failures plus leaked live
+        // queries masking the original error. Awaiting ALL legs'
+        // completion (success or failure) first means every query
+        // has stopped (fileThroughputBench stops its query in its
+        // own finally) before any feed dir is reclaimed; the first
+        // failure then surfaces with its real cause.
+        val settled = Await.result(Future.sequence(legs.zipWithIndex.map { case (l, i) =>
+          Future(Try {
+            val t0 = System.nanoTime()
+            try l() finally StreamingPipelines.phase(s"rate-bench leg $i", t0)
+          })
+        }), Duration.Inf)
+        settled.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
+        settled.map(_.get)
       }
       StreamingPipelines.phase("rate-bench all legs", tl0): Unit
       s.createDataFrame(results)
@@ -359,9 +336,9 @@ object StreamingOps {
     * per-trigger samples (the derived-metric treatment the dedup soak
     * got in r16). GRAFT_SOAK_RATE sets queries/s (default 100),
     * GRAFT_SOAK_FERRET_SECONDS the wall (default 8 at a 500 ms
-    * trigger — ~14-16 samples at the measured ~2/s cadence),
-    * GRAFT_SOAK_STATE_PARTS the cluster-shaped shuffle-partition
-    * count, as for the dedup soak. */
+    * trigger — ~14-16 samples at the measured ~2/s cadence). The
+    * stream holds no state, so GRAFT_SOAK_STATE_PARTS (the dedup
+    * soak's state layout) does not apply here. */
   def streamSoakFerret(s: SparkSession, dir: String): DataFrame = {
     // default wall 8 s: the soak samples at ~2/s (500 ms cadence with
     // ~500 ms per-trigger exec at bench SF), so 8 s clears the n >= 12
@@ -372,24 +349,26 @@ object StreamingOps {
     val secs = sys.env.get("GRAFT_SOAK_FERRET_SECONDS")
       .orElse(sys.env.get("GRAFT_SOAK_SECONDS")).map(_.toInt).getOrElse(8)
     val tc0 = System.nanoTime()
-    val e = Similarity.emb(s, dir).localCheckpoint(true)
-    val n = math.max(1L, e.count())
-    val corpusQ = e.select(col("vec_id").as("query_id"), col("v").as("qv"))
+    val n = math.max(1L, Similarity.emb(s, dir).count())
     val rate = sys.env.get("GRAFT_SOAK_RATE").map(_.toInt).getOrElse(100)
     val qPerTrigger = math.max(1L, rate.toLong * 500 / 1000)
+    // the per-trigger search binds to the session of the corpus
+    // frames: corpus, index and stream live on one copy carrying
+    // ferretInnerConf
+    val fs = graft.Sessions.withSettings(s, ferretInnerConf(s, n, qPerTrigger))
+    val e = Similarity.emb(fs, dir).localCheckpoint(true)
+    val corpusQ = e.select(col("vec_id").as("query_id"), col("v").as("qv"))
     val tc1 = StreamingPipelines.phase("ferret-soak corpus ckpt+count", tc0)
     // resident index, built ONCE before the stream (the reference's
     // mkdb posture): each trigger otherwise recomputed the corpus
     // buckets and 128-plane sketches before touching its ~50-row batch
     val idx = Similarity.ferretIndex(e)
     StreamingPipelines.phase("ferret-soak index build", tc1): Unit
-    s.createDataFrame(StreamingPipelines.ferretRateSoak(s, secs,
+    s.createDataFrame(StreamingPipelines.ferretRateSoak(fs, secs,
       queriesPerSec = rate,
       attach = b => b.select((col("value") % n).as("query_id")).join(corpusQ, "query_id"),
       search = q => Similarity.ferretSearchIndexed(idx, e, q, broadcastQueries = true),
-      stateParts = sys.env.get("GRAFT_SOAK_STATE_PARTS").map(_.toInt),
-      triggerMillis = 500,
-      innerConf = ferretInnerConf(s, n, qPerTrigger)))
+      triggerMillis = 500))
   }
 
   /** Session settings for a per-trigger ferret batch search, derived
@@ -400,10 +379,10 @@ object StreamingOps {
     *   - shuffle partitions: one per ~250k candidate rows, floor 4,
     *     capped at the session default (a cluster-shaped default is
     *     never exceeded). The foreachBatch plan binds to the session
-    *     the corpus frames were built on — NOT the stream's clone —
-    *     so without this every ~100-row trigger shuffled into the
-    *     full session default (32 partitions of task overhead per
-    *     tiny stage, ~1 s/trigger measured at sf0.01).
+    *     the corpus frames were built on, so without this every
+    *     ~100-row trigger shuffled into the full session default (32
+    *     partitions of task overhead per tiny stage, ~1 s/trigger
+    *     measured at sf0.01).
     *   - AQE: off below [[InnerAqeMinCandidates]] candidate rows.
     *     AQE re-plans at every exchange via a blocking stage
     *     materialization; on a sub-second batch those barriers cost
@@ -411,8 +390,8 @@ object StreamingOps {
     *     partitions) and there is nothing to adapt — partitioning is
     *     already volume-derived. Large batches keep AQE: skew/coalesce
     *     decisions matter exactly when the per-trigger volume is big.
-    * Scoped by the caller via [[StreamingPipelines.withScopedConf]];
-    * single-key drains only (never under concurrent legs). */
+    * A caller applies them as a [[graft.Sessions.withSettings]] copy
+    * on which it builds the corpus frames and the stream. */
   private[operators] val InnerAqeMinCandidates = 2000000L
   private[operators] def ferretInnerConf(s: SparkSession, corpusN: Long,
                                          qPerTrigger: Long): Map[String, String] = {
@@ -454,39 +433,43 @@ object StreamingOps {
     * result-sized on the driver. The oracle is sink-agnostic. */
   private[operators] val SmallCorpusRows = 1000000L
 
-  private def drainToMemory(s: SparkSession, name: String)
-      (start: String => org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
-    val sinkName = s"${name}_sink_${System.nanoTime()}"
-    val q = start(sinkName)
-    q.awaitTermination()
-    s.table(sinkName)
-  }
-
-  /** Bounded parquet sink for the oracled streaming drains: the
-    * memory sink collects every output row onto the driver —
-    * stream_sessions at sf1 was a first-order contributor to the 48 g
-    * driver heap the full-scale suite needed. An append-mode parquet
-    * sink keeps results in executor-written files; the returned frame
-    * READS them lazily, so nothing result-sized ever resides on the
-    * driver. The sink dir is a
-    * [[graft.Stores]] scratch dir, so it lives as long as the session
-    * that consumes the frame and goes with it at `stop()`. */
-  private def drainToParquet(s: SparkSession, name: String,
-                             schema: org.apache.spark.sql.types.StructType)
-      (start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
-    val base = graft.Stores.scratch(s, name)
-    val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
-    val q = start(outDir, ckpt)
-    q.awaitTermination()
-    // a drain that committed no output files leaves a parquet dir
-    // Spark cannot infer a schema from — the memory sink this
-    // replaced returned an EMPTY frame there (degenerate corpus:
-    // no events, or no window ever closes); reproduce that contract
-    // with the caller-declared schema instead of crashing the key
-    val hasFiles = Option(new java.io.File(outDir).listFiles)
-      .exists(_.exists(f => f.getName.startsWith("part-") && f.length > 0))
-    if (hasFiles) s.read.schema(schema).parquet(outDir)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** Drain `sdf`, an append-mode stream, with Trigger.AvailableNow
+    * into the sink [[SmallCorpusRows]] picks for `nEvents` source
+    * rows. The memory sink's table lives on the session that started
+    * the stream (`sdf`'s).
+    *
+    * The parquet sink bounds the driver: the memory sink collects
+    * every output row onto the driver — stream_sessions at sf1 was a
+    * first-order contributor to the 48 g driver heap the full-scale
+    * suite needed. An append-mode parquet sink keeps results in
+    * executor-written files; the returned frame READS them lazily (on
+    * `s`), so nothing result-sized ever resides on the driver. The
+    * sink dir is a [[graft.Stores]] scratch dir, so it lives as long
+    * as the session that consumes the frame and goes with it at
+    * `stop()`. */
+  private def drainAppend(s: SparkSession, name: String, sdf: DataFrame,
+                          nEvents: Long): DataFrame = {
+    val w = sdf.writeStream.outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    if (nEvents < SmallCorpusRows) {
+      val sinkName = s"${name}_sink_${System.nanoTime()}"
+      w.format("memory").queryName(sinkName).start().awaitTermination()
+      sdf.sparkSession.table(sinkName)
+    } else {
+      val base = graft.Stores.scratch(s, name)
+      val outDir = s"$base/out"
+      w.format("parquet").option("path", outDir)
+        .option("checkpointLocation", s"$base/ckpt").start().awaitTermination()
+      // a drain that committed no output files leaves a parquet dir
+      // Spark cannot infer a schema from — the memory sink this
+      // replaced returned an EMPTY frame there (degenerate corpus:
+      // no events, or no window ever closes); reproduce that contract
+      // with the stream's schema instead of crashing the key
+      val hasFiles = Option(new java.io.File(outDir).listFiles)
+        .exists(_.exists(f => f.getName.startsWith("part-") && f.length > 0))
+      if (hasFiles) s.read.schema(sdf.schema).parquet(outDir)
+      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sdf.schema)
+    }
   }
 
   /** Admission control sized to the corpus (r16): a FIXED 25k-row
@@ -501,11 +484,21 @@ object StreamingOps {
     * every real window at the end), which is what the DuckDB batch
     * oracle proves. */
   def streamReplay(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.DecimalType
     val nEvents = Tables.events(s, dir).count()
     val rowsPerTrigger = math.max(25000L, (nEvents + 15) / 16)
     val logDir = graft.sources.ReplayLog.ingestOnce(s, dir, nParts = 8)
+    // state partitions sized to the trigger volume (the statePartsFor
+    // rule every harness uses): every state partition pays a store
+    // commit per trigger, and the default session count (32 here,
+    // 200+ on a cluster) for a ~37k-row trigger is mostly near-empty
+    // commit machinery — per-trigger stateful stages measured ~1 s of
+    // wall with under 1 s of TOTAL task CPU across 32 tasks at sf0.1.
+    // statePartsFor grows with the trigger volume, so certification-
+    // scale runs keep the session default. The stream reads from its
+    // own session copy carrying that count.
+    val rs = StreamingPipelines.withStateParts(s, StreamingPipelines.statePartsFor(s,
+      math.min(rowsPerTrigger, Int.MaxValue.toLong).toInt))
     // NO pre-agg filter on the control records: a filter between
     // withWatermark and the agg is pushed BELOW the EventTimeWatermark
     // node by PushPredicateThroughNonJoin (the predicate doesn't
@@ -515,7 +508,7 @@ object StreamingOps {
     // window NEVER closes (watermark peaks 1 h below the sentinel
     // ts), so it cannot reach the append-mode sink; the post-sink
     // batch filter below is defensive.
-    val sdf = s.readStream.format("graft.sources.ReplayLogProvider")
+    val sdf = rs.readStream.format("graft.sources.ReplayLogProvider")
       .option("path", logDir)
       .option("maxRowsPerTrigger", rowsPerTrigger.toString).load()
       .withWatermark("ts", "1 hour")
@@ -524,32 +517,8 @@ object StreamingOps {
         sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_type"), col("n_events"), col("sum_value"))
-    // state partitions sized to the trigger volume (the statePartsFor
-    // rule every harness uses): every state partition pays a store
-    // commit per trigger, and the default session count (32 here,
-    // 200+ on a cluster) for a ~37k-row trigger is mostly near-empty
-    // commit machinery — per-trigger stateful stages measured ~1 s of
-    // wall with under 1 s of TOTAL task CPU across 32 tasks at sf0.1.
-    // statePartsFor grows with the trigger volume, so certification-
-    // scale runs keep the session default.
-    val stateParts = StreamingPipelines.statePartsFor(s,
-      math.min(rowsPerTrigger, Int.MaxValue.toLong).toInt)
-    val drained =
-      if (nEvents < SmallCorpusRows)
-        drainToMemory(s, "replay") { sink =>
-          StreamingPipelines.startWithStateParts(s, stateParts) {
-            sdf.writeStream.format("memory").queryName(sink)
-              .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          }
-        }
-      else drainToParquet(s, "replay", sdf.schema) { (outDir, ckpt) =>
-        StreamingPipelines.startWithStateParts(s, stateParts) {
-          sdf.writeStream.format("parquet").option("path", outDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        }
-      }
-    drained.filter(col("event_type") =!= graft.sources.ReplayLog.FlushType)
+    drainAppend(s, "replay", sdf, nEvents)
+      .filter(col("event_type") =!= graft.sources.ReplayLog.FlushType)
   }
 
   val streamReplaySql: String =
@@ -580,36 +549,20 @@ object StreamingOps {
     * offset planning → admission control → watermarked session merge
     * → append emission) is cross-engine-proven. */
   def streamSessions(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val nEvents = Tables.events(s, dir).count()
     val rowsPerTrigger = math.max(25000L, (nEvents + 15) / 16)
     val logDir = graft.sources.ReplayLog.ingestOnce(s, dir, nParts = 8)
-    val sdf = StreamingPipelines.sessionTvfAgg(
-      s.readStream.format("graft.sources.ReplayLogProvider")
-        .option("path", logDir)
-        .option("maxRowsPerTrigger", rowsPerTrigger.toString).load())
     // state partitions sized to the trigger volume — same rationale
     // and rule as stream_replay above (session-window state merges
     // live per partition; near-empty store commits dominate a small
     // trigger at the session default)
-    val stateParts = StreamingPipelines.statePartsFor(s,
-      math.min(rowsPerTrigger, Int.MaxValue.toLong).toInt)
-    val drained =
-      if (nEvents < SmallCorpusRows)
-        drainToMemory(s, "sessions") { sink =>
-          StreamingPipelines.startWithStateParts(s, stateParts) {
-            sdf.writeStream.format("memory").queryName(sink)
-              .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          }
-        }
-      else drainToParquet(s, "sessions", sdf.schema) { (outDir, ckpt) =>
-        StreamingPipelines.startWithStateParts(s, stateParts) {
-          sdf.writeStream.format("parquet").option("path", outDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        }
-      }
-    drained.filter(col("user_id") =!= -1L)
+    val rs = StreamingPipelines.withStateParts(s, StreamingPipelines.statePartsFor(s,
+      math.min(rowsPerTrigger, Int.MaxValue.toLong).toInt))
+    val sdf = StreamingPipelines.sessionTvfAgg(
+      rs.readStream.format("graft.sources.ReplayLogProvider")
+        .option("path", logDir)
+        .option("maxRowsPerTrigger", rowsPerTrigger.toString).load())
+    drainAppend(s, "sessions", sdf, nEvents).filter(col("user_id") =!= -1L)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

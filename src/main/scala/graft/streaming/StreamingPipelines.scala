@@ -624,44 +624,18 @@ object StreamingPipelines {
     Feed(feedDir, written.count(), parts.length, written.schema)
   }
 
-  /** Serializes the shuffle-partition override window around each
-    * measured query's start: StreamExecution clones the session in
-    * its constructor, so a started stream keeps its override — but
-    * two legs starting CONCURRENTLY (streamRateBench since r16) would
-    * race on the shared session conf without this. */
-  private val startLock = new Object
-
-  /** Start a streaming query under a state-partition override scoped
-    * to startup (the fileThroughputBench pattern, shared): the stream
-    * clones the session in its constructor, so the started query keeps
-    * `parts` for its state layout while the shared session is restored
-    * immediately. Serialized on [[startLock]] against concurrent legs.
-    * `parts` is evaluated INSIDE the lock: a count derived from
-    * numShufflePartitions read outside it could observe another leg's
-    * transient override. */
-  def startWithStateParts[T](s: SparkSession, parts: => Int)(start: => T): T =
-    startLock.synchronized {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try { s.conf.set("spark.sql.shuffle.partitions", parts.toString); start }
-      finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-
   /** Drive a pipeline from a DISTRIBUTED file source and measure
     * end-to-end throughput — the reference's items/s metric
     * (bin/parsec_stream logs) with no driver-side event collection:
     * the stream replays the feed one slice per micro-batch
     * (maxFilesPerTrigger=1) in mtime order. This is the scale path —
-    * the events never pass through the driver. */
+    * the events never pass through the driver. The stream reads from
+    * `s`, so its state layout is `s`'s shuffle-partition count: the
+    * caller passes a [[withStateParts]] copy sized to the trigger
+    * volume. */
   def fileThroughputBench(s: SparkSession, feed: Feed,
                           name: String, pipeline: DataFrame => DataFrame,
                           mode: OutputMode = OutputMode.Update()): BenchResult = {
-    // state partitions sized to micro-batch volume (≈2k rows per
-    // partition per batch, floor 4): every state partition pays a
-    // store commit per batch, so partitions far in excess of the
-    // batch size measure commit overhead instead of the pipeline. A
-    // query pins its state layout at first start (the setting is
-    // per-query, restored after start) — on a real cluster this is
-    // the state-partition count you'd size to the trigger volume.
     // sink is `noop` (r15 verdict #3): the previous memory sink
     // collected every output row onto the driver — at sf1 the
     // window_agg/sessionize legs alone needed a 48 g driver heap.
@@ -669,13 +643,10 @@ object StreamingPipelines {
     // executors and reports the per-batch count through
     // SinkProgress.numOutputRows, so rows_out keeps its meaning
     // (cumulative emitted rows) with nothing held on the driver.
-    val q = startWithStateParts(s,
-        statePartsFor(s, (feed.rows / math.max(1, feed.slices)).toInt)) {
-      pipeline(s.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed.path))
-        .writeStream.format("noop")
-        .outputMode(mode).start()
-    }
+    val q = pipeline(s.readStream.schema(feed.schema)
+        .option("maxFilesPerTrigger", 1).parquet(feed.path))
+      .writeStream.format("noop")
+      .outputMode(mode).start()
     try {
       // clock starts AFTER query startup, matching throughputBench —
       // the two harnesses' rows_per_sec stay comparable
@@ -739,12 +710,9 @@ object StreamingPipelines {
     // cluster-shaped state-store partition count (e.g. 400 ≈ 100
     // executors × 4 cores per SURVEY §9's deployment map) — state
     // partitioning is fixed at first checkpoint, so the 100×-shaped
-    // soak must SET it, not inherit the local session's 32. The
-    // override is scoped to query STARTUP (rateSoakRun restores it
-    // right after start() — StreamExecution clones the session in
-    // its constructor, so the running stream keeps the override
-    // while concurrent batch queries on the shared session never
-    // see it for the soak's duration; ADVICE r13).
+    // soak must SET it, not inherit the local session's 32. The count
+    // lives on the soak's own session copy (rateSoakRun), so
+    // concurrent batch queries on the shared session never see it.
     rateSoakRun(s, soakSecs, rowsPerSec, nKeys,
       sys.env.get("GRAFT_SOAK_STATE_PARTS").map(_.toInt))
   }
@@ -762,17 +730,6 @@ object StreamingPipelines {
       late_median_ms_per_row: Double, mid_median_blocks: Long,
       late_median_blocks: Long, flat_ok: Boolean)
 
-  /** Run `body` with session-conf entries set, restoring the previous
-    * values after — for a harness that owns the session while it runs
-    * (a single-key drain; NOT safe under concurrent legs sharing the
-    * session). Used to scope volume-derived inner-batch settings
-    * (shuffle partitions, the tiny-batch AQE gate) to one key. */
-  def withScopedConf[T](s: SparkSession, kv: Map[String, String])(body: => T): T = {
-    val prev = kv.keys.map(k => k -> s.conf.get(k)).toMap
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
-  }
-
   /** Sustained-rate soak for a STATELESS foreachBatch pipeline — the
     * ferret stream's continuous posture (the reference's 6-stage
     * pipeline runs unbounded; bin/parsec_stream drives it at rate).
@@ -784,19 +741,19 @@ object StreamingPipelines {
     * ms-per-input-row within 30% of the mid-third's AND the
     * late-third median block count no higher than the mid-third's
     * plus 2 (blocks held by the static corpus are constant;
-    * per-trigger residue would grow linearly). `stateParts` starts
-    * the query under a cluster-shaped shuffle-partition count, same
-    * scoping as [[rateSoak]]. `triggerMillis` sets the trigger
-    * cadence — the registered stream_soak_ferret key runs at 500 ms
-    * so the n ≥ 12 sample floor clears in ~8 s of plateau (the r16
+    * per-trigger residue would grow linearly). The per-trigger search
+    * plan takes the settings of the session its corpus frames were
+    * read on, so a caller sizes it by building `search`'s frames, and
+    * passing `s`, as one [[graft.Sessions.withSettings]] copy.
+    * `triggerMillis` sets the trigger cadence — the registered
+    * stream_soak_ferret key runs at 500 ms so the n ≥ 12 sample
+    * floor clears in ~8 s of plateau (the r16
     * verdict #7 cadence rule: derive samples from the trigger rate,
     * not longer wall); the flatness CLAIM is cadence-independent. */
   def ferretRateSoak(s: SparkSession, soakSecs: Int, queriesPerSec: Int,
                      attach: DataFrame => DataFrame,
                      search: DataFrame => DataFrame,
-                     stateParts: Option[Int] = None,
-                     triggerMillis: Int = 1000,
-                     innerConf: Map[String, String] = Map.empty): Seq[StatelessSoakRow] = {
+                     triggerMillis: Int = 1000): Seq[StatelessSoakRow] = {
     // rate-micro-batch for the same reason as [[rateMicroBatch]]: the
     // plain rate source's 1-second offset granularity left every
     // sub-second trigger but one per second EMPTY, so the sample rate
@@ -804,22 +761,7 @@ object StreamingPipelines {
     // extension cap
     val src = rateMicroBatch(s,
       math.max(1L, queriesPerSec.toLong * triggerMillis / 1000L), triggerMillis)
-    // innerConf: session settings for the per-trigger BATCH search
-    // (shuffle partitions derived from trigger volume, the tiny-batch
-    // AQE gate). The foreachBatch body's plan binds to the session the
-    // CORPUS frames were built on (this one), not the stream's clone —
-    // so the stateParts startup override never reaches it, and every
-    // ~100-row trigger shuffled into the session default's partitions
-    // (32 here, 200+ on a cluster). Measured at sf0.01: 32 → 4
-    // partitions cuts per-trigger exec ~1000 → ~350 ms, which is the
-    // difference between clearing the n >= 12 sample floor inside the
-    // soak wall and starving it. The caller derives the values from
-    // trigger volume (rate × trigger × probe fan-out), so they scale
-    // with the work per trigger, not with the box. Scoped to the
-    // soak's whole duration (set before start, restored after stop) —
-    // the soak owns the session while it runs.
     val tf0 = System.nanoTime()
-    withScopedConf(s, innerConf) {
     // Warm the batch-search plan (analysis + codegen + broadcast
     // machinery) BEFORE the stream starts: the first trigger otherwise
     // pays ~3-5 s of cold JIT inside the soak wall, and since the soak
@@ -833,7 +775,7 @@ object StreamingPipelines {
       search(attach(warmDf)).write.format("noop").mode("overwrite").save()
     } catch { case scala.util.control.NonFatal(_) => () }
     val tf1 = phase("ferret-soak plan-warm", tf0)
-    def start = src.writeStream
+    val q = src.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         // cache the trigger batch: the two-phase search references
         // the query batch in THREE plan branches (bucket probe,
@@ -847,7 +789,6 @@ object StreamingPipelines {
       .trigger(org.apache.spark.sql.streaming.Trigger
         .ProcessingTime(s"$triggerMillis milliseconds"))
       .start()
-    val q = stateParts.fold(start)(p => startWithStateParts(s, p)(start))
     val tf2 = phase("ferret-soak start()", tf1)
     val samples = scala.collection.mutable.LinkedHashMap
       .empty[Long, (Double, Long, Double, Double, Int, Long)]
@@ -891,7 +832,6 @@ object StreamingPipelines {
       StatelessSoakRow(i, el, inRows, rps, ms, ms / math.max(1L, inRows),
         blocks, mem, n.toLong, midMs, lateMs, midBlocks, lateBlocks, flat)
     }
-    }
   }
 
   /** Dev diagnostic: GRAFT_SOAK_PHASES=1 prints per-phase wall times
@@ -931,7 +871,16 @@ object StreamingPipelines {
 
   private def rateSoakRun(s: SparkSession, soakSecs: Int, rowsPerSec: Int,
                           nKeys: Int, stateParts: Option[Int] = None): Seq[SoakRow] = {
-    val src = rateMicroBatch(s, math.max(1L, rowsPerSec / 4L), advanceMillis = 250)
+    // default state sizing follows the SAME trigger-volume rule as
+    // the throughput harnesses (statePartsFor: ~2k rows/partition
+    // per trigger, floor 4): a 250 ms trigger at 20k rows/s
+    // carries ~5k rows, so 32 session-default partitions meant 32
+    // near-empty store commits per trigger — the commit machinery
+    // dominated the trigger and halved the soak's sample rate.
+    // GRAFT_SOAK_STATE_PARTS still overrides for cluster-shaped
+    // certification runs. The soak runs on its own session copy.
+    val ss = withStateParts(s, stateParts.getOrElse(statePartsFor(s, rowsPerSec / 4)))
+    val src = rateMicroBatch(ss, math.max(1L, rowsPerSec / 4L), advanceMillis = 250)
     // 1 s windows + 1 s delay + 250 ms triggers (r16 verdict #7,
     // halving the r15 cadence again): the plateau exists once the
     // first windows close (~2.5 s in) and the sample rate is ~4/s, so
@@ -960,27 +909,15 @@ object StreamingPipelines {
     // cache with the streaming incremental plans; the state-store init
     // it can't warm is per-partition and cheap. Best-effort.
     try {
-      import s.implicits._
       soakAgg(s.range(0, 64)
         .select(current_timestamp().as("timestamp"), col("id").as("value")))
         .write.format("noop").mode("overwrite").save()
     } catch { case scala.util.control.NonFatal(_) => () }
     val tp0 = phase("dedup-soak plan-warm", tw0)
-    // default state sizing follows the SAME trigger-volume rule as
-    // the throughput harnesses (statePartsFor: ~2k rows/partition
-    // per trigger, floor 4): a 250 ms trigger at 20k rows/s
-    // carries ~5k rows, so 32 session-default partitions meant 32
-    // near-empty store commits per trigger — the commit machinery
-    // dominated the trigger and halved the soak's sample rate.
-    // GRAFT_SOAK_STATE_PARTS still overrides for cluster-shaped
-    // certification runs, exactly as before.
-    val q = startWithStateParts(s,
-        stateParts.getOrElse(statePartsFor(s, rowsPerSec / 4))) {
-      agg.writeStream.format("noop")
-        .outputMode(OutputMode.Update())
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
-        .start()
-    }
+    val q = agg.writeStream.format("noop")
+      .outputMode(OutputMode.Update())
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
+      .start()
     val tp1 = phase("dedup-soak start()", tp0)
     val samples = scala.collection.mutable.LinkedHashMap
       .empty[Long, (Double, Long, Double, Long, Long, Boolean)]
@@ -1046,6 +983,12 @@ object StreamingPipelines {
     math.max(4, math.min(
       s.sessionState.conf.numShufflePartitions, batchSize / 2000))
 
+  /** A copy of `s` whose streams keep `parts` state partitions: a
+    * query fixes its state layout from its session's shuffle-partition
+    * count at first start. */
+  def withStateParts(s: SparkSession, parts: Int): SparkSession =
+    graft.Sessions.withSettings(s, Map("spark.sql.shuffle.partitions" -> parts.toString))
+
   /** Drive a pipeline with MemoryStream micro-batches of `batchSize`
     * events and measure end-to-end throughput — the reference's
     * items/s metric (bin/parsec_stream logs). MemoryStream feeds from
@@ -1056,25 +999,24 @@ object StreamingPipelines {
                       name: String, pipeline: DataFrame => DataFrame,
                       mode: OutputMode = OutputMode.Update(),
                       statePartsOverride: Option[Int] = None): BenchResult = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev]
     // state partitions sized to the trigger volume, as in
     // fileThroughputBench — excess partitions measure per-batch store
-    // commits, not the pipeline (setting is per-query, restored).
-    // The override is the knob sweep's parallelism axis — the
-    // reference's per-stage replica count (-t), which in micro-batch
-    // form is the number of parallel state-store tasks per trigger.
+    // commits, not the pipeline. The stream runs on its own session
+    // copy, so the count is this query's alone. The override is the
+    // knob sweep's parallelism axis — the reference's per-stage
+    // replica count (-t), which in micro-batch form is the number of
+    // parallel state-store tasks per trigger.
+    val qs = withStateParts(s, statePartsOverride.getOrElse(statePartsFor(s, batchSize)))
+    import qs.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = qs.sqlContext
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev]
     // noop sink + SinkProgress row counts, as in fileThroughputBench
     // (this feed is driver-bounded by construction — the sweep caps
     // events — but the two harnesses should report rows_out from the
     // same mechanism so their numbers stay comparable)
-    val q = startWithStateParts(s,
-        statePartsOverride.getOrElse(statePartsFor(s, batchSize))) {
-      pipeline(source.toDF())
-        .writeStream.format("noop")
-        .outputMode(mode).start()
-    }
+    val q = pipeline(source.toDF())
+      .writeStream.format("noop")
+      .outputMode(mode).start()
     val t0 = System.nanoTime()
     var batches = 0L
     events.grouped(batchSize).foreach { b =>

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.StructType
   * library needs to ship custom codegen expressions without a
   * SparkSessionExtensions install (the driver owns session creation
   * here, so extension registration isn't available), plus the
-  * frame-over-Catalyst-rows constructor that is just as gated.
+  * frame-over-Catalyst-rows constructor and the session copy, which
+  * are just as gated.
   */
 object ColumnBridge {
   /** Wrap a Catalyst expression as a public Column. */
@@ -41,4 +42,10 @@ object ColumnBridge {
                 schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** A copy of `spark` with its own SQL conf, temp views and function
+    * registry, sharing the SparkContext and cached data: the copy
+    * `StreamExecution` makes of the session that starts a stream. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

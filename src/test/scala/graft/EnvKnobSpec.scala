@@ -16,7 +16,6 @@ class EnvKnobSpec extends AnyFunSuite {
     "GRAFT_BENCH_NOWARM",
     "GRAFT_BENCH_ONLY",
     "GRAFT_FERRET_STAGETIME",
-    "GRAFT_RATE_SEQUENTIAL",
     "GRAFT_SOAK_FERRET_SECONDS",
     "GRAFT_SOAK_PHASES",
     "GRAFT_SOAK_RATE",

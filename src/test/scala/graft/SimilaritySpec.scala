@@ -840,4 +840,24 @@ class SimilaritySpec extends SparkSpec {
         s"projected variance != eigenvalue at k=$k: $varp vs ${lam(k)}")
     }
   }
+
+  test("zMoments: mean and sd are bit-identical at 1 and 8 partitions on order-sensitive data") {
+    import spark.implicits._
+    // a 3e8 value squared sits at 9e16, where a double's ulp is 16:
+    // each ~4.0 square added after it is lost, while the same squares
+    // summed first survive — the double sums depend on order
+    val xs = 3e8 +: (1 to 63).map(i => 2.0 + i * 1e-3)
+    val sq = xs.map(x => x * x)
+    assert(sq.foldLeft(0.0)(_ + _) != sq.reverse.foldLeft(0.0)(_ + _),
+      "the data must make double sums order-sensitive")
+    val df = xs.map(x => Seq(x, -x / 3)).toDF("v")
+    val (mu1, sd1) = Similarity.zMoments(df.repartition(1), 2)
+    val (mu8, sd8) = Similarity.zMoments(df.repartition(8), 2)
+    assert(mu1 == mu8 && sd1 == sd8, s"1 part: $mu1 $sd1; 8 parts: $mu8 $sd8")
+    // and they are the population moments
+    val m = xs.sum / xs.size
+    assert(math.abs(mu1(0) - m) <= 1e-9 * m)
+    val sd = math.sqrt(xs.map(x => (x - m) * (x - m)).sum / xs.size)
+    assert(math.abs(sd1(0) - sd) <= 1e-6 * sd)
+  }
 }
