@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.StreamingOps
-
 /** Benchmark main — one JSON line on stdout (driver contract).
   * Forces full materialization of every query through the noop sink
   * (a bare count() would let Catalyst prune the computed columns and
@@ -59,6 +57,10 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // optional key filter for local iteration (comma-separated names);
+    // unset → the full driver-contract bench. Parsed before the session
+    // starts, so an unknown name fails at once.
+    val selected = Catalog.selection("GRAFT_BENCH_ONLY", sys.env.get("GRAFT_BENCH_ONLY"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.contractLocal("graft-bench")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -83,56 +85,33 @@ object Bench {
     def measured(thunk: => Either[String, Double]): (Either[String, Double], PassEnv) =
       EnvTelemetry.measured(thunk)
 
-    // optional key filter for local iteration (comma-separated names);
-    // unset → the full driver-contract bench
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-
-    // Pre-warm every session-scoped ONE-TIME store at the TARGET SF
-    // before anything is timed (minhash signatures, n-gram edges,
-    // media files, storage layouts). These are one-ingest-many-queries
-    // artifacts whose build otherwise lands inside whichever family
-    // member's first measured pass runs first — the r11 oscillation:
-    // dedup_clusters_lsh measured 6.4 s and 20.5 s on identical code
-    // depending on who paid the store build that sweep. The pre-warm
-    // cost is printed, never added to any query's number.
-    // GRAFT_BENCH_NOWARM=1 skips it for filtered local iteration on
-    // queries that own no store; a pre-warm FAILURE never aborts the
-    // bench — the owning family's first pass then pays (and reports)
-    // the build, exactly the pre-fix behavior, and the driver still
-    // gets its one JSON line.
-    if (!sys.env.get("GRAFT_BENCH_NOWARM").contains("1")) {
-      val t0 = System.nanoTime()
-      // each family carries the key prefixes of its store CONSUMERS:
-      // with GRAFT_BENCH_ONLY set, a family whose keys are all
-      // filtered out is skipped automatically (ADVICE r12: a filtered
-      // local run used to build every store unless the user also
-      // remembered GRAFT_BENCH_NOWARM=1). Prefixes may over-match —
-      // that only costs an extra warm, never a wrong skip.
-      def wanted(prefixes: Seq[String]): Boolean =
-        only.forall(keys => keys.exists(k => prefixes.exists(k.startsWith)))
-      Seq[(String, Seq[String], () => Unit)](
-        ("dedup", Seq("dedup_", "chunk_", "file_", "graph_", "text_", "stream_"),
-          () => graft.operators.Dedup.prewarmStores(spark, sfDir)),
-        ("multimodal", Seq("mm_", "ferret_", "emd_"),
-          () => graft.operators.Multimodal.prewarmStores(spark, sfDir)),
-        ("storage-layout", Seq("q_"),
-          () => graft.operators.StorageLayout.prewarmStores(spark, sfDir)),
-        ("similarity", Seq("ann_", "dedup_clusters_knn", "dedup_semantic", "vec_pca"),
-          () => graft.operators.Similarity.prewarmStores(spark, sfDir)),
-        ("curation", Seq("dedup_canonical", "dedup_cluster_stats", "dedup_weights"),
-          () => graft.operators.Curation.prewarmStores(spark, sfDir))
-      ).foreach { case (tag, prefixes, warm) =>
-        if (wanted(prefixes)) {
-          try warm() catch {
-            case e: Throwable => System.err.println(
-              s"[bench] $tag pre-warm failed (non-fatal, family pays in-pass): ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
-          }
-        } else System.err.println(s"[bench] $tag pre-warm skipped (no family key in GRAFT_BENCH_ONLY)")
-      }
-      System.err.println(
-        f"[bench] one-time store pre-warm: ${(System.nanoTime() - t0) / 1e9}%.2f s (untimed)")
+    // Pre-warm the session-scoped ONE-TIME stores the selected keys
+    // read ([[Catalog.storesOf]]), at the TARGET SF, before anything
+    // is timed (minhash signatures, n-gram edges, media files, storage
+    // layouts). These are one-ingest-many-queries artifacts whose build
+    // otherwise lands inside whichever reader's first measured pass
+    // runs first — the r11 oscillation: dedup_clusters_lsh measured
+    // 6.4 s and 20.5 s on identical code depending on who paid the
+    // store build that sweep. The pre-warm cost is printed, never added
+    // to any query's number. A pre-warm FAILURE never aborts the bench
+    // — the hook's first reader then pays (and reports) the build, and
+    // the driver still gets its one JSON line.
+    val hooks = Catalog.storesOf(selected)
+    val t0 = System.nanoTime()
+    Catalog.Store.all.foreach { st =>
+      if (hooks.contains(st)) {
+        val th = System.nanoTime()
+        try {
+          st.warm(spark, sfDir)
+          System.err.println(f"[bench] ${st.tag} pre-warm: ${(System.nanoTime() - th) / 1e9}%.2f s")
+        } catch {
+          case e: Throwable => System.err.println(
+            s"[bench] ${st.tag} pre-warm failed (non-fatal, its readers pay in-pass): ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
+        }
+      } else System.err.println(s"[bench] ${st.tag} pre-warm skipped (no selected key reads its stores)")
     }
+    System.err.println(
+      f"[bench] one-time store pre-warm: ${(System.nanoTime() - t0) / 1e9}%.2f s (untimed)")
     // localCheckpoint blocks from earlier queries stay in the
     // BlockManager until a driver GC lets the ContextCleaner reap
     // them — and the ContextCleaner frees them ASYNCHRONOUSLY, so a
@@ -144,36 +123,30 @@ object Bench {
     def freeBlocks(): Unit =
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = selected.map { key =>
       freeBlocks()
       System.gc() // between queries only: a full GC per pass on a
                   // large warm heap costs more than the blocks it
                   // frees (measured both ways at sf0.1)
-      // the soaks' cost is WALL-CLOCK by construction (a sustained
-      // rate source runs for a fixed duration regardless of SF) — a
-      // warm-up pass would double it for zero codegen benefit; both
-      // soaks warm their own batch plans pre-start instead
-      if (name != "stream_soak" && name != "stream_soak_ferret")
-        once(fn, warmDir) // codegen/classloading warm-up, never measured
+      if (key.kind.warmUp)
+        once(key.build, warmDir) // codegen/classloading warm-up, never measured
       // self-measuring harnesses report their own items/s and latency
       // percentiles, and their wall is fixed micro-batch machinery:
       // repeating them buys no precision, so one measured pass each
-      val nPasses = if (StreamingOps.harnessKeys(name)) 1 else passes
+      val nPasses = if (key.kind.harness) 1 else passes
       // free leaked blocks between PASSES too: a query that
       // checkpoints leaks its blocks into its own later passes (med
       // consistently above min on the checkpoint-heavy queries);
       // freeing happens OUTSIDE the timed section
       val runs = (1 to nPasses).map { _ =>
-        freeBlocks(); measured(once(fn, sfDir))
+        freeBlocks(); measured(once(key.build, sfDir))
       }
       val okPairs = runs.collect { case (Right(t), e) => (t, e) }
       val errs = runs.collect { case (Left(m), _) => m }
       val oks = okPairs.map(_._1)
       val median = if (oks.isEmpty) None
         else Some(oks.sorted.apply((oks.size - 1) / 2))
-      (name, median, errs.headOption.filter(_ => oks.isEmpty), okPairs)
+      (key.name, median, errs.headOption.filter(_ => oks.isEmpty), okPairs)
     }
 
     // ---- load_suspect adjudication (r13 verdict #5, gate widened
@@ -186,8 +159,8 @@ object Bench {
     // concurrent-load window has usually passed) — the headline median
     // stays the sweep number for round-over-round comparability; the
     // isolated time + its env ride in pass_stats for the adjudication.
-    val suspectKeys = results.collect {
-      case (n, Some(t), _, pairs) if !StreamingOps.harnessKeys(n) && suspect(pairs, t) => n
+    val suspectKeys = selected.zip(results).collect {
+      case (key, (n, Some(t), _, pairs)) if !key.kind.harness && suspect(pairs, t) => n
     }
     // rerun budget: the r15 gate flags on spread alone, so a FULLY
     // loaded sweep window could mark dozens of keys — re-running all

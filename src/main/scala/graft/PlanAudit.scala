@@ -5,8 +5,6 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 
-import graft.operators.StreamingOps
-
 /** Post-execution plan-property audit under AQE (r16 verdict #6).
   *
   * PlanHygieneSpec checks every driver-contract query's plan at
@@ -23,8 +21,9 @@ import graft.operators.StreamingOps
   * unpartitioned window. One JSON line out; exit 1 on any offender.
   *
   * Usage: runMain graft.PlanAudit <sfDir>   (GRAFT_AUDIT_ONLY=k1,k2
-  * filters keys for iteration; the self-measuring harnesses are
-  * skipped — their "plan" is a fixed-duration run, not a query.)
+  * filters keys for iteration, and an unknown name fails; the harness
+  * keys ([[Catalog.Kind]]) are skipped — their "plan" is a
+  * fixed-duration run, not a query.)
   */
 object PlanAudit {
 
@@ -49,35 +48,34 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val selected = Catalog.selection("GRAFT_AUDIT_ONLY", sys.env.get("GRAFT_AUDIT_ONLY"))
     val spark = Sessions.contractLocal("graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    val only = sys.env.get("GRAFT_AUDIT_ONLY").map(_.split(",").map(_.trim).toSet)
     val offenders = scala.collection.mutable.ListBuffer[String]()
     var nAudited = 0
     var nFailed = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!StreamingOps.harnessKeys(name) && only.forall(_.contains(name))) {
-        val t0 = System.nanoTime()
-        try {
-          val df = fn(spark, sfDir)
-          // execute to completion so the adaptive plan is FINAL —
-          // noop sink materializes every row executor-side
-          df.write.format("noop").mode("overwrite").save()
-          val found = offendersIn(name, nodes(df.queryExecution.executedPlan))
-          offenders ++= found
-          nAudited += 1
-          System.err.println(f"[plan-audit] $name%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-            (if (found.nonEmpty) s"  OFFENDERS: ${found.mkString("; ")}" else ""))
-        } catch {
-          case e: Throwable =>
-            nFailed += 1
-            System.err.println(s"[plan-audit] $name FAILED: ${e.getMessage}")
-        }
-        // free per-key residue (checkpoint blocks) between keys, the
-        // Bench discipline — an audit run visits every key in one JVM
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+    selected.filterNot(_.kind.harness).foreach { key =>
+      val name = key.name
+      val t0 = System.nanoTime()
+      try {
+        val df = key.build(spark, sfDir)
+        // execute to completion so the adaptive plan is FINAL —
+        // noop sink materializes every row executor-side
+        df.write.format("noop").mode("overwrite").save()
+        val found = offendersIn(name, nodes(df.queryExecution.executedPlan))
+        offenders ++= found
+        nAudited += 1
+        System.err.println(f"[plan-audit] $name%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
+          (if (found.nonEmpty) s"  OFFENDERS: ${found.mkString("; ")}" else ""))
+      } catch {
+        case e: Throwable =>
+          nFailed += 1
+          System.err.println(s"[plan-audit] $name FAILED: ${e.getMessage}")
       }
+      // free per-key residue (checkpoint blocks) between keys, the
+      // Bench discipline — an audit run visits every key in one JVM
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
     }
     def q(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     println(s"""{"audit":"plan_hygiene_aqe","sf_dir":${q(sfDir)},""" +

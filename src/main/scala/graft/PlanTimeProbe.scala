@@ -16,27 +16,27 @@ object PlanTimeProbe {
     val minMs = if (args.length > 1) args(1).toInt else 100
     val spark = Sessions.contractLocal("graft-plantime")
     spark.sparkContext.setLogLevel("ERROR")
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
-      // the streaming harnesses run their whole drain at construction
+    val rows = Catalog.keys.sortBy(_.name)
+      // the stream keys that run their whole drain at construction
       // time — nothing to learn about planning, and they'd dominate
       // the probe's wall
-      .filterNot(_._1.startsWith("stream_"))
-      .flatMap { case (name, fn) =>
+      .filterNot(_.kind.drainsAtBuild)
+      .flatMap { key =>
       try {
         def once(): (Double, Int) = {
           val t0 = System.nanoTime()
-          val df = fn(spark, dir)
+          val df = key.build(spark, dir)
           val plan = df.queryExecution.executedPlan
           ((System.nanoTime() - t0) / 1e9, plan.toString.length)
         }
         val (cold, _) = once()
         val (warm, size) = once()
-        Some((name, cold, warm, size))
+        Some((key.name, cold, warm, size))
       } catch {
         case e: Throwable =>
           // keys whose CONSTRUCTION already executes jobs (harnesses,
           // store builders) can fail or be slow here; report and move on
-          System.err.println(s"[plantime] $name: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(80)}")
+          System.err.println(s"[plantime] ${key.name}: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(80)}")
           None
       }
     }

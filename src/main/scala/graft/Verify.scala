@@ -5,32 +5,30 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // contract session (same builder as Bench/PlanDump/TimeQuery):
-    // correctness runs through the shipped plans
-    val spark = Sessions.contractLocal("graft-verify")
-    new java.io.File(outDir).mkdirs()
-    // optional key filter for local iteration (comma-separated names);
-    // unset → the full driver-contract dump. The requested set is
-    // auto-EXPANDED (to fixpoint) with every query referenced through
-    // a {VERIFY_OUT} value oracle: a filtered run into a reused outDir
+    // optional key filter for local iteration (comma-separated names;
+    // an unknown name fails before the session starts); unset → the
+    // full driver-contract dump. The requested set is auto-EXPANDED
+    // (to fixpoint) with every query referenced through a
+    // {VERIFY_OUT} value oracle: a filtered run into a reused outDir
     // would otherwise leave the referenced dumps stale, silently
     // comparing an included query against a PREVIOUS run's data
     // (e.g. file_dedup's oracle reads file_chunks/*.parquet).
+    val requested = Catalog.selection("GRAFT_VERIFY_ONLY", sys.env.get("GRAFT_VERIFY_ONLY"))
+      .map(_.name).toSet
     val verifyRef = """\{VERIFY_OUT\}/([A-Za-z0-9_]+)/""".r
     def expandRefs(names: Set[String]): Set[String] = {
-      val refs = names.flatMap(n => SparkEntry.oracleSql.get(n).toSeq.flatMap(
-        sql => verifyRef.findAllMatchIn(sql).map(_.group(1))))
+      val refs = names.flatMap(n => verifyRef.findAllMatchIn(SparkEntry.oracleSql(n))
+        .map(_.group(1)))
       if (refs.subsetOf(names)) names else expandRefs(names ++ refs)
     }
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-      .map { requested =>
-        val full = expandRefs(requested)
-        val added = full -- requested
-        if (added.nonEmpty) System.err.println(
-          s"[verify] also regenerating {VERIFY_OUT} dependencies: ${added.toSeq.sorted.mkString(", ")}")
-        full
-      }
+    val only = expandRefs(requested)
+    val added = only -- requested
+    if (added.nonEmpty) System.err.println(
+      s"[verify] also regenerating {VERIFY_OUT} dependencies: ${added.toSeq.sorted.mkString(", ")}")
+    // contract session (same builder as Bench/PlanDump): correctness
+    // runs through the shipped plans
+    val spark = Sessions.contractLocal("graft-verify")
+    new java.io.File(outDir).mkdirs()
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRec))
       f.delete(): Unit
@@ -43,7 +41,7 @@ object Verify {
     // so the file count is not part of the contract
     val co = sys.env.get("GRAFT_VERIFY_COALESCE").map(_.toInt).getOrElse(1)
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(co).write.mode("overwrite")
         .parquet(s"$outDir/$name")

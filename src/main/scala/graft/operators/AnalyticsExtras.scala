@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Catalog.Key
 import graft.Tables
 import graft.functions.SkewFns
 
@@ -979,61 +980,32 @@ object AnalyticsExtras {
       |  CAST(COUNT(*) AS BIGINT) AS n_merged
       |FROM isl GROUP BY user_id, island""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_interval_merge" -> (qIntervalMerge _),
-    "q_recursive" -> (qRecursive _),
-    "q_scd2" -> (qScd2 _),
-    "q_skyline" -> (qSkyline _),
-    "q_retention" -> (qRetention _),
-    "q_funnel" -> (qFunnel _),
-    "q_moving_avg" -> (qMovingAvg _),
-    "q_cube" -> (qCube _),
-    "q_string_agg" -> (qStringAgg _),
-    "q_group_topk" -> (qGroupTopK _),
-    "q_setops" -> (qSetOps _),
-    "q_having" -> (qHaving _),
-    "q_ntile" -> (qNtile _),
-    "q_outer_join" -> (qOuterJoin _),
-    "q_gap_fill" -> (qGapFill _),
-    "q_histogram" -> (qHistogram _),
-    "q_stats" -> (qStats _),
-    "q_skew_salted" -> (qSkewSalted _),
-    "q_fuzzy_join" -> (qFuzzyJoin _),
-    "q_full_outer" -> (qFullOuter _),
-    "q_histogram_eqdepth" -> (qHistogramEqdepth _),
-    "q_window_range" -> (qWindowRange _),
-    "q_anomaly" -> (qAnomaly _),
-    "q_multi_distinct" -> (qMultiDistinct _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "profile_table" -> (profileTable _),
-    "q_percent_rank" -> (qPercentRank _))
-
-  val oracle: Map[String, String] = Map(
-    "q_interval_merge" -> qIntervalMergeSql,
-    "q_recursive" -> qRecursiveSql,
-    "q_scd2" -> qScd2Sql,
-    "q_skyline" -> qSkylineSql,
-    "q_retention" -> qRetentionSql,
-    "q_funnel" -> qFunnelSql,
-    "q_moving_avg" -> qMovingAvgSql,
-    "q_cube" -> qCubeSql,
-    "q_string_agg" -> qStringAggSql,
-    "q_group_topk" -> qGroupTopKSql,
-    "q_setops" -> qSetOpsSql,
-    "q_having" -> qHavingSql,
-    "q_ntile" -> qNtileSql,
-    "q_outer_join" -> qOuterJoinSql,
-    "q_gap_fill" -> qGapFillSql,
-    "q_histogram" -> qHistogramSql,
-    "q_stats" -> qStatsSql,
-    "q_skew_salted" -> qSkewSaltedSql,
-    "q_fuzzy_join" -> qFuzzyJoinSql,
-    "q_full_outer" -> qFullOuterSql,
-    "q_histogram_eqdepth" -> qHistogramEqdepthSql,
-    "q_window_range" -> qWindowRangeSql,
-    "q_anomaly" -> qAnomalySql,
-    "q_multi_distinct" -> qMultiDistinctSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "profile_table" -> profileTableSql,
-    "q_percent_rank" -> qPercentRankSql)
+  val keys: Seq[Key] = Seq(
+    Key("q_interval_merge", qIntervalMerge, qIntervalMergeSql),
+    Key("q_recursive", qRecursive, qRecursiveSql),
+    Key("q_scd2", qScd2, qScd2Sql),
+    Key("q_skyline", qSkyline, qSkylineSql),
+    Key("q_retention", qRetention, qRetentionSql),
+    Key("q_funnel", qFunnel, qFunnelSql),
+    Key("q_moving_avg", qMovingAvg, qMovingAvgSql),
+    Key("q_cube", qCube, qCubeSql),
+    Key("q_string_agg", qStringAgg, qStringAggSql),
+    Key("q_group_topk", qGroupTopK, qGroupTopKSql),
+    Key("q_setops", qSetOps, qSetOpsSql),
+    Key("q_having", qHaving, qHavingSql),
+    Key("q_ntile", qNtile, qNtileSql),
+    Key("q_outer_join", qOuterJoin, qOuterJoinSql),
+    Key("q_gap_fill", qGapFill, qGapFillSql),
+    Key("q_histogram", qHistogram, qHistogramSql),
+    Key("q_stats", qStats, qStatsSql),
+    Key("q_skew_salted", qSkewSalted, qSkewSaltedSql),
+    Key("q_fuzzy_join", qFuzzyJoin, qFuzzyJoinSql),
+    Key("q_full_outer", qFullOuter, qFullOuterSql),
+    Key("q_histogram_eqdepth", qHistogramEqdepth, qHistogramEqdepthSql),
+    Key("q_window_range", qWindowRange, qWindowRangeSql),
+    Key("q_anomaly", qAnomaly, qAnomalySql),
+    Key("q_multi_distinct", qMultiDistinct, qMultiDistinctSql),
+    Key("q_grouping_sets", qGroupingSets, qGroupingSetsSql),
+    Key("profile_table", profileTable, profileTableSql),
+    Key("q_percent_rank", qPercentRank, qPercentRankSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Catalog.{Key, Store}
 import graft.Tables
 import graft.functions.VectorFns
 
@@ -776,20 +777,6 @@ object Curation {
       |  1.0 / CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS DOUBLE) AS weight
       |FROM read_parquet('{VERIFY_OUT}/dedup_clusters/*.parquet')""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_cluster_stats" -> (dedupClusterStats _),
-    "dedup_weights" -> (dedupWeights _),
-    "dedup_hubs" -> (dedupHubs _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_clusters_lsh" -> (dedupClustersLsh _),
-    "dedup_canonical" -> (dedupCanonical _),
-    "text_pipeline" -> (textPipeline _),
-    "dedup_embedding_exact" -> (dedupEmbeddingExact _),
-    "dedup_semantic" -> (dedupSemantic _),
-    "dedup_clusters_knn" -> (dedupClustersKnn _),
-    "dedup_semantic_knn" -> (dedupSemanticKnn _),
-    "dedup_nd_recall" -> (dedupNdRecall _))
-
   /** Value oracle for the PRODUCTION cluster path: the edge set is
     * seeded LSH (not SQL-expressible), but given the emitted minhash
     * pair list (itself value-oracled), DuckDB re-derives the digest
@@ -831,17 +818,21 @@ object Curation {
        |       ELSE CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) END AS recall
        |FROM n""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "dedup_cluster_stats" -> dedupClusterStatsSql,
-    "dedup_weights" -> dedupWeightsSql,
-    "dedup_hubs" -> dedupHubsSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_clusters_lsh" -> dedupClustersLshSql,
-    "dedup_canonical" -> dedupCanonicalSql,
-    "text_pipeline" -> textPipelineSql,
-    "dedup_embedding_exact" -> dedupEmbeddingExactSql,
-    "dedup_semantic" -> dedupSemanticSql,
-    "dedup_clusters_knn" -> dedupClustersKnnSql,
-    "dedup_semantic_knn" -> dedupSemanticKnnSql,
-    "dedup_nd_recall" -> dedupNdRecallSql)
+  val keys: Seq[Key] = Seq(
+    Key("dedup_cluster_stats", dedupClusterStats, dedupClusterStatsSql,
+      stores = Seq(Store.Dedup, Store.Curation)),
+    Key("dedup_weights", dedupWeights, dedupWeightsSql, stores = Seq(Store.Dedup, Store.Curation)),
+    Key("dedup_hubs", dedupHubs, dedupHubsSql, stores = Seq(Store.Dedup)),
+    Key("dedup_clusters", dedupClusters, dedupClustersSql, stores = Seq(Store.Dedup)),
+    Key("dedup_clusters_lsh", dedupClustersLsh, dedupClustersLshSql, stores = Seq(Store.Dedup)),
+    Key("dedup_canonical", dedupCanonical, dedupCanonicalSql,
+      stores = Seq(Store.Dedup, Store.Curation)),
+    Key("text_pipeline", textPipeline, textPipelineSql),
+    Key("dedup_embedding_exact", dedupEmbeddingExact, dedupEmbeddingExactSql),
+    Key("dedup_semantic", dedupSemantic, dedupSemanticSql, stores = Seq(Store.Similarity)),
+    Key("dedup_clusters_knn", dedupClustersKnn, dedupClustersKnnSql,
+      stores = Seq(Store.Similarity)),
+    Key("dedup_semantic_knn", dedupSemanticKnn, dedupSemanticKnnSql,
+      stores = Seq(Store.Similarity)),
+    Key("dedup_nd_recall", dedupNdRecall, dedupNdRecallSql))
 }

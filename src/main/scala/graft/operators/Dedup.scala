@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.{Key, Store}
 import graft.Tables
 import graft.functions.{NativeChunk, NativeHash, TextFns, VectorFns}
 
@@ -1356,30 +1357,6 @@ object Dedup {
       .withColumn("is_dup", col("cos") >= 0.4)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> (dedupExact _),
-    "dedup_exact_bucketed" -> (dedupExactBucketed _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_incremental_nd" -> (dedupIncrementalNd _),
-    "dedup_prefix_filter" -> (dedupPrefixFilter _),
-    "dedup_chunk" -> (dedupChunk _),
-    "dedup_chunk_fine" -> (dedupChunkFine _),
-    "dedup_chunk_coarse" -> (dedupChunkCoarse _),
-    "dedup_chunk_stats" -> (dedupChunkStats _),
-    "dedup_chunk_sweep" -> (dedupChunkSweep _),
-    "dedup_chunk_check" -> (dedupChunkCheck _),
-    "dedup_restore" -> (dedupRestore _),
-    "chunk_compress" -> (chunkCompress _),
-    "dedup_minhash" -> (dedupMinhash _),
-    "dedup_minhash_bands" -> (dedupMinhashBands _),
-    "dedup_minhash_sweep" -> (dedupMinhashSweep _),
-    "dedup_banding_pick" -> (dedupBandingPick _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_containment" -> (dedupContainment _),
-    "dedup_containment_pf" -> (dedupContainmentPf _),
-    "dedup_embedding" -> (dedupEmbedding _))
-
   /** Echo-gate oracle for the codec menu (see chunkCompress doc). */
   val chunkCompressSql: String =
     s"""WITH dump AS (
@@ -1404,27 +1381,27 @@ object Dedup {
       |    / CAST(u.orig_len AS DOUBLE) AS ratio_bzip2
       |FROM uniq u JOIN dump d USING (chunk_sha)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "chunk_compress" -> chunkCompressSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_exact_bucketed" -> dedupExactSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_incremental_nd" -> dedupIncrementalNdSql,
-    "dedup_prefix_filter" -> dedupPrefixFilterSql,
-    "dedup_chunk" -> dedupChunkSql,
-    "dedup_chunk_fine" -> chunkIdentitySql("dedup_chunk_fine"),
-    "dedup_chunk_coarse" -> chunkIdentitySql("dedup_chunk_coarse"),
-    "dedup_chunk_stats" -> dedupChunkStatsSql,
-    "dedup_chunk_sweep" -> dedupChunkSweepSql,
-    "dedup_chunk_check" -> dedupChunkCheckSql,
-    "dedup_restore" -> dedupRestoreSql,
-    "dedup_minhash" -> dedupMinhashSql,
-    "dedup_minhash_bands" -> dedupMinhashBandsSql,
-    "dedup_minhash_sweep" -> dedupMinhashSweepSql,
-    "dedup_banding_pick" -> dedupBandingPickSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_embedding" -> dedupEmbeddingSql,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardSql,
-    "dedup_containment" -> dedupContainmentSql,
-    "dedup_containment_pf" -> dedupContainmentPfSql)
+  val keys: Seq[Key] = Seq(
+    Key("dedup_exact", dedupExact, dedupExactSql),
+    Key("dedup_exact_bucketed", dedupExactBucketed, dedupExactSql),
+    Key("dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    Key("dedup_incremental_nd", dedupIncrementalNd, dedupIncrementalNdSql),
+    Key("dedup_prefix_filter", dedupPrefixFilter, dedupPrefixFilterSql),
+    Key("dedup_chunk", dedupChunk, dedupChunkSql),
+    Key("dedup_chunk_fine", dedupChunkFine, chunkIdentitySql("dedup_chunk_fine")),
+    Key("dedup_chunk_coarse", dedupChunkCoarse, chunkIdentitySql("dedup_chunk_coarse")),
+    Key("dedup_chunk_stats", dedupChunkStats, dedupChunkStatsSql),
+    Key("dedup_chunk_sweep", dedupChunkSweep, dedupChunkSweepSql),
+    Key("dedup_chunk_check", dedupChunkCheck, dedupChunkCheckSql),
+    Key("dedup_restore", dedupRestore, dedupRestoreSql),
+    Key("chunk_compress", chunkCompress, chunkCompressSql),
+    Key("dedup_minhash", dedupMinhash, dedupMinhashSql, stores = Seq(Store.Dedup)),
+    Key("dedup_minhash_bands", dedupMinhashBands, dedupMinhashBandsSql, stores = Seq(Store.Dedup)),
+    Key("dedup_minhash_sweep", dedupMinhashSweep, dedupMinhashSweepSql, stores = Seq(Store.Dedup)),
+    Key("dedup_banding_pick", dedupBandingPick, dedupBandingPickSql, stores = Seq(Store.Dedup)),
+    Key("dedup_simhash", dedupSimhash, dedupSimhashSql, stores = Seq(Store.Dedup)),
+    Key("dedup_ngram_jaccard", dedupNgramJaccard, dedupNgramJaccardSql, stores = Seq(Store.Dedup)),
+    Key("dedup_containment", dedupContainment, dedupContainmentSql),
+    Key("dedup_containment_pf", dedupContainmentPf, dedupContainmentPfSql),
+    Key("dedup_embedding", dedupEmbedding, dedupEmbeddingSql))
 }

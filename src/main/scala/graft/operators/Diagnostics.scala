@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Catalog.Key
 import graft.Tables
 import graft.functions.SkewFns
 
@@ -162,13 +163,8 @@ object Diagnostics {
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM d) - (SELECT CAST(COUNT(*) AS BIGINT) FROM dd) AS n_dup_doc_keys,
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM e) - (SELECT CAST(COUNT(*) AS BIGINT) FROM ed) AS n_dup_vec_keys""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "profile_skew" -> (profileSkew _),
-    "profile_integrity" -> (profileIntegrity _),
-    "q_skew_join" -> (qSkewJoin _))
-
-  val oracle: Map[String, String] = Map(
-    "profile_skew" -> profileSkewSql,
-    "profile_integrity" -> profileIntegritySql,
-    "q_skew_join" -> qSkewJoinSql)
+  val keys: Seq[Key] = Seq(
+    Key("profile_skew", profileSkew, profileSkewSql),
+    Key("profile_integrity", profileIntegrity, profileIntegritySql),
+    Key("q_skew_join", qSkewJoin, qSkewJoinSql))
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.{Key, Store}
+
 /** Graph analytics over the duplicate graph (SURVEY.md §2.B
   * extension) — the iterative and combinatorial verbs a curation run
   * applies AFTER the near-dup edge list exists: importance ranking
@@ -672,21 +674,13 @@ object GraphOps {
       |  CAST(COALESCE(tc.n_tri, 0) * $TriSampleScale AS BIGINT) AS n_tri_est
       |FROM deg LEFT JOIN tc USING (doc_id)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_triangles" -> (graphTriangles _),
-    "graph_triangles_approx" -> (graphTrianglesApprox _),
-    "graph_bfs" -> (graphBfs _),
-    "graph_pagerank_lsh" -> (graphPagerankLsh _),
-    "graph_triangles_lsh" -> (graphTrianglesLsh _),
-    "graph_bfs_lsh" -> (graphBfsLsh _))
-
-  val oracle: Map[String, String] = Map(
-    "graph_pagerank" -> graphPagerankSql,
-    "graph_triangles" -> graphTrianglesSql,
-    "graph_triangles_approx" -> graphTrianglesApproxSql,
-    "graph_bfs" -> graphBfsSql,
-    "graph_pagerank_lsh" -> graphPagerankLshSql,
-    "graph_triangles_lsh" -> graphTrianglesLshSql,
-    "graph_bfs_lsh" -> graphBfsLshSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph_pagerank", graphPagerank, graphPagerankSql, stores = Seq(Store.Dedup)),
+    Key("graph_triangles", graphTriangles, graphTrianglesSql, stores = Seq(Store.Dedup)),
+    Key("graph_triangles_approx", graphTrianglesApprox, graphTrianglesApproxSql,
+      stores = Seq(Store.Dedup)),
+    Key("graph_bfs", graphBfs, graphBfsSql, stores = Seq(Store.Dedup)),
+    Key("graph_pagerank_lsh", graphPagerankLsh, graphPagerankLshSql, stores = Seq(Store.Dedup)),
+    Key("graph_triangles_lsh", graphTrianglesLsh, graphTrianglesLshSql, stores = Seq(Store.Dedup)),
+    Key("graph_bfs_lsh", graphBfsLsh, graphBfsLshSql, stores = Seq(Store.Dedup)))
 }

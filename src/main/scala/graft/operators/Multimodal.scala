@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.{Key, Store}
 import graft.Tables
 
 /** Multimodal-column plumbing (SURVEY.md §2.E): image/audio/video
@@ -1337,23 +1338,6 @@ object Multimodal {
       .toDF()
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_audio_vad" -> (mmAudioVad _),
-    "mm_jpeg_files" -> (mmJpegFiles _),
-    "mm_wav_files" -> (mmWavFiles _),
-    "mm_meta" -> (mmMeta _),
-    "mm_features" -> (mmFeatures _),
-    "mm_resize" -> (mmResize _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_phash" -> (mmPhash _),
-    "mm_phash_clusters" -> (mmPhashClusters _),
-    "mm_video_scene" -> (mmVideoScene _),
-    "mm_audio" -> (mmAudio _),
-    "mm_segment" -> (mmSegment _),
-    "mm_segment_check" -> (mmSegmentCheck _),
-    "mm_jpeg" -> (mmJpeg _),
-    "mm_jpeg_color" -> (mmJpegColor _))
-
   /** Every mm_features column recomputed independently by DuckDB:
     * geometry from (doc_id, octet_length), the BMP's encoded size from
     * the format's row-padding rule, and the channel sums / intensity
@@ -1388,24 +1372,24 @@ object Multimodal {
       |  CAST(len(list_filter(p, v -> v // 64 = 3)) AS BIGINT) AS hist_3
       |FROM px""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "mm_meta" -> mmMetaSql,
-    "mm_features" -> mmFeaturesSql,
-    "mm_resize" -> mmResizeSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_phash" -> mmPhashSql,
-    "mm_phash_clusters" -> mmPhashClustersSql,
-    "mm_video_scene" -> mmVideoSceneSql,
-    "mm_audio_vad" -> mmAudioVadSql,
-    "mm_audio" -> mmAudioSql,
-    "mm_segment" -> mmSegmentSql,
-    "mm_segment_check" -> mmSegmentCheckSql,
-    "mm_jpeg" -> mmJpegSql,
-    "mm_jpeg_color" -> mmJpegColorSql,
+  val keys: Seq[Key] = Seq(
+    Key("mm_audio_vad", mmAudioVad, mmAudioVadSql),
     // the file-ingest twins emit byte-identical features to their
     // column-borne counterparts, so the SAME oracles apply verbatim —
     // DuckDB recomputes every value from the documents table, proving
     // the write→list→read→decode chain end to end
-    "mm_jpeg_files" -> mmJpegSql,
-    "mm_wav_files" -> mmAudioSql)
+    Key("mm_jpeg_files", mmJpegFiles, mmJpegSql, stores = Seq(Store.Multimodal)),
+    Key("mm_wav_files", mmWavFiles, mmAudioSql, stores = Seq(Store.Multimodal)),
+    Key("mm_meta", mmMeta, mmMetaSql),
+    Key("mm_features", mmFeatures, mmFeaturesSql),
+    Key("mm_resize", mmResize, mmResizeSql),
+    Key("mm_frame_sample", mmFrameSample, mmFrameSampleSql),
+    Key("mm_phash", mmPhash, mmPhashSql, stores = Seq(Store.Multimodal)),
+    Key("mm_phash_clusters", mmPhashClusters, mmPhashClustersSql, stores = Seq(Store.Multimodal)),
+    Key("mm_video_scene", mmVideoScene, mmVideoSceneSql),
+    Key("mm_audio", mmAudio, mmAudioSql),
+    Key("mm_segment", mmSegment, mmSegmentSql),
+    Key("mm_segment_check", mmSegmentCheck, mmSegmentCheckSql),
+    Key("mm_jpeg", mmJpeg, mmJpegSql),
+    Key("mm_jpeg_color", mmJpegColor, mmJpegColorSql))
 }

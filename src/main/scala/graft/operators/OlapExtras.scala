@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.Key
 import graft.Tables
 
 /** Additional OLAP operators (SURVEY.md §2.A extension): temporal
@@ -657,37 +658,20 @@ object OlapExtras {
       |JOIN cnt cb ON cb.event_type = d.type_b
       |LEFT JOIN ix ON ix.ta = d.type_a AND ix.tb = d.type_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_theta_sets" -> (qThetaSets _),
-    "q_bloom_join" -> (qBloomJoin _),
-    "q_bitmap_index" -> (qBitmapIndex _),
-    "q_cms_topk" -> (qCmsTopk _),
-    "q_approx_percentile" -> (qApproxPercentile _),
-    "q_asof" -> (qAsof _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_json" -> (qJson _),
-    "q_percentile" -> (qPercentile _),
-    "q_wordcount" -> (qWordcount _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_pivot" -> (qPivot _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_scalar_subq" -> (qScalarSubq _),
-    "q_stream_join" -> (qStreamJoin _))
-
-  val oracle: Map[String, String] = Map(
-    "q_theta_sets" -> qThetaSetsSql,
-    "q_approx_distinct" -> qApproxDistinctSql,
-    "q_approx_percentile" -> qApproxPercentileSql,
-    "q_bloom_join" -> qBloomJoinSql,
-    "q_bitmap_index" -> qBitmapIndexSql,
-    "q_cms_topk" -> qCmsTopkSql,
-    "q_asof" -> qAsofSql,
-    "q_range_join" -> qRangeJoinSql,
-    "q_json" -> qJsonSql,
-    "q_percentile" -> qPercentileSql,
-    "q_wordcount" -> qWordcountSql,
-    "q_pivot" -> qPivotSql,
-    "q_unpivot" -> qUnpivotSql,
-    "q_scalar_subq" -> qScalarSubqSql,
-    "q_stream_join" -> qStreamJoinSql)
+  val keys: Seq[Key] = Seq(
+    Key("q_theta_sets", qThetaSets, qThetaSetsSql),
+    Key("q_bloom_join", qBloomJoin, qBloomJoinSql),
+    Key("q_bitmap_index", qBitmapIndex, qBitmapIndexSql),
+    Key("q_cms_topk", qCmsTopk, qCmsTopkSql),
+    Key("q_approx_percentile", qApproxPercentile, qApproxPercentileSql),
+    Key("q_asof", qAsof, qAsofSql),
+    Key("q_range_join", qRangeJoin, qRangeJoinSql),
+    Key("q_json", qJson, qJsonSql),
+    Key("q_percentile", qPercentile, qPercentileSql),
+    Key("q_wordcount", qWordcount, qWordcountSql),
+    Key("q_approx_distinct", qApproxDistinct, qApproxDistinctSql),
+    Key("q_pivot", qPivot, qPivotSql),
+    Key("q_unpivot", qUnpivot, qUnpivotSql),
+    Key("q_scalar_subq", qScalarSubq, qScalarSubqSql),
+    Key("q_stream_join", qStreamJoin, qStreamJoinSql))
 }

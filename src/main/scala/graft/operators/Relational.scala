@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.Catalog.Key
 import graft.Tables
 
 /** Relational / analytic core over the star schema — the harness
@@ -365,35 +366,19 @@ object Relational {
       |  COUNT(*) AS n_events
       |FROM numbered GROUP BY user_id, sess_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_session_tvf" -> (qSessionTvf _),
-    "q1_agg" -> (q1Agg _),
-    "q3_join_agg" -> (q3JoinAgg _),
-    "q5_multijoin" -> (q5MultiJoin _),
-    "q6_filter_agg" -> (q6FilterAgg _),
-    "q_window" -> (qWindow _),
-    "q_distinct" -> (qDistinct _),
-    "q_topk" -> (qTopK _),
-    "q_semijoin" -> (qSemiJoin _),
-    "q_antijoin" -> (qAntiJoin _),
-    "q_rollup" -> (qRollup _),
-    "q_events_window" -> (qEventsWindow _),
-    "q_hop_window" -> (qHopWindow _),
-    "q_sessionize" -> (qSessionize _))
-
-  val oracle: Map[String, String] = Map(
-    "q_session_tvf" -> qSessionTvfSql,
-    "q1_agg" -> q1AggSql,
-    "q3_join_agg" -> q3JoinAggSql,
-    "q5_multijoin" -> q5MultiJoinSql,
-    "q6_filter_agg" -> q6FilterAggSql,
-    "q_window" -> qWindowSql,
-    "q_distinct" -> qDistinctSql,
-    "q_topk" -> qTopKSql,
-    "q_semijoin" -> qSemiJoinSql,
-    "q_antijoin" -> qAntiJoinSql,
-    "q_rollup" -> qRollupSql,
-    "q_events_window" -> qEventsWindowSql,
-    "q_hop_window" -> qHopWindowSql,
-    "q_sessionize" -> qSessionizeSql)
+  val keys: Seq[Key] = Seq(
+    Key("q_session_tvf", qSessionTvf, qSessionTvfSql),
+    Key("q1_agg", q1Agg, q1AggSql),
+    Key("q3_join_agg", q3JoinAgg, q3JoinAggSql),
+    Key("q5_multijoin", q5MultiJoin, q5MultiJoinSql),
+    Key("q6_filter_agg", q6FilterAgg, q6FilterAggSql),
+    Key("q_window", qWindow, qWindowSql),
+    Key("q_distinct", qDistinct, qDistinctSql),
+    Key("q_topk", qTopK, qTopKSql),
+    Key("q_semijoin", qSemiJoin, qSemiJoinSql),
+    Key("q_antijoin", qAntiJoin, qAntiJoinSql),
+    Key("q_rollup", qRollup, qRollupSql),
+    Key("q_events_window", qEventsWindow, qEventsWindowSql),
+    Key("q_hop_window", qHopWindow, qHopWindowSql),
+    Key("q_sessionize", qSessionize, qSessionizeSql))
 }

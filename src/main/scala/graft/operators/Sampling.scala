@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.Key
 import graft.Tables
 
 /** Corpus sampling, splitting, and shard-packing operators
@@ -998,39 +999,21 @@ object Sampling {
       |SELECT doc_id, n_feats, logw, sel_key, rk, rk <= $DsirK AS selected
       |FROM r""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mix_dsir" -> (mixDsir _),
-    "mix_temperature" -> (mixTemperature _),
-    "mix_epochs" -> (mixEpochs _),
-    "sample_hash" -> (sampleHash _),
-    "sample_split" -> (sampleSplit _),
-    "sample_stratified" -> (sampleStratified _),
-    "shard_pack" -> (shardPack _),
-    "shard_manifest" -> (shardManifest _),
-    "shard_tar" -> (shardTar _),
-    "shard_untar" -> (shardUntar _),
-    "sample_bootstrap" -> (sampleBootstrap _),
-    "sample_pps" -> (samplePps _),
-    "sample_weighted" -> (sampleWeighted _),
-    "seq_pack" -> (seqPack _),
-    "mix_budget" -> (mixBudget _),
-    "mix_curriculum" -> (mixCurriculum _))
-
-  val oracle: Map[String, String] = Map(
-    "mix_dsir" -> mixDsirSql,
-    "mix_temperature" -> mixTemperatureSql,
-    "sample_hash" -> sampleHashSql,
-    "sample_split" -> sampleSplitSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "shard_pack" -> shardPackSql,
-    "shard_manifest" -> shardManifestSql,
-    "shard_tar" -> shardTarSql,
-    "shard_untar" -> shardUntarSql,
-    "sample_bootstrap" -> sampleBootstrapSql,
-    "sample_pps" -> samplePpsSql,
-    "sample_weighted" -> sampleWeightedSql,
-    "seq_pack" -> seqPackSql,
-    "mix_budget" -> mixBudgetSql,
-    "mix_epochs" -> mixEpochsSql,
-    "mix_curriculum" -> mixCurriculumSql)
+  val keys: Seq[Key] = Seq(
+    Key("mix_dsir", mixDsir, mixDsirSql),
+    Key("mix_temperature", mixTemperature, mixTemperatureSql),
+    Key("mix_epochs", mixEpochs, mixEpochsSql),
+    Key("sample_hash", sampleHash, sampleHashSql),
+    Key("sample_split", sampleSplit, sampleSplitSql),
+    Key("sample_stratified", sampleStratified, sampleStratifiedSql),
+    Key("shard_pack", shardPack, shardPackSql),
+    Key("shard_manifest", shardManifest, shardManifestSql),
+    Key("shard_tar", shardTar, shardTarSql),
+    Key("shard_untar", shardUntar, shardUntarSql),
+    Key("sample_bootstrap", sampleBootstrap, sampleBootstrapSql),
+    Key("sample_pps", samplePps, samplePpsSql),
+    Key("sample_weighted", sampleWeighted, sampleWeightedSql),
+    Key("seq_pack", seqPack, seqPackSql),
+    Key("mix_budget", mixBudget, mixBudgetSql),
+    Key("mix_curriculum", mixCurriculum, mixCurriculumSql))
 }

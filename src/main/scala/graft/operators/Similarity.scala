@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Catalog.{Key, Store}
 import graft.Tables
 import graft.functions.VectorFns
 
@@ -2308,37 +2309,6 @@ object Similarity {
        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf DESC, vec_id) AS INT) AS rank
        |  FROM fused) WHERE rank <= $TopK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "vec_centroids" -> (vecCentroids _),
-    "ann_bruteforce" -> (annBruteforce _),
-    "ann_range" -> (annRange _),
-    "ann_range_lsh" -> (annRangeLsh _),
-    "ann_rank_fusion" -> (annRankFusion _),
-    "vec_quality" -> (vecQuality _),
-    "vec_cov" -> (vecCov _),
-    "vec_pca_basis" -> (vecPcaBasis _),
-    "vec_pca_project" -> (vecPcaProject _),
-    "ann_filtered" -> (annFiltered _),
-    "ann_lsh_multiprobe" -> (annLshMultiprobe _),
-    "ann_ivf" -> (annIvf _),
-    "ann_recall" -> (annRecall _),
-    "ann_knn_graph" -> (annKnnGraph _),
-    "ann_depth_picks" -> (annDepthPicks _),
-    "ann_depth_sweep" -> (annDepthSweep _),
-    "ann_nprobe_picks" -> (annNprobePicks _),
-    "ann_nprobe_sweep" -> (annNprobeSweep _),
-    "ann_pq" -> (annPq _),
-    "ann_pq_residual" -> (annPqResidual _),
-    "ann_pq_rotated" -> (annPqRotated _),
-    "ann_sq" -> (annSq _),
-    "ann_ivf_indexed" -> (annIvfIndexed _),
-    "ann_ivf_append" -> (annIvfAppend _),
-    "ann_stream_append" -> (annStreamAppend _),
-    "ann_compact" -> (annCompact _),
-    "ferret_pipeline" -> (ferretPipeline _),
-    "ferret_emd" -> (ferretEmd _),
-    "emd_check" -> (emdCheck _))
-
   /** The exact baseline is DuckDB-oracled: list_cosine_similarity on
     * double-cast lists accumulates in the same element order as the
     * native CosineSim kernel, so cosines match bitwise and the
@@ -2442,34 +2412,41 @@ object Similarity {
        |LEFT JOIN i ON ex.query_id = i.query_id AND ex.vec_id = i.vec_id
        |GROUP BY ex.query_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "vec_centroids" -> vecCentroidsSql,
-    "ferret_emd" -> ferretEmdSql,
-    "ann_knn_graph" -> annKnnGraphSql,
-    "ann_recall" -> annRecallSql,
-    "ann_bruteforce" -> annBruteforceSql,
-    "ann_range" -> annRangeSql,
-    "ann_range_lsh" -> annRangeLshSql,
-    "ann_rank_fusion" -> annRankFusionSql,
-    "vec_quality" -> vecQualitySql,
-    "vec_cov" -> vecCovSql,
-    "vec_pca_basis" -> vecPcaBasisSql,
-    "vec_pca_project" -> vecPcaProjectSql,
-    "ann_filtered" -> annFilteredSql,
-    "ann_depth_picks" -> gridPicksSql("ann_depth_picks", "over_fetch"),
-    "ann_depth_sweep" -> gridSweepSql("ann_depth_picks", "over_fetch"),
-    "ann_nprobe_picks" -> gridPicksSql("ann_nprobe_picks", "nprobe"),
-    "ann_nprobe_sweep" -> gridSweepSql("ann_nprobe_picks", "nprobe"),
-    "ann_lsh_multiprobe" -> annValueSql("ann_lsh_multiprobe"),
-    "ann_ivf" -> annValueSql("ann_ivf"),
-    "ann_ivf_indexed" -> annValueSql("ann_ivf_indexed"),
-    "ann_ivf_append" -> annValueSql("ann_ivf_append"),
-    "ann_stream_append" -> annValueSql("ann_stream_append"),
-    "ann_compact" -> annValueSql("ann_compact"),
-    "ann_pq" -> annValueSql("ann_pq"),
-    "ann_pq_residual" -> annValueSql("ann_pq_residual"),
-    "ann_pq_rotated" -> annValueSql("ann_pq_rotated"),
-    "ann_sq" -> annValueSql("ann_sq"),
-    "ferret_pipeline" -> annValueSql("ferret_pipeline"),
-    "emd_check" -> emdCheckSql)
+  val keys: Seq[Key] = Seq(
+    Key("vec_centroids", vecCentroids, vecCentroidsSql),
+    Key("ann_bruteforce", annBruteforce, annBruteforceSql),
+    Key("ann_range", annRange, annRangeSql),
+    Key("ann_range_lsh", annRangeLsh, annRangeLshSql),
+    Key("ann_rank_fusion", annRankFusion, annRankFusionSql),
+    Key("vec_quality", vecQuality, vecQualitySql),
+    Key("vec_cov", vecCov, vecCovSql),
+    Key("vec_pca_basis", vecPcaBasis, vecPcaBasisSql),
+    Key("vec_pca_project", vecPcaProject, vecPcaProjectSql, stores = Seq(Store.Similarity)),
+    Key("ann_filtered", annFiltered, annFilteredSql),
+    Key("ann_lsh_multiprobe", annLshMultiprobe, annValueSql("ann_lsh_multiprobe")),
+    Key("ann_ivf", annIvf, annValueSql("ann_ivf"), stores = Seq(Store.Similarity)),
+    Key("ann_recall", annRecall, annRecallSql, stores = Seq(Store.Similarity)),
+    Key("ann_knn_graph", annKnnGraph, annKnnGraphSql, stores = Seq(Store.Similarity)),
+    Key("ann_depth_picks", annDepthPicks, gridPicksSql("ann_depth_picks", "over_fetch")),
+    Key("ann_depth_sweep", annDepthSweep, gridSweepSql("ann_depth_picks", "over_fetch")),
+    Key("ann_nprobe_picks", annNprobePicks, gridPicksSql("ann_nprobe_picks", "nprobe"),
+      stores = Seq(Store.Similarity)),
+    Key("ann_nprobe_sweep", annNprobeSweep, gridSweepSql("ann_nprobe_picks", "nprobe"),
+      stores = Seq(Store.Similarity)),
+    Key("ann_pq", annPq, annValueSql("ann_pq"), stores = Seq(Store.Similarity)),
+    Key("ann_pq_residual", annPqResidual, annValueSql("ann_pq_residual"),
+      stores = Seq(Store.Similarity)),
+    Key("ann_pq_rotated", annPqRotated, annValueSql("ann_pq_rotated"),
+      stores = Seq(Store.Similarity)),
+    Key("ann_sq", annSq, annValueSql("ann_sq")),
+    Key("ann_ivf_indexed", annIvfIndexed, annValueSql("ann_ivf_indexed"),
+      stores = Seq(Store.Similarity)),
+    Key("ann_ivf_append", annIvfAppend, annValueSql("ann_ivf_append"),
+      stores = Seq(Store.Similarity)),
+    Key("ann_stream_append", annStreamAppend, annValueSql("ann_stream_append"),
+      stores = Seq(Store.Similarity)),
+    Key("ann_compact", annCompact, annValueSql("ann_compact"), stores = Seq(Store.Similarity)),
+    Key("ferret_pipeline", ferretPipeline, annValueSql("ferret_pipeline")),
+    Key("ferret_emd", ferretEmd, ferretEmdSql),
+    Key("emd_check", emdCheck, emdCheckSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.Catalog.{Key, Store}
 import graft.Tables
 
 /** Storage-layout-driven operators (SURVEY.md §2.A): the two ingest-
@@ -31,7 +32,7 @@ object StorageLayout {
     * stores) — run untimed before the measured loop so no first pass
     * carries a one-time ingest. */
   private[graft] def prewarmStores(s: SparkSession, dir: String): Unit =
-    queries.values.foreach { fn => fn(s, dir); (): Unit }
+    keys.foreach { k => k.build(s, dir); (): Unit }
 
   // ---- q_colocated_join: bucketed fact-fact join, no join-side shuffle -
   /** The fact-fact join answer to the repeated-shuffle tax: bucket
@@ -548,23 +549,15 @@ object StorageLayout {
       |JOIN cnt cc ON cc.d = d.day_cur
       |LEFT JOIN ret ON ret.day_prev = d.day_prev AND ret.day_cur = d.day_cur""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_theta_store" -> (qThetaStore _),
-    "q_colocated_join" -> (qColocatedJoin _),
-    "q_partition_prune" -> (qPartitionPrune _),
-    "q_incremental_agg" -> (qIncrementalAgg _),
-    "q_delta_upsert" -> (qDeltaUpsert _),
-    "q_hll_store" -> (qHllStore _),
-    "q_store_compact" -> (qStoreCompact _),
-    "q_zorder_skip" -> (qZorderSkip _))
-
-  val oracle: Map[String, String] = Map(
-    "q_theta_store" -> qThetaStoreSql,
-    "q_colocated_join" -> qColocatedJoinSql,
-    "q_partition_prune" -> qPartitionPruneSql,
-    "q_incremental_agg" -> qIncrementalAggSql,
-    "q_delta_upsert" -> qDeltaUpsertSql,
-    "q_hll_store" -> qHllStoreSql,
-    "q_store_compact" -> qDeltaUpsertSql,
-    "q_zorder_skip" -> qZorderSkipSql)
+  val keys: Seq[Key] = Seq(
+    Key("q_theta_store", qThetaStore, qThetaStoreSql, stores = Seq(Store.StorageLayout)),
+    Key("q_colocated_join", qColocatedJoin, qColocatedJoinSql, stores = Seq(Store.StorageLayout)),
+    Key("q_partition_prune", qPartitionPrune, qPartitionPruneSql,
+      stores = Seq(Store.StorageLayout)),
+    Key("q_incremental_agg", qIncrementalAgg, qIncrementalAggSql,
+      stores = Seq(Store.StorageLayout)),
+    Key("q_delta_upsert", qDeltaUpsert, qDeltaUpsertSql, stores = Seq(Store.StorageLayout)),
+    Key("q_hll_store", qHllStore, qHllStoreSql, stores = Seq(Store.StorageLayout)),
+    Key("q_store_compact", qStoreCompact, qDeltaUpsertSql, stores = Seq(Store.StorageLayout)),
+    Key("q_zorder_skip", qZorderSkip, qZorderSkipSql, stores = Seq(Store.StorageLayout)))
 }

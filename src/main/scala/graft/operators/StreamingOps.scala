@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.{Key, Kind}
 import graft.Tables
 import graft.streaming.StreamingPipelines
 import graft.streaming.StreamingPipelines.Ev
@@ -565,24 +566,6 @@ object StreamingOps {
     drainAppend(s, "sessions", sdf, nEvents).filter(col("user_id") =!= -1L)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_dedup_batch" -> (streamDedupBatch _),
-    "stream_sessions" -> (streamSessions _),
-    "stream_ferret" -> (streamFerret _),
-    "stream_rate_bench" -> (streamRateBench _),
-    "stream_param_sweep" -> (streamParamSweep _),
-    "stream_soak" -> (streamSoak _),
-    "stream_soak_ferret" -> (streamSoakFerret _),
-    "stream_replay" -> (streamReplay _))
-
-  /** The self-measuring harness keys: each runs a fixed-duration or
-    * multi-leg measurement while its DataFrame is built, so there is
-    * no single query plan to audit and repeating it buys no
-    * precision. Bench measures them once, and PlanAudit,
-    * PlanHygieneSpec and ContractSpec skip them. */
-  val harnessKeys: Set[String] = Set(
-    "stream_rate_bench", "stream_param_sweep", "stream_soak", "stream_soak_ferret")
-
   /** Derived-metric oracles for the self-measuring harness keys (r15
     * verdict #8, upgrading the r14 gate-echo class): the SQL re-reads
     * the key's own dump and RE-DERIVES every computed column from the
@@ -704,13 +687,13 @@ object StreamingOps {
       |  g.late_blocks AS late_median_blocks, g.flat AS flat_ok
       |FROM s, g WHERE g.flat""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "stream_dedup_batch" -> streamDedupBatchSql,
-    "stream_sessions" -> Relational.qSessionTvfSql,
-    "stream_ferret" -> Similarity.annValueSql("stream_ferret"),
-    "stream_soak" -> streamSoakOracleSql,
-    "stream_soak_ferret" -> streamSoakFerretOracleSql,
-    "stream_rate_bench" -> streamRateBenchOracleSql,
-    "stream_param_sweep" -> streamParamSweepOracleSql,
-    "stream_replay" -> streamReplaySql)
+  val keys: Seq[Key] = Seq(
+    Key("stream_dedup_batch", streamDedupBatch, streamDedupBatchSql),
+    Key("stream_sessions", streamSessions, Relational.qSessionTvfSql, Kind.Drain),
+    Key("stream_ferret", streamFerret, Similarity.annValueSql("stream_ferret"), Kind.Drain),
+    Key("stream_rate_bench", streamRateBench, streamRateBenchOracleSql, Kind.Harness),
+    Key("stream_param_sweep", streamParamSweep, streamParamSweepOracleSql, Kind.Harness),
+    Key("stream_soak", streamSoak, streamSoakOracleSql, Kind.Soak),
+    Key("stream_soak_ferret", streamSoakFerret, streamSoakFerretOracleSql, Kind.Soak),
+    Key("stream_replay", streamReplay, streamReplaySql, Kind.Drain))
 }

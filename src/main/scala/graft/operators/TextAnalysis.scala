@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.Key
 import graft.Tables
 import graft.functions.TextFns
 
@@ -1521,49 +1522,26 @@ object TextAnalysis {
       |  AND p.n_tokens = x.n_tokens AND p.m_pairs = x.m_pairs
       |  AND abs(p.pmi - x.pmi_x) <= 1e-9 * greatest(abs(x.pmi_x), 1.0)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_pmi" -> (textPmi _),
-    "text_bpe_train" -> (textBpeTrain _),
-    "text_bpe_encode" -> (textBpeEncode _),
-    "text_perplexity" -> (textPerplexity _),
-    "text_ccnet" -> (textCcnet _),
-    "text_paragraph_dedup" -> (textParagraphDedup _),
-    "dedup_substring" -> (dedupSubstring _),
-    "text_source_overlap" -> (textSourceOverlap _),
-    "text_crossdup" -> (textCrossdup _),
-    "text_normalize" -> (textNormalize _),
-    "text_tokens" -> (textTokens _),
-    "text_quality" -> (textQuality _),
-    "text_gopher_filter" -> (textGopherFilter _),
-    "text_langid" -> (textLangid _),
-    "text_tfidf" -> (textTfidf _),
-    "text_bm25" -> (textBm25 _),
-    "text_inverted_index" -> (textInvertedIndex _),
-    "text_fingerprint" -> (textFingerprint _),
-    "text_pii" -> (textPii _),
-    "text_repetition" -> (textRepetition _),
-    "text_contamination" -> (textContamination _))
-
-  val oracle: Map[String, String] = Map(
-    "text_pmi" -> textPmiSql,
-    "text_bpe_train" -> textBpeTrainSql,
-    "text_bpe_encode" -> textBpeEncodeSql,
-    "text_perplexity" -> textPerplexitySql,
-    "text_ccnet" -> textCcnetSql,
-    "text_paragraph_dedup" -> textParagraphDedupSql,
-    "dedup_substring" -> dedupSubstringSql,
-    "text_source_overlap" -> textSourceOverlapSql,
-    "text_crossdup" -> textCrossdupSql,
-    "text_normalize" -> textNormalizeSql,
-    "text_tokens" -> textTokensSql,
-    "text_quality" -> textQualitySql,
-    "text_gopher_filter" -> textGopherFilterSql,
-    "text_langid" -> textLangidSql,
-    "text_tfidf" -> textTfidfSql,
-    "text_bm25" -> textBm25Sql,
-    "text_inverted_index" -> textInvertedIndexSql,
-    "text_fingerprint" -> textFingerprintSql,
-    "text_pii" -> textPiiSql,
-    "text_repetition" -> textRepetitionSql,
-    "text_contamination" -> textContaminationSql)
+  val keys: Seq[Key] = Seq(
+    Key("text_pmi", textPmi, textPmiSql),
+    Key("text_bpe_train", textBpeTrain, textBpeTrainSql),
+    Key("text_bpe_encode", textBpeEncode, textBpeEncodeSql),
+    Key("text_perplexity", textPerplexity, textPerplexitySql),
+    Key("text_ccnet", textCcnet, textCcnetSql),
+    Key("text_paragraph_dedup", textParagraphDedup, textParagraphDedupSql),
+    Key("dedup_substring", dedupSubstring, dedupSubstringSql),
+    Key("text_source_overlap", textSourceOverlap, textSourceOverlapSql),
+    Key("text_crossdup", textCrossdup, textCrossdupSql),
+    Key("text_normalize", textNormalize, textNormalizeSql),
+    Key("text_tokens", textTokens, textTokensSql),
+    Key("text_quality", textQuality, textQualitySql),
+    Key("text_gopher_filter", textGopherFilter, textGopherFilterSql),
+    Key("text_langid", textLangid, textLangidSql),
+    Key("text_tfidf", textTfidf, textTfidfSql),
+    Key("text_bm25", textBm25, textBm25Sql),
+    Key("text_inverted_index", textInvertedIndex, textInvertedIndexSql),
+    Key("text_fingerprint", textFingerprint, textFingerprintSql),
+    Key("text_pii", textPii, textPiiSql),
+    Key("text_repetition", textRepetition, textRepetitionSql),
+    Key("text_contamination", textContamination, textContaminationSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.Key
 import graft.functions.NativeChunk
 
 /** Binary-file ingestion (SURVEY.md §2.B, reference input mode).
@@ -224,11 +225,7 @@ object BinaryFiles {
       |  sha256(substr(b.hx, 2 * c."offset" + 1, 2 * c.chunk_len)) AS chunk_hex_sha
       |FROM c JOIN b USING (file)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "file_chunks" -> (fileChunks _),
-    "file_dedup" -> (fileDedup _))
-
-  val oracle: Map[String, String] = Map(
-    "file_chunks" -> fileChunksSql,
-    "file_dedup" -> fileDedupSql)
+  val keys: Seq[Key] = Seq(
+    Key("file_chunks", fileChunks, fileChunksSql),
+    Key("file_dedup", fileDedup, fileDedupSql))
 }

@@ -1,18 +1,14 @@
 package graft
 
-/** Driver-contract wiring net: every oracle key must resolve to a
-  * query, and every query must at least ANALYZE against the test
-  * tables (catches renamed columns, broken imports, bad expression
-  * types for every entry in the map without paying full execution — the
-  * self-measuring streaming harnesses, StreamingOps.harnessKeys,
-  * construct eagerly and are covered by their own specs).
+/** Driver-contract wiring net: every {VERIFY_OUT} oracle reference
+  * must resolve to a query, and every query must at least ANALYZE
+  * against the test tables (catches renamed columns, broken imports,
+  * bad expression types for every key without paying full execution —
+  * the self-measuring harness keys ([[Catalog.Kind]]) construct eagerly
+  * and are covered by their own specs). A key's oracle is declared with
+  * its query in [[Catalog]], so an oracle without a query cannot exist.
   */
 class ContractSpec extends SparkSpec {
-
-  test("every oracleSql key has a queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle keys without a query: $orphans")
-  }
 
   test("every {VERIFY_OUT} oracle reference targets an existing query dump") {
     // value oracles re-read the verify dump of OTHER (or their own)
@@ -49,16 +45,14 @@ class ContractSpec extends SparkSpec {
   }
 
   test("every query analyzes against the sf0.001 tables") {
-    val broken = SparkEntry.queries.toSeq
-      .filterNot { case (n, _) => graft.operators.StreamingOps.harnessKeys(n) }
-      .flatMap { case (name, fn) =>
-        try {
-          val schema = fn(spark, sfDir).schema
-          if (schema.isEmpty) Some(s"$name: empty schema") else None
-        } catch {
-          case e: Exception => Some(s"$name: ${e.getMessage.take(120)}")
-        }
+    val broken = Catalog.keys.filterNot(_.kind.harness).flatMap { key =>
+      try {
+        val schema = key.build(spark, sfDir).schema
+        if (schema.isEmpty) Some(s"${key.name}: empty schema") else None
+      } catch {
+        case e: Exception => Some(s"${key.name}: ${e.getMessage.take(120)}")
       }
+    }
     assert(broken.isEmpty, broken.mkString("\n"))
   }
 }

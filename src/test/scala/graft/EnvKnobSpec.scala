@@ -13,7 +13,6 @@ class EnvKnobSpec extends AnyFunSuite {
 
   private val Knobs = Set(
     "GRAFT_AUDIT_ONLY",
-    "GRAFT_BENCH_NOWARM",
     "GRAFT_BENCH_ONLY",
     "GRAFT_FERRET_STAGETIME",
     "GRAFT_SOAK_FERRET_SECONDS",

@@ -1,7 +1,5 @@
 package graft
 
-import graft.operators.StreamingOps
-
 /** Suite-wide physical-plan hygiene: every driver-contract query is
   * built at sf0.001 and its plan swept for the two scale-killers the
   * per-operator specs guard locally — a true cartesian product
@@ -21,7 +19,7 @@ import graft.operators.StreamingOps
   * to completion at certification SF, where the ADAPTIVE rewrites
   * have really fired.
   *
-  * The self-measuring stream harnesses are skipped (their "plan" is a
+  * The self-measuring harness keys are skipped (their "plan" is a
   * fixed-duration run, not a query); iterative operators execute
   * during construction, which at sf0.001 is cheap.
   */
@@ -32,11 +30,9 @@ class PlanHygieneSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        if (!StreamingOps.harnessKeys(name)) {
-          val all = PlanAudit.nodes(fn(spark, sfDir).queryExecution.executedPlan)
-          offenders ++= PlanAudit.offendersIn(name, all)
-        }
+      Catalog.keys.sortBy(_.name).filterNot(_.kind.harness).foreach { key =>
+        val all = PlanAudit.nodes(key.build(spark, sfDir).queryExecution.executedPlan)
+        offenders ++= PlanAudit.offendersIn(key.name, all)
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     offenders.toSeq

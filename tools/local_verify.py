@@ -51,7 +51,12 @@ def main():
             p = f"{p}/*.parquet"
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    failures = 0
+    # a key named on the command line that has no oracle is a failure,
+    # not a skip: a typo must not turn into an empty run that exits 0
+    missing = sorted(set(keys) - set(oracle))
+    for key in missing:
+        print(f"{key}: NO ORACLE (not in oracle_sql.json)")
+    failures = len(missing)
     for key, sql in sorted(oracle.items()):
         if keys and key not in keys:
             continue
